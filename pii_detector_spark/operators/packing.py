@@ -161,9 +161,8 @@ def write_packed_shards(
     sum never shuffles text); doc payloads join back on ``url_col`` —
     one hash shuffle, then the shard_id clustering for the partitioned
     write.  The manifest is computed FROM the written table, so it
-    always describes what is actually on disk.  Both tables are written
-    aside and atomically swapped in (same crash discipline as the
-    pipeline's derived tables: an interrupted rewrite leaves the
+    always describes what is actually on disk.  Both tables are replaced
+    with ``plans/tables.replace_dir`` (an interrupted rewrite leaves the
     previous version readable).
 
     Size ``budget_tokens`` for shard counts in the thousands-to-100k
@@ -173,7 +172,7 @@ def write_packed_shards(
     """
     import os
 
-    from pii_detector_spark.plans.pipeline import _swap_in
+    from pii_detector_spark.plans.tables import replace_dir
 
     assigned = pack_documents_by_url(
         docs.select(url_col, count_col), budget_tokens,
@@ -187,12 +186,11 @@ def write_packed_shards(
     )
 
     data_path = os.path.join(out_dir, "shard_data")
-    tmp = data_path + "_tmp"
-    (
+    replace_dir(
+        data_path,
         full.repartition(F.col("shard_id"))
-        .write.mode("overwrite").partitionBy("shard_id").parquet(tmp)
+        .write.mode("overwrite").partitionBy("shard_id").parquet,
     )
-    _swap_in(data_path, tmp)
 
     written = docs.sparkSession.read.parquet(data_path)
     text_cols = [c for c in ("scrubbed_text", "text") if c in written.columns]
@@ -206,7 +204,5 @@ def write_packed_shards(
         nchar.cast("long").alias("n_chars"),
     )
     man_path = os.path.join(out_dir, "shard_manifest")
-    tmp2 = man_path + "_tmp"
-    manifest.write.mode("overwrite").parquet(tmp2)
-    _swap_in(man_path, tmp2)
+    replace_dir(man_path, manifest.write.mode("overwrite").parquet)
     return data_path, man_path

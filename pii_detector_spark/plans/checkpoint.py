@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pii_detector_spark.plans.tables import recover, replace_dir
+
 
 def lineage_path(output_dir: str) -> str:
     return os.path.join(output_dir, "lineage")
@@ -112,30 +114,20 @@ def gc_deleted_urls(
     the anti-join is unhinted (planner/AQE pick the strategy). Idempotent:
     a second pass with the same source listing computes an empty set.
 
-    Crash-safe swap order: the rewritten data lands in ``*_gc_tmp``; the
-    live dir is renamed ASIDE to ``*_gc_old`` before tmp takes its place,
-    and only then is ``_gc_old`` deleted — every interruption point leaves
-    either the old or the new table under a recoverable name (the previous
-    rmtree-then-rename order had a window where the table directory was
-    simply gone). A leftover ``_gc_old`` from a prior crash is recovered
-    (renamed back) if the live dir is missing, else discarded.
+    Each rewrite goes through ``replace_dir`` (``plans/tables.py``: write
+    aside, then swap), so a kill at any point leaves the old or the new
+    table; a rewrite interrupted mid-swap is put right by ``recover``
+    before the table is read again (here and in ``heal_uncommitted_runs``).
 
     Returns rows-removed per table. Missing tables are skipped; corrupt
     tables RAISE (silently skipping made GC report 0 removed on damage
     that needed attention).
     """
-    import shutil
-
     removed: dict[str, int] = {}
     dele = deleted.select("url").distinct()
     for t in tables:
         path = os.path.join(output_dir, t)
-        old = path + "_gc_old"
-        if os.path.exists(old):
-            if os.path.exists(path):
-                shutil.rmtree(old)  # prior crash after swap: old is stale
-            else:
-                os.rename(old, path)  # prior crash mid-swap: recover
+        recover(path)
         if not os.path.exists(path):
             continue
         has_data = any(
@@ -151,21 +143,16 @@ def gc_deleted_urls(
             continue
         df = spark.read.parquet(path)
         before = df.count()
-        kept = df.join(dele, "url", "left_anti")
-        tmp = path + "_gc_tmp"
-        writer = kept.write.mode("overwrite")
+        writer = df.join(dele, "url", "left_anti").write.mode("overwrite")
         if "run_id" in df.columns:
             # preserve the run_id-partitioned sink layout — a flat rewrite
             # would mix layouts with later partitioned appends and break
             # partition discovery
             writer = writer.partitionBy("run_id")
-        writer.parquet(tmp)
+        replace_dir(path, writer.parquet)
         # explicit schema: a fully-GC'd partitioned table writes no data
         # files, and an empty dir can't be schema-inferred
-        after = spark.read.schema(df.schema).parquet(tmp).count()
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
+        after = spark.read.schema(df.schema).parquet(path).count()
         removed[t] = before - after
     return removed
 

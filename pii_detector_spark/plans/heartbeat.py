@@ -13,10 +13,10 @@ interval to a ``heartbeat`` table next to the other sinks:
   A Spark-job-per-beat would queue behind the very stages whose health it
   is supposed to report.
 * **append-only, one file per beat**: each beat is its own tiny parquet
-  file (atomic rename), so a crash at any instant leaves a readable table
-  whose max(ts_us) is the instant the driver died — exactly the signal a
-  monitor needs (reference semantics: record stops updating = instance
-  dead). A clean ``stop()`` appends a final ``alive=false`` row, the
+  file (``tables.write_file_atomic``), so a crash at any instant leaves a
+  readable table whose max(ts_us) is the instant the driver died —
+  exactly the signal a monitor needs (reference semantics: record stops
+  updating = instance dead). A clean ``stop()`` appends a final ``alive=false`` row, the
   analogue of an instance deregistering.
 * each row carries live progress sampled from ``SparkContext.
   statusTracker()`` (active jobs/stages/tasks), so the heartbeat doubles
@@ -37,6 +37,8 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+
+from pii_detector_spark.plans.tables import write_file_atomic
 
 HEARTBEAT_SCHEMA = pa.schema(
     [
@@ -92,11 +94,12 @@ class Heartbeat:
             "n_active_stages": [stages],
             "alive": [alive],
         }
-        os.makedirs(self._dir, exist_ok=True)
         name = f"hb-{self._instance}-{self._seq:08d}.parquet"
-        tmp = os.path.join(self._dir, f"_tmp.{name}.{os.getpid()}")
-        pq.write_table(pa.table(row, schema=HEARTBEAT_SCHEMA), tmp)
-        os.replace(tmp, os.path.join(self._dir, name))
+        buf = pa.BufferOutputStream()
+        pq.write_table(pa.table(row, schema=HEARTBEAT_SCHEMA), buf)
+        write_file_atomic(
+            os.path.join(self._dir, name), buf.getvalue().to_pybytes()
+        )
         self._seq += 1
 
     def _loop(self) -> None:

@@ -34,7 +34,16 @@ from pyspark.sql import functions as F
 from pii_detector_spark.config import DEFAULT_CONFIG, EngineConfig
 from pii_detector_spark.operators.fused import with_fused_processing
 from pii_detector_spark.operators.scrub import findings_table
-from pii_detector_spark.plans import checkpoint
+from pii_detector_spark.plans import checkpoint, tables
+from pii_detector_spark.plans.snapshots import (
+    catch_up_snapshots,
+    commit_run_snapshot,
+)
+from pii_detector_spark.plans.tables import (
+    HEALED_TABLES,
+    mark_run_committed,
+    run_committed,
+)
 from pii_detector_spark.sources.web_pages import (
     apply_prefilters,
     read_web_pages,
@@ -131,83 +140,27 @@ def read_docs_table(spark: SparkSession, output_dir: str) -> DataFrame:
     )
 
 
-def _commits_dir(output_dir: str) -> str:
-    return os.path.join(output_dir, "_commits")
-
-
-def _marker_path(output_dir: str, run_id: str) -> str:
-    from urllib.parse import quote
-
-    return os.path.join(_commits_dir(output_dir), quote(run_id, safe=""))
-
-
-def mark_run_committed(output_dir: str, run_id: str) -> None:
-    """Atomic run-commit marker, written after ALL four sinks land.
-
-    On Iceberg the four appends would be one atomic multi-table commit;
-    plain parquet has no transactions, so the marker file plays the
-    manifest role: a run_id partition without a marker is a crashed,
-    partially-written run and is removed by ``heal_uncommitted_runs``
-    before the next run reads anything."""
-    os.makedirs(_commits_dir(output_dir), exist_ok=True)
-    tmp = _marker_path(output_dir, run_id) + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(run_id)
-    os.replace(tmp, _marker_path(output_dir, run_id))
-
-
-def run_committed(output_dir: str, run_id: str) -> bool:
-    return os.path.exists(_marker_path(output_dir, run_id))
-
-
-HEALED_TABLES = ("docs", "findings", "lineage", "metrics")
-
-
 def heal_single_run(output_dir: str, run_id: str) -> list[str]:
     """Remove THIS run_id's partition dirs if its commit marker is absent
     — the O(tables) self-heal a foreachBatch body can afford per batch
     (vs ``heal_uncommitted_runs``' marker check per run ever written).
-    Returns the tables healed.
-
-    The partition dir is located by LISTING and unquoting, not by
-    re-deriving the name: Spark's partition escaping differs from urllib
-    quote (a run_id ``run 1+x`` is written as ``run_id=run 1+x``, while
-    ``quote`` would produce ``run_id=run%201%2Bx``), so name derivation
-    silently misses partitions for run ids containing spaces/'+'/'('.
-    Unquoting the listed name inverts Spark's %XX escaping exactly (and
-    leaves unescaped chars alone), matching ``heal_uncommitted_runs``."""
-    import shutil
-    from urllib.parse import unquote
-
+    Returns the tables healed.  Partitions are found by listing and
+    unquoting (``tables.run_partitions``), so run ids Spark writes
+    literally (``run 1+x``) are found too."""
     if run_committed(output_dir, run_id):
         return []
-    healed = []
-    for t in HEALED_TABLES:
-        tdir = os.path.join(output_dir, t)
-        if not os.path.isdir(tdir):
-            continue
-        for e in os.listdir(tdir):
-            if not e.startswith("run_id="):
-                continue
-            if unquote(e.split("=", 1)[1]) != run_id:
-                continue
-            d = os.path.join(tdir, e)
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-                healed.append(t)
-    return healed
+    return list(tables.drop_runs(output_dir, lambda rid: rid == run_id))
 
 
 def heal_uncommitted_runs(
-    spark: SparkSession,
-    output_dir: str,
-    tables: tuple[str, ...] = HEALED_TABLES,
+    spark: SparkSession, output_dir: str
 ) -> dict[str, list[str]]:
     """Remove ``run_id=X`` partition directories whose X has no commit
     marker — the file-level GC that makes every crash point leave readable,
     consistent tables (no row rewrites: each run's rows live only in its
     own partition directory, so deleting a crashed run is an O(files)
-    directory remove, valid at any table size).
+    directory remove, valid at any table size).  A deleted-url GC rewrite
+    interrupted mid-swap is put right first (``tables.recover``).
 
     Crash matrix (kill at any point of ``write_run_outputs``):
     * mid docs/findings/lineage/metrics write — Spark's output committer
@@ -218,18 +171,14 @@ def heal_uncommitted_runs(
 
     Returns {table: [removed run_ids]}.
     """
-    import shutil
-    from urllib.parse import unquote
-
-    removed: dict[str, list[str]] = {}
-    for t in tables:
+    for t in HEALED_TABLES:
         path = os.path.join(output_dir, t)
+        tables.recover(path)
         if not os.path.isdir(path):
             continue
-        entries = os.listdir(path)
         flat = [
             e
-            for e in entries
+            for e in os.listdir(path)
             if not e.startswith(("_", "."))
             and not e.startswith("run_id=")
             and os.path.isfile(os.path.join(path, e))
@@ -243,14 +192,9 @@ def heal_uncommitted_runs(
                 f"({flat[:3]}…); migrate once before resuming: read it, "
                 f"write.partitionBy('run_id') to a sibling dir, swap"
             )
-        for d in entries:
-            if not d.startswith("run_id="):
-                continue
-            rid = unquote(d.split("=", 1)[1])
-            if not run_committed(output_dir, rid):
-                shutil.rmtree(os.path.join(path, d))
-                removed.setdefault(t, []).append(rid)
-    return removed
+    return tables.drop_runs(
+        output_dir, lambda rid: not run_committed(output_dir, rid)
+    )
 
 
 def write_run_outputs(
@@ -344,8 +288,6 @@ def write_run_outputs(
     # then publish it in the snapshot log (a kill between the two commit
     # points is healed by catch_up_snapshots on the next run)
     mark_run_committed(output_dir, run_id)
-    from pii_detector_spark.plans.snapshots import commit_run_snapshot
-
     commit_run_snapshot(output_dir, run_id)
     return sum(r["docs_scanned"] for r in metrics_rows)
 
@@ -371,37 +313,6 @@ def _read_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
     if os.path.isdir(path):
         return spark.read.schema(ddl).parquet(path)
     return spark.createDataFrame([], ddl)
-
-
-def _swap_in(path: str, tmp: str) -> None:
-    """Crash-safe table replace (same aside-rename order as the GC swap:
-    every interruption point leaves old or new under a recoverable
-    name)."""
-    import shutil
-
-    old = path + "_swap_old"
-    if os.path.exists(old):
-        if os.path.exists(path):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, path)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-
-
-def _recover_swap(path: str) -> None:
-    """Undo a crash that happened mid-``_swap_in``."""
-    old = path + "_swap_old"
-    if os.path.exists(old):
-        if os.path.exists(path):
-            import shutil
-
-            shutil.rmtree(old)
-        else:
-            os.rename(old, path)
 
 
 def incremental_near_dedup(
@@ -479,12 +390,8 @@ def incremental_near_dedup(
     sig_path = os.path.join(output_dir, "signatures")
     pairs_path = os.path.join(output_dir, "neardup_pairs")
     paired_path = os.path.join(output_dir, "paired_sigs")
-    neardup_path = os.path.join(output_dir, "neardup")
-    deduped_path = os.path.join(output_dir, "docs_deduped")
     sig_ddl = _sig_ddl(num_hashes)
-    _recover_swap(paired_path)
-    _recover_swap(neardup_path)
-    _recover_swap(deduped_path)
+    tables.recover(paired_path)
 
     # explicit schema: a run whose appends were all empty (e.g. every url
     # prefiltered on a fresh output dir) leaves the partitioned docs table
@@ -589,32 +496,15 @@ def incremental_near_dedup(
             written, all_pairs, id_col="url", id_a="id_a", id_b="id_b",
             max_iter=max_iter,
         )
-        # crash-safe rewrites: a plain in-place overwrite deletes the old
-        # dir before writing, so a mid-rewrite crash would leave the
-        # derived tables missing/partial; write aside + _swap_in keeps
-        # every crash point readable (same discipline as paired_sigs)
-        tmp_nd = neardup_path + "_tmp"
-        marked.select("url", "component", "is_canonical").write.mode(
-            "overwrite"
-        ).parquet(tmp_nd)
-        _swap_in(neardup_path, tmp_nd)
-        canon = (
-            spark.read.parquet(neardup_path)
-            .filter(F.col("is_canonical"))
-            .select("url")
-        )
-        tmp_dd = deduped_path + "_tmp"
-        written.join(canon, "url", "left_semi").write.mode(
-            "overwrite"
-        ).parquet(tmp_dd)
-        _swap_in(deduped_path, tmp_dd)
+        tables.publish_near_dedup(output_dir, written, marked)
         # commit pairing coverage LAST: the snapshot of every (url, content)
-        # visible in this successful rebuild, swap-replaced crash-safely
-        tmp = paired_path + "_tmp"
-        all_sigs.select(F.col("doc_id").alias("url"), "content_md5").write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        _swap_in(paired_path, tmp)
+        # visible in this successful rebuild
+        tables.replace_dir(
+            paired_path,
+            all_sigs.select(F.col("doc_id").alias("url"), "content_md5")
+            .write.mode("overwrite")
+            .parquet,
+        )
     finally:
         cur.unpersist()
 
@@ -707,8 +597,6 @@ def _run_pipeline_impl(
     # reading lineage — their urls then resume as unprocessed — and pull
     # marker-committed runs a crash left out of the snapshot log back in
     heal_uncommitted_runs(spark, output_dir)
-    from pii_detector_spark.plans.snapshots import catch_up_snapshots
-
     catch_up_snapshots(output_dir)
 
     raw = apply_prefilters(read_web_pages(spark, input_path))
@@ -741,32 +629,12 @@ def _run_pipeline_impl(
             mark_near_duplicate_docs,
         )
 
-        neardup_path = os.path.join(output_dir, "neardup")
-        deduped_path = os.path.join(output_dir, "docs_deduped")
-        _recover_swap(neardup_path)
-        _recover_swap(deduped_path)
         written = read_docs_table(spark, output_dir)
         marked = mark_near_duplicate_docs(
             written, url_col="url", text_col="scrubbed_text",
             max_iter=dedup_max_iter,
         )
-        tmp_nd = neardup_path + "_tmp"
-        marked.select("url", "component", "is_canonical").write.mode(
-            "overwrite"
-        ).parquet(tmp_nd)
-        _swap_in(neardup_path, tmp_nd)
-        # derive the kept set from the just-written (narrow) table instead
-        # of re-evaluating the pair/component stages a second time
-        canon = (
-            spark.read.parquet(neardup_path)
-            .filter(F.col("is_canonical"))
-            .select("url")
-        )
-        tmp_dd = deduped_path + "_tmp"
-        written.join(canon, "url", "left_semi").write.mode(
-            "overwrite"
-        ).parquet(tmp_dd)
-        _swap_in(deduped_path, tmp_dd)
+        tables.publish_near_dedup(output_dir, written, marked)
 
     return PipelineResult(
         docs_path=os.path.join(output_dir, "docs"),

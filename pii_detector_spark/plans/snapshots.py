@@ -3,17 +3,19 @@ run_id-partitioned output tables.
 
 The sinks already have Iceberg's *commit* half: each run's rows live
 only in its own ``run_id=X`` partition dirs, and a run exists once its
-atomic marker lands (``pipeline.mark_run_committed``; uncommitted runs
-are healed file-level).  This module adds the *metadata* half of the
-public Iceberg design (the spec's snapshot log + current-pointer swap):
+marker lands (``plans/tables.py`` holds the markers, partition healing
+and the atomic file write used below).  This module adds the *metadata*
+half of the public Iceberg design (the spec's snapshot log +
+current-pointer swap):
 
 * ``_snapshots/v{N}.json`` — an immutable snapshot: the exact set of
   committed run_ids visible at version N (the manifest-list analogue;
   run partitions play the role of data-file manifests).
-* ``_snapshots/CURRENT`` — the current-version pointer, swapped with an
-  atomic ``os.replace`` — the single-file commit point, exactly the
-  spec's metadata-pointer swap.  A crash before the swap leaves the old
-  version current and an orphan v-file that the next commit overwrites.
+* ``_snapshots/CURRENT`` — the current-version pointer, rewritten with
+  ``tables.write_file_atomic`` — the single-file commit point, exactly
+  the spec's metadata-pointer swap.  A crash before the swap leaves the
+  old version current and an orphan v-file that the next commit
+  overwrites.
 * time travel — ``read_table_at(..., snapshot_id=N)`` filters the
   partitioned read on the snapshot's run set.  The filter is on the
   PARTITION column, so Spark prunes to exactly those directories:
@@ -41,12 +43,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-from dataclasses import dataclass
-from urllib.parse import unquote
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pii_detector_spark.plans import tables
 
 _SNAP_DIR = "_snapshots"
 
@@ -106,27 +108,14 @@ def snapshot_log(output_dir: str) -> list[Snapshot]:
 
 
 def _commit(output_dir: str, runs: tuple[str, ...], op: str) -> Snapshot:
-    os.makedirs(_dir(output_dir), exist_ok=True)
     cur = current_snapshot_id(output_dir)
     nxt = 1 if cur is None else cur + 1
     snap = Snapshot(nxt, cur, runs, op)
-    tmp = _vpath(output_dir, nxt) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "snapshot_id": snap.snapshot_id,
-                "parent_id": snap.parent_id,
-                "run_ids": list(snap.run_ids),
-                "operation": snap.operation,
-            },
-            fh,
-        )
-    os.replace(tmp, _vpath(output_dir, nxt))
+    tables.write_file_atomic(
+        _vpath(output_dir, nxt), json.dumps(asdict(snap))
+    )
     # the commit point: readers see the new version only after this swap
-    ctmp = _current_path(output_dir) + ".tmp"
-    with open(ctmp, "w") as fh:
-        fh.write(str(nxt))
-    os.replace(ctmp, _current_path(output_dir))
+    tables.write_file_atomic(_current_path(output_dir), str(nxt))
     return snap
 
 
@@ -155,14 +144,7 @@ def catch_up_snapshots(output_dir: str) -> Snapshot | None:
     but present in an earlier snapshot, so it is NOT "missing" and is
     never silently resurrected here (a crash-orphaned run has a marker
     and appears in no snapshot at all)."""
-    from pii_detector_spark.plans.pipeline import _commits_dir
-
-    cdir = _commits_dir(output_dir)
-    marked = (
-        sorted(unquote(f) for f in os.listdir(cdir))
-        if os.path.isdir(cdir)
-        else []
-    )
+    marked = tables.committed_runs(output_dir)
     cur = current_snapshot_id(output_dir)
     seen: set[str] = set()
     for snap in snapshot_log(output_dir):
@@ -207,19 +189,10 @@ def read_table_at(
     return df.filter(F.col("run_id").isin(list(snap.run_ids)))
 
 
-def expire_snapshots(
-    output_dir: str,
-    keep_last: int,
-    tables: tuple[str, ...] | None = None,
-) -> dict[str, list[str]]:
+def expire_snapshots(output_dir: str, keep_last: int) -> dict[str, list[str]]:
     """Drop all but the newest ``keep_last`` snapshots and remove run
     partitions (and markers) unreachable from every surviving snapshot.
     Returns {table: [removed run_ids]}."""
-    from pii_detector_spark.plans.pipeline import (
-        HEALED_TABLES,
-        _marker_path,
-    )
-
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     snaps = snapshot_log(output_dir)
@@ -241,22 +214,8 @@ def expire_snapshots(
     # the surviving snapshots never reference dead runs).  Marker-
     # implies-complete-data holds at every crash point.
     for rid in dead:
-        try:
-            os.remove(_marker_path(output_dir, rid))
-        except FileNotFoundError:
-            pass
-    removed: dict[str, list[str]] = {}
-    for t in tables or HEALED_TABLES:
-        tdir = os.path.join(output_dir, t)
-        if not os.path.isdir(tdir):
-            continue
-        for e in os.listdir(tdir):
-            if not e.startswith("run_id="):
-                continue
-            rid = unquote(e.split("=", 1)[1])
-            if rid in dead:
-                shutil.rmtree(os.path.join(tdir, e))
-                removed.setdefault(t, []).append(rid)
+        tables.unmark_run(output_dir, rid)
+    removed = tables.drop_runs(output_dir, dead.__contains__)
     for s in drop:
         try:
             os.remove(_vpath(output_dir, s.snapshot_id))

@@ -1,0 +1,159 @@
+"""The on-disk table-commit protocol: the one place every multi-step
+table write is made crash-safe (plain parquet has no transactions).
+
+* ``write_file_atomic`` — single-file commits (run markers, snapshot
+  ``v{N}.json`` and ``CURRENT``, heartbeat beats): a hidden
+  ``.<name>#tmp`` sibling, then ``os.replace``.  Spark skips dot-files
+  and no quoted run_id ends in ``#tmp``, so no reader counts a tmp.
+* run markers ``_commits/<quote(run_id)>``, written after ALL of a run's
+  sink partitions land (on Iceberg, one atomic multi-table commit): a
+  ``run_id=`` partition without a marker is a crashed run, and
+  ``drop_runs`` removes it file-level — never a row rewrite.
+* ``replace_dir`` — whole-table replace (``neardup``, ``docs_deduped``,
+  ``paired_sigs``, the packing shards, the deleted-url GC rewrites):
+  write ``<t>_tmp``, rename live aside to ``<t>_swap_old``, rename tmp
+  into place, delete the aside.  ``recover`` puts any interruption right
+  and is called before a replaceable table is read.
+
+Single writer per output dir; readers take no locks.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+from typing import Callable, Iterator
+from urllib.parse import quote, unquote
+
+from pyspark.sql import DataFrame
+
+HEALED_TABLES = ("docs", "findings", "lineage", "metrics")
+
+# '#' never survives quote(safe=""), so no marker name can end in this
+_TMP_SUFFIX = "#tmp"
+
+
+def write_file_atomic(path: str, data: str | bytes) -> None:
+    """Single-file commit: a kill leaves the old file or the new one,
+    plus at most a tmp file that every listing ignores."""
+    d, name = os.path.split(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}{_TMP_SUFFIX}")
+    with open(tmp, "wb" if isinstance(data, bytes) else "w") as fh:
+        fh.write(data)
+    os.replace(tmp, path)
+
+
+def _commits_dir(output_dir: str) -> str:
+    return os.path.join(output_dir, "_commits")
+
+
+def marker_path(output_dir: str, run_id: str) -> str:
+    return os.path.join(_commits_dir(output_dir), quote(run_id, safe=""))
+
+
+def mark_run_committed(output_dir: str, run_id: str) -> None:
+    """Commit a run: call after ALL of its sink partitions land.  Until
+    the marker exists the run's partitions are a crashed, partially
+    written run that ``heal_uncommitted_runs`` removes before the next
+    run reads anything."""
+    write_file_atomic(marker_path(output_dir, run_id), run_id)
+
+
+def run_committed(output_dir: str, run_id: str) -> bool:
+    return os.path.exists(marker_path(output_dir, run_id))
+
+
+def unmark_run(output_dir: str, run_id: str) -> None:
+    try:
+        os.remove(marker_path(output_dir, run_id))
+    except FileNotFoundError:
+        pass
+
+
+def committed_runs(output_dir: str) -> list[str]:
+    """Every run_id with a marker, sorted."""
+    cdir = _commits_dir(output_dir)
+    if not os.path.isdir(cdir):
+        return []
+    return sorted(
+        unquote(f) for f in os.listdir(cdir) if not f.endswith(_TMP_SUFFIX)
+    )
+
+
+def run_partitions(table_dir: str) -> Iterator[tuple[str, str]]:
+    """Yield ``(run_id, dir)`` for each ``run_id=`` partition of a table.
+
+    The run_id comes from unquoting the LISTED name, never from deriving
+    the dir name: Spark escapes fewer characters than urllib (``run 1+x``
+    is written literally, where ``quote`` gives ``run%201%2Bx``), and
+    unquote inverts exactly the %XX escapes Spark does write."""
+    if not os.path.isdir(table_dir):
+        return
+    for e in os.listdir(table_dir):
+        d = os.path.join(table_dir, e)
+        if e.startswith("run_id=") and os.path.isdir(d):
+            yield unquote(e[len("run_id="):]), d
+
+
+def drop_runs(
+    output_dir: str, doomed: Callable[[str], bool]
+) -> dict[str, list[str]]:
+    """Remove every ``HEALED_TABLES`` partition whose run_id ``doomed``
+    accepts; returns {table: [removed run_ids]}.  Callers only doom
+    unmarked runs, so a kill part-way leaves the rest for the next heal."""
+    removed: dict[str, list[str]] = {}
+    for t in HEALED_TABLES:
+        for rid, d in run_partitions(os.path.join(output_dir, t)):
+            if doomed(rid):
+                shutil.rmtree(d)
+                removed.setdefault(t, []).append(rid)
+    return removed
+
+
+def recover(path: str) -> None:
+    """Put right an interrupted ``replace_dir``: ``path`` then holds
+    exactly the old or the new table and no sibling dir is left.  An aside
+    dir is renamed back if live is missing (killed between the renames),
+    else deleted (killed after the swap); a tmp dir is always deleted."""
+    old, tmp = path + "_swap_old", path + "_tmp"
+    if os.path.exists(old):
+        if os.path.exists(path):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, path)
+    if os.path.exists(tmp):
+        shutil.rmtree(tmp)
+
+
+def replace_dir(path: str, write: Callable[[str], None]) -> None:
+    """Crash-safe whole-table replace: ``write(tmp)`` builds the new table
+    beside the live one, then live is renamed aside, tmp renamed into
+    place and the aside deleted.  Every seam leaves the old or the new
+    table under a name ``recover`` restores."""
+    recover(path)
+    old, tmp = path + "_swap_old", path + "_tmp"
+    write(tmp)
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(tmp, path)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
+def publish_near_dedup(
+    output_dir: str, docs: DataFrame, marked: DataFrame
+) -> None:
+    """Replace ``neardup`` (url, component, is_canonical) from ``marked``,
+    then ``docs_deduped`` (the canonical rows of ``docs``).  The kept set
+    comes from the just-written narrow table, so the pair and component
+    stages are not evaluated a second time."""
+    neardup = os.path.join(output_dir, "neardup")
+    marked = marked.select("url", "component", "is_canonical")
+    replace_dir(neardup, marked.write.mode("overwrite").parquet)
+    canon = docs.sparkSession.read.parquet(neardup).where("is_canonical")
+    kept = docs.join(canon.select("url"), "url", "left_semi")
+    replace_dir(
+        os.path.join(output_dir, "docs_deduped"),
+        kept.write.mode("overwrite").parquet,
+    )

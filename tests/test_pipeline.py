@@ -248,8 +248,8 @@ def test_resume_after_partial_run(spark, corpus_path, tmp_path_factory):
 
 def test_gc_crash_recovery_and_swap_order(spark, tmp_path_factory):
     """Every GC interruption point leaves a recoverable directory: a
-    leftover *_gc_old with the live dir missing (crash mid-swap) is
-    renamed back before the pass runs; stale _gc_old/_gc_tmp are cleaned."""
+    leftover aside dir with the live dir missing (crash mid-swap) is
+    renamed back before the pass runs; no aside/tmp dir is left."""
     import os as _os
 
     from pii_detector_spark.plans.checkpoint import gc_deleted_urls
@@ -259,7 +259,7 @@ def test_gc_crash_recovery_and_swap_order(spark, tmp_path_factory):
     for t in ("docs", "findings", "lineage"):
         df.write.parquet(_os.path.join(out, t))
     # simulate a crash that happened between rename-aside and tmp-swap
-    _os.rename(_os.path.join(out, "docs"), _os.path.join(out, "docs_gc_old"))
+    _os.rename(_os.path.join(out, "docs"), _os.path.join(out, "docs_swap_old"))
 
     deleted = spark.createDataFrame([("u2",)], "url string")
     removed = gc_deleted_urls(spark, out, deleted)
@@ -841,9 +841,9 @@ def test_heal_single_run_spark_escaped_run_id(spark, tmp_path_factory):
     docs_dirs = _os.listdir(_os.path.join(out, "docs"))
     assert any("run 1+x" in e for e in docs_dirs), docs_dirs
     # simulate a crash: remove the commit marker, then heal
-    from pii_detector_spark.plans.pipeline import _marker_path
+    from pii_detector_spark.plans.tables import marker_path
 
-    _os.remove(_marker_path(out, rid))
+    _os.remove(marker_path(out, rid))
     healed = heal_single_run(out, rid)
     assert "docs" in healed and "lineage" in healed
     assert read_docs_table(spark, out).count() == 0
@@ -853,13 +853,13 @@ def test_neardup_rewrite_crash_leaves_readable_tables(
     spark, tmp_path_factory, monkeypatch
 ):
     """ADVICE r4 (low): the neardup/docs_deduped rewrites go through
-    write-aside + _swap_in, so a crash mid-rewrite leaves the OLD tables
+    write-aside + replace_dir, so a crash mid-rewrite leaves the OLD tables
     intact (plain in-place overwrite would delete them first)."""
     import os as _os
 
     import pyarrow.parquet as pq_
 
-    from pii_detector_spark.plans import pipeline as pl
+    from pii_detector_spark.plans import tables
 
     d = tmp_path_factory.mktemp("sw_src")
     pq_.write_table(
@@ -878,12 +878,12 @@ def test_neardup_rewrite_crash_leaves_readable_tables(
     }
     assert before
 
-    real_swap = pl._swap_in
+    real_swap = tables.replace_dir
 
     def killed_swap(path, tmp):
         raise RuntimeError("injected kill before swap")
 
-    monkeypatch.setattr(pl, "_swap_in", killed_swap)
+    monkeypatch.setattr(tables, "replace_dir", killed_swap)
     with pytest.raises(RuntimeError, match="injected kill"):
         run_pipeline(spark, str(d / "p.parquet"), out, run_id="sw2",
                      extract_html=False, dedup_near=True)
@@ -894,7 +894,7 @@ def test_neardup_rewrite_crash_leaves_readable_tables(
     }
     assert after == before
     # healed rerun converges
-    monkeypatch.setattr(pl, "_swap_in", real_swap)
+    monkeypatch.setattr(tables, "replace_dir", real_swap)
     run_pipeline(spark, str(d / "p.parquet"), out, run_id="sw3",
                  extract_html=False, dedup_near=True)
     assert {

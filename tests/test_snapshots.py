@@ -173,7 +173,7 @@ def test_expire_crash_order_marker_first(
         return real(path, *a, **k)
 
     monkeypatch.setattr(
-        "pii_detector_spark.plans.snapshots.shutil.rmtree", exploding
+        "pii_detector_spark.plans.tables.shutil.rmtree", exploding
     )
     with pytest.raises(RuntimeError, match="mid-expire"):
         S.expire_snapshots(out, keep_last=1)

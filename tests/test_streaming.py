@@ -325,6 +325,7 @@ def test_streaming_delta_dedup_soak_with_kills(spark, tmp_path, monkeypatch):
     import pyarrow.parquet as pq_
 
     from pii_detector_spark.plans import pipeline as pl
+    from pii_detector_spark.plans import tables
     from pii_detector_spark.plans.pipeline import run_pipeline
     from pii_detector_spark.streaming.incremental import incremental_pipeline
 
@@ -374,7 +375,7 @@ def test_streaming_delta_dedup_soak_with_kills(spark, tmp_path, monkeypatch):
     # batch 1: kill INSIDE the dedup pass (first neardup swap) — the
     # batch's sinks committed, derived tables stay one batch stale
     pq_.write_table(tbl(*slices[1]), str(src / "f1.parquet"))
-    real_swap = pl._swap_in
+    real_swap = tables.replace_dir
     state = {"armed": True}
 
     def killing_swap(path, tmp):
@@ -383,14 +384,14 @@ def test_streaming_delta_dedup_soak_with_kills(spark, tmp_path, monkeypatch):
             raise RuntimeError("injected kill mid-dedup-rewrite")
         return real_swap(path, tmp)
 
-    monkeypatch.setattr(pl, "_swap_in", killing_swap)
+    monkeypatch.setattr(tables, "replace_dir", killing_swap)
     try:
         incremental_pipeline(spark, str(src), out, run_prefix="sk",
                              dedup_delta=True)
         raise AssertionError("injected kill did not fire")
     except Exception as exc:  # StreamingQueryException wraps the kill
         assert "injected kill" in str(exc)
-    monkeypatch.setattr(pl, "_swap_in", real_swap)
+    monkeypatch.setattr(tables, "replace_dir", real_swap)
     # old derived tables survived the crash, readable
     assert spark.read.parquet(os.path.join(out, "neardup")).count() > 0
 
