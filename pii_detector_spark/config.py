@@ -29,24 +29,11 @@ class QualityThresholds:
     max_perplexity: float = 28.0           # char-bigram LM threshold
                                            # (en ≤ ~13, gibberish ≥ ~39)
     allowed_langs: tuple[str, ...] = ("en",)
-    # Gopher §A1.1 n-gram repetition gates (operators/repetition.py —
-    # a corpus-level batch operator, opt-in per source, NOT part of the
-    # fused per-doc UDF's fixed metric set). None = Gopher defaults.
-    top_ngram_max_frac: tuple[tuple[int, float], ...] = (
-        (2, 0.20), (3, 0.18), (4, 0.16),
-    )
-    dup_ngram_max_frac: tuple[tuple[int, float], ...] = (
-        (5, 0.15), (6, 0.14), (7, 0.13), (8, 0.12), (9, 0.11), (10, 0.10),
-    )
 
 
 @dataclass(frozen=True)
 class EngineConfig:
     quality: QualityThresholds = field(default_factory=QualityThresholds)
-    # skew defense: number of salted output partitions = salt_factor × cores
-    salt_factor: int = 4
-    arrow_batch_rows: int = 2_000
-    shuffle_partitions: int = 32
     # pattern battery version stamped into lineage rows; bump to force rescan
     pattern_version: int = 1
 

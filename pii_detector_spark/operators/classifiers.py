@@ -39,9 +39,6 @@ from pii_detector_spark.operators.scrub import (
 )
 from pii_detector_spark.patterns import ALL_PATTERNS, PatternSpec
 
-# reference sensitivity weights (data_classifiers.py:20-23)
-SENSITIVITY_WEIGHTS = {"low": 1, "medium": 2, "high": 3, "critical": 4}
-
 
 @dataclass(frozen=True)
 class CustomClassifier:

@@ -89,25 +89,6 @@ def exact_dedup(
     )
 
 
-def minhash_signature_cols(k: int, shingle_col: str = "shingles") -> list[Column]:
-    """k minwise hashes: min(md5('<seed>:' || shingle)) per seed.
-
-    Array-expression form (one pass per row). Prefer the explode+groupBy
-    form in ``minhash_lsh_pairs``: Catalyst's CollapseProject inlines the
-    whole (interpreted) shingle construction into each of the k expressions,
-    so this form costs k× the shingling.
-    """
-    return [
-        F.array_min(
-            F.transform(
-                F.col(shingle_col),
-                lambda s, i=i: F.md5(F.concat(F.lit(f"{i}:"), s)),
-            )
-        ).alias(f"mh_{i}")
-        for i in range(k)
-    ]
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

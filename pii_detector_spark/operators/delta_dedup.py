@@ -40,8 +40,6 @@ from pyspark.sql import functions as F
 
 from pii_detector_spark.plans.partitioning import ensure_min_parallelism
 
-SIG_META_COLS = ("doc_id", "shingle_hashes")
-
 
 def minhash_signatures(
     df: DataFrame,

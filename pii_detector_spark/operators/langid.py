@@ -14,11 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-from pii_detector_spark.functions.langmodels import (
-    perplexity,
-    predict_lang,
-    word_perplexity,
-)
+from pii_detector_spark.functions.langmodels import word_perplexity
 
 LANG_RESULT_TYPE = StructType(
     [
@@ -42,8 +38,9 @@ def _langid_batch(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"lang_pred": langs, "perplexity": ppls})
 
 
-# nondeterministic marker keeps the UDF as its own projection layer (see
-# sources/web_pages.py); the function is pure
+# nondeterministic marker keeps the UDF as its own projection layer (stops
+# CollapseProject from duplicating it into consumer expressions); the
+# function is pure
 langid_udf = F.pandas_udf(
     _langid_batch, returnType=LANG_RESULT_TYPE
 ).asNondeterministic()
@@ -76,52 +73,3 @@ def with_word_perplexity(df: DataFrame, text_col: str = "text") -> DataFrame:
     ``word_perplexity``) as a column — the CCNet quality signal
     complementing the char-bigram ``perplexity``."""
     return df.withColumn("word_ppl", word_ppl_udf(F.col(text_col)))
-
-
-# --- fused extraction + language models -----------------------------------
-# One Arrow round trip instead of two: the pipeline's extraction output is
-# consumed immediately by the language models, so fusing them halves the
-# JVM↔Python transfers of the (wide) text column and drops one python-worker
-# stage per task.
-
-EXTRACT_LANG_TYPE = StructType(
-    [
-        StructField("text", StringType()),
-        StructField("lang_pred", StringType()),
-        StructField("perplexity", DoubleType()),
-    ]
-)
-
-
-def _extract_langid_batch(htmls: pd.Series, fallback: pd.Series) -> pd.DataFrame:
-    from pii_detector_spark.functions.textnorm import extract_text_from_html
-
-    texts: list[str] = []
-    langs: list[str] = []
-    ppls: list[float] = []
-    for h, t in zip(htmls, fallback):
-        text = extract_text_from_html(h) if h is not None else (t or "")
-        texts.append(text)
-        langs.append(predict_lang(text))
-        ppls.append(min(perplexity(text), 1e9))
-    return pd.DataFrame(
-        {"text": texts, "lang_pred": langs, "perplexity": ppls}
-    )
-
-
-extract_langid_udf = F.pandas_udf(
-    _extract_langid_batch, returnType=EXTRACT_LANG_TYPE
-).asNondeterministic()
-
-
-def with_extracted_text_and_langid(df: DataFrame) -> DataFrame:
-    """html → text + lang_pred + perplexity in a single UDF pass (falls back
-    to the existing text column when html is null)."""
-    res = extract_langid_udf(F.col("html"), F.col("text"))
-    return (
-        df.withColumn("_el", res)
-        .withColumn("text", F.col("_el.text"))
-        .withColumn("lang_pred", F.col("_el.lang_pred"))
-        .withColumn("perplexity", F.col("_el.perplexity"))
-        .drop("_el")
-    )

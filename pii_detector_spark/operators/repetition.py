@@ -22,25 +22,21 @@ oracle):
   overlap correction — deterministic and cheap in both engines; the paper's
   span-marking variant differs only on pathological self-overlapping text.
 
-Scale shape: one regexp pass per n (codegen — the lookahead trick from
-``dedup.shingles_col``, NOT interpreted higher-order functions), one union,
-ONE wide shuffle keyed (doc_id, n, md5(gram)) carrying 16+33 byte rows —
-never text — then a per-doc conditional aggregation. Joins back id-keyed.
+Scale shape: one shuffle-free ``mapInArrow`` pass over rolling-hash n-gram
+keys (see ``with_repetition_metrics``).
 
-The thresholds live in ``config.QualityThresholds.top_ngram_max_frac`` /
-``dup_ngram_max_frac`` (Gopher's published values); ``apply_repetition
-_rules`` emits the first-failing-rule drop reason. They are a separate
-batch operator, not part of the fused pipeline UDF's fixed metric set —
-callers opt in per-corpus (the documented Gopher practice of tuning
+The thresholds are ``TOP_NGRAM_MAX_FRAC`` / ``DUP_NGRAM_MAX_FRAC`` below
+(Gopher's published values); ``apply_repetition_rules`` applies them (or
+caller overrides) and emits the first-failing-rule drop reason. They are a
+separate batch operator, not part of the fused pipeline UDF's fixed metric
+set — callers opt in per-corpus (the documented Gopher practice of tuning
 repetition gates per source).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-WS_CLASS = "[ \\t\\n\\r\\f\\u000B]+"
 
 # Gopher §A1.1 published thresholds
 TOP_NGRAM_MAX_FRAC: dict[int, float] = {2: 0.20, 3: 0.18, 4: 0.16}
@@ -52,15 +48,6 @@ DUP_NGRAM_MAX_FRAC: dict[int, float] = {
     9: 0.11,
     10: 0.10,
 }
-
-
-def ngrams_all_col(n: int, text_col: str = "text") -> Column:
-    """ALL overlapping word n-grams (non-distinct, document order) — the
-    counting variant of ``dedup.shingles_col``; same codegen lookahead."""
-    norm = F.trim(F.regexp_replace(F.col(text_col), WS_CLASS, " "))
-    body = " ".join(["[^ ]+"] * n)
-    rx = f"(?<![^ ])(?=({body}))"
-    return F.regexp_extract_all(norm, F.lit(rx), F.lit(1))
 
 
 def with_repetition_metrics(

@@ -32,7 +32,6 @@ prefixes instead of the reference's ``uuid4`` (reproducibility).
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -288,66 +287,6 @@ scrub_udf = F.pandas_udf(
 scrub_person_udf = F.pandas_udf(
     _make_scrub_batch(include_person=True), returnType=SCRUB_RESULT_TYPE
 ).asNondeterministic()
-
-
-def _make_scrub_batch_if(include_person: bool):
-    def _scrub_batch_if(
-        urls: pd.Series, texts: pd.Series, keeps: pd.Series
-    ) -> pd.DataFrame:
-        """Gated variant: skip documents the quality gate already dropped.
-
-        One pass over the data instead of a filter→scrub→union re-scan; at
-        100 TB re-reading the corpus to stitch kept/dropped rows back
-        together would double the scan, so the gate rides inside the same
-        Arrow batch.
-        """
-        scrubbed: list[str | None] = []
-        findings: list[list[dict] | None] = []
-        phi: list[bool] = []
-        for url, text, keep in zip(urls, texts, keeps):
-            t = text or ""
-            if not keep:
-                scrubbed.append(None)
-                findings.append(None)
-                phi.append(is_phi(url or "", t))
-                continue
-            matches = detect(t, include_person=include_person)
-            scrubbed.append(scrub_text(t, matches))
-            findings.append(build_findings(url or "", matches))
-            phi.append(is_phi(url or "", t))
-        return pd.DataFrame(
-            {"scrubbed_text": scrubbed, "findings": findings, "is_phi": phi}
-        )
-
-    return _scrub_batch_if
-
-
-scrub_if_kept_udf = F.pandas_udf(
-    _make_scrub_batch_if(include_person=False), returnType=SCRUB_RESULT_TYPE
-).asNondeterministic()
-
-scrub_if_kept_person_udf = F.pandas_udf(
-    _make_scrub_batch_if(include_person=True), returnType=SCRUB_RESULT_TYPE
-).asNondeterministic()
-
-
-def with_gated_scrub(
-    df,
-    url_col: str = "url",
-    text_col: str = "text",
-    keep_col: str = "keep",
-    include_person: bool = False,
-):
-    """Scrub only kept documents (single-pass; dropped rows get nulls)."""
-    udf = scrub_if_kept_person_udf if include_person else scrub_if_kept_udf
-    res = udf(F.col(url_col), F.col(text_col), F.col(keep_col))
-    return (
-        df.withColumn("_scrub", res)
-        .withColumn("scrubbed_text", F.col("_scrub.scrubbed_text"))
-        .withColumn("findings", F.col("_scrub.findings"))
-        .withColumn("is_phi", F.col("_scrub.is_phi"))
-        .drop("_scrub")
-    )
 
 
 def with_scrub(

@@ -179,48 +179,54 @@ METRICS_SCHEMA = (
 )
 
 
-def build_metrics(docs: DataFrame, findings: DataFrame, run_id: str) -> DataFrame:
+def build_metrics(docs: DataFrame, run_id: str) -> DataFrame:
     """Per-partition lineage metrics: docs scanned/kept, drop reasons map,
     PII hits by category map.
 
-    The per-partition counters are metadata-sized (partitions × reasons /
-    categories), so the maps are assembled driver-side from two flat
-    partial-aggregated collects — one narrow aggregation job each — instead
-    of a groupBy→groupBy→join plan whose scheduling latency dominated the
-    pipeline's serial tail.
+    Every counter comes from ONE partial-aggregated collect over ``docs``
+    (the findings array rides along), so ``partition_id`` means the same
+    docs partition for the doc counts and the PII hits. ``posexplode_outer``
+    yields one row per finding (one null row for a doc with none); position
+    0 or null marks a doc's first row, so each doc is counted once. The
+    counters are metadata-sized (partitions × reasons × categories) and the
+    maps are assembled driver-side.
     """
     spark = docs.sparkSession
-    doc_rows = (
-        docs.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid", "keep", "drop_reason")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    hit_rows = (
-        findings.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid", "pii_type")
-        .agg(F.count(F.lit(1)).alias("n"))
+    counts = (
+        docs.select(
+            F.spark_partition_id().alias("_pid"),
+            "keep",
+            "drop_reason",
+            F.posexplode_outer(F.col("findings.pii_type")).alias(
+                "_pos", "pii_type"
+            ),
+        )
+        .groupBy("_pid", "keep", "drop_reason", "pii_type")
+        .agg(
+            F.count(F.when(F.coalesce(F.col("_pos"), F.lit(0)) == 0, 1)).alias(
+                "n_docs"
+            ),
+            F.count("_pos").alias("n_hits"),
+        )
         .collect()
     )
     agg: dict[int, dict] = {}
-    for r in doc_rows:
+    for r in counts:
         m = agg.setdefault(
             r["_pid"],
             {"docs_scanned": 0, "docs_kept": 0, "drop_reasons": {}, "pii_hits": {}},
         )
-        m["docs_scanned"] += r["n"]
+        m["docs_scanned"] += r["n_docs"]
         if r["keep"]:
-            m["docs_kept"] += r["n"]
-        if r["drop_reason"] is not None:
+            m["docs_kept"] += r["n_docs"]
+        if r["drop_reason"] is not None and r["n_docs"]:
             m["drop_reasons"][r["drop_reason"]] = (
-                m["drop_reasons"].get(r["drop_reason"], 0) + r["n"]
+                m["drop_reasons"].get(r["drop_reason"], 0) + r["n_docs"]
             )
-    for r in hit_rows:
-        m = agg.setdefault(
-            r["_pid"],
-            {"docs_scanned": 0, "docs_kept": 0, "drop_reasons": {}, "pii_hits": {}},
-        )
-        m["pii_hits"][r["pii_type"]] = m["pii_hits"].get(r["pii_type"], 0) + r["n"]
+        if r["n_hits"]:
+            m["pii_hits"][r["pii_type"]] = (
+                m["pii_hits"].get(r["pii_type"], 0) + r["n_hits"]
+            )
     rows = [
         (pid, m["docs_scanned"], m["docs_kept"], m["drop_reasons"], m["pii_hits"], run_id)
         for pid, m in sorted(agg.items())

@@ -19,8 +19,8 @@ Stage order and the reasoning at 100 TB:
                             version. Output coalesced to ~4 files/core so
                             the driver-serial commit never dominates.
 
-The only wide exchanges in the job are the metrics aggregations over the
-(tiny) per-partition counters.
+The only wide exchange in the job is the metrics aggregation over the
+(tiny) per-partition counters of the docs re-read.
 """
 
 from __future__ import annotations
@@ -86,8 +86,9 @@ def transform_web_pages(
     The whole per-document chain (extract → metrics → langid → decide →
     gated scrub) runs as ONE fused pandas UDF (``operators/fused.py``): one
     Arrow round trip and one Python worker per task — the property that
-    keeps N→4N scaling efficiency ≥0.8. The composable per-stage operators
-    remain available for ad-hoc plans and the driver's SQL-oracle queries.
+    keeps N→4N scaling efficiency ≥0.8. The per-stage operators
+    (``operators/langid.py``, ``operators/scrub.py``, ``operators/quality.py``)
+    serve the declared queries in ``__spark_entry__.py``, not this plan.
     ``extract_html=False`` skips HTML extraction by nulling the html column
     (the fused UDF falls back to the text column).
     """
@@ -271,14 +272,11 @@ def write_run_outputs(
         for f in futs:
             f.result()
 
-    all_findings = spark.read.schema(findings.schema).parquet(
-        findings_path
-    ).filter(
-        F.col("run_id") == run_id
-    )
-    # build_metrics materializes the (tiny) counters driver-side; reuse them
-    # for docs_written instead of a separate count() scan of the docs output
-    metrics_df = checkpoint.build_metrics(this_run, all_findings, run_id)
+    # build_metrics materializes the (tiny) counters driver-side from the
+    # docs re-read alone (PII hits from its findings array, so each row's
+    # counters describe one docs partition); reuse them for docs_written
+    # instead of a separate count() scan of the docs output
+    metrics_df = checkpoint.build_metrics(this_run, run_id)
     metrics_rows = metrics_df.collect()
     metrics_df.write.mode("append").partitionBy("run_id").parquet(
         checkpoint.metrics_path(output_dir)

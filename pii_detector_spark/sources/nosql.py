@@ -9,8 +9,7 @@ The reference walks both stores with serial LIMIT/OFFSET-style cursors:
 * DocumentDB — ``collection.find().skip(offset).limit(limit)``
   (``documentdb.py:219-252``), same quadratic skip cost.
 
-Spark-first translation, mirroring what ``sources/jdbc.py`` does for SQL
-stores (range predicates instead of OFFSET):
+Spark-first translation (range predicates instead of OFFSET):
 
 * **DynamoDB**: the service's native parallel scan — ``TotalSegments`` /
   ``Segment`` — one segment per Spark task; each segment is an independent
@@ -19,18 +18,15 @@ stores (range predicates instead of OFFSET):
   (``{_id: {$gte: lo, $lt: hi}}``) from split points, the same strategy
   the official mongo-spark connector uses; each range is one task's
   cursor, resumable and skip-free.
-* the reference's exact offset chunk lists are still derivable
-  (``plan_offset_chunks`` in ``sources/jdbc.py``) for parity.
 
 The reference's schema-union normalization (items in one chunk disagree on
 keys; it unions the key sets and back-fills — ``dynamodb.py:146-154``,
 ``documentdb.py:246-249``) is ``align_item_columns`` here, applied
 per-batch executor-side.
 
-No live store exists in this sandbox: like ``repo_walker``, the fetch
-callable is an injected seam (boto3 / pymongo plug in on a cluster); the
-planning math and the distributed fetch orchestration are the tested
-surface.
+No live store is needed: the fetch callable is an injected seam (boto3 /
+pymongo plug in on a cluster); the planning math and the distributed fetch
+orchestration are the tested surface.
 """
 
 from __future__ import annotations
@@ -42,7 +38,8 @@ from typing import Any, Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from pii_detector_spark.sources.jdbc import CHUNK_JSON_CAPACITY
+# reference chunk size (app/core/config.py:131)
+CHUNK_JSON_CAPACITY = 1_000
 
 DEFAULT_MAX_SEGMENTS = 256
 
@@ -314,8 +311,7 @@ def read_parallel_specs(
     schema: StructType | str,
 ) -> DataFrame:
     """Distribute segment/range specs over executors and fetch each with
-    the injected client — the NoSQL analogue of ``repo_walker``'s listing
-    seam. Specs ride as JSON strings (works for Dynamo segment params and
+    the injected client. Specs ride as JSON strings (works for Dynamo segment params and
     Mongo range filters alike); one task per spec; rows are aligned to
     ``schema``'s fields (the schema-union rule) before yielding."""
     import json

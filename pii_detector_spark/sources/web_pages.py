@@ -1,9 +1,10 @@
-"""web_pages input table: schema, reader, pre-filters, text extraction.
+"""web_pages input table: schema, reader and pre-filters.
 
 Reader is plain ``spark.read.parquet`` (the Iceberg catalog swap is a format
 string change; nothing else here assumes parquet). Column pruning matters:
 ``html:binary`` dominates row width, so stages that don't need it must
-select it away *before* wide operators — callers use ``prune_for_scan``.
+select it away *before* wide operators. Text extraction from ``html`` runs
+inside the fused document UDF (``operators/fused.py``).
 
 Pre-filters reproduce the reference's object filters (SURVEY.md §2.2):
 F1 extension blocklist (``app/core/config.py:98-110``), F2 log-path
@@ -14,7 +15,6 @@ exclusion (``app/services/s3_service.py:114,251-261``), F9 empty guard
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -24,8 +24,6 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
-
-from pii_detector_spark.functions.textnorm import extract_text_from_html
 
 WEB_PAGES_SCHEMA = StructType(
     [
@@ -62,33 +60,4 @@ def apply_prefilters(df: DataFrame, max_html_bytes: int = MAX_HTML_BYTES) -> Dat
         .filter(
             F.col("html").isNull() | (F.length(F.col("html")) <= max_html_bytes)
         )
-    )
-
-
-def _extract_batch(htmls: pd.Series, fallback: pd.Series) -> pd.Series:
-    # null-html fallback lives inside the UDF so the plan column is a plain
-    # attribute, not a CASE WHEN wrapping a PythonUDF (which Catalyst would
-    # inline into every downstream consumer expression)
-    return pd.Series(
-        [
-            extract_text_from_html(h) if h is not None else (t or "")
-            for h, t in zip(htmls, fallback)
-        ],
-        dtype="object",
-    )
-
-
-# nondeterministic marker: stops CollapseProject from duplicating the UDF
-# into consumer expressions; the function itself is pure
-extract_text_udf = F.pandas_udf(
-    _extract_batch, returnType=StringType()
-).asNondeterministic()
-
-
-def with_extracted_text(df: DataFrame, out_col: str = "text") -> DataFrame:
-    """Replace/attach ``text`` with the deterministic extraction from
-    ``html`` (reference text-extraction stage, file_service.py:353-422).
-    Falls back to the existing text column when html is null."""
-    return df.withColumn(
-        out_col, extract_text_udf(F.col("html"), F.col("text"))
     )

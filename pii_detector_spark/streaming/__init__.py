@@ -1,2 +1,3 @@
-"""Structured Streaming surface: incremental (Trigger.AvailableNow) scan of
-the web_pages table and watermarked event metrics."""
+"""Structured Streaming surface: the full pipeline as an incremental
+(Trigger.AvailableNow) job over the web_pages table, and watermarked event
+metrics."""

@@ -1,11 +1,11 @@
 """Incremental processing via Structured Streaming.
 
 The reference's 15-minute rescan loop (``app/customer_worker.py:73-91``)
-maps to ``Trigger.AvailableNow``: each invocation processes exactly the
-files that arrived since the last checkpoint, then exits — the
+maps to ``Trigger.AvailableNow``: each ``incremental_pipeline`` invocation
+processes exactly the files that arrived since the last checkpoint through
+the batch job's ``write_run_outputs`` sinks, then exits — the
 streaming-native version of the batch anti-join resume in
-``plans/checkpoint.py`` (both are provided; batch is the primary path,
-SURVEY.md §1.5).
+``plans/checkpoint.py`` (batch is the primary path, SURVEY.md §1.5).
 
 ``windowed_event_metrics`` shows the watermark + window pattern over the
 ``events`` table shape for late-data-tolerant rollups.
@@ -19,37 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pii_detector_spark.config import DEFAULT_CONFIG, EngineConfig
-from pii_detector_spark.plans.pipeline import DOC_COLUMNS, transform_web_pages
+from pii_detector_spark.plans.pipeline import transform_web_pages
 from pii_detector_spark.sources.web_pages import WEB_PAGES_SCHEMA
-
-
-def incremental_scan(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    config: EngineConfig = DEFAULT_CONFIG,
-) -> None:
-    """Process all not-yet-seen input files, write docs, exit (AvailableNow).
-
-    File-level progress lives in the streaming checkpoint; re-invoking after
-    new files land processes only the delta — no anti-join needed because
-    the source tracks consumed files.
-    """
-    stream = (
-        spark.readStream.schema(WEB_PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-    docs = transform_web_pages(stream, config).select(*DOC_COLUMNS, "findings")
-    q = (
-        docs.writeStream.format("parquet")
-        .option("path", os.path.join(output_dir, "docs_stream"))
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def incremental_pipeline(

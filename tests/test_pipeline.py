@@ -115,6 +115,53 @@ def test_metrics_totals(spark, pipeline_out, engine_rows):
     assert agg[1] == sum(1 for r in engine_rows.values() if r["keep"])
 
 
+def test_metrics_rows_count_one_docs_partition(spark, tmp_path):
+    """A metrics row's PII hits and doc counts describe the SAME partition
+    of the docs re-read. Small splits make the docs and findings tables
+    read back in unrelated partitionings, so hits counted over a findings
+    re-read land under the wrong partition_id, next to rows with
+    docs_scanned == 0."""
+    from pyspark.sql import functions as F
+
+    from pii_detector_spark.plans.pipeline import read_docs_table
+    from pii_detector_spark.sources.datagen import write_web_pages
+
+    src = write_web_pages(
+        str(tmp_path / "in.parquet"), n_rows=2000, row_group_size=100
+    )
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "65536")
+        out = str(tmp_path / "out")
+        run_pipeline(spark, src, out, run_id="p1")
+        want = {
+            r["pid"]: (r["docs"], r["hits"])
+            for r in read_docs_table(spark, out)
+            .filter(F.col("run_id") == "p1")
+            .groupBy(F.spark_partition_id().alias("pid"))
+            .agg(
+                F.count(F.lit(1)).alias("docs"),
+                F.sum(
+                    F.when(F.col("findings").isNull(), 0).otherwise(
+                        F.size("findings")
+                    )
+                ).alias("hits"),
+            )
+            .collect()
+        }
+    finally:
+        spark.conf.set(key, prev)
+    rows = spark.read.parquet(os.path.join(out, "metrics")).collect()
+    assert len(want) > 1, "the docs re-read must split for this check"
+    got = {
+        r["partition_id"]: (r["docs_scanned"], sum(r["pii_hits"].values()))
+        for r in rows
+    }
+    assert [r["partition_id"] for r in rows if r["docs_scanned"] == 0] == []
+    assert got == {pid: dh for pid, dh in want.items() if dh[0]}
+
+
 def test_every_drop_reason_class_present(engine_rows):
     reasons = {r["drop_reason"] for r in engine_rows.values() if r["drop_reason"]}
     expected = {

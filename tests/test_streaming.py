@@ -1,136 +1,10 @@
-"""Structured Streaming tests: AvailableNow incremental scan already covered
-in test_pipeline; here: the custom stateful sessionization operator and the
-windowed rollup."""
+"""Structured Streaming tests: the full pipeline as an AvailableNow
+streaming job (batch equivalence, idempotent foreachBatch replay, delta
+dedup with kills) and the watermarked windowed rollup."""
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
-
-
-def test_sessionize_stateful(spark, tmp_path):
-    from pii_detector_spark.streaming.sessionize import sessionize
-
-    src = tmp_path / "events_in"
-    src.mkdir()
-    # user 1: two sessions split by a >30min gap; user 2: one session
-    m = 60 * 1_000_000
-    rows = [
-        (1, 0 * m, 1.0),
-        (1, 5 * m, 2.0),
-        (1, 10 * m, 3.0),
-        (1, 120 * m, 4.0),  # new session (110min gap)
-        (1, 125 * m, 5.0),
-        (2, 0 * m, 10.0),
-        (2, 20 * m, 10.0),
-    ]
-    spark.createDataFrame(
-        rows, "user_id long, ts_us long, value double"
-    ).coalesce(1).write.parquet(str(src / "batch0"))
-
-    stream = (
-        spark.readStream.schema("user_id long, ts_us long, value double")
-        .parquet(str(src / "*"))
-    )
-    out = sessionize(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r.user_id, r.session_start_us): r
-        for r in spark.sql("select * from sessions_t").collect()
-    }
-    # the in-data-closed session must be emitted in the first batch
-    s = got[(1, 0)]
-    assert s.session_end_us == 10 * m
-    assert s.n_events == 3
-    assert s.total_value == 6.0
-    # open sessions (1 @120m, 2 @0) stay in state until timeout — not closed
-    assert (1, 120 * m) not in got
-    assert (2, 0) not in got
-
-
-def test_sessionize_event_time_timeout(spark, tmp_path):
-    """EventTimeTimeout variant: a replayed log (event time far from
-    wall-clock) must close open sessions when the WATERMARK passes
-    last_ts + gap — not after wall-clock silence."""
-    import os
-
-    from pii_detector_spark.streaming.sessionize import sessionize
-
-    src = tmp_path / "events_et"
-    src.mkdir()
-    m = 60 * 1_000_000
-
-    def write_batch(name: str, rows, mtime: int):
-        p = src / name
-        spark.createDataFrame(
-            rows, "user_id long, ts_us long, value double"
-        ).coalesce(1).write.parquet(str(p))
-        # deterministic file ordering for maxFilesPerTrigger=1
-        for root, _dirs, files in os.walk(p):
-            for f in files:
-                os.utime(os.path.join(root, f), (mtime, mtime))
-
-    # batch 0: user 1's events (a replay: old event time, processed now).
-    # Offset from epoch: the initial watermark is 0, and rows at/under the
-    # watermark are dropped as late.
-    write_batch(
-        "b0", [(1, 100 * m, 1.0), (1, 105 * m, 2.0), (1, 110 * m, 3.0)], 1_000
-    )
-    # batch 1: much-later event advances the watermark past 110m + 30m gap
-    write_batch("b1", [(9, 700 * m, 0.5)], 2_000)
-    # batch 2: one more batch so the timeout (armed vs the new watermark)
-    # actually fires
-    write_batch("b2", [(9, 701 * m, 0.5)], 3_000)
-
-    stream = (
-        spark.readStream.schema("user_id long, ts_us long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-        .withColumn("ts", F.timestamp_micros("ts_us"))
-        .withWatermark("ts", "5 minutes")
-    )
-    out = sessionize(stream, timeout="event")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_et")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {
-        (r.user_id, r.session_start_us): r
-        for r in spark.sql("select * from sessions_et").collect()
-    }
-    # user 1's open session was closed by the event-time timeout, at its
-    # true event-time extent
-    s = got[(1, 100 * m)]
-    assert s.session_end_us == 110 * m
-    assert s.n_events == 3
-    assert s.total_value == 6.0
-    # user 9's session stays open: watermark (701m - 5m) has not passed
-    # 701m + 30m
-    assert (9, 700 * m) not in got
-
-
-def test_sessionize_rejects_unknown_timeout(spark):
-    import pytest as _pytest
-
-    from pii_detector_spark.streaming.sessionize import sessionize
-
-    df = spark.createDataFrame([], "user_id long, ts_us long, value double")
-    with _pytest.raises(ValueError, match="timeout"):
-        sessionize(df, timeout="bogus")
 
 
 def test_incremental_pipeline_matches_batch(spark, corpus_path, tmp_path):
