@@ -304,14 +304,16 @@ def with_fused_processing(
     text_arg = F.when(
         F.col("html").isNull(), F.col("text")
     ).otherwise(F.lit(None).cast("string"))
-    out = df.withColumn(
-        "_d", udf(F.col("url"), F.col("html"), text_arg)
-    ).drop("html", "text")
-    for f in FUSED_RESULT_TYPE.fields:
-        out = out.withColumn(f.name, F.col(f"_d.{f.name}"))
-    return out.drop("_d").withColumn(
-        "n_findings",
-        F.when(F.col("findings").isNotNull(), F.size("findings"))
+    # ONE projection: each withColumn would re-run the analyzer over the
+    # whole plan, 20 times per run
+    out = df.withColumn("_d", udf(F.col("url"), F.col("html"), text_arg))
+    fused = [f.name for f in FUSED_RESULT_TYPE.fields]
+    replaced = {"html", "text", "_d", "n_findings", *fused}
+    return out.select(
+        *[c for c in df.columns if c not in replaced],
+        *[F.col(f"_d.{c}").alias(c) for c in fused],
+        F.when(F.col("_d.findings").isNotNull(), F.size("_d.findings"))
         .otherwise(F.lit(0))
-        .cast("long"),
+        .cast("long")
+        .alias("n_findings"),
     )

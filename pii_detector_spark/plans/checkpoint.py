@@ -13,7 +13,8 @@ F5/F8, §2.9 K2/K3):
   its rescan-on-new-patterns trigger (``redis_tasks.py:174-260``: bumping
   ``EngineConfig.pattern_version`` invalidates old lineage).
 * metrics table — per-partition docs scanned / kept, PII hits by category,
-  drop reasons (``app/schemas/trends_info.py`` analogue).
+  drop reasons (``app/schemas/trends_info.py`` analogue); the driver writes
+  a run's few rows as one parquet file (``write_metrics``), not a Spark job.
 
 These are plain parquet appends here; on a cluster the same code targets an
 Iceberg catalog (``writeTo(...).append()``) for snapshot isolation.
@@ -22,11 +23,16 @@ Iceberg catalog (``writeTo(...).append()``) for snapshot isolation.
 from __future__ import annotations
 
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
-from pii_detector_spark.plans.tables import recover, replace_dir
+from pii_detector_spark.plans.tables import recover, replace_dir, write_file_atomic
 
 
 def lineage_path(output_dir: str) -> str:
@@ -67,8 +73,10 @@ def anti_join_completed(
             & (F.col("pattern_version") == pattern_version)
         )
         .select(F.col("url").alias(url_col))
-        .distinct()
     )
+    # No distinct(): a left-anti join's result does not depend on duplicate
+    # right-side keys, and deduping first would add an exchange and two
+    # aggregations ahead of the join on every resume run.
     # No broadcast hint: lineage holds one row per scanned url, so after the
     # first full run it is CORPUS-cardinality, not metadata-sized — a forced
     # F.broadcast(done) would OOM the driver at 10^9+ urls. Left unhinted,
@@ -89,11 +97,13 @@ def deleted_urls(
     if lineage is None:
         return None
     # both sides are url-only but corpus-sized: shuffle anti-join (AQE picks
-    # broadcast if the source listing happens to be small)
+    # broadcast if the source listing happens to be small). Only the left
+    # side is deduped: it is the output, and right-side duplicates do not
+    # change an anti-join's result
     return (
         lineage.select(url_col)
         .distinct()
-        .join(current.select(url_col).distinct(), on=url_col, how="left_anti")
+        .join(current.select(url_col), on=url_col, how="left_anti")
     )
 
 
@@ -179,9 +189,10 @@ METRICS_SCHEMA = (
 )
 
 
-def build_metrics(docs: DataFrame, run_id: str) -> DataFrame:
+def build_metrics(docs: DataFrame) -> pa.Table:
     """Per-partition lineage metrics: docs scanned/kept, drop reasons map,
-    PII hits by category map.
+    PII hits by category map, as an Arrow table with ``METRICS_SCHEMA``'s
+    types minus ``run_id`` (the partition dir carries it).
 
     Every counter comes from ONE partial-aggregated collect over ``docs``
     (the findings array rides along), so ``partition_id`` means the same
@@ -191,7 +202,6 @@ def build_metrics(docs: DataFrame, run_id: str) -> DataFrame:
     counters are metadata-sized (partitions × reasons × categories) and the
     maps are assembled driver-side.
     """
-    spark = docs.sparkSession
     counts = (
         docs.select(
             F.spark_partition_id().alias("_pid"),
@@ -227,8 +237,20 @@ def build_metrics(docs: DataFrame, run_id: str) -> DataFrame:
             m["pii_hits"][r["pii_type"]] = (
                 m["pii_hits"].get(r["pii_type"], 0) + r["n_hits"]
             )
-    rows = [
-        (pid, m["docs_scanned"], m["docs_kept"], m["drop_reasons"], m["pii_hits"], run_id)
-        for pid, m in sorted(agg.items())
-    ]
-    return spark.createDataFrame(rows, schema=METRICS_SCHEMA)
+    schema = to_arrow_schema(_parse_datatype_string(METRICS_SCHEMA))
+    schema = schema.remove(schema.get_field_index("run_id"))
+    return pa.Table.from_pylist(
+        [{"partition_id": pid, **m} for pid, m in sorted(agg.items())],
+        schema=schema,
+    )
+
+
+def write_metrics(table: pa.Table, partition_dir: str) -> None:
+    """Write ``build_metrics``' rows into ``partition_dir`` as ONE uniquely
+    named parquet file, committed by ``write_file_atomic`` — no Spark job."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    write_file_atomic(
+        os.path.join(partition_dir, f"part-{uuid.uuid4().hex}.snappy.parquet"),
+        buf.getvalue().to_pybytes(),
+    )

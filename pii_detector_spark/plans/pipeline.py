@@ -4,7 +4,9 @@ as one declarative DataFrame plan).
 Stage order and the reasoning at 100 TB:
 
 1. scan + pre-filters     — predicates push into the parquet/Iceberg scan
-2. resume anti-join       — broadcast; removes already-SCANNED urls
+2. resume anti-join       — removes already-SCANNED urls; url-only, no
+                            distinct() ahead of it, so it broadcasts while
+                            the lineage is under the broadcast threshold
 3. fused document UDF     — extraction + quality metrics + langid +
                             perplexity + keep/drop + gated scrub in ONE
                             Arrow round trip (operators/fused.py), running
@@ -13,14 +15,18 @@ Stage order and the reasoning at 100 TB:
                             the JVM↔Python boundary exactly once
 4. sinks                  — docs parquet written in the SAME single pass
                             (findings ride along as an array column);
-                            findings/lineage/metrics derive from a cheap
-                            columnar re-read of the docs output, so the UDF
-                            runs exactly once per document per pattern
-                            version. Output coalesced to ~4 files/core so
-                            the driver-serial commit never dominates.
+                            findings, lineage and the metrics collect then
+                            run concurrently over a cheap columnar re-read
+                            of the docs output, so the UDF runs exactly once
+                            per document per pattern version. The driver
+                            writes the few metrics rows as one parquet file
+                            (no Spark job). Output coalesced to ~4
+                            files/core so the driver-serial commit never
+                            dominates.
 
-The only wide exchange in the job is the metrics aggregation over the
-(tiny) per-partition counters of the docs re-read.
+The only wide exchange in a run is the metrics aggregation over the (tiny)
+per-partition counters of the docs re-read, plus the resume anti-join's
+once the lineage outgrows the broadcast threshold.
 """
 
 from __future__ import annotations
@@ -247,12 +253,12 @@ def write_run_outputs(
         this_run.filter(F.col("findings").isNotNull()).select("url", "findings")
     ).withColumn("run_id", F.lit(run_id))
 
-    # findings and lineage derive independently from the same columnar
-    # re-read and write to DIFFERENT tables: submit them from two driver
-    # threads so the second job's tasks back-fill executors freed by the
-    # first job's tail (guide §2.6 — actions are only sequential because
-    # driver code calls them sequentially). Failures propagate via
-    # .result(); the commit marker below still follows BOTH writes.
+    # findings, lineage and metrics derive independently from the same
+    # columnar re-read: submit them from three driver threads so each job's
+    # tasks back-fill executors freed by another's tail (guide §2.6 —
+    # actions are only sequential because driver code calls them
+    # sequentially). Failures propagate via .result(); the commit marker
+    # below still follows ALL of them.
     from concurrent.futures import ThreadPoolExecutor
 
     def _write_findings() -> None:
@@ -267,27 +273,40 @@ def write_run_outputs(
             checkpoint.lineage_path(output_dir)
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(_write_findings), pool.submit(_write_lineage)]
-        for f in futs:
-            f.result()
+    def _write_metrics() -> int:
+        # ONE collect job builds the (≤4×cores) rows, and the driver writes
+        # them itself rather than run a second Spark job, into the dir
+        # Spark made for this run's docs: found by listing, since Spark
+        # escapes run ids its own way. No rows: no docs dir and no file.
+        metrics = checkpoint.build_metrics(this_run)
+        if metrics.num_rows:
+            (docs_part,) = [
+                d for rid, d in tables.run_partitions(docs_path) if rid == run_id
+            ]
+            checkpoint.write_metrics(
+                metrics,
+                os.path.join(
+                    checkpoint.metrics_path(output_dir),
+                    os.path.basename(docs_part),
+                ),
+            )
+        # docs_written, without a separate count() scan of the docs output
+        return sum(metrics.column("docs_scanned").to_pylist())
 
-    # build_metrics materializes the (tiny) counters driver-side from the
-    # docs re-read alone (PII hits from its findings array, so each row's
-    # counters describe one docs partition); reuse them for docs_written
-    # instead of a separate count() scan of the docs output
-    metrics_df = checkpoint.build_metrics(this_run, run_id)
-    metrics_rows = metrics_df.collect()
-    metrics_df.write.mode("append").partitionBy("run_id").parquet(
-        checkpoint.metrics_path(output_dir)
-    )
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        findings_done = pool.submit(_write_findings)
+        lineage_done = pool.submit(_write_lineage)
+        docs_written = pool.submit(_write_metrics).result()
+        findings_done.result()
+        lineage_done.result()
+
     # all four sinks landed: commit the run (any kill before this line
     # leaves an unmarked run that heal_uncommitted_runs removes wholesale),
     # then publish it in the snapshot log (a kill between the two commit
     # points is healed by catch_up_snapshots on the next run)
     mark_run_committed(output_dir, run_id)
     commit_run_snapshot(output_dir, run_id)
-    return sum(r["docs_scanned"] for r in metrics_rows)
+    return docs_written
 
 
 def _sig_ddl(num_hashes: int) -> str:

@@ -896,6 +896,106 @@ def test_heal_single_run_spark_escaped_run_id(spark, tmp_path_factory):
     assert read_docs_table(spark, out).count() == 0
 
 
+def test_resume_skips_url_scanned_twice(spark, tmp_path_factory):
+    """A url that appears twice in the input is scanned twice, so the
+    lineage holds two rows for it; the resume anti-join (no distinct() on
+    the lineage side) must still drop it, and write only the new url, once."""
+    import pyarrow.parquet as pq_
+
+    from pii_detector_spark.plans.pipeline import read_docs_table
+
+    d = tmp_path_factory.mktemp("dup_src")
+    dup, new = "https://dup.example.com/1", "https://dup.example.com/2"
+    pq_.write_table(
+        _delta_tbl([dup, dup], [_DELTA_BASE, _DELTA_BASE]), str(d / "a.parquet")
+    )
+    out = str(tmp_path_factory.mktemp("dup_out"))
+    run_pipeline(spark, str(d / "a.parquet"), out, run_id="d1")
+    lineage = spark.read.parquet(os.path.join(out, "lineage"))
+    assert [r["url"] for r in lineage.collect()] == [dup, dup]
+
+    pq_.write_table(
+        _delta_tbl([dup, dup, new], [_DELTA_BASE, _DELTA_BASE, _DELTA_UNIQ]),
+        str(d / "a.parquet"),
+    )
+    res = run_pipeline(spark, str(d / "a.parquet"), out, run_id="d2")
+    assert res.docs_written == 1
+    docs = read_docs_table(spark, out).filter("run_id = 'd2'")
+    assert [r["url"] for r in docs.collect()] == [new]
+
+
+def test_metrics_partition_written_by_driver(spark, tmp_path_factory):
+    """The driver writes a run's metrics rows into the partition dir Spark
+    made for its docs (found by listing, so a run_id Spark escapes lands in
+    the same dir), with types identical to a Spark-written partition under
+    ``METRICS_SCHEMA`` and under schema inference; heal removes it."""
+    import pyarrow.parquet as pq_
+    from pyspark.sql import functions as F
+
+    from pii_detector_spark.plans import checkpoint
+    from pii_detector_spark.plans.pipeline import heal_single_run, read_docs_table
+    from pii_detector_spark.plans.tables import unmark_run
+    from pii_detector_spark.sources.datagen import write_web_pages
+
+    src = tmp_path_factory.mktemp("mdrv_src") / "pages.parquet"
+    write_web_pages(str(src), n_rows=120, seed=7)
+    out = str(tmp_path_factory.mktemp("mdrv_out"))
+    rid = "r 1+x:y"
+    run_pipeline(spark, str(src), out, run_id=rid)
+
+    metrics_dir = checkpoint.metrics_path(out)
+    docs_parts = os.listdir(os.path.join(out, "docs"))
+    parts = [e for e in os.listdir(metrics_dir) if e.startswith("run_id=")]
+    assert parts == [e for e in docs_parts if e.startswith("run_id=")]
+    assert "%3A" in parts[0], parts  # Spark escaped the ':'
+    files = [
+        f for f in os.listdir(os.path.join(metrics_dir, parts[0]))
+        if not f.startswith((".", "_"))
+    ]
+    assert len(files) == 1, files
+
+    want = checkpoint.build_metrics(
+        read_docs_table(spark, out).filter(F.col("run_id") == rid)
+    )
+    got = pq_.read_table(os.path.join(metrics_dir, parts[0], files[0]))
+    assert got.schema == want.schema
+    assert got.to_pylist() == want.to_pylist()
+    assert want.num_rows > 0
+
+    # a parent-style partition beside it: the same rows, written by Spark
+    rows = [
+        (
+            r["partition_id"], r["docs_scanned"], r["docs_kept"],
+            dict(r["drop_reasons"]), dict(r["pii_hits"]), "old",
+        )
+        for r in want.to_pylist()
+    ]
+    spark.createDataFrame(rows, checkpoint.METRICS_SCHEMA).write.mode(
+        "append"
+    ).partitionBy("run_id").parquet(metrics_dir)
+    for reader in (spark.read.schema(checkpoint.METRICS_SCHEMA), spark.read):
+        table = reader.parquet(metrics_dir)
+        by_run = {}
+        for r in table.collect():
+            d = r.asDict()
+            by_run.setdefault(d.pop("run_id"), []).append(d)
+        assert set(by_run) == {rid, "old"}
+        assert sorted(by_run[rid], key=repr) == sorted(by_run["old"], key=repr)
+    inferred = [
+        spark.read.parquet(os.path.join(metrics_dir, p)).schema
+        for p in os.listdir(metrics_dir)
+        if p.startswith("run_id=")
+    ]
+    assert inferred[0] == inferred[1]
+    assert spark.read.parquet(metrics_dir).schema == spark.read.schema(
+        checkpoint.METRICS_SCHEMA
+    ).parquet(metrics_dir).schema
+
+    unmark_run(out, rid)
+    assert "metrics" in heal_single_run(out, rid)
+    assert not os.path.exists(os.path.join(metrics_dir, parts[0]))
+
+
 def test_neardup_rewrite_crash_leaves_readable_tables(
     spark, tmp_path_factory, monkeypatch
 ):
