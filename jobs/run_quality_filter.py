@@ -15,13 +15,18 @@ Local smoke:
 Re-running with the same --output resumes: urls already SCANNED at the
 current pattern version are anti-joined away (checkpoint lineage table), so
 a killed job picks up where it left off and a completed job is a no-op.
+Every side table the job writes (its input and post-pass tables) is
+replaced whole through ``plans/tables.replace_dir``: a rerun that fails
+part-way leaves the previous version readable.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def main() -> None:
@@ -169,43 +174,34 @@ def main() -> None:
         .getOrCreate()
     )
 
-    from pii_detector_spark.plans.pipeline import run_pipeline
+    from pii_detector_spark.plans import pipeline
+    from pii_detector_spark.plans.tables import replace_dir
+
+    def publish(name: str, df: DataFrame) -> str:
+        path = os.path.join(args.output, name)
+        replace_dir(path, df.write.mode("overwrite").parquet)
+        return path
 
     input_path = args.input
     if args.robots:
-        import os
+        from pii_detector_spark.operators import robots
 
-        from pyspark.sql import functions as F
-        from pii_detector_spark.operators.robots import (
-            filter_disallowed,
-            parse_robots,
+        rules = robots.parse_robots(spark.read.parquet(args.robots))
+        allowed = robots.filter_disallowed(
+            spark.read.parquet(input_path), rules, agent=args.robots_agent
         )
-
-        rules = parse_robots(spark.read.parquet(args.robots))
-        allowed = (
-            filter_disallowed(
-                spark.read.parquet(input_path), rules,
-                agent=args.robots_agent,
-            )
-            .filter(F.col("robots_allowed"))
-            .drop("robots_allowed")
+        input_path = publish(
+            "input_robots",
+            allowed.filter(F.col("robots_allowed")).drop("robots_allowed"),
         )
-        input_path = os.path.join(args.output, "input_robots")
-        allowed.write.mode("overwrite").parquet(input_path)
     if args.canonical_dedup:
-        import os
+        from pii_detector_spark.operators.urls import keep_latest_per_canonical
 
-        from pii_detector_spark.operators.urls import (
-            keep_latest_per_canonical,
-        )
+        # composes with --robots
+        deduped = keep_latest_per_canonical(spark.read.parquet(input_path))
+        input_path = publish("input_canonical", deduped)
 
-        deduped = keep_latest_per_canonical(
-            spark.read.parquet(input_path)  # composes with --robots
-        )
-        input_path = os.path.join(args.output, "input_canonical")
-        deduped.write.mode("overwrite").parquet(input_path)
-
-    res = run_pipeline(
+    res = pipeline.run_pipeline(
         spark,
         input_path,
         args.output,
@@ -218,169 +214,94 @@ def main() -> None:
         dedup_max_iter=args.dedup_max_iter,
         heartbeat_interval_s=args.heartbeat,
     )
-    if args.decontaminate_against:
-        import os
 
-        from pyspark.sql import functions as F
+    # one row per url: the resume contract keeps one live content per url
+    # within a pattern version, but a pattern bump over the same output dir
+    # leaves historical rows — without the dedup they would double-count
+    # grams and emit duplicate rows in every table below
+    kept = (
+        pipeline.read_docs_table(spark, args.output)
+        .filter(F.col("keep"))
+        .dropDuplicates(["url"])
+    )
+    kept_text = kept.select("url", F.col("scrubbed_text").alias("text"))
+
+    if args.decontaminate_against:
         from pii_detector_spark.operators.decontaminate import (
             ngram_decontaminate,
         )
-        from pii_detector_spark.plans.pipeline import read_docs_table
 
-        # one row per url: the resume contract keeps one live content per
-        # url within a pattern version, but a pattern bump over the same
-        # output dir leaves historical rows — without the dedup they
-        # would double-count grams and emit duplicate flag rows
-        docs = (
-            read_docs_table(spark, args.output)
-            .filter(F.col("keep"))
-            .dropDuplicates(["url"])
-        )
         bench = spark.read.parquet(args.decontaminate_against)
-        flags = ngram_decontaminate(
-            docs, bench,
+        # id_col url is a string: ngram_decontaminate keys on it directly
+        publish("contamination", ngram_decontaminate(
+            kept, bench,
             n=args.decontaminate_ngram,
             id_col="url", text_col="scrubbed_text",
-        )
-        # id_col url is a string: ngram_decontaminate keys on it directly
-        flags.write.mode("overwrite").parquet(
-            os.path.join(args.output, "contamination")
-        )
+        ))
+    to_pack = kept
+    if args.host_cap:
+        from pii_detector_spark.operators import domains
 
-    if args.pack_budget or args.host_cap:
-        import os
-
-        from pyspark.sql import functions as F
-        from pii_detector_spark.operators.packing import (
-            pack_documents_by_url,
+        to_pack = (
+            domains.drop_over_cap(kept, args.host_cap)
+            if args.host_cap_exact
+            else domains.rate_cap_per_host(kept, args.host_cap).drop("host")
         )
-        from pii_detector_spark.plans.pipeline import read_docs_table
-
-        kept = (
-            read_docs_table(spark, args.output)
-            .filter(F.col("keep"))
-            .dropDuplicates(["url"])  # same one-row-per-url guard
-        )
-        if args.host_cap:
-            from pii_detector_spark.operators.domains import (
-                drop_over_cap,
-                rate_cap_per_host,
-            )
-
-            capped = (
-                drop_over_cap(kept, args.host_cap)
-                if args.host_cap_exact
-                else rate_cap_per_host(kept, args.host_cap).drop("host")
-            )
-            capped.write.mode("overwrite").parquet(
-                os.path.join(args.output, "docs_capped")
-            )
-            kept = capped
+        publish("docs_capped", to_pack)
     if args.nb_labels:
-        import os
-
-        from pyspark.sql import functions as F
         from pii_detector_spark.operators.nbquality import (
             score_nb_broadcast,
             train_nb,
         )
-        from pii_detector_spark.plans.pipeline import read_docs_table
 
-        labeled = spark.read.parquet(args.nb_labels)
-        model = train_nb(labeled)
-        kept_docs = (
-            read_docs_table(spark, args.output)
-            .filter(F.col("keep"))
-            .dropDuplicates(["url"])  # same one-row-per-url guard
-            .select("url", F.col("scrubbed_text").alias("text"))
-        )
-        scored = score_nb_broadcast(kept_docs, model, id_col="url")
-        scored.write.mode("overwrite").parquet(
-            os.path.join(args.output, "nb_scores")
-        )
+        model = train_nb(spark.read.parquet(args.nb_labels))
+        scored = score_nb_broadcast(kept_text, model, id_col="url")
+        publish("nb_scores", scored)
     if args.dsir_target:
-        import os
-
-        from pyspark.sql import functions as F
         from pii_detector_spark.operators.dsir import (
             dsir_weights_broadcast,
             train_dsir,
         )
-        from pii_detector_spark.plans.pipeline import read_docs_table
 
-        kept_docs = (
-            read_docs_table(spark, args.output)
-            .filter(F.col("keep"))
-            .dropDuplicates(["url"])  # same one-row-per-url guard
-            .select("url", F.col("scrubbed_text").alias("text"))
-        )
         target = spark.read.parquet(args.dsir_target).select("text")
         raw = (
             spark.read.parquet(args.dsir_raw).select("text")
             if args.dsir_raw
-            else kept_docs.select("text")
+            else kept_text.select("text")
         )
         model = train_dsir(target, raw)
-        weights = dsir_weights_broadcast(kept_docs, model, id_col="url")
-        weights.write.mode("overwrite").parquet(
-            os.path.join(args.output, "dsir_weights")
-        )
+        weights = dsir_weights_broadcast(kept_text, model, id_col="url")
+        publish("dsir_weights", weights)
     if args.ppl_buckets:
-        import os
-
-        from pyspark.sql import functions as F
         from pii_detector_spark.operators.ccnet import (
             assign_buckets,
             bucket_bounds,
         )
         from pii_detector_spark.operators.langid import with_word_perplexity
-        from pii_detector_spark.plans.pipeline import read_docs_table
 
         scored = with_word_perplexity(
-            read_docs_table(spark, args.output)
-            .filter(F.col("keep"))
-            .dropDuplicates(["url"])  # same one-row-per-url guard
-            .select("url", "lang_pred", "scrubbed_text"),
+            kept.select("url", "lang_pred", "scrubbed_text"),
             text_col="scrubbed_text",
         )
         bounds = bucket_bounds(scored, "word_ppl", group_col="lang_pred")
-        tiers = assign_buckets(
+        publish("ppl_buckets", assign_buckets(
             scored, "word_ppl", bounds, group_col="lang_pred"
-        ).select("url", "lang_pred", "word_ppl", "bucket")
-        tiers.write.mode("overwrite").parquet(
-            os.path.join(args.output, "ppl_buckets")
-        )
+        ).select("url", "lang_pred", "word_ppl", "bucket"))
     if args.bpe_merges:
-        import os
-
-        from pyspark.sql import functions as F
         from pii_detector_spark.operators.bpe import (
             bpe_token_counts,
             train_bpe,
             word_counts,
         )
-        from pii_detector_spark.plans.pipeline import read_docs_table
 
-        kept_docs = (
-            read_docs_table(spark, args.output)
-            .filter(F.col("keep"))
-            .dropDuplicates(["url"])  # same one-row-per-url guard
-            .select("url", F.col("scrubbed_text").alias("text"))
-        )
-        merges = train_bpe(word_counts(kept_docs), n_merges=args.bpe_merges)
-        spark.createDataFrame(
+        merges = train_bpe(word_counts(kept_text), n_merges=args.bpe_merges)
+        publish("bpe_merges", spark.createDataFrame(
             [(i, a, b) for i, (a, b) in enumerate(merges)],
             "rank long, left string, right string",
-        ).write.mode("overwrite").parquet(
-            os.path.join(args.output, "bpe_merges")
-        )
-        bpe_token_counts(kept_docs, merges, id_col="url").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(args.output, "bpe_counts"))
+        ))
+        counts = bpe_token_counts(kept_text, merges, id_col="url")
+        publish("bpe_counts", counts)
     if args.semdedup_embeddings:
-        import os
-
-        from pyspark.sql import functions as F
         from pii_detector_spark.operators.semdedup import semantic_dedup
 
         emb = spark.read.parquet(args.semdedup_embeddings)
@@ -394,7 +315,7 @@ def main() -> None:
                     "embeddings table"
                 )
             dim = len(head["embedding"])
-        verdicts = semantic_dedup(
+        publish("semantic_dups", semantic_dedup(
             emb.select(
                 "vec_id",
                 F.transform(
@@ -405,65 +326,38 @@ def main() -> None:
             tau=args.semdedup_tau,
             n_cells=args.semdedup_cells,
             keep=args.semdedup_keep,
-        )
-        verdicts.write.mode("overwrite").parquet(
-            os.path.join(args.output, "semantic_dups")
-        )
+        ))
     if args.fix_text:
-        import os
-
-        from pyspark.sql import functions as F
         from pii_detector_spark.operators.textfix import fix_text_column
-        from pii_detector_spark.plans.pipeline import read_docs_table
 
-        fixed = (
-            read_docs_table(spark, args.output)
-            .filter(F.col("keep"))
-            .dropDuplicates(["url"])  # same one-row-per-url guard
-            .select(
-                "url",
-                fix_text_column(F.col("scrubbed_text")).alias("text_fixed"),
-            )
-        )
-        fixed.write.mode("overwrite").parquet(
-            os.path.join(args.output, "docs_fixed")
-        )
+        publish("docs_fixed", kept.select(
+            "url",
+            fix_text_column(F.col("scrubbed_text")).alias("text_fixed"),
+        ))
     if args.dedup_substring:
-        import os
-
-        from pyspark.sql import functions as F
         from pii_detector_spark.operators.substring_dedup import (
             remove_duplicate_windows,
         )
-        from pii_detector_spark.plans.pipeline import read_docs_table
 
-        deduped_docs = remove_duplicate_windows(
-            read_docs_table(spark, args.output)
-            .filter(F.col("keep"))
-            .dropDuplicates(["url"])  # same one-row-per-url guard
-            .select("url", "scrubbed_text"),
+        publish("docs_window_deduped", remove_duplicate_windows(
+            kept.select("url", "scrubbed_text"),
             id_col="url",
             text_col="scrubbed_text",
             k=args.dedup_substring,
-        ).withColumnRenamed("doc_id", "url")
-        deduped_docs.write.mode("overwrite").parquet(
-            os.path.join(args.output, "docs_window_deduped")
-        )
+        ).withColumnRenamed("doc_id", "url"))
     if args.pack_budget:
-        shards = pack_documents_by_url(
-            kept.select("url", F.col("n_words").alias("n_tokens")),
-            args.pack_budget,
+        from pii_detector_spark.operators.packing import (
+            pack_documents_by_url,
+            write_packed_shards,
         )
-        shards.write.mode("overwrite").parquet(
-            os.path.join(args.output, "shards")
-        )
-        if args.pack_materialize:
-            from pii_detector_spark.operators.packing import (
-                write_packed_shards,
-            )
 
+        publish("shards", pack_documents_by_url(
+            to_pack.select("url", F.col("n_words").alias("n_tokens")),
+            args.pack_budget,
+        ))
+        if args.pack_materialize:
             write_packed_shards(
-                kept.withColumn("n_tokens", F.col("n_words")),
+                to_pack.withColumn("n_tokens", F.col("n_words")),
                 args.pack_budget,
                 args.output,
             )

@@ -26,10 +26,8 @@ Delta contract:
 * Components/canonical are recomputed from the accumulated PAIRS (metadata-
   sized: near-dup pairs, not docs), never from text.
 
-Scale shape: the delta join shuffles (id, band_id, 32-B band_key) for
-new + all rows. At 10^12 docs the all-side scan is the floor; bucketing the
-stored signature table by band_key makes the all side shuffle-free
-(``bucketBy`` note in ``plans/partitioning.py``). Verify joins ship the
+Scale shape: the delta join shuffles (doc_id, 32-B band_key) for new + all
+rows; at 10^12 docs the all-side scan is the floor. Verify joins ship the
 8-byte shingle hashes only for candidate ids.
 """
 
@@ -83,9 +81,7 @@ def banded_keys(
     The band id is FOLDED INTO the hash (vs the full path's separate
     (band_id, band_key) pair): candidate semantics are identical — two
     docs collide on band b iff their b-th minhash slices are equal — while
-    the join runs on ONE key, which lets a stored banded table be bucketed
-    by band_key so the corpus side of the delta join needs no per-run
-    shuffle (``write_bucketed_bands`` / ``minhash_pairs_delta_bucketed``).
+    the join runs on ONE key.
     """
     per = num_hashes // bands
     band_keys = [
@@ -165,49 +161,3 @@ def minhash_pairs_delta(
     cand = _candidates(banded_new, banded_all)
     return _verify_pairs(cand, all_sigs, jaccard_threshold)
 
-
-def write_bucketed_bands(
-    all_sigs: DataFrame,
-    table: str = "neardup_bands",
-    buckets: int = 64,
-    num_hashes: int = 12,
-    bands: int = 4,
-) -> None:
-    """Persist the banded-key relation as a band_key-BUCKETED table — the
-    100-TB shape of the delta join's corpus side.
-
-    The plain delta join shuffles corpus x bands (doc_id, band_key) rows
-    every run; with the stored side bucketed (and sorted) by band_key,
-    Spark's bucketing rule satisfies the join's required distribution
-    directly from the table layout, so ONLY the delta side shuffles —
-    plan-pinned by ``test_bucketed_delta_join_shuffles_only_delta_side``.
-    On Iceberg the same layout is a `bucket(N, band_key)` partition
-    transform + storage-partitioned join.
-
-    Maintenance contract: append each run's new banded keys with the same
-    bucket spec (`insertInto`); Spark appends per-bucket files without
-    re-shuffling old data.
-    """
-    banded_keys(all_sigs, num_hashes, bands).write.bucketBy(
-        buckets, "band_key"
-    ).sortBy("band_key").mode("overwrite").format("parquet").saveAsTable(
-        table
-    )
-
-
-def minhash_pairs_delta_bucketed(
-    spark,
-    all_sigs: DataFrame,
-    new_sigs: DataFrame,
-    table: str = "neardup_bands",
-    num_hashes: int = 12,
-    bands: int = 4,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
-    """``minhash_pairs_delta`` with the corpus side of the band join read
-    from the bucketed table written by ``write_bucketed_bands`` (zero
-    shuffle on that side); verification still joins the signature relation
-    for shingle hashes."""
-    banded_new = banded_keys(new_sigs, num_hashes, bands)
-    cand = _candidates(banded_new, spark.table(table))
-    return _verify_pairs(cand, all_sigs, jaccard_threshold)

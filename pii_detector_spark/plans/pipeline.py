@@ -31,6 +31,7 @@ once the lineage outgrows the broadcast threshold.
 
 from __future__ import annotations
 
+import contextlib
 import os
 from dataclasses import dataclass
 
@@ -549,44 +550,6 @@ def run_pipeline(
     dedup_max_iter: int = 50,
     heartbeat_interval_s: float | None = None,
 ) -> PipelineResult:
-    """``_run_pipeline_impl`` plus the K5 instance heartbeat: when
-    ``heartbeat_interval_s`` is set, a driver-side thread appends liveness
-    rows to ``<output_dir>/heartbeat`` for the duration of the run
-    (``plans/heartbeat.py``; reference analogue ``customer_worker.py:
-    92-100``). The final ``alive=false`` row is written even when the run
-    raises — a monitor distinguishes crash (stale beat / no clean row +
-    missing ``_commits`` marker) from completion."""
-    kwargs = dict(
-        config=config,
-        run_id=run_id,
-        resume=resume,
-        extract_html=extract_html,
-        gc_deleted=gc_deleted,
-        dedup_near=dedup_near,
-        dedup_delta=dedup_delta,
-        dedup_max_iter=dedup_max_iter,
-    )
-    if heartbeat_interval_s is None:
-        return _run_pipeline_impl(spark, input_path, output_dir, **kwargs)
-    from pii_detector_spark.plans.heartbeat import Heartbeat
-
-    with Heartbeat(spark, output_dir, run_id, heartbeat_interval_s):
-        return _run_pipeline_impl(spark, input_path, output_dir, **kwargs)
-
-
-def _run_pipeline_impl(
-    spark: SparkSession,
-    input_path: str,
-    output_dir: str,
-    config: EngineConfig = DEFAULT_CONFIG,
-    run_id: str = "run-0",
-    resume: bool = True,
-    extract_html: bool = True,
-    gc_deleted: bool = False,
-    dedup_near: bool = False,
-    dedup_delta: bool = False,
-    dedup_max_iter: int = 50,
-) -> PipelineResult:
     """Batch scan job with checkpoint-resume; rerunning after a partial or
     complete prior run processes only not-yet-SCANNED urls (idempotent).
 
@@ -609,54 +572,71 @@ def _run_pipeline_impl(
     re-read — the fused UDF never re-runs — and writes two additive tables:
     ``docs_deduped`` (kept docs only, same schema) and ``neardup``
     (url, component, is_canonical). The primary ``docs`` table is left
-    complete so downstream consumers choose raw vs deduped."""
-    # remove partitions of any previously-crashed (unmarked) run BEFORE
-    # reading lineage — their urls then resume as unprocessed — and pull
-    # marker-committed runs a crash left out of the snapshot log back in
-    heal_uncommitted_runs(spark, output_dir)
-    catch_up_snapshots(output_dir)
+    complete so downstream consumers choose raw vs deduped.
 
-    raw = apply_prefilters(read_web_pages(spark, input_path))
-    pending = raw
-    lineage = None
-    if resume or gc_deleted:
-        lineage = checkpoint.read_lineage(spark, output_dir)
-    if resume:
-        pending = checkpoint.anti_join_completed(
-            raw, lineage, config.pattern_version
+    ``heartbeat_interval_s`` adds the K5 instance heartbeat: a driver-side
+    thread appends liveness rows to ``<output_dir>/heartbeat`` for the
+    duration of the run (``plans/heartbeat.py``; reference analogue
+    ``customer_worker.py:92-100``). The final ``alive=false`` row is
+    written even when the run raises — a monitor distinguishes crash
+    (stale beat / no clean row + missing ``_commits`` marker) from
+    completion."""
+    if heartbeat_interval_s is None:
+        beat = contextlib.nullcontext()
+    else:
+        from pii_detector_spark.plans.heartbeat import Heartbeat
+
+        beat = Heartbeat(spark, output_dir, run_id, heartbeat_interval_s)
+    with beat:
+        # remove partitions of any previously-crashed (unmarked) run BEFORE
+        # reading lineage — their urls then resume as unprocessed — and pull
+        # marker-committed runs a crash left out of the snapshot log back in
+        heal_uncommitted_runs(spark, output_dir)
+        catch_up_snapshots(output_dir)
+
+        raw = apply_prefilters(read_web_pages(spark, input_path))
+        pending = raw
+        lineage = None
+        if resume or gc_deleted:
+            lineage = checkpoint.read_lineage(spark, output_dir)
+        if resume:
+            pending = checkpoint.anti_join_completed(
+                raw, lineage, config.pattern_version
+            )
+
+        docs = transform_web_pages(
+            pending, config, extract_html=extract_html, prefilter=False
         )
 
-    docs = transform_web_pages(
-        pending, config, extract_html=extract_html, prefilter=False
-    )
-
-    n = write_run_outputs(spark, docs, output_dir, run_id, config.pattern_version)
-
-    if gc_deleted and lineage is not None:
-        deleted = checkpoint.deleted_urls(lineage, raw)
-        if deleted is not None:
-            checkpoint.gc_deleted_urls(spark, output_dir, deleted)
-
-    if dedup_delta:
-        incremental_near_dedup(
-            spark, output_dir, run_id, max_iter=dedup_max_iter
-        )
-    elif dedup_near:
-        from pii_detector_spark.operators.clusters import (
-            mark_near_duplicate_docs,
+        n = write_run_outputs(
+            spark, docs, output_dir, run_id, config.pattern_version
         )
 
-        written = read_docs_table(spark, output_dir)
-        marked = mark_near_duplicate_docs(
-            written, url_col="url", text_col="scrubbed_text",
-            max_iter=dedup_max_iter,
-        )
-        tables.publish_near_dedup(output_dir, written, marked)
+        if gc_deleted and lineage is not None:
+            deleted = checkpoint.deleted_urls(lineage, raw)
+            if deleted is not None:
+                checkpoint.gc_deleted_urls(spark, output_dir, deleted)
 
-    return PipelineResult(
-        docs_path=os.path.join(output_dir, "docs"),
-        findings_path=os.path.join(output_dir, "findings"),
-        lineage_path=checkpoint.lineage_path(output_dir),
-        metrics_path=checkpoint.metrics_path(output_dir),
-        docs_written=n,
-    )
+        if dedup_delta:
+            incremental_near_dedup(
+                spark, output_dir, run_id, max_iter=dedup_max_iter
+            )
+        elif dedup_near:
+            from pii_detector_spark.operators.clusters import (
+                mark_near_duplicate_docs,
+            )
+
+            written = read_docs_table(spark, output_dir)
+            marked = mark_near_duplicate_docs(
+                written, url_col="url", text_col="scrubbed_text",
+                max_iter=dedup_max_iter,
+            )
+            tables.publish_near_dedup(output_dir, written, marked)
+
+        return PipelineResult(
+            docs_path=os.path.join(output_dir, "docs"),
+            findings_path=os.path.join(output_dir, "findings"),
+            lineage_path=checkpoint.lineage_path(output_dir),
+            metrics_path=checkpoint.metrics_path(output_dir),
+            docs_written=n,
+        )

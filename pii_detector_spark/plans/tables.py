@@ -10,7 +10,8 @@ table write is made crash-safe (plain parquet has no transactions).
   ``run_id=`` partition without a marker is a crashed run, and
   ``drop_runs`` removes it file-level — never a row rewrite.
 * ``replace_dir`` — whole-table replace (``neardup``, ``docs_deduped``,
-  ``paired_sigs``, the packing shards, the deleted-url GC rewrites):
+  ``paired_sigs``, the deleted-url GC rewrites, and every side table the
+  spark-submit job writes: its input and post-pass tables, shards too):
   write ``<t>_tmp``, rename live aside to ``<t>_swap_old``, rename tmp
   into place, delete the aside.  ``recover`` puts any interruption right
   and is called before a replaceable table is read.

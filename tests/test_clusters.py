@@ -151,64 +151,3 @@ def test_drop_near_duplicate_docs_url_keyed(spark):
     )
     assert kept == ["https://a.example.com/1", "https://c.example.com/3"]
 
-
-def test_bucketed_delta_join_shuffles_only_delta_side(spark):
-    """100-TB shape of incremental dedup: with the corpus's banded keys
-    stored band_key-bucketed, the delta band join must read the stored
-    side bucketed (no Exchange above its scan) and produce the same pairs
-    as the plain path."""
-    from pyspark.sql import functions as F
-
-    from pii_detector_spark.operators.delta_dedup import (
-        minhash_pairs_delta,
-        minhash_pairs_delta_bucketed,
-        minhash_signatures,
-        write_bucketed_bands,
-    )
-
-    base = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon "
-    )
-    rows = [(i, base + f"doc {i} tail {i % 3}") for i in range(30)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(docs, shingle_n=3).persist()
-    new = sigs.filter(F.col("doc_id") % 10 == 0)
-
-    spark.sql("DROP TABLE IF EXISTS t_bands")
-    write_bucketed_bands(sigs, table="t_bands", buckets=4)
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        plain = minhash_pairs_delta(sigs, new).collect()
-        bucketed_df = minhash_pairs_delta_bucketed(
-            spark, sigs, new, table="t_bands"
-        )
-        got = bucketed_df.collect()
-        key = lambda r: (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        assert sorted(map(key, got)) == sorted(map(key, plain))
-
-        # at corpus scale neither side broadcasts — disable broadcast to
-        # pin the shuffle-join shape the bucketing is for
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        shaped = minhash_pairs_delta_bucketed(
-            spark, sigs, new, table="t_bands"
-        )
-        shaped.collect()
-        plan = shaped._jdf.queryExecution().executedPlan().toString()
-        # the stored side scan is bucketed...
-        n_bucketed_scans = plan.count("Bucketed: true")
-        assert n_bucketed_scans > 0, plan
-        # ...and no Exchange sits between that scan and the band join: per
-        # printed instance of the join (AQE renders final + initial plans)
-        # there is exactly ONE hashpartitioning(band_key) exchange — the
-        # delta side; the bucketed corpus side reads shuffle-free
-        import re as _re
-
-        n_bandkey_exchanges = len(
-            _re.findall(r"Exchange hashpartitioning\(band_key", plan)
-        )
-        assert n_bandkey_exchanges == n_bucketed_scans, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        sigs.unpersist()
-        spark.sql("DROP TABLE IF EXISTS t_bands")

@@ -1053,7 +1053,8 @@ def test_neardup_rewrite_crash_leaves_readable_tables(
 def test_job_cli_decontaminate_and_pack(spark, tmp_path_factory, monkeypatch):
     """The spark-submit entry point end-to-end with the round-5 flags:
     --decontaminate-against writes a 'contamination' table keyed by url;
-    --pack-budget writes a 'shards' table over kept docs."""
+    --pack-budget writes a 'shards' table over kept docs. A rerun whose
+    'nb_scores' rewrite fails keeps the previous table readable."""
     import os as _os
     import sys
 
@@ -1152,6 +1153,32 @@ def test_job_cli_decontaminate_and_pack(spark, tmp_path_factory, monkeypatch):
     man = spark.read.parquet(_os.path.join(out, "shard_manifest")).collect()
     assert sum(r["n_docs"] for r in man) == len(data)
     assert sum(r["n_tokens"] for r in man) == tot
+
+    # a rerun whose nb_scores rewrite fails part-way keeps the old table
+    from pyspark.sql import functions as F
+
+    from pii_detector_spark.operators import nbquality
+
+    def nb_rows():
+        return sorted(
+            spark.read.parquet(_os.path.join(out, "nb_scores")).collect()
+        )
+
+    before = nb_rows()
+    assert before
+    real_score = nbquality.score_nb_broadcast
+    monkeypatch.setattr(
+        nbquality, "score_nb_broadcast",
+        lambda *a, **k: real_score(*a, **k).withColumn(
+            "boom", F.raise_error(F.lit("nb_scores write failed"))
+        ),
+    )
+    monkeypatch.setattr(
+        sys, "argv", [a if a != "cli1" else "cli2" for a in sys.argv]
+    )
+    with pytest.raises(Exception, match="nb_scores write failed"):
+        job.main()
+    assert nb_rows() == before
 
 
 def test_job_cli_canonical_dedup_and_fix_text(

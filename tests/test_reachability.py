@@ -19,9 +19,6 @@ ENTRY_POINTS = (
     "perfbench",
     "scripts",
 )
-# Kept with its tests though no entry point imports it yet; wire it into a
-# job or delete it. Compared exactly, so a fix must also shrink this set.
-KNOWN_UNREACHED = {"pii_detector_spark/sources/nosql.py"}
 
 
 def _module_file(dotted: str) -> Path | None:
@@ -68,4 +65,4 @@ def test_every_package_module_reachable_from_an_entry_point():
     unreached = {
         f.relative_to(REPO).as_posix() for f in modules - _reachable()
     }
-    assert unreached == KNOWN_UNREACHED
+    assert unreached == set()

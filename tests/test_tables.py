@@ -1,9 +1,10 @@
 """The table-commit protocol (plans/tables.py): every multi-step table
-write survives a kill at any seam, and only that module renames, replaces
-or deletes table directories."""
+write survives a kill at any seam, only that module renames, replaces or
+deletes table directories, and no code overwrites a table in place."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import shutil
@@ -157,5 +158,46 @@ def test_only_tables_module_moves_or_deletes_table_files():
         if f.relative_to(pkg).as_posix() not in allowed
         for i, line in enumerate(f.read_text().splitlines(), 1)
         if banned.search(line)
+    ]
+    assert offenders == []
+
+
+def _overwrites(call: ast.Call) -> bool:
+    """True if ``call``'s writer chain sets mode "overwrite", as
+    ``.mode("overwrite")`` or as a ``mode="overwrite"`` keyword."""
+    node = call
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Call):
+            modes = [k.value for k in node.keywords if k.arg == "mode"]
+            if isinstance(node.func, ast.Attribute) and node.func.attr == "mode":
+                modes += node.args
+            if any(
+                isinstance(m, ast.Constant) and m.value == "overwrite"
+                for m in modes
+            ):
+                return True
+            node = node.func
+        else:
+            node = node.value
+    return False
+
+
+def test_overwrites_go_through_replace_dir():
+    """Structure pin: no package or job code runs an overwrite write in
+    place (a failed rewrite would leave the table empty or unreadable).
+    An overwrite writer is only handed to ``replace_dir`` as a callable
+    (``df.write.mode("overwrite").parquet``), never called directly."""
+    pkg = Path(pii_detector_spark.__file__).parent
+    files = sorted(pkg.rglob("*.py")) + sorted(
+        (pkg.parent / "jobs").rglob("*.py")
+    )
+    offenders = [
+        f"{f.relative_to(pkg.parent).as_posix()}:{node.lineno}"
+        for f in files
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("parquet", "save", "saveAsTable")
+        and _overwrites(node)
     ]
     assert offenders == []
