@@ -2424,7 +2424,7 @@ FROM documents d LEFT JOIN p USING (doc_id)"""
 
 
 def _plane_signs(table: int, p: int, dim: int) -> list[float]:
-    """Identical derivation to similarity.hyperplane_sign_bits."""
+    """Identical derivation to similarity._plane_matrix (row ``p``)."""
     return [
         1.0 if (hashlib.md5(f"{table}:{p}:{d}".encode()).digest()[0] & 1) else -1.0
         for d in range(dim)

@@ -242,12 +242,14 @@ def main() -> None:
     if args.host_cap:
         from pii_detector_spark.operators import domains
 
-        to_pack = (
+        capped = (
             domains.drop_over_cap(kept, args.host_cap)
             if args.host_cap_exact
             else domains.rate_cap_per_host(kept, args.host_cap).drop("host")
         )
-        publish("docs_capped", to_pack)
+        # read the published rows back: the cap (and its rank window) runs
+        # once, and shards/shard_data pack exactly the docs_capped rows
+        to_pack = spark.read.parquet(publish("docs_capped", capped))
     if args.nb_labels:
         from pii_detector_spark.operators.nbquality import (
             score_nb_broadcast,

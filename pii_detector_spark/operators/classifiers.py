@@ -14,8 +14,6 @@ Spark-first:
   regex lists over the object name; exclude wins; include attaches labels.
   Expressed as plain ``rlike`` predicates + a label array column so Catalyst
   pushes the filters into the scan.
-* **classification include sets** (``base_scan_service.py:541-563``): url
-  allowlists → ``isin`` / broadcast semi-join.
 
 Sensitivity weights mirror ``data_classifiers.py:20-23``.
 """
@@ -183,15 +181,3 @@ def apply_filename_classifiers(
     else:
         df = df.withColumn("labels", F.array().cast("array<string>"))
     return df
-
-
-def apply_include_set(
-    df: DataFrame, allowed: DataFrame, url_col: str = "url"
-) -> DataFrame:
-    """Classification include set (F4): broadcast LEFT SEMI join against the
-    allowlist (``base_scan_service.py:541-563``)."""
-    return df.join(
-        F.broadcast(allowed.select(F.col(allowed.columns[0]).alias(url_col))),
-        on=url_col,
-        how="left_semi",
-    )

@@ -229,25 +229,6 @@ def canonicalize(
     )
 
 
-def drop_near_duplicates(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    prefer_col: str | None = None,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Keep exactly one doc per near-dup cluster (the pipeline's keep-one
-    flag): ``docs`` minus every non-canonical cluster member."""
-    marked = canonicalize(
-        docs, pairs, id_col, id_a, id_b, prefer_col, max_iter
-    )
-    return marked.filter(F.col("is_canonical")).drop(
-        "component", "is_canonical"
-    )
-
-
 def mark_near_duplicate_docs(
     docs: DataFrame,
     url_col: str = "url",
@@ -302,24 +283,4 @@ def mark_near_duplicate_docs(
         id_b="url_b",
         prefer_col=prefer_col,
         max_iter=max_iter,
-    )
-
-
-def drop_near_duplicate_docs(
-    docs: DataFrame,
-    url_col: str = "url",
-    text_col: str = "scrubbed_text",
-    prefer_col: str | None = None,
-    shingle_n: int = 5,
-    threshold: float = 0.7,
-    max_iter: int = 20,
-) -> DataFrame:
-    """The pipeline-level keep-one pass: ``docs`` minus every
-    non-canonical near-dup cluster member (see
-    ``mark_near_duplicate_docs``)."""
-    marked = mark_near_duplicate_docs(
-        docs, url_col, text_col, prefer_col, shingle_n, threshold, max_iter
-    )
-    return marked.filter(F.col("is_canonical")).drop(
-        "component", "is_canonical"
     )

@@ -1,5 +1,5 @@
-"""Benchmark n-gram decontamination: flag (and drop) training documents
-that overlap an evaluation/benchmark set.
+"""Benchmark n-gram decontamination: flag training documents that overlap
+an evaluation/benchmark set.
 
 The standard training-data hygiene step for LLM corpora (the public
 GPT-3/PaLM recipe: a training doc is contaminated when it shares any
@@ -85,19 +85,3 @@ def ngram_decontaminate(
             "is_contaminated"
         ),
     )
-
-
-def drop_contaminated(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
-    min_hits: int = 1,
-) -> DataFrame:
-    """``docs`` minus contaminated rows (anti-join on the flag table)."""
-    bad = ngram_decontaminate(
-        docs, benchmark, n, id_col, text_col, bench_text_col, min_hits
-    ).filter(F.col("is_contaminated"))
-    return docs.join(bad.select(id_col), id_col, "left_anti")

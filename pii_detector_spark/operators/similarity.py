@@ -1,15 +1,19 @@
 """Similarity search over embedding columns (array<float>).
 
+Per-vector math runs in Arrow-batched numpy pandas UDFs, such as
+``cosine_pd`` (one einsum per batch) and ``lsh_buckets_udf`` (one matmul
+per batch). A zip_with/aggregate JVM expression form is interpreted per
+element outside codegen and measured 40x slower (BENCH/PLANS.md).
+
 * ``cosine_topk_bruteforce`` — exact top-k neighbors: broadcast the (small)
-  query set against the corpus; cosine scored by an Arrow-batched numpy
-  pandas UDF (``cosine_pd`` — one einsum per batch; the zip_with/aggregate
-  JVM form is interpreted per element and measured 40x slower). At 100 TB
-  the corpus side streams through the scan — the only shuffle is the
-  per-query top-k, which AQE keeps tiny.
+  query set against the corpus. At 100 TB the corpus side streams through
+  the scan — the only shuffle is the per-query top-k, which AQE keeps tiny.
 * ``lsh_bucket_topk`` — the scale path: random-hyperplane LSH signature
-  (deterministic planes derived from md5 of the dimension index) buckets
-  the corpus; queries search only their bucket. Recall < 1 by design;
-  bucket count tunes the recall/cost trade.
+  (deterministic planes from ``_plane_matrix``, md5 of the dimension
+  index) buckets the corpus; queries search only their bucket. Recall < 1
+  by design; bucket count tunes the recall/cost trade.
+* ``ivf_topk`` — learned-cell ANN: deterministic k-means cells, queries
+  probe their nearest cells.
 * ``embedding_neardup_pairs`` — near-duplicate vector pairs within LSH
   buckets (cosine ≥ threshold), the embedding analogue of minhash dedup.
 """
@@ -18,30 +22,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Interpreted HOF form — kept for ad-hoc use; hot paths use
-    ``cosine_pd`` (the zip_with/aggregate lambdas are evaluated per
-    element OUTSIDE codegen, the measured 40x trap — BENCH/PLANS.md)."""
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def _cosine_batch(a, b):
@@ -113,30 +96,6 @@ def _plane_matrix(dim: int, n_planes: int, table: int) -> "np.ndarray":
         ],
         dtype=np.float64,
     )
-
-
-def hyperplane_sign_bits(
-    vec_col: Column, dim: int, n_planes: int, table: int = 0
-) -> Column:
-    """JVM-expression signature (interpreted HOFs — kept for ad-hoc use;
-    hot paths use ``lsh_buckets_udf``, one numpy matmul per Arrow batch)."""
-    signs_by_plane = _plane_matrix(dim, n_planes, table)
-    bits = []
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(float(s)) for s in signs_by_plane[p]]),
-                lambda x, s: x * s,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return sig.cast("int")
 
 
 def lsh_buckets_udf(dim: int, n_planes: int, n_tables: int):

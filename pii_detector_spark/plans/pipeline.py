@@ -148,18 +148,6 @@ def read_docs_table(spark: SparkSession, output_dir: str) -> DataFrame:
     )
 
 
-def heal_single_run(output_dir: str, run_id: str) -> list[str]:
-    """Remove THIS run_id's partition dirs if its commit marker is absent
-    — the O(tables) self-heal a foreachBatch body can afford per batch
-    (vs ``heal_uncommitted_runs``' marker check per run ever written).
-    Returns the tables healed.  Partitions are found by listing and
-    unquoting (``tables.run_partitions``), so run ids Spark writes
-    literally (``run 1+x``) are found too."""
-    if run_committed(output_dir, run_id):
-        return []
-    return list(tables.drop_runs(output_dir, lambda rid: rid == run_id))
-
-
 def heal_uncommitted_runs(
     spark: SparkSession, output_dir: str
 ) -> dict[str, list[str]]:
@@ -213,13 +201,7 @@ def write_run_outputs(
     pattern_version: int,
 ) -> int:
     """Write the four sinks (docs / findings / lineage / metrics) for one
-    processed batch of fused-UDF output; returns docs written.
-
-    Shared by the batch job (`run_pipeline`) and the Structured Streaming
-    job (`streaming/incremental.incremental_pipeline` via foreachBatch) —
-    the microbatch DataFrame goes through the identical sink path, so both
-    runtimes produce the same tables.
-    """
+    processed batch of fused-UDF output; returns docs written."""
     docs = docs.withColumn("run_id", F.lit(run_id))
     docs_path = os.path.join(output_dir, "docs")
     findings_path = os.path.join(output_dir, "findings")

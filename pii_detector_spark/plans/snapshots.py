@@ -123,7 +123,7 @@ def commit_run_snapshot(output_dir: str, run_id: str) -> Snapshot:
     """Append ``run_id`` to the visible set — call AFTER the run marker.
 
     Idempotent: re-committing an already-visible run returns the current
-    snapshot unchanged (the streaming replay / resume path)."""
+    snapshot unchanged (a rerun under the same run id)."""
     cur = current_snapshot_id(output_dir)
     runs: tuple[str, ...] = ()
     if cur is not None:

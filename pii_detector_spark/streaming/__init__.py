@@ -1,3 +1,1 @@
-"""Structured Streaming surface: the full pipeline as an incremental
-(Trigger.AvailableNow) job over the web_pages table, and watermarked event
-metrics."""
+"""Watermarked event metrics over the ``events`` table shape."""

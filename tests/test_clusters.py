@@ -9,7 +9,6 @@ from pii_detector_spark.operators.clusters import (
     canonicalize,
     connected_components,
     dedup_clusters,
-    drop_near_duplicates,
 )
 
 
@@ -103,17 +102,6 @@ def test_canonicalize_singletons_and_prefer_col(spark):
     assert by_q == {1: False, 2: True, 3: False, 50: True}
 
 
-def test_drop_near_duplicates_keeps_one_per_cluster(spark):
-    docs = spark.createDataFrame(
-        [(i,) for i in range(8)], "doc_id long"
-    )
-    pairs = _pairs(spark, [(0, 1), (1, 2), (4, 5)])
-    kept = sorted(
-        r["doc_id"] for r in drop_near_duplicates(docs, pairs).collect()
-    )
-    assert kept == [0, 3, 4, 6, 7]
-
-
 def test_no_leaked_loop_persists(spark):
     """The iterative loop's per-round persists are all released; only the
     returned snapshot (localCheckpoint, GC-cleaned with the DataFrame)
@@ -125,10 +113,10 @@ def test_no_leaked_loop_persists(spark):
     assert jsc.getPersistentRDDs().size() <= before + 1
 
 
-def test_drop_near_duplicate_docs_url_keyed(spark):
+def test_mark_near_duplicate_docs_url_keyed(spark):
     """Pipeline-level keep-one: MinHash pairs over url-keyed docs via the
     surrogate-id mapping; canonical = min url, unique docs untouched."""
-    from pii_detector_spark.operators.clusters import drop_near_duplicate_docs
+    from pii_detector_spark.operators.clusters import mark_near_duplicate_docs
 
     dup = (
         "the quick brown fox jumps over the lazy dog and then runs far "
@@ -147,7 +135,8 @@ def test_drop_near_duplicate_docs_url_keyed(spark):
         "url string, scrubbed_text string",
     )
     kept = sorted(
-        r["url"] for r in drop_near_duplicate_docs(docs).collect()
+        r["url"]
+        for r in mark_near_duplicate_docs(docs).filter("is_canonical").collect()
     )
     assert kept == ["https://a.example.com/1", "https://c.example.com/3"]
 

@@ -325,7 +325,6 @@ class TestDecontaminate:
 
     def test_flags_and_counts_overlapping_docs(self, spark):
         from pii_detector_spark.operators.decontaminate import (
-            drop_contaminated,
             ngram_decontaminate,
         )
 
@@ -354,11 +353,6 @@ class TestDecontaminate:
         # doc 3: 'the capital of italy is rome' = 2 5-grams
         assert out[3] == (2, True)
         assert out[4] == (0, False)
-
-        kept = sorted(
-            r["doc_id"] for r in drop_contaminated(docs, bench, n=5).collect()
-        )
-        assert kept == [2, 4]
 
     def test_benchmark_side_is_broadcast(self, spark):
         """The contamination join must broadcast the (small) benchmark

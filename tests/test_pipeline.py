@@ -861,17 +861,16 @@ def test_dedup_delta_on_fully_prefiltered_input(spark, tmp_path_factory):
     assert spark.read.parquet(_os.path.join(out2, "neardup")).count() == 0
 
 
-def test_heal_single_run_spark_escaped_run_id(spark, tmp_path_factory):
+def test_heal_spark_escaped_run_id(spark, tmp_path_factory):
     """ADVICE r4 (low): Spark's partition escaping differs from urllib
-    quote (``run 1+x`` is written literally); heal_single_run must locate
-    the partition by listing+unquoting, not by re-deriving the name."""
+    quote (``run 1+x`` is written literally); healing must locate the
+    partition by listing+unquoting, not by re-deriving the name."""
     import os as _os
 
     import pyarrow.parquet as pq_
 
     from pii_detector_spark.plans.pipeline import (
-        heal_single_run,
-        mark_run_committed,
+        heal_uncommitted_runs,
         read_docs_table,
         run_pipeline as _rp,
     )
@@ -891,8 +890,9 @@ def test_heal_single_run_spark_escaped_run_id(spark, tmp_path_factory):
     from pii_detector_spark.plans.tables import marker_path
 
     _os.remove(marker_path(out, rid))
-    healed = heal_single_run(out, rid)
-    assert "docs" in healed and "lineage" in healed
+    healed = heal_uncommitted_runs(spark, out)
+    assert healed["docs"] == [rid]
+    assert healed["lineage"] == [rid]
     assert read_docs_table(spark, out).count() == 0
 
 
@@ -933,7 +933,10 @@ def test_metrics_partition_written_by_driver(spark, tmp_path_factory):
     from pyspark.sql import functions as F
 
     from pii_detector_spark.plans import checkpoint
-    from pii_detector_spark.plans.pipeline import heal_single_run, read_docs_table
+    from pii_detector_spark.plans.pipeline import (
+        heal_uncommitted_runs,
+        read_docs_table,
+    )
     from pii_detector_spark.plans.tables import unmark_run
     from pii_detector_spark.sources.datagen import write_web_pages
 
@@ -992,7 +995,7 @@ def test_metrics_partition_written_by_driver(spark, tmp_path_factory):
     ).parquet(metrics_dir).schema
 
     unmark_run(out, rid)
-    assert "metrics" in heal_single_run(out, rid)
+    assert rid in heal_uncommitted_runs(spark, out)["metrics"]
     assert not os.path.exists(os.path.join(metrics_dir, parts[0]))
 
 

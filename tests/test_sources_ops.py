@@ -408,15 +408,6 @@ class TestClassifiers:
         assert types["EMAIL_ADDRESS"].is_custom_regex is False
         assert "******-**" in out.scrubbed_text
 
-    def test_include_set_semi_join(self, spark):
-        from pii_detector_spark.operators.classifiers import apply_include_set
-
-        df = spark.createDataFrame([("a",), ("b",), ("c",)], "url string")
-        allowed = spark.createDataFrame([("a",), ("c",)], "url string")
-        got = sorted(r.url for r in apply_include_set(df, allowed).collect())
-        assert got == ["a", "c"]
-
-
 class TestDeletedGC:
     def test_deleted_urls(self, spark):
         from pii_detector_spark.plans.checkpoint import deleted_urls
