@@ -370,7 +370,8 @@ def main() -> None:
         expire_snapshots(args.output, keep_last=args.expire_keep_last)
 
     print(
-        f"docs={res.docs_written} docs_path={res.docs_path} "
+        f"docs={res.docs_written} input_files={res.input_files} "
+        f"input_files_skipped={res.input_files_skipped} docs_path={res.docs_path} "
         f"findings={res.findings_path} lineage={res.lineage_path} "
         f"metrics={res.metrics_path}"
     )

@@ -7,11 +7,16 @@ F5/F8, §2.9 K2/K3):
   status, run id. The reference's per-chunk status bookkeeping
   (``base_scan_service.py:902-972``) collapses to this, because Spark tasks
   are idempotent — only SCANNED-per-url matters for resume.
-* resume — left ANTI-join of the input against lineage rows whose
-  ``pattern_version`` is current (broadcast when small): exactly the
-  reference's already-scanned dedup (``base_scan_service.py:431-447``) and
-  its rescan-on-new-patterns trigger (``redis_tasks.py:174-260``: bumping
-  ``EngineConfig.pattern_version`` invalidates old lineage).
+* resume — two steps, as the reference's already-scanned dedup
+  (``base_scan_service.py:431-447``): input files whose (path, size,
+  mtime) stamp a committed run's covered-file record lists are pruned
+  from the scan before any row is read (its ``(full_path, etag)`` skip;
+  ``plans/tables.py`` holds the records), then a left ANTI-join of the
+  remaining input against lineage rows whose ``pattern_version`` is
+  current (broadcast when small) drops urls already scanned from another
+  file.  Bumping ``EngineConfig.pattern_version`` invalidates both, as
+  the reference's rescan-on-new-patterns trigger
+  (``redis_tasks.py:174-260``).
 * metrics table — per-partition docs scanned / kept, PII hits by category,
   drop reasons (``app/schemas/trends_info.py`` analogue); the driver writes
   a run's few rows as one parquet file (``write_metrics``), not a Spark job.
@@ -32,7 +37,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
-from pii_detector_spark.plans.tables import recover, replace_dir, write_file_atomic
+from pii_detector_spark.plans.tables import (
+    drop_scan_records,
+    recover,
+    replace_dir,
+    write_file_atomic,
+)
 
 
 def lineage_path(output_dir: str) -> str:
@@ -129,10 +139,16 @@ def gc_deleted_urls(
     table; a rewrite interrupted mid-swap is put right by ``recover``
     before the table is read again (here and in ``heal_uncommitted_runs``).
 
+    The covered-file records are dropped before lineage is rewritten: a
+    url removed here may still sit in a file a record covers, and must be
+    rescanned if a later run reads that file again.
+
     Returns rows-removed per table. Missing tables are skipped; corrupt
     tables RAISE (silently skipping made GC report 0 removed on damage
     that needed attention).
     """
+    if "lineage" in tables:
+        drop_scan_records(output_dir)
     removed: dict[str, int] = {}
     dele = deleted.select("url").distinct()
     for t in tables:

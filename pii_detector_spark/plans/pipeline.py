@@ -4,9 +4,15 @@ as one declarative DataFrame plan).
 Stage order and the reasoning at 100 TB:
 
 1. scan + pre-filters     — predicates push into the parquet/Iceberg scan
-2. resume anti-join       — removes already-SCANNED urls; url-only, no
-                            distinct() ahead of it, so it broadcasts while
-                            the lineage is under the broadcast threshold
+2. resume skip            — on resume, input files a committed run's
+                            covered-file record lists with an unchanged
+                            (size, mtime) stamp are pruned from the scan at
+                            planning, so splits and tasks cover only new or
+                            changed files; then the url anti-join removes
+                            already-SCANNED urls from the rest (url-only,
+                            no distinct() ahead of it, so it broadcasts
+                            while the lineage is under the broadcast
+                            threshold)
 3. fused document UDF     — extraction + quality metrics + langid +
                             perplexity + keep/drop + gated scrub in ONE
                             Arrow round trip (operators/fused.py), running
@@ -32,7 +38,10 @@ once the lineage outgrows the broadcast threshold.
 from __future__ import annotations
 
 import contextlib
+import hashlib
+import json
 import os
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,9 +61,18 @@ from pii_detector_spark.plans.tables import (
     run_committed,
 )
 from pii_detector_spark.sources.web_pages import (
+    BLOCKED_EXT_RX,
+    LOG_PATH_RX,
+    MAX_HTML_BYTES,
     apply_prefilters,
     read_web_pages,
 )
+
+# what a covered-file record holds for besides the pattern version: a
+# changed prefilter can admit urls of a covered file that no run scanned
+PREFILTERS_FINGERPRINT = hashlib.sha256(
+    json.dumps([BLOCKED_EXT_RX, LOG_PATH_RX, MAX_HTML_BYTES]).encode()
+).hexdigest()[:16]
 
 DOC_COLUMNS = [
     "url",
@@ -516,6 +534,25 @@ class PipelineResult:
     lineage_path: str
     metrics_path: str
     docs_written: int
+    input_files: int  # input files the run read
+    input_files_skipped: int  # input files committed runs already covered
+
+
+def _input_stamps(spark: SparkSession, df: DataFrame) -> dict[str, list[int]]:
+    """``{file: [size, mtime]}`` for every file ``df`` scans, read through
+    Hadoop's ``FileSystem`` so any scheme Spark reads works.  Keys take
+    ``_metadata.file_path``'s form: ``inputFiles()`` writes an empty
+    authority as ``file:///``, the metadata column as ``file:/``; both
+    keep the %-escapes."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    stamps = {}
+    for uri in df.inputFiles():
+        path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(uri))
+        st = path.getFileSystem(conf).getFileStatus(path)
+        key = re.sub(r"^([^:/]+):///", r"\1:/", uri)
+        stamps[key] = [st.getLen(), st.getModificationTime()]
+    return stamps
 
 
 def run_pipeline(
@@ -534,6 +571,15 @@ def run_pipeline(
 ) -> PipelineResult:
     """Batch scan job with checkpoint-resume; rerunning after a partial or
     complete prior run processes only not-yet-SCANNED urls (idempotent).
+
+    Every run records the (size, mtime) stamp of each input file it read
+    in ``<output_dir>/_scanned/<run_id>`` before its commit marker.  A
+    ``resume=True`` run over existing lineage prunes, at planning, every
+    input file whose stamp a marked run recorded under the current
+    pattern version and prefilters, so it reads, splits and schedules
+    only new or changed files; the url anti-join then runs over those
+    (a url can sit in more than one file).  ``input_files`` and
+    ``input_files_skipped`` on the result count both sides.
 
     ``gc_deleted=True`` additionally applies F7 deleted-object GC after the
     run: lineage urls absent from the current source listing are MERGE-
@@ -576,26 +622,52 @@ def run_pipeline(
         heal_uncommitted_runs(spark, output_dir)
         catch_up_snapshots(output_dir)
 
-        raw = apply_prefilters(read_web_pages(spark, input_path))
-        pending = raw
+        raw = read_web_pages(spark, input_path)
+        stamps = _input_stamps(spark, raw)
         lineage = None
         if resume or gc_deleted:
             lineage = checkpoint.read_lineage(spark, output_dir)
+        skipped: set[str] = set()
+        if resume and lineage is not None:
+            covered = tables.covered_files(
+                output_dir, config.pattern_version, PREFILTERS_FINGERPRINT
+            )
+            skipped = {f for f, st in stamps.items() if (f, *st) in covered}
+        scan = raw
+        if skipped:
+            # a filter on the file-path metadata column only: Spark prunes
+            # these files at planning and sizes splits from the rest
+            scan = raw.filter(
+                ~F.col("_metadata.file_path").isin(sorted(skipped))
+            )
+        pending = apply_prefilters(scan)
         if resume:
             pending = checkpoint.anti_join_completed(
-                raw, lineage, config.pattern_version
+                pending, lineage, config.pattern_version
             )
 
         docs = transform_web_pages(
             pending, config, extract_html=extract_html, prefilter=False
         )
 
+        # counts only once write_run_outputs' commit marker lands
+        tables.write_scan_record(
+            output_dir,
+            run_id,
+            {
+                "pattern_version": config.pattern_version,
+                "prefilters": PREFILTERS_FINGERPRINT,
+                "files": {
+                    f: st for f, st in stamps.items() if f not in skipped
+                },
+            },
+        )
         n = write_run_outputs(
             spark, docs, output_dir, run_id, config.pattern_version
         )
 
         if gc_deleted and lineage is not None:
-            deleted = checkpoint.deleted_urls(lineage, raw)
+            deleted = checkpoint.deleted_urls(lineage, apply_prefilters(raw))
             if deleted is not None:
                 checkpoint.gc_deleted_urls(spark, output_dir, deleted)
 
@@ -621,4 +693,6 @@ def run_pipeline(
             lineage_path=checkpoint.lineage_path(output_dir),
             metrics_path=checkpoint.metrics_path(output_dir),
             docs_written=n,
+            input_files=len(stamps) - len(skipped),
+            input_files_skipped=len(skipped),
         )

@@ -1,14 +1,23 @@
 """The on-disk table-commit protocol: the one place every multi-step
 table write is made crash-safe (plain parquet has no transactions).
 
-* ``write_file_atomic`` — single-file commits (run markers, snapshot
-  ``v{N}.json`` and ``CURRENT``, heartbeat beats): a hidden
+* ``write_file_atomic`` — single-file commits (run markers, covered-file
+  records, snapshot ``v{N}.json`` and ``CURRENT``, heartbeat beats): a hidden
   ``.<name>#tmp`` sibling, then ``os.replace``.  Spark skips dot-files
   and no quoted run_id ends in ``#tmp``, so no reader counts a tmp.
 * run markers ``_commits/<quote(run_id)>``, written after ALL of a run's
   sink partitions land (on Iceberg, one atomic multi-table commit): a
   ``run_id=`` partition without a marker is a crashed run, and
   ``drop_runs`` removes it file-level — never a row rewrite.
+* covered-file records ``_scanned/<quote(run_id)>``, written before the
+  run's marker: the stamp (size, modification time) of every input file
+  the run read, with the pattern version and prefilter fingerprint they
+  hold for (a rewrite that keeps both size and mtime goes unseen).
+  Only a marked run's record counts (``covered_files``).  A
+  record vouches that every url of its files is in lineage, so whatever
+  removes lineage rows drops every record first: ``drop_runs`` before it
+  removes a ``lineage`` partition, and the deleted-url GC before it
+  rewrites lineage (``drop_scan_records``).
 * ``replace_dir`` — whole-table replace (``neardup``, ``docs_deduped``,
   ``paired_sigs``, the deleted-url GC rewrites, and every side table the
   spark-submit job writes: its input and post-pass tables, shards too):
@@ -21,6 +30,7 @@ Single writer per output dir; readers take no locks.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from typing import Callable, Iterator
@@ -82,6 +92,50 @@ def committed_runs(output_dir: str) -> list[str]:
     )
 
 
+def _scanned_dir(output_dir: str) -> str:
+    return os.path.join(output_dir, "_scanned")
+
+
+def write_scan_record(output_dir: str, run_id: str, record: dict) -> None:
+    """Record the input files ``run_id`` read; call before its marker."""
+    write_file_atomic(
+        os.path.join(_scanned_dir(output_dir), quote(run_id, safe="")),
+        json.dumps(record, sort_keys=True),
+    )
+
+
+def covered_files(
+    output_dir: str, pattern_version: int, prefilters: str
+) -> set[tuple[str, int, int]]:
+    """``(file, size, mtime)`` of every file a marked run's record lists
+    under this pattern version and prefilter fingerprint."""
+    sdir = _scanned_dir(output_dir)
+    if not os.path.isdir(sdir):
+        return set()
+    covered = set()
+    for name in os.listdir(sdir):
+        if name.endswith(_TMP_SUFFIX) or not run_committed(
+            output_dir, unquote(name)
+        ):
+            continue
+        with open(os.path.join(sdir, name)) as fh:
+            rec = json.load(fh)
+        if (rec["pattern_version"], rec["prefilters"]) == (
+            pattern_version,
+            prefilters,
+        ):
+            covered.update((f, *stamp) for f, stamp in rec["files"].items())
+    return covered
+
+
+def drop_scan_records(output_dir: str) -> None:
+    """Drop every covered-file record: the next resume reads every input
+    file again and relies on the lineage anti-join alone."""
+    sdir = _scanned_dir(output_dir)
+    if os.path.isdir(sdir):
+        shutil.rmtree(sdir)
+
+
 def run_partitions(table_dir: str) -> Iterator[tuple[str, str]]:
     """Yield ``(run_id, dir)`` for each ``run_id=`` partition of a table.
 
@@ -102,11 +156,14 @@ def drop_runs(
 ) -> dict[str, list[str]]:
     """Remove every ``HEALED_TABLES`` partition whose run_id ``doomed``
     accepts; returns {table: [removed run_ids]}.  Callers only doom
-    unmarked runs, so a kill part-way leaves the rest for the next heal."""
+    unmarked runs, so a kill part-way leaves the rest for the next heal.
+    The covered-file records go before the first lineage partition does."""
     removed: dict[str, list[str]] = {}
     for t in HEALED_TABLES:
         for rid, d in run_partitions(os.path.join(output_dir, t)):
             if doomed(rid):
+                if t == "lineage":
+                    drop_scan_records(output_dir)
                 shutil.rmtree(d)
                 removed.setdefault(t, []).append(rid)
     return removed

@@ -3,8 +3,6 @@ transitive closure over near-dup pairs in pure DataFrame ops."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from pii_detector_spark.operators.clusters import (
     canonicalize,
     connected_components,

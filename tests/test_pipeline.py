@@ -5,13 +5,11 @@ idempotence. This is the BASELINE.md correctness gate."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pyarrow.parquet as pq
 import pytest
 
-from pii_detector_spark.plans.pipeline import run_pipeline, transform_web_pages
-from pii_detector_spark.sources.web_pages import read_web_pages
+from pii_detector_spark.plans.pipeline import run_pipeline
 from tests.oracle import oracle_decide
 
 

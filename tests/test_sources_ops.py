@@ -846,7 +846,6 @@ def test_gif_through_spark_seam(spark):
     """GIF payloads decode inside extract_media_features; junk degrades
     per file to null features."""
     import numpy as np
-    from pyspark.sql import functions as F_
 
     from pii_detector_spark.operators import multimodal
     from pii_detector_spark.sources.gif import build_gif
