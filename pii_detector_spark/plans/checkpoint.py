@@ -139,18 +139,22 @@ def gc_deleted_urls(
     table; a rewrite interrupted mid-swap is put right by ``recover``
     before the table is read again (here and in ``heal_uncommitted_runs``).
 
-    The covered-file records are dropped before lineage is rewritten: a
-    url removed here may still sit in a file a record covers, and must be
-    rescanned if a later run reads that file again.
+    An empty set returns ``{}`` at once: no table is rewritten, and the
+    covered-file records stay, since lineage is unchanged.  Otherwise the
+    records are dropped before lineage is rewritten: a url removed here
+    may still sit in a file a record covers, and must be rescanned if a
+    later run reads that file again.
 
     Returns rows-removed per table. Missing tables are skipped; corrupt
     tables RAISE (silently skipping made GC report 0 removed on damage
     that needed attention).
     """
+    dele = deleted.select("url").distinct()
+    if dele.isEmpty():
+        return {}
     if "lineage" in tables:
         drop_scan_records(output_dir)
     removed: dict[str, int] = {}
-    dele = deleted.select("url").distinct()
     for t in tables:
         path = os.path.join(output_dir, t)
         recover(path)

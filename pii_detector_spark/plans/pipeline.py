@@ -539,19 +539,28 @@ class PipelineResult:
 
 
 def _input_stamps(spark: SparkSession, df: DataFrame) -> dict[str, list[int]]:
-    """``{file: [size, mtime]}`` for every file ``df`` scans, read through
-    Hadoop's ``FileSystem`` so any scheme Spark reads works.  Keys take
+    """``{file: [size, mtime]}`` for every file ``df`` scans, from one
+    Hadoop ``FileSystem`` listing per input directory (not one call per
+    file), so any scheme Spark reads works.  Keys take
     ``_metadata.file_path``'s form: ``inputFiles()`` writes an empty
-    authority as ``file:///``, the metadata column as ``file:/``; both
+    authority as ``file:///``, the metadata column as ``file:/``; all
     keep the %-escapes."""
+
+    def key(uri: str) -> str:
+        return re.sub(r"^([^:/]+):///", r"\1:/", uri)
+
+    dirs: dict[str, set[str]] = {}
+    for uri in df.inputFiles():
+        dirs.setdefault(uri.rsplit("/", 1)[0], set()).add(key(uri))
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     stamps = {}
-    for uri in df.inputFiles():
-        path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(uri))
-        st = path.getFileSystem(conf).getFileStatus(path)
-        key = re.sub(r"^([^:/]+):///", r"\1:/", uri)
-        stamps[key] = [st.getLen(), st.getModificationTime()]
+    for d, files in dirs.items():
+        path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(d))
+        for st in path.getFileSystem(conf).listStatus(path):
+            f = key(st.getPath().toUri().toString())
+            if f in files:
+                stamps[f] = [st.getLen(), st.getModificationTime()]
     return stamps
 
 
@@ -572,13 +581,13 @@ def run_pipeline(
     """Batch scan job with checkpoint-resume; rerunning after a partial or
     complete prior run processes only not-yet-SCANNED urls (idempotent).
 
-    Every run records the (size, mtime) stamp of each input file it read
-    in ``<output_dir>/_scanned/<run_id>`` before its commit marker.  A
+    Every run records the (size, mtime) stamp of each input file it saw
+    in ``<output_dir>/_scanned/<run_id>`` after its commit marker.  A
     ``resume=True`` run over existing lineage prunes, at planning, every
-    input file whose stamp a marked run recorded under the current
-    pattern version and prefilters, so it reads, splits and schedules
-    only new or changed files; the url anti-join then runs over those
-    (a url can sit in more than one file).  ``input_files`` and
+    input file whose stamp a record lists under the current pattern
+    version and prefilters, so it reads, splits and schedules only new or
+    changed files; the url anti-join then runs over those (a url can sit
+    in more than one file).  ``input_files`` and
     ``input_files_skipped`` on the result count both sides.
 
     ``gc_deleted=True`` additionally applies F7 deleted-object GC after the
@@ -650,20 +659,21 @@ def run_pipeline(
             pending, config, extract_html=extract_html, prefilter=False
         )
 
-        # counts only once write_run_outputs' commit marker lands
+        n = write_run_outputs(
+            spark, docs, output_dir, run_id, config.pattern_version
+        )
+        # only once the marker has landed, so a record on disk always
+        # vouches for committed lineage (a kill before this line costs
+        # one unskipped resume).  The skipped files go in too: a record
+        # already vouches for them.
         tables.write_scan_record(
             output_dir,
             run_id,
             {
                 "pattern_version": config.pattern_version,
                 "prefilters": PREFILTERS_FINGERPRINT,
-                "files": {
-                    f: st for f, st in stamps.items() if f not in skipped
-                },
+                "files": stamps,
             },
-        )
-        n = write_run_outputs(
-            spark, docs, output_dir, run_id, config.pattern_version
         )
 
         if gc_deleted and lineage is not None:

@@ -9,15 +9,16 @@ table write is made crash-safe (plain parquet has no transactions).
   sink partitions land (on Iceberg, one atomic multi-table commit): a
   ``run_id=`` partition without a marker is a crashed run, and
   ``drop_runs`` removes it file-level — never a row rewrite.
-* covered-file records ``_scanned/<quote(run_id)>``, written before the
-  run's marker: the stamp (size, modification time) of every input file
-  the run read, with the pattern version and prefilter fingerprint they
-  hold for (a rewrite that keeps both size and mtime goes unseen).
-  Only a marked run's record counts (``covered_files``).  A
-  record vouches that every url of its files is in lineage, so whatever
-  removes lineage rows drops every record first: ``drop_runs`` before it
-  removes a ``lineage`` partition, and the deleted-url GC before it
-  rewrites lineage (``drop_scan_records``).
+* covered-file records ``_scanned/<quote(run_id)>``, written after the
+  run's marker and snapshot: the stamp (size, modification time) of every
+  input file the run saw, with the pattern version and prefilter
+  fingerprint they hold for (a rewrite that keeps both size and mtime
+  goes unseen).  A record vouches that every url of its files is in
+  committed lineage, so any record on disk counts (``covered_files``),
+  and whatever removes lineage rows drops every record first:
+  ``drop_runs`` before it removes a ``lineage`` partition, and the
+  deleted-url GC before it rewrites lineage (``drop_scan_records``).
+  Dropping a record only ever costs a rescan.
 * ``replace_dir`` — whole-table replace (``neardup``, ``docs_deduped``,
   ``paired_sigs``, the deleted-url GC rewrites, and every side table the
   spark-submit job writes: its input and post-pass tables, shards too):
@@ -96,30 +97,36 @@ def _scanned_dir(output_dir: str) -> str:
     return os.path.join(output_dir, "_scanned")
 
 
+def _scan_records(output_dir: str) -> Iterator[tuple[str, dict]]:
+    sdir = _scanned_dir(output_dir)
+    if os.path.isdir(sdir):
+        for name in sorted(os.listdir(sdir)):
+            if not name.endswith(_TMP_SUFFIX):
+                with open(os.path.join(sdir, name)) as fh:
+                    yield name, json.load(fh)
+
+
 def write_scan_record(output_dir: str, run_id: str, record: dict) -> None:
-    """Record the input files ``run_id`` read; call before its marker."""
+    """Record the input files ``run_id`` saw; call after its marker.  Any
+    other record whose files this one lists goes, since this one's stamps
+    are the newer: the records stay about one per input set."""
+    name = quote(run_id, safe="")
     write_file_atomic(
-        os.path.join(_scanned_dir(output_dir), quote(run_id, safe="")),
+        os.path.join(_scanned_dir(output_dir), name),
         json.dumps(record, sort_keys=True),
     )
+    for other, rec in _scan_records(output_dir):
+        if other != name and rec["files"].keys() <= record["files"].keys():
+            os.remove(os.path.join(_scanned_dir(output_dir), other))
 
 
 def covered_files(
     output_dir: str, pattern_version: int, prefilters: str
 ) -> set[tuple[str, int, int]]:
-    """``(file, size, mtime)`` of every file a marked run's record lists
-    under this pattern version and prefilter fingerprint."""
-    sdir = _scanned_dir(output_dir)
-    if not os.path.isdir(sdir):
-        return set()
+    """``(file, size, mtime)`` of every file a record lists under this
+    pattern version and prefilter fingerprint."""
     covered = set()
-    for name in os.listdir(sdir):
-        if name.endswith(_TMP_SUFFIX) or not run_committed(
-            output_dir, unquote(name)
-        ):
-            continue
-        with open(os.path.join(sdir, name)) as fh:
-            rec = json.load(fh)
+    for _name, rec in _scan_records(output_dir):
         if (rec["pattern_version"], rec["prefilters"]) == (
             pattern_version,
             prefilters,

@@ -1,6 +1,6 @@
-"""Covered-file records: a resume run prunes the input files that marked
-runs already read (unchanged size and mtime, same pattern version and
-prefilters), and its tables equal those of a run that reads every file.
+"""Covered-file records: a resume run prunes the input files that
+committed runs already saw (unchanged size and mtime, same pattern version
+and prefilters), and its tables equal those of a run that reads every file.
 Everything that removes lineage rows drops the records first."""
 
 from __future__ import annotations
@@ -112,6 +112,8 @@ def test_resume_reads_only_new_file(spark, parts, tmp_path_factory):
     assert (res.input_files, res.input_files_skipped) == (1, 2)
     assert res.docs_written == full.docs_written > 0
     assert _tables(spark, out) == _tables(spark, ref)
+    # d1's record lists every file b1's and b2's did, so theirs are gone
+    assert os.listdir(os.path.join(out, "_scanned")) == ["d1"]
 
 
 def test_rewritten_covered_file_is_rescanned(spark, parts, tmp_path_factory):
@@ -146,37 +148,73 @@ def test_pattern_version_bump_skips_nothing(spark, parts, tmp_path_factory):
     assert again.docs_written == 0
 
 
-def test_record_without_marker_is_ignored(
+def test_kill_at_record_write_skips_nothing(
     spark, parts, tmp_path_factory, monkeypatch
 ):
-    """A kill after the record is written but before the marker: the record
-    counts for nothing, and the healed rerun matches a run never killed."""
-    import pii_detector_spark.plans.pipeline as pipemod
-
+    """A kill after the marker but before the record: the run is committed
+    without a record, so the next resume reads every file, and its tables
+    equal those of a run that was never killed."""
     src = _src(tmp_path_factory, parts, ["a", "b"])
     clean = str(tmp_path_factory.mktemp("cover_clean"))
-    run_pipeline(spark, str(src / "a.parquet"), clean, run_id="k1")
-    run_pipeline(spark, str(src), clean, run_id="k3")
+    run_pipeline(spark, str(src), clean, run_id="k1")
+    run_pipeline(spark, str(src), clean, run_id="k2")
 
     out = str(tmp_path_factory.mktemp("cover_kill"))
-    run_pipeline(spark, str(src / "a.parquet"), out, run_id="k1")
-    covered_a = tables.covered_files(out, PV, PREFILTERS_FINGERPRINT)
-    assert len(covered_a) == 1
 
     def boom(*a, **k):
-        raise RuntimeError("injected kill before marker")
+        raise RuntimeError("injected kill at the record write")
 
     with monkeypatch.context() as mp:
-        mp.setattr(pipemod, "mark_run_committed", boom)
-        with pytest.raises(RuntimeError, match="before marker"):
-            run_pipeline(spark, str(src), out, run_id="k2")
-    assert sorted(os.listdir(os.path.join(out, "_scanned"))) == ["k1", "k2"]
-    assert tables.covered_files(out, PV, PREFILTERS_FINGERPRINT) == covered_a
+        mp.setattr(tables, "write_scan_record", boom)
+        with pytest.raises(RuntimeError, match="record write"):
+            run_pipeline(spark, str(src), out, run_id="k1")
+    assert tables.run_committed(out, "k1")
+    assert not os.path.exists(os.path.join(out, "_scanned"))
 
-    # heal removes k2's lineage partition, and with it every record
-    res = run_pipeline(spark, str(src), out, run_id="k3")
+    res = run_pipeline(spark, str(src), out, run_id="k2")
     assert (res.input_files, res.input_files_skipped) == (2, 0)
+    assert res.docs_written == 0
     assert _tables(spark, out) == _tables(spark, clean)
+    again = run_pipeline(spark, str(src), out, run_id="k3")
+    assert (again.input_files, again.input_files_skipped) == (0, 2)
+
+
+def test_rerun_under_committed_run_id(
+    spark, parts, tmp_path_factory, monkeypatch
+):
+    """Reruns under one run id (the job's default): a rerun killed before
+    a new file's lineage lands leaves the old record, so the next rerun
+    still scans that file; a rerun's record keeps the files it skipped,
+    so every later rerun skips them too."""
+    import pii_detector_spark.plans.pipeline as pipemod
+
+    src = _src(tmp_path_factory, parts, ["a"])
+    out = str(tmp_path_factory.mktemp("cover_rerun"))
+    run_pipeline(spark, str(src), out, run_id="run-0")
+    shutil.copy(parts["b"], src / "b.parquet")
+
+    def boom(*a, **k):
+        raise RuntimeError("injected kill before lineage")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(pipemod.checkpoint, "build_lineage", boom)
+        with pytest.raises(RuntimeError, match="before lineage"):
+            run_pipeline(spark, str(src), out, run_id="run-0")
+
+    res = run_pipeline(spark, str(src), out, run_id="run-0")
+    assert (res.input_files, res.input_files_skipped) == (1, 1)
+    assert res.docs_written > 0
+    ref = str(tmp_path_factory.mktemp("cover_rerun_ref"))
+    run_pipeline(spark, str(src), ref, run_id="run-0")
+
+    def lineage_urls(o):
+        lin = spark.read.parquet(os.path.join(o, "lineage"))
+        return {r["url"] for r in lin.collect()}
+
+    assert lineage_urls(out) == lineage_urls(ref)
+    for _ in range(2):
+        res = run_pipeline(spark, str(src), out, run_id="run-0")
+        assert (res.input_files, res.input_files_skipped) == (0, 2)
 
 
 def test_expire_drops_records(spark, parts, tmp_path_factory):
@@ -199,12 +237,18 @@ def test_gc_deleted_run_drops_records(spark, parts, tmp_path_factory):
     src = _src(tmp_path_factory, parts, ["a", "b"])
     out = str(tmp_path_factory.mktemp("cover_gc"))
     full = run_pipeline(spark, str(src), out, run_id="g1")
+    # nothing deleted: no table is rewritten and the records stay
+    inode = os.stat(os.path.join(out, "lineage")).st_ino
+    same = run_pipeline(spark, str(src), out, run_id="g2", gc_deleted=True)
+    assert (same.input_files, same.input_files_skipped) == (0, 2)
+    assert os.stat(os.path.join(out, "lineage")).st_ino == inode
+    assert os.listdir(os.path.join(out, "_scanned")) == ["g2"]
     half = run_pipeline(
-        spark, str(src / "a.parquet"), out, run_id="g2", gc_deleted=True
+        spark, str(src / "a.parquet"), out, run_id="g3", gc_deleted=True
     )
     assert half.docs_written == 0
     assert not os.path.exists(os.path.join(out, "_scanned"))
-    res = run_pipeline(spark, str(src), out, run_id="g3")
+    res = run_pipeline(spark, str(src), out, run_id="g4")
     assert (res.input_files, res.input_files_skipped) == (2, 0)
     only_a = run_pipeline(
         spark, parts["a"], str(tmp_path_factory.mktemp("cover_a")), run_id="a"
