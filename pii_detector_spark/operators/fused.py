@@ -6,9 +6,10 @@ decision, and the gated PII scrub. Rationale at scale:
 
 * one JVM↔Python round trip per batch instead of three (the text column is
   the wide payload; shipping it across Arrow once matters),
-* one Python worker per task instead of one per UDF stage — at N cores the
-  job runs ~2N threads (JVM scan/write + Python), not ~4N, which is what
-  makes N→4N scaling efficiency hold on a fixed-size machine,
+* one Python worker per task for the chain instead of one per UDF stage
+  (the pipeline's sink writer, over this UDF's output, is the task's
+  only other one), so at N cores the job runs a few threads per core,
+  which is what lets N→4N scaling efficiency hold on a fixed-size machine,
 * zero per-row Python on the Spark side (north-rule), all artifacts
   (regex battery, language models) compiled once per executor process.
 
@@ -305,13 +306,15 @@ def with_fused_processing(
         F.col("html").isNull(), F.col("text")
     ).otherwise(F.lit(None).cast("string"))
     # ONE projection: each withColumn would re-run the analyzer over the
-    # whole plan, 20 times per run
+    # whole plan, 20 times per run; and "_d.*" expands the struct's fields
+    # in order on the JVM side, where 19 aliased Columns each cost a py4j
+    # round trip
     out = df.withColumn("_d", udf(F.col("url"), F.col("html"), text_arg))
     fused = [f.name for f in FUSED_RESULT_TYPE.fields]
     replaced = {"html", "text", "_d", "n_findings", *fused}
     return out.select(
         *[c for c in df.columns if c not in replaced],
-        *[F.col(f"_d.{c}").alias(c) for c in fused],
+        "_d.*",
         F.when(F.col("_d.findings").isNotNull(), F.size("_d.findings"))
         .otherwise(F.lit(0))
         .cast("long")

@@ -34,6 +34,8 @@ from __future__ import annotations
 import re
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -310,20 +312,19 @@ def with_scrub(
     )
 
 
-def findings_table(df, url_col: str = "url"):
-    """Explode per-document findings into the flat findings table
-    (reference sink K1 shape, ``base_scan_service.py:930-941``)."""
-    return df.select(
-        F.col(url_col).alias("url"), F.explode("findings").alias("f")
-    ).select(
-        "url",
-        F.col("f.id").alias("finding_id"),
-        F.col("f.pii_type").alias("pii_type"),
-        F.col("f.pii_region").alias("pii_region"),
-        F.col("f.score").alias("score"),
-        F.col("f.is_custom_regex").alias("is_custom_regex"),
-        F.col("f.pii_hash").alias("pii_hash"),
-        F.col("f.pii_data").alias("pii_masked"),
-        F.col("f.start").alias("start"),
-        F.col("f.end").alias("end"),
+# findings-table column names that differ from the FINDING_TYPE field's
+FINDINGS_RENAMES = {"id": "finding_id", "pii_data": "pii_masked"}
+
+
+def findings_table(docs: pa.RecordBatch) -> pa.RecordBatch:
+    """Explode a batch of documents' findings into flat findings-table rows
+    (reference sink K1 shape, ``base_scan_service.py:930-941``): the
+    document's url, then each FINDING_TYPE field, ``FINDINGS_RENAMES``
+    applied.  Documents with no findings list contribute no rows."""
+    findings = docs.column("findings")
+    flat = pc.list_flatten(findings)
+    urls = docs.column("url").take(pc.list_parent_indices(findings))
+    return pa.RecordBatch.from_arrays(
+        [urls, *flat.flatten()],
+        names=["url", *[FINDINGS_RENAMES.get(f.name, f.name) for f in flat.type]],
     )

@@ -17,20 +17,28 @@ F5/F8, §2.9 K2/K3):
   file.  Bumping ``EngineConfig.pattern_version`` invalidates both, as
   the reference's rescan-on-new-patterns trigger
   (``redis_tasks.py:174-260``).
-* metrics table — per-partition docs scanned / kept, PII hits by category,
-  drop reasons (``app/schemas/trends_info.py`` analogue); the driver writes
-  a run's few rows as one parquet file (``write_metrics``), not a Spark job.
+* metrics table — per write task docs scanned / kept, PII hits by
+  category, drop reasons (``app/schemas/trends_info.py`` analogue).  Each
+  task of the run's one write job counts its own docs as it writes them
+  (``tally_metrics``) and hands the counts back with its summary; the
+  driver writes a run's few rows as one parquet file (``build_metrics``,
+  ``write_metrics``), with no aggregation job.  One row describes one docs
+  file.
 
-These are plain parquet appends here; on a cluster the same code targets an
-Iceberg catalog (``writeTo(...).append()``) for snapshot isolation.
+The run's write tasks write lineage rows (``build_lineage``) beside its
+docs and findings as plain parquet files, published by
+``plans/tables.py``; an Iceberg catalog would take the same files as one
+append commit for snapshot isolation.
 """
 
 from __future__ import annotations
 
 import os
 import uuid
+from collections import Counter
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -187,18 +195,31 @@ def gc_deleted_urls(
     return removed
 
 
-def build_lineage(
-    docs: DataFrame, pattern_version: int, run_id: str
-) -> DataFrame:
-    """One SCANNED row per processed url (md5 content hash per reference
-    chunk-hash semantics, ``base_scan_service.py:233-247``). Expects the
-    ``content_md5`` column the pipeline computed in its single pass."""
-    return docs.select(
-        "url",
-        "content_md5",
-        F.lit(pattern_version).alias("pattern_version"),
-        F.lit("SCANNED").alias("status"),
-        F.lit(run_id).alias("run_id"),
+_LINEAGE_ARROW = pa.schema(
+    [
+        ("url", pa.string()),
+        ("content_md5", pa.string()),
+        pa.field("pattern_version", pa.int32(), nullable=False),
+        pa.field("status", pa.string(), nullable=False),
+    ]
+)
+
+
+def build_lineage(docs: pa.RecordBatch, pattern_version: int) -> pa.RecordBatch:
+    """One SCANNED row per processed url of a write task's docs batch (md5
+    content hash per reference chunk-hash semantics,
+    ``base_scan_service.py:233-247``), as ``LINEAGE_SCHEMA`` minus
+    ``run_id`` (the partition dir carries it).  The two constant columns
+    are non-null, as in a Spark-written lineage file."""
+    n = docs.num_rows
+    return pa.RecordBatch.from_arrays(
+        [
+            docs.column("url"),
+            docs.column("content_md5"),
+            pa.repeat(pa.scalar(pattern_version, pa.int32()), n),
+            pa.repeat(pa.scalar("SCANNED"), n),
+        ],
+        schema=_LINEAGE_ARROW,
     )
 
 
@@ -209,58 +230,54 @@ METRICS_SCHEMA = (
 )
 
 
-def build_metrics(docs: DataFrame) -> pa.Table:
-    """Per-partition lineage metrics: docs scanned/kept, drop reasons map,
-    PII hits by category map, as an Arrow table with ``METRICS_SCHEMA``'s
-    types minus ``run_id`` (the partition dir carries it).
+def new_metrics_row() -> dict:
+    """A write task's metrics counts before its first batch."""
+    return {
+        "docs_scanned": 0,
+        "docs_kept": 0,
+        "drop_reasons": Counter(),
+        "pii_hits": Counter(),
+    }
 
-    Every counter comes from ONE partial-aggregated collect over ``docs``
-    (the findings array rides along), so ``partition_id`` means the same
-    docs partition for the doc counts and the PII hits. ``posexplode_outer``
-    yields one row per finding (one null row for a doc with none); position
-    0 or null marks a doc's first row, so each doc is counted once. The
-    counters are metadata-sized (partitions × reasons × categories) and the
-    maps are assembled driver-side.
-    """
-    counts = (
-        docs.select(
-            F.spark_partition_id().alias("_pid"),
-            "keep",
-            "drop_reason",
-            F.posexplode_outer(F.col("findings.pii_type")).alias(
-                "_pos", "pii_type"
-            ),
-        )
-        .groupBy("_pid", "keep", "drop_reason", "pii_type")
-        .agg(
-            F.count(F.when(F.coalesce(F.col("_pos"), F.lit(0)) == 0, 1)).alias(
-                "n_docs"
-            ),
-            F.count("_pos").alias("n_hits"),
-        )
-        .collect()
-    )
-    agg: dict[int, dict] = {}
-    for r in counts:
-        m = agg.setdefault(
-            r["_pid"],
-            {"docs_scanned": 0, "docs_kept": 0, "drop_reasons": {}, "pii_hits": {}},
-        )
-        m["docs_scanned"] += r["n_docs"]
-        if r["keep"]:
-            m["docs_kept"] += r["n_docs"]
-        if r["drop_reason"] is not None and r["n_docs"]:
-            m["drop_reasons"][r["drop_reason"]] = (
-                m["drop_reasons"].get(r["drop_reason"], 0) + r["n_docs"]
-            )
-        if r["n_hits"]:
-            m["pii_hits"][r["pii_type"]] = (
-                m["pii_hits"].get(r["pii_type"], 0) + r["n_hits"]
-            )
+
+def tally_metrics(
+    docs: pa.RecordBatch, findings: pa.RecordBatch, row: dict
+) -> None:
+    """Add one docs batch of a write task, and the findings rows exploded
+    from it, to its metrics ``row``: docs scanned / kept, drop reasons, and
+    PII hits by category (one per findings row)."""
+    row["docs_scanned"] += docs.num_rows
+    row["docs_kept"] += pc.sum(docs.column("keep")).as_py() or 0
+    for key, values in (
+        ("drop_reasons", docs.column("drop_reason")),
+        ("pii_hits", findings.column("pii_type")),
+    ):
+        for vc in pc.value_counts(values).to_pylist():
+            if vc["values"] is not None:
+                row[key][vc["values"]] += vc["counts"]
+
+
+def build_metrics(summaries: list) -> pa.Table:
+    """The metrics rows of one run, from its write tasks' summaries: one
+    row per task that wrote docs, so ``partition_id`` names the task whose
+    docs file (``part-<partition_id>-…``) the counts describe.  An Arrow
+    table with ``METRICS_SCHEMA``'s types minus ``run_id``, rows by
+    partition and map keys sorted."""
     schema = to_arrow_schema(_parse_datatype_string(METRICS_SCHEMA))
     schema = schema.remove(schema.get_field_index("run_id"))
+    rows = sorted(
+        (s for s in summaries if s["docs_scanned"]),
+        key=lambda s: s["partition_id"],
+    )
     return pa.Table.from_pylist(
-        [{"partition_id": pid, **m} for pid, m in sorted(agg.items())],
+        [
+            {
+                **{n: s[n] for n in schema.names},
+                "drop_reasons": sorted(s["drop_reasons"].items()),
+                "pii_hits": sorted(s["pii_hits"].items()),
+            }
+            for s in rows
+        ],
         schema=schema,
     )
 

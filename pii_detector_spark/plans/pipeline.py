@@ -19,20 +19,21 @@ Stage order and the reasoning at 100 TB:
                             inside the scan stage at split granularity; the
                             html/text payload never shuffles and crosses
                             the JVM↔Python boundary exactly once
-4. sinks                  — docs parquet written in the SAME single pass
-                            (findings ride along as an array column);
-                            findings, lineage and the metrics collect then
-                            run concurrently over a cheap columnar re-read
-                            of the docs output, so the UDF runs exactly once
-                            per document per pattern version. The driver
-                            writes the few metrics rows as one parquet file
-                            (no Spark job). Output coalesced to ~4
-                            files/core so the driver-serial commit never
+4. sinks                  — the SAME single pass writes them: each task
+                            of the fused stage streams its docs into a
+                            staged docs, findings (exploded in Arrow) and
+                            lineage file and returns one summary row (its
+                            files and metrics counts), so a run is ONE
+                            write job and the UDF runs exactly once per
+                            document per pattern version. The driver
+                            publishes the reported files, writes the few
+                            metrics rows as one parquet file (no Spark
+                            job), then commits. Output coalesced to ~4
+                            files/core so the driver-serial publish never
                             dominates.
 
-The only wide exchange in a run is the metrics aggregation over the (tiny)
-per-partition counters of the docs re-read, plus the resume anti-join's
-once the lineage outgrows the broadcast threshold.
+A run has no wide exchange except the resume anti-join's, once the lineage
+outgrows the broadcast threshold.
 """
 
 from __future__ import annotations
@@ -42,10 +43,15 @@ import hashlib
 import json
 import os
 import re
+import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 from pii_detector_spark.config import DEFAULT_CONFIG, EngineConfig
 from pii_detector_spark.operators.fused import with_fused_processing
@@ -110,10 +116,10 @@ def transform_web_pages(
 
     The whole per-document chain (extract → metrics → langid → decide →
     gated scrub) runs as ONE fused pandas UDF (``operators/fused.py``): one
-    Arrow round trip and one Python worker per task — the property that
-    keeps N→4N scaling efficiency ≥0.8. The per-stage operators
-    (``operators/langid.py``, ``operators/scrub.py``, ``operators/quality.py``)
-    serve the declared queries in ``__spark_entry__.py``, not this plan.
+    Arrow round trip and one Python worker per task for the whole chain.
+    The per-stage operators (``operators/langid.py``,
+    ``operators/scrub.py``, ``operators/quality.py``) serve the declared
+    queries in ``__spark_entry__.py``, not this plan.
     ``extract_html=False`` skips HTML extraction by nulling the html column
     (the fused UDF falls back to the text column).
     """
@@ -127,10 +133,8 @@ def transform_web_pages(
 def docs_table_schema():
     """Explicit schema of the ``docs`` output table (run_id + DOC_COLUMNS +
     findings). Every re-read of the partitioned docs table MUST pass this:
-    a run whose appends were all empty leaves ``run_id=`` partition dirs
-    with no data files, and schema inference then fails with
-    UNABLE_TO_INFER_SCHEMA (flat empty writes used to emit a
-    schema-bearing file; partitioned ones do not)."""
+    runs that wrote no rows leave a docs dir with no data files, and
+    schema inference then fails with UNABLE_TO_INFER_SCHEMA."""
     from pyspark.sql.types import (
         StructField,
         StructType,
@@ -177,14 +181,21 @@ def heal_uncommitted_runs(
     interrupted mid-swap is put right first (``tables.recover``).
 
     Crash matrix (kill at any point of ``write_run_outputs``):
-    * mid docs/findings/lineage/metrics write — Spark's output committer
-      leaves only ``_temporary`` residue (ignored by readers) and/or a
-      committed partition dir; the run has no marker, so every partition
-      dir for it is removed here and the rerun reprocesses those urls.
+    * inside the write job — the tasks wrote only under ``_staging/``,
+      which is removed here before anything is read; no table changed.
+    * after the job, part-way through the docs / findings / lineage
+      publishes or before the metrics file or the marker — the run has
+      no marker, so every partition dir for it is removed here (with any
+      staged files left) and the rerun reprocesses those urls.
     * after the marker — the run is complete; rerun resumes to a no-op.
+
+    A rerun under a run id that is already committed is the exception: a
+    kill after its first publish leaves its published files under the
+    committed id, and the next rerun scans those urls again beside them.
 
     Returns {table: [removed run_ids]}.
     """
+    tables.drop_staging(output_dir)
     for t in HEALED_TABLES:
         path = os.path.join(output_dir, t)
         tables.recover(path)
@@ -211,6 +222,87 @@ def heal_uncommitted_runs(
     )
 
 
+# what each write task hands back: its partition, the staged files it
+# wrote (``<table>/<name>``) and its metrics row's counts
+SUMMARY_SCHEMA = (
+    "partition_id INT, files ARRAY<STRING>, docs_scanned BIGINT, "
+    "docs_kept BIGINT, drop_reasons MAP<STRING,BIGINT>, "
+    "pii_hits MAP<STRING,BIGINT>"
+)
+
+
+def _parquet_options(spark: SparkSession) -> dict:
+    """pyarrow writer options that give the files a Spark write would:
+    snappy, the timestamp encoding ``spark.sql.parquet.outputTimestampType``
+    names (INT96 by default), and no embedded Arrow schema."""
+    ts = {
+        "INT96": {"use_deprecated_int96_timestamps": True},
+        "TIMESTAMP_MICROS": {"coerce_timestamps": "us"},
+        "TIMESTAMP_MILLIS": {
+            "coerce_timestamps": "ms",
+            "allow_truncated_timestamps": True,
+        },
+    }[spark.conf.get("spark.sql.parquet.outputTimestampType").upper()]
+    return {"compression": "snappy", "store_schema": False, **ts}
+
+
+def _sink_writer(
+    spark: SparkSession, staging: str, token: str, pattern_version: int
+):
+    """The ``mapInArrow`` body of a run's write job.  Each task streams its
+    docs batches, cast to the docs table's Arrow schema, into one staged
+    docs, findings and lineage file apiece (a file opens on its first
+    row), counts its metrics on the way, and returns one summary row."""
+    docs_schema = to_arrow_schema(docs_table_schema())
+    docs_schema = docs_schema.remove(docs_schema.get_field_index("run_id"))
+    summary_schema = to_arrow_schema(_parse_datatype_string(SUMMARY_SCHEMA))
+    options = _parquet_options(spark)
+
+    def write(batches):
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        name = tables.staged_file_name(
+            ctx.partitionId(), token, ctx.attemptNumber()
+        )
+        row = checkpoint.new_metrics_row()
+        writers: dict[str, pq.ParquetWriter] = {}
+
+        def emit(table: str, batch: pa.RecordBatch) -> None:
+            if not batch.num_rows:
+                return
+            if table not in writers:
+                os.makedirs(os.path.join(staging, table), exist_ok=True)
+                writers[table] = pq.ParquetWriter(
+                    os.path.join(staging, table, name), batch.schema, **options
+                )
+            writers[table].write_batch(batch)
+
+        try:
+            for batch in batches:
+                docs = batch.cast(docs_schema)
+                findings = findings_table(docs)
+                emit("docs", docs)
+                emit("findings", findings)
+                emit("lineage", checkpoint.build_lineage(docs, pattern_version))
+                checkpoint.tally_metrics(docs, findings, row)
+        finally:
+            for w in writers.values():
+                w.close()
+        yield pa.RecordBatch.from_pylist(
+            [
+                {
+                    **row,
+                    "partition_id": ctx.partitionId(),
+                    "files": [f"{t}/{name}" for t in writers],
+                }
+            ],
+            schema=summary_schema,
+        )
+
+    return write
+
+
 def write_run_outputs(
     spark: SparkSession,
     docs: DataFrame,
@@ -219,95 +311,48 @@ def write_run_outputs(
     pattern_version: int,
 ) -> int:
     """Write the four sinks (docs / findings / lineage / metrics) for one
-    processed batch of fused-UDF output; returns docs written."""
-    docs = docs.withColumn("run_id", F.lit(run_id))
-    docs_path = os.path.join(output_dir, "docs")
-    findings_path = os.path.join(output_dir, "findings")
+    processed batch of fused-UDF output; returns docs written.
 
-    # output sizing: one file per final partition — cap at ~4 files/core so
-    # the (driver-serial) commit protocol doesn't become the Amdahl tail
-    # while tasks stay balanced. coalesce (not repartition): no shuffle of
-    # the wide text/findings columns; the UDF stage simply runs on the
-    # merged splits.
-    n_out = 4 * spark.sparkContext.defaultParallelism
-    docs = docs.coalesce(n_out)
-
-    # single computation pass → docs parquet (findings array rides along).
-    # All four sinks partition by run_id: each run's rows live in their own
-    # directory, so (a) a crashed run is removable file-level with no table
-    # rewrite (heal_uncommitted_runs), (b) the re-reads below and every
-    # downstream run_id filter get partition pruning.
-    out_docs = docs.select("run_id", *DOC_COLUMNS, "findings")
-    out_docs.write.mode("append").partitionBy("run_id").parquet(docs_path)
-
-    # everything downstream reads the columnar output back — no UDF re-run.
-    # Explicit schema: a run whose every append was empty leaves partition
-    # dirs with no data files to infer from (partitioned empty writes emit
-    # nothing, unlike flat writes).
-    this_run = (
-        spark.read.schema(out_docs.schema)
-        .parquet(docs_path)
-        .filter(F.col("run_id") == run_id)
+    ONE Spark job: the fused output's tasks write the docs, findings and
+    lineage rows as they arrive (``_sink_writer``) into a staging dir, and
+    return their file names and metrics counts.  The driver then publishes
+    exactly the reported files into each table's ``run_id=`` partition
+    (``tables.publish_staged``), writes the metrics rows from the
+    summaries, and commits the run: marker, then snapshot.  The docs
+    written and the metrics rows count this call's docs only, also under a
+    run id an earlier run already committed."""
+    token = uuid.uuid4().hex
+    writer = _sink_writer(
+        spark, tables.staging_dir(output_dir, token), token, pattern_version
     )
-
-    findings = findings_table(
-        this_run.filter(F.col("findings").isNotNull()).select("url", "findings")
-    ).withColumn("run_id", F.lit(run_id))
-
-    # findings, lineage and metrics derive independently from the same
-    # columnar re-read: submit them from three driver threads so each job's
-    # tasks back-fill executors freed by another's tail (guide §2.6 —
-    # actions are only sequential because driver code calls them
-    # sequentially). Failures propagate via .result(); the commit marker
-    # below still follows ALL of them.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_findings() -> None:
-        findings.write.mode("append").partitionBy("run_id").parquet(
-            findings_path
+    # output sizing: one file per table per write task — cap at ~4
+    # files/core so the driver-serial publish never becomes the Amdahl
+    # tail while tasks stay balanced. coalesce (not repartition): no
+    # shuffle of the wide text/findings columns; the UDF stage simply runs
+    # on the merged splits.
+    n_out = 4 * spark.sparkContext.defaultParallelism
+    summaries = (
+        docs.coalesce(n_out)
+        .select(*DOC_COLUMNS, "findings")
+        .mapInArrow(writer, SUMMARY_SCHEMA)
+        .collect()
+    )
+    partition = tables.run_partition_name(spark, run_id)
+    tables.publish_staged(
+        output_dir, token, partition, [f for s in summaries for f in s["files"]]
+    )
+    metrics = checkpoint.build_metrics(summaries)
+    if metrics.num_rows:
+        checkpoint.write_metrics(
+            metrics, os.path.join(checkpoint.metrics_path(output_dir), partition)
         )
-
-    def _write_lineage() -> None:
-        checkpoint.build_lineage(
-            this_run, pattern_version, run_id
-        ).write.mode("append").partitionBy("run_id").parquet(
-            checkpoint.lineage_path(output_dir)
-        )
-
-    def _write_metrics() -> int:
-        # ONE collect job builds the (≤4×cores) rows, and the driver writes
-        # them itself rather than run a second Spark job, into the dir
-        # Spark made for this run's docs: found by listing, since Spark
-        # escapes run ids its own way. No rows: no docs dir and no file.
-        metrics = checkpoint.build_metrics(this_run)
-        if metrics.num_rows:
-            (docs_part,) = [
-                d for rid, d in tables.run_partitions(docs_path) if rid == run_id
-            ]
-            checkpoint.write_metrics(
-                metrics,
-                os.path.join(
-                    checkpoint.metrics_path(output_dir),
-                    os.path.basename(docs_part),
-                ),
-            )
-        # docs_written, without a separate count() scan of the docs output
-        return sum(metrics.column("docs_scanned").to_pylist())
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        findings_done = pool.submit(_write_findings)
-        lineage_done = pool.submit(_write_lineage)
-        docs_written = pool.submit(_write_metrics).result()
-        findings_done.result()
-        lineage_done.result()
-
     # all four sinks landed: commit the run (any kill before this line
     # leaves an unmarked run that heal_uncommitted_runs removes wholesale),
     # then publish it in the snapshot log (a kill between the two commit
     # points is healed by catch_up_snapshots on the next run)
     mark_run_committed(output_dir, run_id)
     commit_run_snapshot(output_dir, run_id)
-    return docs_written
+    return sum(metrics.column("docs_scanned").to_pylist())
 
 
 def _sig_ddl(num_hashes: int) -> str:

@@ -5,6 +5,14 @@ table write is made crash-safe (plain parquet has no transactions).
   records, snapshot ``v{N}.json`` and ``CURRENT``, heartbeat beats): a hidden
   ``.<name>#tmp`` sibling, then ``os.replace``.  Spark skips dot-files
   and no quoted run_id ends in ``#tmp``, so no reader counts a tmp.
+* staged sink files: a run's write tasks write its docs, findings and
+  lineage files as plain files under ``_staging/<token>/<table>/``, named
+  ``part-<partition>-<token>-a<attempt>.snappy.parquet`` (no reader looks
+  under ``_staging``, and no task renames anything).  Once the job has
+  succeeded, ``publish_staged`` moves exactly the files the tasks reported
+  into each table's ``run_id=`` partition, so the files of failed or
+  speculative attempts never leave staging, and then removes the staging
+  dir.  ``drop_staging`` removes whatever a killed run left there.
 * run markers ``_commits/<quote(run_id)>``, written after ALL of a run's
   sink partitions land (on Iceberg, one atomic multi-table commit): a
   ``run_id=`` partition without a marker is a crashed run, and
@@ -37,9 +45,11 @@ import shutil
 from typing import Callable, Iterator
 from urllib.parse import quote, unquote
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 HEALED_TABLES = ("docs", "findings", "lineage", "metrics")
+# the tables a run's write tasks stage and ``publish_staged`` publishes
+STAGED_TABLES = ("docs", "findings", "lineage")
 
 # '#' never survives quote(safe=""), so no marker name can end in this
 _TMP_SUFFIX = "#tmp"
@@ -141,6 +151,69 @@ def drop_scan_records(output_dir: str) -> None:
     sdir = _scanned_dir(output_dir)
     if os.path.isdir(sdir):
         shutil.rmtree(sdir)
+
+
+def _staging_root(output_dir: str) -> str:
+    return os.path.join(output_dir, "_staging")
+
+
+def staging_dir(output_dir: str, token: str) -> str:
+    """Where one ``write_run_outputs`` call's tasks write: one sub-dir per
+    staged table."""
+    return os.path.join(_staging_root(output_dir), token)
+
+
+def staged_file_name(partition: int, token: str, attempt: int) -> str:
+    """A task attempt's file name, the same in every staged table."""
+    return f"part-{partition:05d}-{token}-a{attempt}.snappy.parquet"
+
+
+def run_partition_name(spark: SparkSession, run_id: str) -> str:
+    """The ``run_id=`` dir name Spark itself would write for ``run_id``:
+    its escaping differs from urllib's (``r 1+x:y`` is ``run_id=r
+    1+x%3Ay``), and ``run_partitions`` unquotes either back."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    return utils.getPartitionPathString("run_id", run_id)
+
+
+def _publish_table(src: str, names: list[str], dest: str) -> None:
+    if names:
+        os.makedirs(dest, exist_ok=True)
+    for name in names:
+        os.replace(os.path.join(src, name), os.path.join(dest, name))
+
+
+def publish_staged(
+    output_dir: str, token: str, partition: str, files: list[str]
+) -> None:
+    """Move the staged files ``files`` (``<table>/<name>``, as the write
+    tasks reported them) into ``<table>/<partition>`` of each
+    ``STAGED_TABLES`` table, one table after another, then remove the
+    staging dir with every unreported file in it (one writer per output
+    dir: nothing else is staged there).  Each table dir is made even when
+    the run wrote no rows to it: a run whose pending set was empty still
+    leaves a (readable, empty) lineage table, so the next resume keeps its
+    covered-file skip."""
+    staging = staging_dir(output_dir, token)
+    by_table: dict[str, list[str]] = {t: [] for t in STAGED_TABLES}
+    for f in files:
+        t, name = f.split("/")
+        by_table[t].append(name)
+    for t in STAGED_TABLES:
+        table = os.path.join(output_dir, t)
+        os.makedirs(table, exist_ok=True)
+        _publish_table(
+            os.path.join(staging, t), by_table[t], os.path.join(table, partition)
+        )
+    drop_staging(output_dir)
+
+
+def drop_staging(output_dir: str) -> None:
+    """Remove ``_staging`` whole: at the end of a publish, and before a
+    run reads anything, with whatever a killed run staged."""
+    root = _staging_root(output_dir)
+    if os.path.isdir(root):
+        shutil.rmtree(root)
 
 
 def run_partitions(table_dir: str) -> Iterator[tuple[str, str]]:

@@ -5,6 +5,7 @@ idempotence. This is the BASELINE.md correctness gate."""
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
@@ -114,10 +115,10 @@ def test_metrics_totals(spark, pipeline_out, engine_rows):
 
 
 def test_metrics_rows_count_one_docs_partition(spark, tmp_path):
-    """A metrics row's PII hits and doc counts describe the SAME partition
-    of the docs re-read. Small splits make the docs and findings tables
-    read back in unrelated partitionings, so hits counted over a findings
-    re-read land under the wrong partition_id, next to rows with
+    """A metrics row's PII hits and doc counts describe the SAME docs
+    file: the one its write task (``part-<partition_id>-…``) wrote. Small
+    splits make the run write several docs files; a row counted over
+    anything else lands under the wrong partition_id, or next to rows with
     docs_scanned == 0."""
     from pyspark.sql import functions as F
 
@@ -134,10 +135,10 @@ def test_metrics_rows_count_one_docs_partition(spark, tmp_path):
         out = str(tmp_path / "out")
         run_pipeline(spark, src, out, run_id="p1")
         want = {
-            r["pid"]: (r["docs"], r["hits"])
+            int(r["file"].split("-")[1]): (r["docs"], r["hits"])
             for r in read_docs_table(spark, out)
             .filter(F.col("run_id") == "p1")
-            .groupBy(F.spark_partition_id().alias("pid"))
+            .groupBy(F.col("_metadata.file_name").alias("file"))
             .agg(
                 F.count(F.lit(1)).alias("docs"),
                 F.sum(
@@ -151,7 +152,7 @@ def test_metrics_rows_count_one_docs_partition(spark, tmp_path):
     finally:
         spark.conf.set(key, prev)
     rows = spark.read.parquet(os.path.join(out, "metrics")).collect()
-    assert len(want) > 1, "the docs re-read must split for this check"
+    assert len(want) > 1, "the run must write several docs files"
     got = {
         r["partition_id"]: (r["docs_scanned"], sum(r["pii_hits"].values()))
         for r in rows
@@ -504,13 +505,18 @@ def test_dedup_delta_parity_and_delta_only_work(spark, tmp_path_factory):
 def test_crash_at_every_sink_heals_to_identical_tables(
     spark, tmp_path_factory, monkeypatch
 ):
-    """Kill write_run_outputs at each sink seam (after docs / after
-    findings / after lineage / before the commit marker): the unmarked run
-    is healed on the next run, and the final four tables are identical to
-    a never-crashed run."""
+    """Kill write_run_outputs at each seam of the write protocol (a
+    failure inside the write job / after the job, before any publish /
+    after the docs, findings and lineage publishes / after the metrics
+    file / at the commit marker): the unmarked run is healed on the next
+    run, and the final four tables are identical to a never-crashed run."""
     import os as _os
 
+    from pyspark.errors import SparkRuntimeException
+    from pyspark.sql import functions as F
+
     import pii_detector_spark.plans.pipeline as pipemod
+    from pii_detector_spark.plans import checkpoint, tables
     from pii_detector_spark.sources.datagen import write_web_pages
 
     src = tmp_path_factory.mktemp("crash_src") / "pages.parquet"
@@ -541,26 +547,66 @@ def test_crash_at_every_sink_heals_to_identical_tables(
     def boom(*a, **k):
         raise RuntimeError("injected sink crash")
 
+    def replace(module, attr):
+        return lambda mp: mp.setattr(module, attr, boom)
+
+    def kill_after(module, attr, n):
+        """Let ``module.attr`` run its n-th call to completion, then kill."""
+
+        def patch(mp):
+            real, calls = getattr(module, attr), []
+
+            def wrapped(*a, **k):
+                real(*a, **k)
+                calls.append(1)
+                if len(calls) == n:
+                    boom()
+
+            mp.setattr(module, attr, wrapped)
+
+        return patch
+
+    def poison_one_row(mp):
+        real = pipemod.transform_web_pages
+        first = sorted(ref[2])[0]
+
+        def poisoned(*a, **k):
+            return real(*a, **k).withColumn(
+                "url",
+                F.when(
+                    F.col("url") == first,
+                    F.raise_error(F.lit("injected sink crash")),
+                ).otherwise(F.col("url")),
+            )
+
+        mp.setattr(pipemod, "transform_web_pages", poisoned)
+
+    # seam -> (injection, what the crashed run raises); the publishes go
+    # docs, findings, lineage
     seams = {
-        "after_docs": ("pii_detector_spark.plans.pipeline.findings_table",),
+        "in_write_job": (poison_one_row, SparkRuntimeException),
+        "before_publish": (
+            replace(tables, "publish_staged"), RuntimeError
+        ),
+        "after_docs": (kill_after(tables, "_publish_table", 1), RuntimeError),
         "after_findings": (
-            "pii_detector_spark.plans.checkpoint.build_lineage",
+            kill_after(tables, "_publish_table", 2), RuntimeError
         ),
         "after_lineage": (
-            "pii_detector_spark.plans.checkpoint.build_metrics",
+            kill_after(tables, "_publish_table", 3), RuntimeError
+        ),
+        "after_metrics": (
+            kill_after(checkpoint, "write_metrics", 1), RuntimeError
         ),
         "before_marker": (
-            "pii_detector_spark.plans.pipeline.mark_run_committed",
+            replace(pipemod, "mark_run_committed"), RuntimeError
         ),
     }
-    for seam, (target,) in seams.items():
+    for seam, (inject, raised) in seams.items():
         out = str(tmp_path_factory.mktemp(f"crash_{seam}"))
         with monkeypatch.context() as mp:
-            mod_path, attr = target.rsplit(".", 1)
-            import importlib
-
-            mp.setattr(importlib.import_module(mod_path), attr, boom)
-            with pytest.raises(RuntimeError, match="injected sink crash"):
+            inject(mp)
+            with pytest.raises(raised, match="injected sink crash"):
                 run_pipeline(spark, str(src), out, run_id="c1")
         # crashed run left no marker
         assert not pipemod.run_committed(out, "c1")
@@ -923,10 +969,10 @@ def test_resume_skips_url_scanned_twice(spark, tmp_path_factory):
 
 
 def test_metrics_partition_written_by_driver(spark, tmp_path_factory):
-    """The driver writes a run's metrics rows into the partition dir Spark
-    made for its docs (found by listing, so a run_id Spark escapes lands in
-    the same dir), with types identical to a Spark-written partition under
-    ``METRICS_SCHEMA`` and under schema inference; heal removes it."""
+    """The driver writes a run's metrics rows into the partition dir of its
+    docs (named with Spark's own escaping), one row per docs file, with
+    types identical to a Spark-written partition under ``METRICS_SCHEMA``
+    and under schema inference; heal removes it."""
     import pyarrow.parquet as pq_
     from pyspark.sql import functions as F
 
@@ -955,9 +1001,30 @@ def test_metrics_partition_written_by_driver(spark, tmp_path_factory):
     ]
     assert len(files) == 1, files
 
-    want = checkpoint.build_metrics(
-        read_docs_table(spark, out).filter(F.col("run_id") == rid)
-    )
+    # the per-file counters of the docs re-read
+    per_file: dict[str, dict] = {}
+    for r in (
+        read_docs_table(spark, out)
+        .filter(F.col("run_id") == rid)
+        .select(F.col("_metadata.file_name").alias("file"), "*")
+        .collect()
+    ):
+        m = per_file.setdefault(
+            r["file"],
+            {
+                "partition_id": int(r["file"].split("-")[1]),
+                "docs_scanned": 0,
+                "docs_kept": 0,
+                "drop_reasons": Counter(),
+                "pii_hits": Counter(),
+            },
+        )
+        m["docs_scanned"] += 1
+        m["docs_kept"] += r["keep"]
+        if r["drop_reason"] is not None:
+            m["drop_reasons"][r["drop_reason"]] += 1
+        m["pii_hits"].update(f["pii_type"] for f in r["findings"] or [])
+    want = checkpoint.build_metrics(list(per_file.values()))
     got = pq_.read_table(os.path.join(metrics_dir, parts[0], files[0]))
     assert got.schema == want.schema
     assert got.to_pylist() == want.to_pylist()

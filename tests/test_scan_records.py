@@ -186,18 +186,20 @@ def test_rerun_under_committed_run_id(
     a new file's lineage lands leaves the old record, so the next rerun
     still scans that file; a rerun's record keeps the files it skipped,
     so every later rerun skips them too."""
-    import pii_detector_spark.plans.pipeline as pipemod
-
     src = _src(tmp_path_factory, parts, ["a"])
     out = str(tmp_path_factory.mktemp("cover_rerun"))
     run_pipeline(spark, str(src), out, run_id="run-0")
     shutil.copy(parts["b"], src / "b.parquet")
 
-    def boom(*a, **k):
-        raise RuntimeError("injected kill before lineage")
+    publish = tables._publish_table
+
+    def boom(src, names, dest):
+        if os.path.basename(src) == "lineage":
+            raise RuntimeError("injected kill before lineage")
+        publish(src, names, dest)
 
     with monkeypatch.context() as mp:
-        mp.setattr(pipemod.checkpoint, "build_lineage", boom)
+        mp.setattr(tables, "_publish_table", boom)
         with pytest.raises(RuntimeError, match="before lineage"):
             run_pipeline(spark, str(src), out, run_id="run-0")
 
