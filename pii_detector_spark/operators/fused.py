@@ -1,15 +1,19 @@
 """Single-pass fused document processor — the pipeline's hot path.
 
-One Arrow-batched pandas UDF computes, per document: HTML text extraction,
-quality metrics, language-ID + perplexity, the first-failing-rule keep/drop
-decision, and the gated PII scrub. Rationale at scale:
+One row loop (``fused_columns``) computes, per document: HTML text
+extraction, quality metrics, language-ID + perplexity, the
+first-failing-rule keep/drop decision, and the gated PII scrub.  A
+pipeline run calls it inside its write task's ``mapInArrow``, which also
+writes the files; ``with_fused_processing`` wraps the same loop in an
+Arrow-batched pandas UDF for plans that want the columns.  Rationale at
+scale:
 
-* one JVM↔Python round trip per batch instead of three (the text column is
-  the wide payload; shipping it across Arrow once matters),
-* one Python worker per task for the chain instead of one per UDF stage
-  (the pipeline's sink writer, over this UDF's output, is the task's
-  only other one), so at N cores the job runs a few threads per core,
-  which is what lets N→4N scaling efficiency hold on a fixed-size machine,
+* one JVM→Python trip per batch for the whole chain (the text column is
+  the wide payload; shipping it across Arrow once matters), and in a run
+  the output never comes back: the task writes it where it was computed,
+* one Python worker per task, so at N cores the job runs a few threads
+  per core, which is what lets N→4N scaling efficiency hold on a
+  fixed-size machine,
 * zero per-row Python on the Spark side (north-rule), all artifacts
   (regex battery, language models) compiled once per executor process.
 
@@ -253,37 +257,51 @@ FUSED_RESULT_TYPE = StructType(
         StructField("scrubbed_text", StringType()),
         StructField("findings", ArrayType(FINDING_TYPE)),
         StructField("content_md5", StringType()),
+        StructField("n_findings", LongType()),
     ]
 )
 
-def make_fused_udf(thresholds: QualityThresholds, broadcast=None):
-    """Build the fused UDF.
 
-    ``broadcast`` (optional): a ``SparkContext.broadcast`` handle wrapping
-    the thresholds — shipped once per executor instead of once per task
-    (north-rule: broadcast compiled artifacts). The regex battery and
-    language models are module-level ``lru_cache`` artifacts that compile
-    lazily once per executor Python worker either way; the broadcast covers
-    the run-specific configuration."""
-
+def fused_columns(urls, htmls, texts, thresholds: QualityThresholds) -> dict:
+    """The per-row loop of every fused pass: one list per
+    ``FUSED_RESULT_TYPE`` field (columnar assembly; pandas row-dict
+    inference costs ~20% of a batch at this width).  A row's text is its
+    extracted html, or its ``text`` when the html is null."""
     names = [f.name for f in FUSED_RESULT_TYPE.fields]
+    cols: dict[str, list] = {n: [] for n in names}
+    for url, h, t in zip(urls, htmls, texts):
+        d = process_document(
+            url or "",
+            extract_text_from_html(h) if h is not None else (t or ""),
+            thresholds,
+        )
+        d["n_findings"] = len(d["findings"]) if d["findings"] is not None else 0
+        for n in names:
+            cols[n].append(d[n])
+    return cols
+
+
+def text_fallback():
+    """The ``text`` argument of a fused pass: ``text`` only where ``html``
+    is null.  The pass reads text ONLY then, so the redundant copy never
+    crosses the Arrow boundary (guide §4.1: control the columns, and the
+    bytes, that cross)."""
+    return (
+        F.when(F.col("html").isNull(), F.col("text"))
+        .otherwise(F.lit(None).cast("string"))
+        .alias("text")
+    )
+
+
+def make_fused_udf(thresholds: QualityThresholds):
+    """Build the fused UDF.  The thresholds ship in its closure; the regex
+    battery and language models are module-level ``lru_cache`` artifacts
+    that compile lazily once per executor Python worker."""
 
     def _fused_batch(
         urls: pd.Series, htmls: pd.Series, texts: pd.Series
     ) -> pd.DataFrame:
-        # columnar assembly: one list per output column (pandas row-dict
-        # inference costs ~20% of the batch at this width)
-        t_conf = broadcast.value if broadcast is not None else thresholds
-        cols: dict[str, list] = {n: [] for n in names}
-        for url, h, t in zip(urls, htmls, texts):
-            d = process_document(
-                url or "",
-                extract_text_from_html(h) if h is not None else (t or ""),
-                t_conf,
-            )
-            for n in names:
-                cols[n].append(d[n])
-        return pd.DataFrame(cols)
+        return pd.DataFrame(fused_columns(urls, htmls, texts, thresholds))
 
     return F.pandas_udf(_fused_batch, returnType=FUSED_RESULT_TYPE).asNondeterministic()
 
@@ -293,30 +311,12 @@ def with_fused_processing(
 ) -> DataFrame:
     """Attach every pipeline output column in one UDF pass. Expects
     (url, html, text) columns; html may be null (text fallback)."""
-    t = thresholds or QualityThresholds()
-    try:
-        bc = df.sparkSession.sparkContext.broadcast(t)
-    except Exception:  # e.g. Spark Connect: no SparkContext → closure ship
-        bc = None
-    udf = make_fused_udf(t, broadcast=bc)
-    # the UDF reads text ONLY when html is null — null out the redundant
-    # copy so it never crosses the Arrow boundary (guide §4.1: control the
-    # columns, and the bytes, that cross)
-    text_arg = F.when(
-        F.col("html").isNull(), F.col("text")
-    ).otherwise(F.lit(None).cast("string"))
+    udf = make_fused_udf(thresholds or QualityThresholds())
     # ONE projection: each withColumn would re-run the analyzer over the
     # whole plan, 20 times per run; and "_d.*" expands the struct's fields
-    # in order on the JVM side, where 19 aliased Columns each cost a py4j
+    # in order on the JVM side, where 20 aliased Columns each cost a py4j
     # round trip
-    out = df.withColumn("_d", udf(F.col("url"), F.col("html"), text_arg))
+    out = df.withColumn("_d", udf(F.col("url"), F.col("html"), text_fallback()))
     fused = [f.name for f in FUSED_RESULT_TYPE.fields]
-    replaced = {"html", "text", "_d", "n_findings", *fused}
-    return out.select(
-        *[c for c in df.columns if c not in replaced],
-        "_d.*",
-        F.when(F.col("_d.findings").isNotNull(), F.size("_d.findings"))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("n_findings"),
-    )
+    replaced = {"html", "text", "_d", *fused}
+    return out.select(*[c for c in df.columns if c not in replaced], "_d.*")

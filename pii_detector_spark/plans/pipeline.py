@@ -13,24 +13,26 @@ Stage order and the reasoning at 100 TB:
                             no distinct() ahead of it, so it broadcasts
                             while the lineage is under the broadcast
                             threshold)
-3. fused document UDF     — extraction + quality metrics + langid +
-                            perplexity + keep/drop + gated scrub in ONE
-                            Arrow round trip (operators/fused.py), running
-                            inside the scan stage at split granularity; the
-                            html/text payload never shuffles and crosses
-                            the JVM↔Python boundary exactly once
-4. sinks                  — the SAME single pass writes them: each task
-                            of the fused stage streams its docs into a
-                            staged docs, findings (exploded in Arrow) and
-                            lineage file and returns one summary row (its
-                            files and metrics counts), so a run is ONE
-                            write job and the UDF runs exactly once per
-                            document per pattern version. The driver
-                            publishes the reported files, writes the few
-                            metrics rows as one parquet file (no Spark
-                            job), then commits. Output coalesced to ~4
-                            files/core so the driver-serial publish never
-                            dominates.
+3. fused processing      — extraction + quality metrics + langid +
+                            perplexity + keep/drop + gated scrub, in ONE
+                            ``mapInArrow`` over the pending pages
+                            (operators/fused.py's row loop), running inside
+                            the scan stage at split granularity; the
+                            html/text payload never shuffles, crosses the
+                            JVM→Python boundary exactly once, and the
+                            output never re-enters the JVM
+4. sinks                  — the SAME ``mapInArrow`` task writes them: it
+                            streams its docs into a staged docs, findings
+                            (exploded in Arrow) and lineage file and
+                            returns one summary row (its files and metrics
+                            counts), so a run is ONE write job with one
+                            Python worker per task, and the row loop runs
+                            exactly once per document per pattern version.
+                            The driver publishes the reported files,
+                            writes the few metrics rows as one parquet file
+                            (no Spark job), then commits. Output coalesced
+                            to ~4 files/core so the driver-serial publish
+                            never dominates.
 
 A run has no wide exchange except the resume anti-join's, once the lineage
 outgrows the broadcast threshold.
@@ -53,8 +55,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
-from pii_detector_spark.config import DEFAULT_CONFIG, EngineConfig
-from pii_detector_spark.operators.fused import with_fused_processing
+from pii_detector_spark.config import (
+    DEFAULT_CONFIG,
+    EngineConfig,
+    QualityThresholds,
+)
+from pii_detector_spark.operators.fused import (
+    FUSED_RESULT_TYPE,
+    fused_columns,
+    text_fallback,
+    with_fused_processing,
+)
 from pii_detector_spark.operators.scrub import findings_table
 from pii_detector_spark.plans import checkpoint, tables
 from pii_detector_spark.plans.snapshots import (
@@ -117,6 +128,8 @@ def transform_web_pages(
     The whole per-document chain (extract → metrics → langid → decide →
     gated scrub) runs as ONE fused pandas UDF (``operators/fused.py``): one
     Arrow round trip and one Python worker per task for the whole chain.
+    ``run_pipeline`` runs the same row loop inside its write tasks instead
+    (``_page_processor``), so its output never re-enters the JVM.
     The per-stage operators (``operators/langid.py``,
     ``operators/scrub.py``, ``operators/quality.py``) serve the declared
     queries in ``__spark_entry__.py``, not this plan.
@@ -140,13 +153,6 @@ def docs_table_schema():
         StructType,
         StringType,
         TimestampType,
-        LongType,
-        ArrayType,
-    )
-
-    from pii_detector_spark.operators.fused import (
-        FINDING_TYPE,
-        FUSED_RESULT_TYPE,
     )
 
     fused = {f.name: f.dataType for f in FUSED_RESULT_TYPE.fields}
@@ -154,12 +160,11 @@ def docs_table_schema():
         "url": StringType(),
         "warc_ts": TimestampType(),
         "lang": StringType(),
-        "n_findings": LongType(),
     }
     fields = [StructField("run_id", StringType())]
     for c in DOC_COLUMNS:
         fields.append(StructField(c, fused.get(c) or base[c]))
-    fields.append(StructField("findings", ArrayType(FINDING_TYPE)))
+    fields.append(StructField("findings", fused["findings"]))
     return StructType(fields)
 
 
@@ -180,7 +185,7 @@ def heal_uncommitted_runs(
     directory remove, valid at any table size).  A deleted-url GC rewrite
     interrupted mid-swap is put right first (``tables.recover``).
 
-    Crash matrix (kill at any point of ``write_run_outputs``):
+    Crash matrix (kill at any point of a run's write and commit):
     * inside the write job — the tasks wrote only under ``_staging/``,
       which is removed here before anything is read; no table changed.
     * after the job, part-way through the docs / findings / lineage
@@ -246,17 +251,59 @@ def _parquet_options(spark: SparkSession) -> dict:
     return {"compression": "snappy", "store_schema": False, **ts}
 
 
+def _fused_docs(docs: pa.RecordBatch) -> pa.RecordBatch:
+    """The write task's rows → docs step for already-fused docs."""
+    return docs
+
+
+def _page_processor(thresholds: QualityThresholds):
+    """The write task's rows → docs step for pending pages (url, warc_ts,
+    lang, html, text-where-html-is-null): the fused row loop, its columns
+    built in Arrow beside the pages' url, warc_ts and lang."""
+    types = {f.name: f.type for f in to_arrow_schema(FUSED_RESULT_TYPE)}
+
+    def to_docs(pages: pa.RecordBatch) -> pa.RecordBatch:
+        cols = fused_columns(
+            *(pages.column(c).to_pylist() for c in ("url", "html", "text")),
+            thresholds,
+        )
+        names = [*DOC_COLUMNS, "findings"]
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(cols[c], type=types[c]) if c in types else pages.column(c)
+                for c in names
+            ],
+            names=names,
+        )
+
+    return to_docs
+
+
 def _sink_writer(
-    spark: SparkSession, staging: str, token: str, pattern_version: int
+    spark: SparkSession,
+    staging: str,
+    token: str,
+    pattern_version: int,
+    to_docs=_fused_docs,
 ):
-    """The ``mapInArrow`` body of a run's write job.  Each task streams its
-    docs batches, cast to the docs table's Arrow schema, into one staged
-    docs, findings and lineage file apiece (a file opens on its first
-    row), counts its metrics on the way, and returns one summary row."""
+    """The ``mapInArrow`` body of a run's write job.  Each task turns its
+    Arrow batches into docs batches (``to_docs``), casts them to the docs
+    table's Arrow schema and streams them into one staged docs, findings
+    and lineage file apiece (a file opens on its first row), counts its
+    metrics on the way, and returns one summary row.  A file's rows are
+    buffered until they reach the Hadoop conf's ``parquet.block.size``
+    (Spark's own row-group target, 128 MB by default, counted here in
+    Arrow bytes), then written as one row group; the rest is written at
+    the task's end."""
     docs_schema = to_arrow_schema(docs_table_schema())
     docs_schema = docs_schema.remove(docs_schema.get_field_index("run_id"))
     summary_schema = to_arrow_schema(_parse_datatype_string(SUMMARY_SCHEMA))
     options = _parquet_options(spark)
+    block_size = (
+        spark._jsparkSession.sessionState()
+        .newHadoopConf()
+        .getLong("parquet.block.size", 128 << 20)
+    )
 
     def write(batches):
         from pyspark import TaskContext
@@ -267,25 +314,34 @@ def _sink_writer(
         )
         row = checkpoint.new_metrics_row()
         writers: dict[str, pq.ParquetWriter] = {}
+        buffered: dict[str, list[pa.RecordBatch]] = {}
+
+        def flush(table: str) -> None:
+            rows = pa.Table.from_batches(buffered.pop(table))
+            if table not in writers:
+                os.makedirs(os.path.join(staging, table), exist_ok=True)
+                writers[table] = pq.ParquetWriter(
+                    os.path.join(staging, table, name), rows.schema, **options
+                )
+            writers[table].write_table(rows, row_group_size=rows.num_rows)
 
         def emit(table: str, batch: pa.RecordBatch) -> None:
             if not batch.num_rows:
                 return
-            if table not in writers:
-                os.makedirs(os.path.join(staging, table), exist_ok=True)
-                writers[table] = pq.ParquetWriter(
-                    os.path.join(staging, table, name), batch.schema, **options
-                )
-            writers[table].write_batch(batch)
+            buffered.setdefault(table, []).append(batch)
+            if sum(b.nbytes for b in buffered[table]) >= block_size:
+                flush(table)
 
         try:
             for batch in batches:
-                docs = batch.cast(docs_schema)
+                docs = to_docs(batch).cast(docs_schema)
                 findings = findings_table(docs)
                 emit("docs", docs)
                 emit("findings", findings)
                 emit("lineage", checkpoint.build_lineage(docs, pattern_version))
                 checkpoint.tally_metrics(docs, findings, row)
+            for table in list(buffered):
+                flush(table)
         finally:
             for w in writers.values():
                 w.close()
@@ -303,39 +359,39 @@ def _sink_writer(
     return write
 
 
-def write_run_outputs(
+def _write_run(
     spark: SparkSession,
-    docs: DataFrame,
+    rows: DataFrame,
+    to_docs,
     output_dir: str,
     run_id: str,
     pattern_version: int,
 ) -> int:
-    """Write the four sinks (docs / findings / lineage / metrics) for one
-    processed batch of fused-UDF output; returns docs written.
-
-    ONE Spark job: the fused output's tasks write the docs, findings and
-    lineage rows as they arrive (``_sink_writer``) into a staging dir, and
-    return their file names and metrics counts.  The driver then publishes
-    exactly the reported files into each table's ``run_id=`` partition
-    (``tables.publish_staged``), writes the metrics rows from the
-    summaries, and commits the run: marker, then snapshot.  The docs
-    written and the metrics rows count this call's docs only, also under a
-    run id an earlier run already committed."""
+    """ONE Spark job, then the publish and the commit: the tasks over
+    ``rows`` turn each batch into docs (``to_docs``) and write the docs,
+    findings and lineage rows as they go (``_sink_writer``) into a staging
+    dir, and return their file names and metrics counts.  The driver then
+    publishes exactly the reported files into each table's ``run_id=``
+    partition (``tables.publish_staged``), writes the metrics rows from the
+    summaries, and commits the run: marker, then snapshot.  Returns the
+    docs written, which count this call's docs only, also under a run id
+    an earlier run already committed."""
     token = uuid.uuid4().hex
     writer = _sink_writer(
-        spark, tables.staging_dir(output_dir, token), token, pattern_version
+        spark,
+        tables.staging_dir(output_dir, token),
+        token,
+        pattern_version,
+        to_docs,
     )
     # output sizing: one file per table per write task — cap at ~4
     # files/core so the driver-serial publish never becomes the Amdahl
     # tail while tasks stay balanced. coalesce (not repartition): no
-    # shuffle of the wide text/findings columns; the UDF stage simply runs
-    # on the merged splits.
+    # shuffle of the wide columns; the tasks simply run on the merged
+    # splits.
     n_out = 4 * spark.sparkContext.defaultParallelism
     summaries = (
-        docs.coalesce(n_out)
-        .select(*DOC_COLUMNS, "findings")
-        .mapInArrow(writer, SUMMARY_SCHEMA)
-        .collect()
+        rows.coalesce(n_out).mapInArrow(writer, SUMMARY_SCHEMA).collect()
     )
     partition = tables.run_partition_name(spark, run_id)
     tables.publish_staged(
@@ -353,6 +409,26 @@ def write_run_outputs(
     mark_run_committed(output_dir, run_id)
     commit_run_snapshot(output_dir, run_id)
     return sum(metrics.column("docs_scanned").to_pylist())
+
+
+def write_run_outputs(
+    spark: SparkSession,
+    docs: DataFrame,
+    output_dir: str,
+    run_id: str,
+    pattern_version: int,
+) -> int:
+    """Write the four sinks (docs / findings / lineage / metrics) for one
+    processed batch of fused-UDF output and commit the run, in one write
+    job (``_write_run``); returns docs written."""
+    return _write_run(
+        spark,
+        docs.select(*DOC_COLUMNS, "findings"),
+        _fused_docs,
+        output_dir,
+        run_id,
+        pattern_version,
+    )
 
 
 def _sig_ddl(num_hashes: int) -> str:
@@ -700,12 +776,18 @@ def run_pipeline(
                 pending, lineage, config.pattern_version
             )
 
-        docs = transform_web_pages(
-            pending, config, extract_html=extract_html, prefilter=False
-        )
-
-        n = write_run_outputs(
-            spark, docs, output_dir, run_id, config.pattern_version
+        if not extract_html:
+            pending = pending.withColumn("html", F.lit(None).cast("binary"))
+        # the run's one write job: its tasks run the fused row loop over
+        # the pending pages and write the results where they were
+        # computed, so the output never re-enters the JVM
+        n = _write_run(
+            spark,
+            pending.select("url", "warc_ts", "lang", "html", text_fallback()),
+            _page_processor(config.quality),
+            output_dir,
+            run_id,
+            config.pattern_version,
         )
         # only once the marker has landed, so a record on disk always
         # vouches for committed lineage (a kill before this line costs

@@ -158,7 +158,7 @@ def _staging_root(output_dir: str) -> str:
 
 
 def staging_dir(output_dir: str, token: str) -> str:
-    """Where one ``write_run_outputs`` call's tasks write: one sub-dir per
+    """Where one run's write-job tasks write: one sub-dir per
     staged table."""
     return os.path.join(_staging_root(output_dir), token)
 

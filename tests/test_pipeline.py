@@ -567,7 +567,7 @@ def test_crash_at_every_sink_heals_to_identical_tables(
         return patch
 
     def poison_one_row(mp):
-        real = pipemod.transform_web_pages
+        real = pipemod.apply_prefilters
         first = sorted(ref[2])[0]
 
         def poisoned(*a, **k):
@@ -579,7 +579,7 @@ def test_crash_at_every_sink_heals_to_identical_tables(
                 ).otherwise(F.col("url")),
             )
 
-        mp.setattr(pipemod, "transform_web_pages", poisoned)
+        mp.setattr(pipemod, "apply_prefilters", poisoned)
 
     # seam -> (injection, what the crashed run raises); the publishes go
     # docs, findings, lineage

@@ -1,15 +1,20 @@
 """The run's write protocol (``write_run_outputs``): the write tasks stage
 their docs, findings and lineage files, the driver publishes exactly the
 files the tasks reported, heal removes whatever a killed run staged, the
-files read like Spark-written ones, and a run's counts cover its own docs."""
+files read like Spark-written ones, a run's counts cover its own docs, and
+a run is one Python pass per write task whose tables equal the fused
+DataFrame's."""
 
 from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
+from datetime import datetime
 from types import SimpleNamespace
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -22,8 +27,16 @@ from pii_detector_spark.plans.pipeline import (
     heal_uncommitted_runs,
     read_docs_table,
     run_pipeline,
+    transform_web_pages,
+    write_run_outputs,
 )
-from pii_detector_spark.sources.datagen import write_web_pages
+from pii_detector_spark.sources.datagen import (
+    EN_SENTENCES,
+    WEB_PAGES_PA_SCHEMA,
+    generate_rows,
+    write_web_pages,
+)
+from pii_detector_spark.sources.web_pages import read_web_pages
 
 PV = DEFAULT_CONFIG.pattern_version
 
@@ -210,3 +223,131 @@ def test_rerun_under_committed_run_id_counts_only_its_docs(
     assert first.docs_written == sum(u not in b_urls for u in docs) > 0
     assert rerun.docs_written == sum(u in b_urls for u in docs) > 0
     assert sum(r["docs_scanned"] for r in new_rows) == rerun.docs_written
+
+
+def _table(out: str, t: str) -> tuple:
+    """A table's rows, sorted, and its Arrow schema, as pyarrow reads the
+    files."""
+    table = pq.read_table(os.path.join(out, t))
+    return sorted(map(repr, table.to_pylist())), table.schema
+
+
+def test_run_tables_equal_fused_dataframe_tables(spark, tmp_path):
+    """``run_pipeline``'s one-pass write job and ``write_run_outputs`` over
+    ``transform_web_pages``' fused DataFrame write the same docs, findings,
+    lineage and metrics, row for row and type for type: datagen rows plus
+    null html with text, html with null text, empty and whitespace-only
+    text and a kept doc with findings, with and without html extraction."""
+    ts = datetime(2024, 1, 1)
+    kept_pii = " ".join(EN_SENTENCES[:10]) + (
+        " Contact john.smith12@mailhost3.com for details."
+    )
+    edges = [
+        ("https://edge.example.com/text-only", ts, None, kept_pii, "en"),
+        ("https://edge.example.com/html-only", ts,
+         f"<html><body><p>{kept_pii}</p></body></html>".encode(), None, None),
+        ("https://edge.example.com/empty", ts, None, "", "en"),
+        ("https://edge.example.com/blank", ts, None, " \n\t ", "en"),
+        ("https://edge.example.com/both-html-wins", None,
+         b"<p>short</p>", kept_pii, "en"),
+    ]
+    rows = [*generate_rows(150, seed=11), *edges]
+    src = str(tmp_path / "src.parquet")
+    pq.write_table(
+        pa.Table.from_pylist(
+            [dict(zip(WEB_PAGES_PA_SCHEMA.names, r)) for r in rows],
+            schema=WEB_PAGES_PA_SCHEMA,
+        ),
+        src,
+        row_group_size=40,
+    )
+    for extract_html in (True, False):
+        run_out = str(tmp_path / f"run-{extract_html}")
+        df_out = str(tmp_path / f"df-{extract_html}")
+        run_pipeline(spark, src, run_out, run_id="r", extract_html=extract_html)
+        write_run_outputs(
+            spark,
+            transform_web_pages(
+                read_web_pages(spark, src), extract_html=extract_html
+            ),
+            df_out,
+            "r",
+            PV,
+        )
+        for t in ("docs", "findings", "lineage"):
+            assert _table(run_out, t) == _table(df_out, t), (t, extract_html)
+        assert _sinks(spark, run_out)[3] == _sinks(spark, df_out)[3]
+        docs = {
+            r["url"]: r
+            for r in pq.read_table(os.path.join(run_out, "docs")).to_pylist()
+        }
+        assert docs["https://edge.example.com/text-only"]["keep"]
+        assert docs["https://edge.example.com/text-only"]["n_findings"] > 0
+        assert docs["https://edge.example.com/empty"]["drop_reason"] == "empty"
+        assert docs["https://edge.example.com/blank"]["drop_reason"] == "empty"
+        assert docs["https://edge.example.com/html-only"]["keep"] is extract_html
+
+
+# the physical plan nodes that run Python: the pandas/Arrow UDF evaluators
+# and the map/cogroup operators
+_PYTHON_NODE = re.compile(
+    r"^[ |+:-]*\*?\s*(\w*(?:Python|InArrow|InPandas)\w*) \(\d+\)"
+)
+
+
+def test_run_write_job_has_one_python_node(spark, small_src, tmp_path):
+    """The run's write job is one Python pass per task: its physical plan,
+    read from the SQL status store, holds exactly one Python node, the
+    ``MapInArrow`` writer, and no ``ArrowEvalPython``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():  # newest first; the store keeps only the latest ones
+        execs = store.executionsList()
+        return (execs.apply(i) for i in reversed(range(execs.size())))
+
+    last = next((e.executionId() for e in executions()), -1)
+    run_pipeline(spark, small_src, str(tmp_path / "out"), run_id="r")
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    plans = []
+    for e in executions():
+        if e.executionId() <= last:
+            break
+        plans.append(e.physicalPlanDescription())
+    (write_job,) = [p for p in plans if "MapInArrow" in p]
+    tree = write_job.split("\n\n")[0].splitlines()
+    nodes = [m.group(1) for ln in tree if (m := _PYTHON_NODE.match(ln))]
+    assert nodes == ["MapInArrow"], write_job
+    assert "ArrowEvalPython" not in write_job
+
+
+def test_write_task_buffers_batches_into_one_row_group(
+    spark, small_src, tmp_path
+):
+    """A write task with more rows than ``maxRecordsPerBatch``, but fewer
+    bytes than ``parquet.block.size``, writes one row group per file, as
+    Spark's own writer would; a block size below one batch writes a row
+    group per batch."""
+    batch_rows = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(batch_rows)
+    spark.conf.set(batch_rows, "10")
+    try:
+        run_pipeline(spark, small_src, str(tmp_path / "out"), run_id="r")
+        spark.conf.set("parquet.block.size", "1")
+        run_pipeline(spark, small_src, str(tmp_path / "small"), run_id="r")
+    finally:
+        spark.conf.set(batch_rows, old)
+        spark.conf.unset("parquet.block.size")
+
+    def files(out):
+        found = glob.glob(os.path.join(out, "*", "run_id=r", "*.parquet"))
+        meta = {f: pq.ParquetFile(f).metadata for f in found}
+        assert {f.split(os.sep)[-3] for f in meta} >= set(tables.STAGED_TABLES)
+        return meta
+
+    meta = files(str(tmp_path / "out"))
+    assert max(m.num_rows for m in meta.values()) > 10
+    for f, m in meta.items():
+        assert m.num_row_groups == 1, (f, m.num_row_groups)
+    for f, m in files(str(tmp_path / "small")).items():
+        if f.split(os.sep)[-3] == "docs":
+            assert m.num_row_groups == -(-m.num_rows // 10), f
