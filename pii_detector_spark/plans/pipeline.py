@@ -138,9 +138,15 @@ def transform_web_pages(
     """
     if prefilter:
         df = apply_prefilters(df)
-    if not extract_html:
-        df = df.withColumn("html", F.lit(None).cast("binary"))
-    return with_fused_processing(df, config.quality)
+    return with_fused_processing(_gate_html(df, extract_html), config.quality)
+
+
+def _gate_html(df: DataFrame, extract_html: bool) -> DataFrame:
+    """``extract_html=False`` nulls the html column, so a fused pass falls
+    back to the text column."""
+    if extract_html:
+        return df
+    return df.withColumn("html", F.lit(None).cast("binary"))
 
 
 def docs_table_schema():
@@ -287,23 +293,15 @@ def _sink_writer(
     to_docs=_fused_docs,
 ):
     """The ``mapInArrow`` body of a run's write job.  Each task turns its
-    Arrow batches into docs batches (``to_docs``), casts them to the docs
-    table's Arrow schema and streams them into one staged docs, findings
-    and lineage file apiece (a file opens on its first row), counts its
-    metrics on the way, and returns one summary row.  A file's rows are
-    buffered until they reach the Hadoop conf's ``parquet.block.size``
-    (Spark's own row-group target, 128 MB by default, counted here in
-    Arrow bytes), then written as one row group; the rest is written at
-    the task's end."""
+    Arrow batches into docs batches (``to_docs``; already-fused docs by
+    default), casts them to the docs table's Arrow schema and streams them
+    into one staged docs, findings and lineage file apiece (a file opens
+    on its first row), counts its metrics on the way, and returns one
+    summary row."""
     docs_schema = to_arrow_schema(docs_table_schema())
     docs_schema = docs_schema.remove(docs_schema.get_field_index("run_id"))
     summary_schema = to_arrow_schema(_parse_datatype_string(SUMMARY_SCHEMA))
     options = _parquet_options(spark)
-    block_size = (
-        spark._jsparkSession.sessionState()
-        .newHadoopConf()
-        .getLong("parquet.block.size", 128 << 20)
-    )
 
     def write(batches):
         from pyspark import TaskContext
@@ -314,23 +312,16 @@ def _sink_writer(
         )
         row = checkpoint.new_metrics_row()
         writers: dict[str, pq.ParquetWriter] = {}
-        buffered: dict[str, list[pa.RecordBatch]] = {}
-
-        def flush(table: str) -> None:
-            rows = pa.Table.from_batches(buffered.pop(table))
-            if table not in writers:
-                os.makedirs(os.path.join(staging, table), exist_ok=True)
-                writers[table] = pq.ParquetWriter(
-                    os.path.join(staging, table, name), rows.schema, **options
-                )
-            writers[table].write_table(rows, row_group_size=rows.num_rows)
 
         def emit(table: str, batch: pa.RecordBatch) -> None:
             if not batch.num_rows:
                 return
-            buffered.setdefault(table, []).append(batch)
-            if sum(b.nbytes for b in buffered[table]) >= block_size:
-                flush(table)
+            if table not in writers:
+                os.makedirs(os.path.join(staging, table), exist_ok=True)
+                writers[table] = pq.ParquetWriter(
+                    os.path.join(staging, table, name), batch.schema, **options
+                )
+            writers[table].write_batch(batch)
 
         try:
             for batch in batches:
@@ -340,8 +331,6 @@ def _sink_writer(
                 emit("findings", findings)
                 emit("lineage", checkpoint.build_lineage(docs, pattern_version))
                 checkpoint.tally_metrics(docs, findings, row)
-            for table in list(buffered):
-                flush(table)
         finally:
             for w in writers.values():
                 w.close()
@@ -776,8 +765,7 @@ def run_pipeline(
                 pending, lineage, config.pattern_version
             )
 
-        if not extract_html:
-            pending = pending.withColumn("html", F.lit(None).cast("binary"))
+        pending = _gate_html(pending, extract_html)
         # the run's one write job: its tasks run the fused row loop over
         # the pending pages and write the results where they were
         # computed, so the output never re-enters the JVM

@@ -320,34 +320,45 @@ def test_run_write_job_has_one_python_node(spark, small_src, tmp_path):
     assert "ArrowEvalPython" not in write_job
 
 
-def test_write_task_buffers_batches_into_one_row_group(
-    spark, small_src, tmp_path
-):
-    """A write task with more rows than ``maxRecordsPerBatch``, but fewer
-    bytes than ``parquet.block.size``, writes one row group per file, as
-    Spark's own writer would; a block size below one batch writes a row
-    group per batch."""
-    batch_rows = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(batch_rows)
-    spark.conf.set(batch_rows, "10")
-    try:
-        run_pipeline(spark, small_src, str(tmp_path / "out"), run_id="r")
-        spark.conf.set("parquet.block.size", "1")
-        run_pipeline(spark, small_src, str(tmp_path / "small"), run_id="r")
-    finally:
-        spark.conf.set(batch_rows, old)
-        spark.conf.unset("parquet.block.size")
 
-    def files(out):
-        found = glob.glob(os.path.join(out, "*", "run_id=r", "*.parquet"))
-        meta = {f: pq.ParquetFile(f).metadata for f in found}
-        assert {f.split(os.sep)[-3] for f in meta} >= set(tables.STAGED_TABLES)
-        return meta
+def test_write_task_releases_each_batch(spark, tmp_path, monkeypatch):
+    """A write task keeps no page batch past its write.  Its page batches
+    slice one IPC message body apiece, as Spark's Arrow stream hands them
+    over, and carry a wide column that is never written; the Arrow memory
+    held between batches does not grow with the batches seen."""
+    n_batches, rows, pad = 8, 20, 50_000
+    schema = WEB_PAGES_PA_SCHEMA.append(pa.field("pad", pa.binary()))
+    pages = [
+        {**dict(zip(WEB_PAGES_PA_SCHEMA.names, r)), "pad": b"x" * pad}
+        for r in generate_rows(n_batches * rows, seed=5)
+    ]
+    src = str(tmp_path / "pages.arrows")
+    with pa.ipc.new_stream(pa.OSFile(src, "wb"), schema) as stream:
+        for i in range(n_batches):
+            stream.write_batch(
+                pa.RecordBatch.from_pylist(
+                    pages[i * rows : (i + 1) * rows], schema=schema
+                )
+            )
+    held = []
 
-    meta = files(str(tmp_path / "out"))
-    assert max(m.num_rows for m in meta.values()) > 10
-    for f, m in meta.items():
-        assert m.num_row_groups == 1, (f, m.num_row_groups)
-    for f, m in files(str(tmp_path / "small")).items():
-        if f.split(os.sep)[-3] == "docs":
-            assert m.num_row_groups == -(-m.num_rows // 10), f
+    def batches():
+        with pa.ipc.open_stream(pa.OSFile(src)) as reader:
+            for batch in reader:
+                yield batch
+                held.append(pa.total_allocated_bytes())
+
+    ctx = SimpleNamespace(partitionId=lambda: 0, attemptNumber=lambda: 0)
+    monkeypatch.setattr("pyspark.TaskContext.get", staticmethod(lambda: ctx))
+    out, token = str(tmp_path / "out"), "t0"
+    writer = pipemod._sink_writer(
+        spark,
+        tables.staging_dir(out, token),
+        token,
+        PV,
+        pipemod._page_processor(DEFAULT_CONFIG.quality),
+    )
+    (summary,) = writer(batches())
+    assert summary.to_pylist()[0]["docs_scanned"] == n_batches * rows
+    assert len(held) == n_batches
+    assert held[-1] - held[0] < rows * pad, held
