@@ -32,6 +32,7 @@ from pii_detector_spark.operators.scrub import (
     Match,
     build_findings,
     compiled_secret_exclude,
+    detect,
     is_phi,
     scrub_text,
 )
@@ -49,44 +50,35 @@ class CustomClassifier:
     is_credential: bool = False  # route through SECRET_EXCLUDE suppression
 
 
-def extended_battery(
+def custom_battery(
     customs: tuple[CustomClassifier, ...]
 ) -> tuple[tuple[PatternSpec, "re.Pattern[str]"], ...]:
-    """System battery + compiled custom classifiers, in canonical order
-    (system categories first — same tie-break rule as scrub span selection)."""
-    battery = [(spec, re.compile(spec.regex)) for spec in ALL_PATTERNS]
-    for c in customs:
-        for i, p in enumerate(c.patterns):
-            spec = PatternSpec(
+    """The custom classifiers' patterns, compiled, in declaration order."""
+    return tuple(
+        (
+            PatternSpec(
                 name=c.name,
                 regex=p,
                 kind="credential" if c.is_credential else "pii",
-            )
-            battery.append((spec, re.compile(p)))
-    return tuple(battery)
+            ),
+            re.compile(p),
+        )
+        for c in customs
+        for p in c.patterns
+    )
 
 
 def detect_with_customs(
-    text: str, battery: tuple[tuple[PatternSpec, "re.Pattern[str]"], ...]
+    text: str, customs: tuple[tuple[PatternSpec, "re.Pattern[str]"], ...]
 ) -> list[Match]:
-    """Battery pass over system + custom patterns (guards intentionally not
-    applied to customs: user patterns carry no guard metadata)."""
+    """The system battery (``scrub.detect``), then every custom pattern,
+    indexed after the system categories (the scrub tie-break order).
+    Custom patterns carry no gates: each is scanned in full."""
     if not text:
         return []
-    out: list[Match] = []
+    out = detect(text)
     exclude = compiled_secret_exclude()
-    lowered = text.lower()
-    has_digit = any(ch.isdigit() for ch in text)
-    has_upper = any(ch.isupper() for ch in text)
-    for idx, (spec, rx) in enumerate(battery):
-        if spec.needs_digit and not has_digit:
-            continue
-        if spec.needs_digit_or_upper and not (has_digit or has_upper):
-            continue
-        if spec.guards_all and not all(g in lowered for g in spec.guards_all):
-            continue
-        if spec.guards and not any(g in lowered for g in spec.guards):
-            continue
+    for idx, (spec, rx) in enumerate(customs, start=len(ALL_PATTERNS)):
         is_cred = spec.kind == "credential"
         for m in rx.finditer(text):
             value = m.group()
@@ -104,13 +96,13 @@ def with_custom_scrub(
     url_col: str = "url",
     text_col: str = "text",
 ) -> DataFrame:
-    """Scrub with the battery extended by custom classifiers. The extended
-    battery compiles once per executor (closure capture; lazy init)."""
+    """Scrub with the battery extended by custom classifiers. The custom
+    patterns compile once per executor (closure capture; lazy init)."""
     state: dict = {}
 
     def _batch(urls: pd.Series, texts: pd.Series) -> pd.DataFrame:
         if "battery" not in state:
-            state["battery"] = extended_battery(customs)
+            state["battery"] = custom_battery(customs)
         battery = state["battery"]
         scrubbed, findings, phi = [], [], []
         for url, text in zip(urls, texts):

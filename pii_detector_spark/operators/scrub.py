@@ -32,6 +32,9 @@ prefixes instead of the reference's ``uuid4`` (reproducibility).
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass
+from functools import lru_cache
+from typing import Iterator
 
 import pandas as pd
 import pyarrow as pa
@@ -61,8 +64,6 @@ from pii_detector_spark.functions.person import (
 )
 from pii_detector_spark.patterns import (
     compiled_battery,
-    compiled_guards,
-    compiled_guards_lowered,
     compiled_phi,
     compiled_secret_exclude,
 )
@@ -78,35 +79,117 @@ PERSON_CATEGORY_INDEX = -1
 
 
 _DIGIT_RX = re.compile(r"\d")
-_UPPER_RX = re.compile(r"[A-Z]")
+# the code points (?i) matches to an ASCII letter that str.lower() does not
+# lower to it (see patterns.PatternSpec)
+_CASEFOLD = str.maketrans({"İ": "i", "ı": "i", "ſ": "s"})
 
-_BATTERY_PLAN = None
+
+@dataclass(frozen=True, slots=True)
+class _Entry:
+    """One battery category's gates and scan, compiled from its spec."""
+
+    idx: int
+    name: str
+    needs_digit: bool
+    guards_all: tuple[str, ...]
+    guards: tuple[str, ...]
+    guard: "re.Pattern[str] | None"
+    guard_lowered: "re.Pattern[str] | None"
+    is_cred: bool
+    rx: "re.Pattern[str]"
+    anchor: "re.Pattern[str] | None"
 
 
-def _battery_plan():
-    """Per-spec dispatch tuples hoisted out of the per-document loop:
-    attribute lookups on 28 PatternSpec objects per document measurably
-    add up in the fused hot path; the compiled artifacts are identical."""
-    global _BATTERY_PLAN
-    if _BATTERY_PLAN is None:
-        guards = compiled_guards()
-        guards_low = compiled_guards_lowered()
-        _BATTERY_PLAN = [
-            (
+def _anchored_finditer(
+    rx: "re.Pattern[str]", anchor: "re.Pattern[str]", text: str, lowered: str
+) -> Iterator["re.Match[str]"]:
+    """``rx.finditer(text)`` for a pattern whose matches start with
+    whitespace then a keyword (``PatternSpec.anchor_rx``): one ``match``
+    attempt per keyword start in ``lowered``, at the first position of the
+    whitespace run before it that lies at or past the previous match's
+    end."""
+    end = 0
+    k = anchor.search(lowered)
+    while k is not None:
+        p = k.start()
+        if p >= end:
+            while p > end and text[p - 1].isspace():
+                p -= 1
+            m = rx.match(text, p)
+            if m is not None:
+                end = m.end()
+                yield m
+        k = anchor.search(lowered, k.start() + 1)
+
+
+def _compile(rx: str) -> "re.Pattern[str] | None":
+    return re.compile(rx) if rx else None
+
+
+@lru_cache(maxsize=1)
+def _battery_plan() -> tuple[_Entry, ...]:
+    """Per-spec gates and scans, compiled once per process."""
+    plan = []
+    for idx, (spec, rx) in enumerate(compiled_battery()):
+        plan.append(
+            _Entry(
                 idx,
                 spec.name,
                 spec.needs_digit,
-                spec.needs_digit_or_upper,
                 spec.guards_all,
                 spec.guards,
-                guards[idx],
-                guards_low[idx],
+                _compile(spec.guard_rx),
+                _compile(spec.guard_rx_lowered),
                 spec.kind == "credential",
-                rx.finditer,
+                rx,
+                _compile(spec.anchor_rx),
             )
-            for idx, (spec, rx) in enumerate(compiled_battery())
-        ]
-    return _BATTERY_PLAN
+        )
+    return tuple(plan)
+
+
+def _doc_facts(text: str) -> tuple[str, bool]:
+    """What the gates read, computed once per document: the text lowered
+    with the case folds ``str.lower()`` misses (same length as ``text``),
+    and whether it has a digit."""
+    folded = text
+    if "İ" in text or "ı" in text or "ſ" in text:
+        folded = text.translate(_CASEFOLD)
+    return folded.lower(), _DIGIT_RX.search(text) is not None
+
+
+def _may_match(e: _Entry, text: str, lowered: str, has_digit: bool) -> bool:
+    """False when a gate proves ``e`` cannot match ``text``."""
+    if e.needs_digit and not has_digit:
+        return False
+    if e.guards_all and not all(g in lowered for g in e.guards_all):
+        return False
+    if e.guards and not any(g in lowered for g in e.guards):
+        return False
+    if e.guard is not None and e.guard.search(text) is None:
+        return False
+    if e.guard_lowered is not None and e.guard_lowered.search(lowered) is None:
+        return False
+    return True
+
+
+def _finditer(e: _Entry, text: str, lowered: str) -> Iterator["re.Match[str]"]:
+    """``e``'s regex matches, as ``finditer`` over its regex returns them."""
+    if e.anchor is None:
+        return e.rx.finditer(text)
+    return _anchored_finditer(e.rx, e.anchor, text, lowered)
+
+
+def _scan(e: _Entry, text: str, lowered: str) -> list[Match]:
+    """``e``'s matches: non-empty, and credential values that look like
+    code suppressed."""
+    exclude = compiled_secret_exclude().search
+    out = []
+    for m in _finditer(e, text, lowered):
+        value = m.group()
+        if value and not (e.is_cred and exclude(value)):
+            out.append((e.idx, e.name, m.start(), m.end(), value))
+    return out
 
 
 def detect(text: str, include_person: bool = False) -> list[Match]:
@@ -116,44 +199,13 @@ def detect(text: str, include_person: bool = False) -> list[Match]:
     if not text:
         return []
     out: list[Match] = []
-    lowered = text.lower()
-    has_digit = _DIGIT_RX.search(text) is not None
-    has_upper = _UPPER_RX.search(text) is not None
-    if include_person and has_upper:  # names require a capital letter
+    if include_person:
         for value, start, end, _score in detect_person(text):
             out.append((PERSON_CATEGORY_INDEX, PERSON_ENTITY, start, end, value))
-    exclude_search = compiled_secret_exclude().search
-    for (
-        idx,
-        name,
-        needs_digit,
-        needs_du,
-        guards_all,
-        guards_any,
-        guard,
-        guard_low,
-        is_cred,
-        finditer,
-    ) in _battery_plan():
-        if needs_digit and not has_digit:
-            continue
-        if needs_du and not (has_digit or has_upper):
-            continue
-        if guards_all and not all(g in lowered for g in guards_all):
-            continue
-        if guards_any and not any(g in lowered for g in guards_any):
-            continue
-        if guard is not None and guard.search(text) is None:
-            continue
-        if guard_low is not None and guard_low.search(lowered) is None:
-            continue
-        for m in finditer(text):
-            value = m.group()
-            if not value:
-                continue
-            if is_cred and exclude_search(value):
-                continue
-            out.append((idx, name, m.start(), m.end(), value))
+    lowered, has_digit = _doc_facts(text)
+    for e in _battery_plan():
+        if _may_match(e, text, lowered, has_digit):
+            out += _scan(e, text, lowered)
     return out
 
 

@@ -29,49 +29,71 @@ from functools import lru_cache
 
 @dataclass(frozen=True)
 class PatternSpec:
+    r"""One battery category: the reference's pattern string plus the
+    necessary conditions ``scrub.detect()`` checks before, or uses for,
+    the full scan.  Every gate is implied by every possible match, so a
+    gated scan returns exactly what ``finditer`` over the bare regex
+    returns; ``tests/test_scrub.py`` pins that spec by spec against the
+    ungated compile and the guard-free oracle.
+
+    **Case folding.**  ``guards``, ``guards_all``, ``guard_rx_lowered``
+    and ``anchor_rx`` read a lowered copy of the text, but ``(?i)``
+    matches more than ``str.lower()`` gives: ``ı`` (U+0131) and ``İ``
+    (U+0130) match ``i``, and ``ſ`` (U+017F) matches ``s``, while
+    ``lower()`` keeps ``ı`` and ``ſ`` and turns ``İ`` into ``i`` plus
+    U+0307.  So ``detect()`` maps ``İ``/``ı``→``i`` and ``ſ``→``s``
+    before lowering, whenever one of them occurs.  Over every code point,
+    these are the only ones where ``(?i)`` and ``lower()`` disagree on an
+    ASCII letter (the Kelvin sign lowers to ``k``), and ``İ`` is the only
+    one ``lower()`` lengthens; so afterwards the copy has the text's
+    length, and its char at ``p`` is an ASCII letter exactly when the
+    text's char at ``p`` matches that letter under ``(?i)``.
+
+    **Anchored scan.**  ``anchor_rx`` is a lowercase keyword alternation.
+    Instead of trying every position, ``detect()`` finds each keyword
+    start in the lowered copy, steps back over the whitespace run before
+    it (never past the end of the previous match; ``str.isspace()`` is
+    ``\s`` on every code point) and calls ``regex.match`` there.  This is
+    exact for a pattern whose every branch is ``\s*`` or ``\s+`` then one
+    of the keywords, that cannot match the empty string, and that has no
+    ``\b``, ``^`` or lookbehind: a match at a later position of the same
+    whitespace run implies one at its first position, which ``finditer``
+    would try first.
+    """
+
     name: str
     regex: str
     kind: str  # "pii" | "credential"
-    # quick substring guard: all matches are impossible unless one of these
-    # literals occurs in text.lower(). Empty tuple = always scan.
+    # any-of substring guard over the folded lowered text (see above).
+    # Empty tuple = always scan.
     guards: tuple[str, ...] = field(default=())
-    # cheaper guard: every possible match contains a digit, so a document
-    # with no digits can skip the pattern entirely (one C-level scan amortized
-    # across all digit-guarded patterns). Verified against the guard-free
-    # pure-Python oracle by tests.
+    # every possible match contains a digit, so a document with no digits
+    # skips the pattern (one C-level scan amortized over the battery)
     needs_digit: bool = False
-    # all of these substrings must occur in text.lower() (AND semantics, vs
-    # the any-of `guards`). Used for credential sets whose every alternative
-    # contains a mandatory '=' assignment.
+    # all-of substring guard over the folded lowered text, e.g. the
+    # mandatory '=' of an assignment-shaped credential
     guards_all: tuple[str, ...] = field(default=())
-    # skip unless the text contains a digit OR an uppercase letter (for
-    # patterns like US_DRIVER_LICENSE whose alternatives all need one)
-    needs_digit_or_upper: bool = False
-    # regex-valued guard: a cheap necessary-condition pattern (one with a
-    # small first-character skip set, so the re engine can scan at C speed)
-    # whose absence proves the expensive battery pattern cannot match.
-    # Soundness (guard is implied by every possible match) is pinned by
-    # tests/test_scrub.py::test_guard_rx_soundness against the guard-free
-    # oracle on adversarial near-miss corpora. Empty = no regex guard.
+    # regex-valued guard searched against the text: a substring every
+    # branch of the pattern must contain. Start it with ONE class or
+    # literal (``[0-9][0-9]{3}``, not ``[0-9]{4}``; every branch of an
+    # alternation a literal): only then does ``re`` skip to candidate
+    # positions at C speed, 2-3x faster on prose. Scoped ``(?i:...)``
+    # where the pattern is caseless, so the guard folds exactly as the
+    # pattern does. Empty = no regex guard.
     guard_rx: str = ""
-    # like guard_rx, but searched against text.lower() (which detect()
-    # already computes for the substring guards) — lets a guard for a
-    # case-insensitive pattern drop the (?i) flag, restoring the re
-    # engine's literal-prefix skip optimization. Quantifiers must allow
-    # for lower()'s rare one-to-many expansions (e.g. U+0130 -> 2 chars).
+    # like guard_rx, but searched against the folded lowered text, so a
+    # guard for a caseless pattern can drop (?i) and keep the engine's
+    # literal-prefix skip.
     guard_rx_lowered: str = ""
-    # sound first-character class of every possible match (e.g. "[0-9]"
-    # for an all-digit pattern): compiled_battery wraps the UNCHANGED
-    # regex as (?=first_rx)(?:regex), a zero-width gate the engine tests
-    # FIRST at every scan position — one charclass check instead of
-    # initializing every alternation branch. Matches are provably
-    # identical (the lookahead consumes nothing and every match satisfies
-    # it by construction); equality with the ungated compile is pinned by
-    # tests/test_scrub.py::test_first_rx_gate_equivalence. Only worth
-    # setting when the class is RARE in prose (digits/uppercase) — a
-    # letter-class gate is true at most positions and just adds overhead
-    # (measured: IN_PAN/CRYPTO/MEDICAL_LICENSE regress with one).
+    # first-character class of every possible match (e.g. "[0-9]"):
+    # compiled_battery wraps the unchanged regex as (?=first_rx)(?:regex),
+    # one class test per position instead of entering every branch. Only
+    # worth it when the class is RARE in prose (digits/uppercase) — a
+    # letter-class gate is true at most positions and just adds overhead.
     first_rx: str = ""
+    # keywords for the anchored scan (see above), searched against the
+    # folded lowered text. Empty = finditer over every position.
+    anchor_rx: str = ""
 
 
 def _gated_regex(spec: "PatternSpec") -> str:
@@ -94,6 +116,7 @@ _PII: list[PatternSpec] = [
         r"(?i)[A-Z]{3}[ABCFGHLJPTF]{1}[A-Z]{1}[0-9]{4}[A-Z]{1}",
         "pii",
         needs_digit=True,
+        guard_rx=r"[0-9][0-9]{3}(?i:[A-Z])",
     ),
     PatternSpec(
         "IN_AADHAR",
@@ -120,12 +143,15 @@ _PII: list[PatternSpec] = [
         r"(?i)\b([A-Z]{2}[ \-]?[0-9]{2})((?:[ \-]?[A-Z0-9]{3,5}){2,6})([ \-]?[A-Z0-9]{1,3})?\b",
         "pii",
         needs_digit=True,
+        # the check digits, then the first BBAN group's first 3 chars
+        guard_rx=r"[0-9][0-9](?i:[ \-]?[A-Z0-9]{3})",
     ),
     PatternSpec(
         "CRYPTO",
         r"(?i)\b[13][a-km-zA-HJ-NP-Z1-9]{26,33}\b",
         "pii",
         needs_digit=True,
+        guard_rx=r"[13](?i:[a-km-zA-HJ-NP-Z1-9]{26})",
     ),
     PatternSpec(
         "US_SSN",
@@ -155,6 +181,7 @@ _PII: list[PatternSpec] = [
         r"(\b[0-9]{9}\b) | (?i:(\b[A-Z][0-9]{8}\b))",
         "pii",
         needs_digit=True,
+        guard_rx=r"[0-9][0-9]{7}",
     ),
     PatternSpec(
         "US_DRIVER_LICENSE",
@@ -165,7 +192,9 @@ _PII: list[PatternSpec] = [
         r"[0-9]{8}[A-Z]{2}|[0-9]{3}[A-Z]{2}[0-9]{4}|[A-Z][0-9][A-Z][0-9][A-Z]|[0-9]{7,8}[A-Z])\b)|"
         r"(\b([0-9]{6,14}|[0-9]{16})\b)",
         "pii",
-        needs_digit_or_upper=True,
+        # every alternative starts with two chars of [A-Z0-9] then
+        # [A-Z0-9*], or (the "A-Z]{2}" typo) holds two digits
+        guard_rx=r"[A-Z0-9][A-Z0-9*]",
         # every alternative starts [A-Z], a letter literal (H/V/X/A), or a
         # digit ('*' only ever appears after the first char)
         first_rx="[A-Z0-9]",
@@ -176,6 +205,7 @@ _PII: list[PatternSpec] = [
         r"[abcdefghjklmprstuxABCDEFGHJKLMPRSTUX]{1}9\d{7}",
         "pii",
         needs_digit=True,
+        guard_rx=r"\d\d{6}",
     ),
     PatternSpec(
         "US_BANK_NUMBER",
@@ -310,12 +340,19 @@ _CREDENTIALS: list[PatternSpec] = [
             r"|login|sha|auth|token|tenant|secret|api|pwd|username"
             r"|database_?pass|db_?pass).{0,60}\s*="
         ),
+        # every branch is \s* (or \s+) then one of these keywords: the
+        # anchored scan tries a match only at their starts
+        anchor_rx=(
+            r"cognitive|service_?bus|project|private|client|user|account"
+            r"|login|sha|auth|token|tenant|secret|api|pwd|database_?pass"
+            r"|db_?pass"
+        ),
     ),
     PatternSpec(
         "OPENAI_KEY",
         r"(?i)(\s*(open_ai|open_?ai_?key|open_?ai_?api_?key)\s*=?\s*)([a-zA-Z0-9]{32})(\s*|$)",
         "credential",
-        guards=("open",),
+        guards=("openai", "open_ai"),
     ),
     PatternSpec(
         "GITHUB_CREDENTIALS",
@@ -338,13 +375,13 @@ _CREDENTIALS: list[PatternSpec] = [
         r"{0,1}[0-9])\.){3,3}(25[0-5]|(2[0-4]|1{0,1}[0-9]){0,1}[0-9]))\b)",
         "credential",
         # necessary condition, branch by branch: every IPv4 form contains
-        # digit.digits.digits.digit; every IPv6 alternative contains "::"
-        # (single-group or compressed forms) or hex:hex (>=2 full groups),
-        # except the zone-id form whose fixed literal is "fe80:". The guard
-        # has first-char set [0-9a-fA-F:] so the scan skips plain prose at
-        # C speed — the full alternation above costs ~150 us/doc and fires
-        # on <2% of web docs.
-        guard_rx=r"\d\.\d{1,3}\.\d{1,3}\.\d|::|[0-9a-fA-F]:[0-9a-fA-F]|fe80:",
+        # .digits.digits.digit (ASCII digits); every IPv6 alternative
+        # contains "::" or hex:hex, and the zone-id form "fe80:" then ":"
+        # or "%", so a ':' followed by hex, ':' or '%' covers all of IPv6.
+        # Both branches start with a literal, so the guard skips plain
+        # prose at C speed — the full alternation above costs ~150 us/doc
+        # and fires on <2% of web docs.
+        guard_rx=r"\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]|:[0-9a-fA-F:%]",
     ),
     PatternSpec(
         "INSURANCE_INFORMATION",
@@ -387,27 +424,6 @@ def compiled_battery() -> tuple[tuple[PatternSpec, "re.Pattern[str]"], ...]:
     ``first_rx`` compile with the zero-width first-char gate wrapped
     around the unchanged regex (see ``_gated_regex``)."""
     return tuple((spec, re.compile(_gated_regex(spec))) for spec in ALL_PATTERNS)
-
-
-@lru_cache(maxsize=1)
-def compiled_guards() -> tuple["re.Pattern[str] | None", ...]:
-    """Per-pattern compiled ``guard_rx`` (None where unset), aligned with
-    ``compiled_battery()`` by index."""
-    return tuple(
-        re.compile(spec.guard_rx) if spec.guard_rx else None
-        for spec in ALL_PATTERNS
-    )
-
-
-@lru_cache(maxsize=1)
-def compiled_guards_lowered() -> tuple["re.Pattern[str] | None", ...]:
-    """Per-pattern compiled ``guard_rx_lowered`` (None where unset),
-    aligned with ``compiled_battery()`` by index; search these against
-    ``text.lower()``."""
-    return tuple(
-        re.compile(spec.guard_rx_lowered) if spec.guard_rx_lowered else None
-        for spec in ALL_PATTERNS
-    )
 
 
 @lru_cache(maxsize=1)

@@ -242,6 +242,26 @@ SUMMARY_SCHEMA = (
 )
 
 
+# the staged files' columns whose values repeat within a file, so a
+# dictionary page makes them smaller. pyarrow would otherwise dictionary-
+# encode every column, the all-distinct ones too (urls, texts, md5s, finding
+# ids, continuous scores), where Spark's writer falls back to PLAIN.
+_FINDING = "findings.list.element."
+_DICTIONARY_COLUMNS = {
+    "docs": [
+        "lang", "lang_pred", "n_words", "n_lines", "bullet_line_frac",
+        "ellipsis_line_frac", "dup_line_frac", "stopword_hits",
+        "drop_reason", "n_findings",
+        *(_FINDING + c for c in ("pii_type", "pii_region", "score",
+                                 "pii_hash", "pii_data")),
+    ],
+    "findings": [
+        "url", "pii_type", "pii_region", "score", "pii_hash", "pii_masked",
+    ],
+    "lineage": ["pattern_version", "status"],
+}
+
+
 def _parquet_options(spark: SparkSession) -> dict:
     """pyarrow writer options that give the files a Spark write would:
     snappy, the timestamp encoding ``spark.sql.parquet.outputTimestampType``
@@ -319,7 +339,10 @@ def _sink_writer(
             if table not in writers:
                 os.makedirs(os.path.join(staging, table), exist_ok=True)
                 writers[table] = pq.ParquetWriter(
-                    os.path.join(staging, table, name), batch.schema, **options
+                    os.path.join(staging, table, name),
+                    batch.schema,
+                    use_dictionary=_DICTIONARY_COLUMNS[table],
+                    **options,
                 )
             writers[table].write_batch(batch)
 

@@ -197,6 +197,25 @@ def test_writer_partition_reads_like_spark_partition(spark, clean_out, tmp_path)
     assert ts["run_id=ok"].physical_type == "INT96"
 
 
+def test_writer_dictionary_encodes_only_repeating_columns(clean_out):
+    """The run's writer gives a dictionary only to the columns whose values
+    repeat (``pipeline._DICTIONARY_COLUMNS``); urls, texts, md5s and
+    finding ids stay PLAIN, as Spark's writer leaves them."""
+    for table, listed in pipemod._DICTIONARY_COLUMNS.items():
+        files = glob.glob(os.path.join(clean_out, table, "run_id=ok", "*.parquet"))
+        assert files, table
+        encoded = set()
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            for rg in range(md.num_row_groups):
+                for i in range(md.num_columns):
+                    col = md.row_group(rg).column(i)
+                    if any("DICTIONARY" in e for e in col.encodings):
+                        encoded.add(col.path_in_schema)
+        assert encoded <= set(listed), (table, encoded - set(listed))
+        assert encoded, table
+
+
 def test_rerun_under_committed_run_id_counts_only_its_docs(
     spark, corpus_path, tmp_path
 ):

@@ -4,17 +4,23 @@ oracle, per planted category and property-based on fuzzed text."""
 from __future__ import annotations
 
 import random
+import re as _re
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pii_detector_spark.operators.scrub import (
+    _battery_plan,
+    _doc_facts,
+    _finditer,
+    _may_match,
     build_findings,
     detect,
     is_phi,
     scrub_text,
 )
+from pii_detector_spark.patterns import ALL_PATTERNS
 from pii_detector_spark.sources.datagen import pii_plants
 from tests.oracle import oracle_detect, oracle_is_phi, oracle_scrub
 
@@ -367,3 +373,215 @@ def test_first_rx_gate_equivalence():
             m1 = [(m.start(), m.end(), m.group()) for m in plain.finditer(doc)]
             m2 = [(m.start(), m.end(), m.group()) for m in gated.finditer(doc)]
             assert m1 == m2, (spec.name, doc)
+
+
+# --- gated scans: guards, anchors and case folding --------------------------
+
+# every keyword a substring guard or an anchor reads, so each can be spelled
+# with the code points (?i) matches but str.lower() does not give
+_KEYWORDS = sorted(
+    {g for s in ALL_PATTERNS for g in s.guards}
+    | {
+        kw.replace("_?", sep)
+        for s in ALL_PATTERNS
+        if s.anchor_rx
+        for kw in s.anchor_rx.split("|")
+        for sep in ("", "_")
+    }
+)
+
+
+def _fold_variants(s: str) -> list[str]:
+    """``s`` with every i spelled ı and İ, every s spelled ſ, every k
+    spelled as the Kelvin sign, and all of it uppercased."""
+    return [
+        s.replace("i", "ı"),
+        s.replace("i", "İ").replace("I", "İ"),
+        s.replace("s", "ſ").replace("S", "ſ"),
+        s.replace("k", "K"),
+        s.upper(),
+    ]
+
+
+_CASEFOLD_CORPUS = [
+    v
+    for kw in _KEYWORDS
+    for line in (
+        f" {kw} = topsecret",
+        f"{kw}_key = {'a' * 32}",
+        f"the {kw} field=abc123 here",
+    )
+    for v in _fold_variants(line)
+] + [
+    v
+    for _, line in pii_plants(random.Random(5))
+    for v in _fold_variants(line)
+]
+
+# the anchored scan steps back over whitespace runs: every kind of space,
+# runs that start at the previous match's end, matches back to back, and
+# keywords that overlap or nest ("shauth", "usertoken")
+_WHITESPACE_CORPUS = [
+    "\tsecret =\tabc",
+    "\n\n pwd =\nhunter22\n",
+    "\xa0\xa0token = abcdef",
+    " 　api_key = zzz\x1c\x1d",
+    "pwd = abc pwd = def",
+    "pwd = abcpwd = def",
+    " secret = a  secret = bb\tsecret = ccc",
+    "shauth token = x",
+    "shauth token = https://accounts.google.com/o/oauth2/auth",
+    # "sha" is too far from "=", the "auth" inside it is not
+    "shauth" + "x" * 19 + " = https://accounts.google.com/o/oauth2/auth",
+    "usertoken = abcdef",
+    "xuser primary = a@b.co",
+    "tenant=  tenant = abc123 tenant = def456",
+    "private key = value_1",
+    "  \t  ",
+    "sha",
+    " sha =",
+]
+
+
+def _gated_spans(e, text):
+    """``e``'s non-empty match spans through detect()'s gates and scan."""
+    lowered, has_digit = _doc_facts(text)
+    if not _may_match(e, text, lowered, has_digit):
+        return []
+    return [(m.start(), m.end()) for m in _finditer(e, text, lowered) if m.group()]
+
+
+def _fuzz_corpus(n: int, seed: int) -> list[str]:
+    rng = random.Random(seed)
+    parts = _KEYWORDS + [
+        "=", " = ", " ", "\t", "\n", "\xa0", "ı", "İ", "ſ", "K", "_",
+        "a@b.co", "x" * 25, "value123", "4" + "0" * 20, "AKIA", "9", "1.2",
+        ":", "::", "fe80:", "%", ".", "-", "DE12 3456", "ABCPE1234F",
+        "H12345678", "https://", "get", "(x)", "shauth", "x" * 17,
+    ]
+    return [
+        "".join(rng.choice(parts) for _ in range(rng.randint(1, 14)))
+        for _ in range(n)
+    ]
+
+
+def test_gated_scan_equivalence():
+    """Every spec with a regex guard, a lowered guard, an anchor or a
+    first-char gate matches, through detect()'s gates and scan, EXACTLY
+    the spans its bare regex's ``finditer`` matches: on the guard, case-fold
+    and whitespace corpora, the planted lines and a seeded fuzz."""
+    gated = [
+        e
+        for s, e in zip(ALL_PATTERNS, _battery_plan())
+        if s.guard_rx or s.guard_rx_lowered or s.anchor_rx or s.first_rx
+    ]
+    assert {e.name for e in gated} >= {
+        "PRIVATE_CREDENTIALS", "IP_ADDRESSES", "MEDICAL_LICENSE", "IN_PAN",
+        "US_PASSPORT", "IBAN_CODE", "CRYPTO", "US_DRIVER_LICENSE",
+    }
+    corpora = (
+        _GUARD_ADVERSARIAL
+        + _PC_ADVERSARIAL
+        + _CASEFOLD_CORPUS
+        + _WHITESPACE_CORPUS
+        + [line for _, line in pii_plants(random.Random(11))]
+        + _fuzz_corpus(3000, 99)
+    )
+    for e in gated:
+        plain = _re.compile(ALL_PATTERNS[e.idx].regex)
+        for doc in corpora:
+            want = [(m.start(), m.end()) for m in plain.finditer(doc) if m.group()]
+            assert _gated_spans(e, doc) == want, (e.name, doc)
+
+
+def test_casefold_and_whitespace_corpora_match_oracle():
+    for doc in _CASEFOLD_CORPUS + _WHITESPACE_CORPUS:
+        assert _norm(detect(doc)) == _norm(oracle_detect(doc)), doc
+
+
+def test_casefold_guard_bugs():
+    """(?i) matches ı and İ for i and ſ for s, which str.lower() does not
+    give: the substring guards must still let these through."""
+    cases = {
+        " ſecret = topsecret": "PRIVATE_CREDENTIALS",
+        "TWİLIO_AUTH_TOKEN = " + "a" * 32: "TWILIO_CREDENTIALS",
+        "twılio_auth_token = " + "a" * 32: "TWILIO_CREDENTIALS",
+    }
+    for doc, name in cases.items():
+        got = detect(doc)
+        assert name in {m[1] for m in got}, doc
+        assert _norm(got) == _norm(oracle_detect(doc)), doc
+
+
+def test_person_non_ascii_capitals():
+    """Names whose capital is outside A-Z are found like any other."""
+    for doc, want in [
+        ("we met Óscar Álvarez today", "Óscar Álvarez"),
+        ("we met Åsa Öberg today", "Åsa Öberg"),
+    ]:
+        got = detect(doc, include_person=True)
+        assert [m[4] for m in got if m[1] == "PERSON"] == [want], doc
+        assert _norm(got) == _norm(oracle_detect(doc, include_person=True))
+
+
+def test_person_first_char_gate_equivalence():
+    """The PERSON tokenizer's first-char gate changes no match."""
+    from pii_detector_spark.functions.person import _CAP_RUN, _UC
+
+    prefix = f"(?=[{_UC}])(?:"
+    assert _CAP_RUN.pattern.startswith(prefix)
+    plain = _re.compile(_CAP_RUN.pattern[len(prefix):-1])
+    rng = random.Random(3)
+    docs = [
+        "Dr. Smith and Mr Jones met Óscar Álvarez, Åsa Öberg and Zoë Quinn",
+        "Sir  Lancelot\tDu Lac; Prof.\tWei; Mary-Jane Watson-Parker",
+    ] + [
+        "".join(rng.choice(["Dr", "Mr.", " ", "\t", "Ann", "é", "-", "Ö",
+                            "Smith", "x", "\n", "Øre", "ÞÞ", "_"])
+                for _ in range(12))
+        for _ in range(2000)
+    ]
+    for doc in docs:
+        assert [m.span() + m.groups() for m in _CAP_RUN.finditer(doc)] == [
+            m.span() + m.groups() for m in plain.finditer(doc)
+        ], doc
+
+
+def test_detect_equals_oracle_on_datagen_docs():
+    """detect() equals the guard-free oracle, with and without PERSON, on
+    2,000 seeded datagen docs: web text where the PRIVATE_CREDENTIALS
+    guard often passes and the pattern matches nothing."""
+    from pii_detector_spark.functions.textnorm import extract_text_from_html
+    from pii_detector_spark.sources.datagen import generate_rows
+
+    for _url, _ts, html, text, _lang in generate_rows(2000, 4242):
+        doc = extract_text_from_html(html) if html is not None else (text or "")
+        for person in (False, True):
+            assert _norm(detect(doc, include_person=person)) == _norm(
+                oracle_detect(doc, include_person=person)
+            ), doc
+
+
+def test_detect_with_customs_appends_after_the_battery():
+    from pii_detector_spark.operators.classifiers import (
+        CustomClassifier,
+        custom_battery,
+        detect_with_customs,
+    )
+
+    customs = custom_battery((
+        CustomClassifier(name="TICKET_ID", patterns=(r"TICKET-[0-9]+",)),
+        CustomClassifier(
+            name="SECRETISH", patterns=(r"sk_[a-z]+", r"\(sk_x\)"),
+            is_credential=True,
+        ),
+    ))
+    doc = " ſecret = s3 ref TICKET-42 sk_abc (sk_x) jwhite@domain.com"
+    got = detect_with_customs(doc, customs)
+    n = len(ALL_PATTERNS)
+    assert got[: len(detect(doc))] == detect(doc)
+    assert got[len(detect(doc)):] == [
+        (n, "TICKET_ID", 17, 26, "TICKET-42"),
+        (n + 1, "SECRETISH", 27, 33, "sk_abc"),
+        (n + 1, "SECRETISH", 35, 39, "sk_x"),
+    ]
