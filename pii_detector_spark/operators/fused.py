@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+from functools import lru_cache
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -44,7 +45,11 @@ from pyspark.sql.types import (
 )
 
 from pii_detector_spark.config import QualityThresholds
-from pii_detector_spark.functions.langmodels import lang_and_perplexity
+from pii_detector_spark.functions.langmodels import (
+    codepoint_slices,
+    codepoints_left,
+    lang_and_perplexity_batch,
+)
 from pii_detector_spark.functions.textnorm import extract_text_from_html
 from pii_detector_spark.functions.toxicity import TOXIC_SET
 from pii_detector_spark.operators.quality import (
@@ -61,91 +66,93 @@ from pii_detector_spark.operators.scrub import (
 )
 
 _WS = re.compile(r"[ \t\n\r\f\x0b]+")
+# what ``str.split()`` splits at besides ``_WS``'s six
+_OTHER_SPACE = re.compile(
+    "[\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+)
 _STOPSET = set(STOPWORDS)
 
 
-def _char_tables():
-    """(is_alpha, is_ws) full-Unicode lookup tables for the vectorized
-    word metrics below — the ord-table pattern of the langid scorer.
-    ``chr(cp).isalpha()`` is the exact Java ``\\p{L}`` analogue the JVM
-    metrics use. The 1.1M-codepoint build costs ~0.9 s, so the table is
-    cached to a machine-local file (atomic rename): the first python
-    worker on a machine builds it, every later worker loads in ~1 ms —
-    otherwise each of N task workers would pay the build inside its first
-    Arrow batch."""
-    global _ALPHA_TAB, _WS_TAB
+@lru_cache(maxsize=1)
+def _char_classes():
+    """Class of every code point for the vectorized word metrics below:
+    1 whitespace (``_WS``'s six), 2 letter (``str.isalpha``, the exact
+    Java ``\\p{L}`` analogue the JVM metrics use), 0 anything else.  The
+    letters are what ``\\w`` keeps after ``\\d`` and '_' (every letter,
+    plus about a thousand numeric signs ``isalpha`` then drops), found by
+    one regex pass over all code points."""
     import numpy as np
 
-    if "_ALPHA_TAB" in globals():
-        return _ALPHA_TAB, _WS_TAB
-    import os
-    import tempfile
-
-    path = os.path.join(
-        tempfile.gettempdir(), "pii_detector_spark_alpha_tab_v1.npy"
-    )
-    alpha = None
-    if os.path.exists(path):
-        try:
-            alpha = np.load(path)
-            if alpha.shape != (0x110000,) or alpha.dtype != np.bool_:
-                alpha = None
-        except Exception:
-            alpha = None
-    if alpha is None:
-        alpha = np.zeros(0x110000, dtype=bool)
-        for cp in range(0x110000):
-            if chr(cp).isalpha():
-                alpha[cp] = True
-        try:
-            tmp = f"{path}.{os.getpid()}.tmp"
-            np.save(tmp, alpha)
-            os.replace(f"{tmp}.npy" if os.path.exists(f"{tmp}.npy") else tmp, path)
-        except Exception:
-            pass  # cache is best-effort; the in-process table is correct
-    ws = np.zeros(0x110000, dtype=bool)
-    for c in " \t\n\r\f\x0b":
-        ws[ord(c)] = True
-    _ALPHA_TAB, _WS_TAB = alpha, ws
-    return alpha, ws
+    classes = np.zeros(0x110000, dtype=np.uint8)
+    letters = codepoints_left(r"[\W\d_]+")
+    classes[letters] = 2
+    classes[[cp for cp in letters.tolist() if not chr(cp).isalpha()]] = 0
+    classes[[ord(c) for c in " \t\n\r\f\x0b"]] = 1
+    return classes
 
 
-def _word_char_stats(text: str) -> tuple[int, int]:
-    """(total word chars, words containing >=1 letter) in one vectorized
-    pass — replaces the per-char ``any(c.isalpha() ...)`` Python loop that
-    dominated the metric block (same trick as the langid numpy scorer;
-    lone surrogates encode to '?', which is non-ws non-alpha exactly like
-    the surrogate itself, so word structure is unchanged)."""
+def _word_char_stats_batch(texts: list[str]) -> tuple[list[int], list[int]]:
+    """Per text: (non-whitespace chars, words containing >=1 letter), a
+    slice of texts at a time.  A slice joins its texts with one space, so
+    no word crosses a text boundary; the words are numbered by one cumsum
+    over the word starts, and each text's counts are differences of
+    prefix counts at its bounds, exact integers.  Lone surrogates encode
+    to '?', which is non-ws non-letter exactly like the surrogate itself,
+    so word structure is unchanged."""
     import numpy as np
 
-    alpha_tab, ws_tab = _char_tables()
-    codes = np.frombuffer(
-        text.encode("utf-32-le", "replace"), dtype="<u4"
-    ).astype(np.int64)
-    ws = ws_tab[codes]
-    nonws = ~ws
-    starts = nonws.copy()
-    starts[1:] &= ws[:-1]
-    letters = alpha_tab[codes]
-    word_id = np.cumsum(starts)
-    w = word_id[letters]
-    # w is nondecreasing, so "distinct word ids" = nonzero first differences
-    alpha_words = int(np.count_nonzero(np.diff(w))) + 1 if w.size else 0
-    return int(np.count_nonzero(nonws)), alpha_words
+    classes = _char_classes()
+    chars: list[int] = []
+    alpha_words: list[int] = []
+    for lo, hi in codepoint_slices([len(t) + 1 for t in texts]):
+        codes = np.frombuffer(
+            " ".join(texts[lo:hi]).encode("utf-32-le", "replace"), dtype="<u4"
+        ).astype(np.intp)
+        cls = classes[codes]
+        nonws = cls != 1
+        starts = nonws.copy()
+        starts[1:] &= ~nonws[:-1]
+        word_id = np.cumsum(starts)
+        letters = np.flatnonzero(cls == 2)
+        w = word_id[letters]
+        # w is nondecreasing: a word's first letter is where w steps up
+        first = letters[np.flatnonzero(np.diff(w, prepend=0))]
+        lens = np.fromiter((len(t) for t in texts[lo:hi]), np.intp, hi - lo)
+        bounds = np.empty(2 * len(lens), dtype=np.intp)
+        bounds[1::2] = np.cumsum(lens + 1) - 1  # end of each text
+        bounds[0::2] = bounds[1::2] - lens
+        spaces = np.diff(np.searchsorted(np.flatnonzero(~nonws), bounds))
+        chars += (lens - spaces[0::2]).tolist()
+        alpha_words += np.diff(np.searchsorted(first, bounds))[0::2].tolist()
+    return chars, alpha_words
 
 
-def process_document(url: str, text: str, t: QualityThresholds) -> dict:
-    """Full per-document decision + scrub (pure function; one doc)."""
+def _document(
+    url: str,
+    text: str,
+    lang: str,
+    ppl: float,
+    char_sum: int,
+    alpha_words: int,
+    t: QualityThresholds,
+) -> dict:
+    """The per-document rules, decision and gated scrub, given the text's
+    batch-computed language, perplexity and word statistics."""
     # One C-level lower of the whole doc replaces a .lower() per word:
     # case mapping never produces or consumes the whitespace chars in _WS
     # (and Python's final-sigma context is the same at a word end as at a
     # string end), so the split structure and the lowered-word set are
-    # identical to splitting first and lowering each word.
-    words = [w for w in _WS.split(text.lower()) if w]
+    # identical to splitting first and lowering each word.  Where the doc
+    # holds no space ``_WS`` leaves alone, ``str.split()`` is the same
+    # split at a third of the regex's cost.
+    lowered = text.lower()
+    if _OTHER_SPACE.search(lowered) is None:
+        words = lowered.split()
+    else:
+        words = [w for w in _WS.split(lowered) if w]
     lines = [ln for ln in text.split("\n") if ln]
     nw, nl = len(words), len(lines)
 
-    char_sum, alpha_words = _word_char_stats(text) if nw else (0, 0)
     mean_wl = (char_sum / nw) if nw else 0.0
     symbol_ratio = (
         (text.count("#") + text.count("…") + text.count("...")) / nw
@@ -164,10 +171,9 @@ def process_document(url: str, text: str, t: QualityThresholds) -> dict:
     )
     alpha = (alpha_words / nw) if nw else 0.0
     dup = (1.0 - len(set(lines)) / nl) if nl else 0.0
-    lowered = set(words)
-    stop_hits = len(lowered & _STOPSET)
-    toxic = not lowered.isdisjoint(TOXIC_SET)
-    lang, ppl = lang_and_perplexity(text)
+    distinct = set(words)
+    stop_hits = len(distinct & _STOPSET)
+    toxic = not distinct.isdisjoint(TOXIC_SET)
     ppl = min(ppl, 1e9)
 
     reason = None
@@ -229,7 +235,14 @@ def process_document(url: str, text: str, t: QualityThresholds) -> dict:
         "scrubbed_text": scrubbed,
         "findings": findings,
         "content_md5": hashlib.md5(text.encode("utf-8")).hexdigest(),
+        "n_findings": len(findings) if findings is not None else 0,
     }
+
+
+def process_document(url: str, text: str, t: QualityThresholds) -> dict:
+    """Full per-document decision + scrub (pure function; one doc): the
+    fused row loop over a batch of one."""
+    return {k: v[0] for k, v in fused_columns([url], [None], [text], t).items()}
 
 
 # NOTE: the extracted text itself is deliberately NOT in the result struct:
@@ -263,34 +276,34 @@ FUSED_RESULT_TYPE = StructType(
 
 
 def fused_columns(urls, htmls, texts, thresholds: QualityThresholds) -> dict:
-    """The per-row loop of every fused pass: one list per
+    """The row loop of every fused pass: one list per
     ``FUSED_RESULT_TYPE`` field (columnar assembly; pandas row-dict
     inference costs ~20% of a batch at this width).  A row's text is its
-    extracted html, or its ``text`` when the html is null."""
+    extracted html, or its ``text`` when the html is null.  Language,
+    perplexity and the word statistics are computed for the whole batch
+    first (one numpy pass each, not ~15 small calls per document)."""
+    docs = [
+        extract_text_from_html(h) if h is not None else (t or "")
+        for h, t in zip(htmls, texts)
+    ]
+    langs, ppls = lang_and_perplexity_batch(docs)
+    chars, alpha_words = _word_char_stats_batch(docs)
     names = [f.name for f in FUSED_RESULT_TYPE.fields]
     cols: dict[str, list] = {n: [] for n in names}
-    for url, h, t in zip(urls, htmls, texts):
-        d = process_document(
-            url or "",
-            extract_text_from_html(h) if h is not None else (t or ""),
-            thresholds,
-        )
-        d["n_findings"] = len(d["findings"]) if d["findings"] is not None else 0
+    for url, text, lang, ppl, n_chars, n_alpha in zip(
+        urls, docs, langs, ppls, chars, alpha_words
+    ):
+        d = _document(url or "", text, lang, ppl, n_chars, n_alpha, thresholds)
         for n in names:
             cols[n].append(d[n])
     return cols
 
 
-def text_fallback():
-    """The ``text`` argument of a fused pass: ``text`` only where ``html``
-    is null.  The pass reads text ONLY then, so the redundant copy never
-    crosses the Arrow boundary (guide §4.1: control the columns, and the
-    bytes, that cross)."""
-    return (
-        F.when(F.col("html").isNull(), F.col("text"))
-        .otherwise(F.lit(None).cast("string"))
-        .alias("text")
-    )
+# The ``text`` argument of a fused pass: ``text`` only where ``html`` is
+# null.  The pass reads text ONLY then, so the redundant copy never crosses
+# the Arrow boundary (guide §4.1: control the columns, and the bytes, that
+# cross).  SQL text, so building it is one py4j call.
+TEXT_FALLBACK = "CASE WHEN html IS NULL THEN text END AS text"
 
 
 def make_fused_udf(thresholds: QualityThresholds):
@@ -316,7 +329,7 @@ def with_fused_processing(
     # whole plan, 20 times per run; and "_d.*" expands the struct's fields
     # in order on the JVM side, where 20 aliased Columns each cost a py4j
     # round trip
-    out = df.withColumn("_d", udf(F.col("url"), F.col("html"), text_fallback()))
+    out = df.withColumn("_d", udf(F.col("url"), F.col("html"), F.expr(TEXT_FALLBACK)))
     fused = [f.name for f in FUSED_RESULT_TYPE.fields]
     replaced = {"html", "text", "_d", *fused}
     return out.select(*[c for c in df.columns if c not in replaced], "_d.*")

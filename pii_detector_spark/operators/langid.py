@@ -25,17 +25,16 @@ LANG_RESULT_TYPE = StructType(
 
 
 def _langid_batch(texts: pd.Series) -> pd.DataFrame:
-    from pii_detector_spark.functions.langmodels import lang_and_perplexity
+    from pii_detector_spark.functions.langmodels import (
+        lang_and_perplexity_batch,
+    )
 
-    langs: list[str] = []
-    ppls: list[float] = []
-    for t in texts:
-        lang, p = lang_and_perplexity(t or "")
-        langs.append(lang)
-        # Arrow chokes on inf in some writers; cap to a large sentinel that
-        # still fails every threshold
-        ppls.append(min(p, 1e9))
-    return pd.DataFrame({"lang_pred": langs, "perplexity": ppls})
+    langs, ppls = lang_and_perplexity_batch([t or "" for t in texts])
+    # Arrow chokes on inf in some writers; cap to a large sentinel that
+    # still fails every threshold
+    return pd.DataFrame(
+        {"lang_pred": langs, "perplexity": [min(p, 1e9) for p in ppls]}
+    )
 
 
 # nondeterministic marker keeps the UDF as its own projection layer (stops

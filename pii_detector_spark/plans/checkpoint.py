@@ -85,13 +85,10 @@ def anti_join_completed(
     """Drop urls already SCANNED with the current pattern version."""
     if lineage is None:
         return df
-    done = (
-        lineage.filter(
-            (F.col("status") == "SCANNED")
-            & (F.col("pattern_version") == pattern_version)
-        )
-        .select(F.col("url").alias(url_col))
-    )
+    # SQL text: two py4j calls, where Column operators cost one each
+    done = lineage.filter(
+        f"status = 'SCANNED' AND pattern_version = {int(pattern_version)}"
+    ).selectExpr(f"url AS `{url_col}`")
     # No distinct(): a left-anti join's result does not depend on duplicate
     # right-side keys, and deduping first would add an exchange and two
     # aggregations ahead of the join on every resume run.

@@ -15,8 +15,9 @@ exclusion (``app/services/s3_service.py:114,251-261``), F9 empty guard
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     StringType,
@@ -50,14 +51,27 @@ def read_web_pages(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(WEB_PAGES_SCHEMA).parquet(path)
 
 
+def _sql_string(s: str) -> str:
+    """``s`` as a SQL string expression that reads the same whatever
+    ``spark.sql.parser.escapedStringLiterals`` says: its backslashes and
+    quotes go in as ``chr()`` calls, so no literal holds an escape.  It
+    folds to one literal at optimization."""
+    parts = [p for p in re.split(r"(['\\])", s) if p]
+    return "concat({})".format(
+        ", ".join(
+            f"chr({ord(p)})" if p in ("'", "\\") else f"'{p}'" for p in parts
+        )
+    )
+
+
 def apply_prefilters(df: DataFrame, max_html_bytes: int = MAX_HTML_BYTES) -> DataFrame:
     """Object-level filters the reference applies before scanning. These are
-    plain predicates → Catalyst pushes them into the scan."""
-    return (
-        df.filter(~F.col("url").rlike(BLOCKED_EXT_RX))
-        .filter(~F.col("url").rlike(LOG_PATH_RX))
-        .filter(F.col("html").isNotNull() | F.col("text").isNotNull())
-        .filter(
-            F.col("html").isNull() | (F.length(F.col("html")) <= max_html_bytes)
-        )
+    plain predicates → Catalyst pushes them into the scan.  One SQL
+    predicate, parsed in one py4j call: built from Column operators it
+    costs one round trip (~1 ms) per operator."""
+    return df.filter(
+        f"url NOT RLIKE {_sql_string(BLOCKED_EXT_RX)}"
+        f" AND url NOT RLIKE {_sql_string(LOG_PATH_RX)}"
+        " AND (html IS NOT NULL OR text IS NOT NULL)"
+        f" AND (html IS NULL OR length(html) <= {int(max_html_bytes)})"
     )

@@ -221,3 +221,111 @@ def test_with_word_perplexity_column(spark):
     want = word_perplexity("the quick brown fox jumps over the lazy dog")
     assert abs(got[1] - want) < 1e-9
     assert got[2] == 1e9  # null text → capped sentinel
+
+
+# one batch that crosses every edge of the batch scorer: empty and tiny
+# docs (no perplexity, 'unk'), whitespace only, lone surrogates, 'İ'
+# (lowers to two code points) at the 2,000-char cut, non-ASCII decimal
+# digits, a doc over the cut and one over a whole scoring slice
+_EDGE_DOCS = [
+    "",
+    "a",
+    "ab",
+    "abcd",
+    "abcde",
+    "   ",
+    "\t \n\x0b",
+    "İ",
+    "lone \ud800 surrogates \udfff here ?",
+    "x" * 1999 + "İ" + "tail of the doc",
+    "İ" * 2500,
+    "٣ ४ ٣٤٥ digits ४५६ 12 and the rest of it",
+    "the quick brown fox " * 150,
+    "der alte mann und das meer " * 6000,
+    "\ud800",
+    "ok",
+]
+
+
+def test_batch_scorer_equals_one_doc_calls():
+    from pii_detector_spark.functions.langmodels import (
+        SLICE_CODEPOINTS,
+        lang_and_perplexity,
+        lang_and_perplexity_batch,
+        perplexity,
+    )
+
+    assert max(map(len, _EDGE_DOCS)) > SLICE_CODEPOINTS
+    langs, ppls = lang_and_perplexity_batch(_EDGE_DOCS)
+    for d, lang, ppl in zip(_EDGE_DOCS, langs, ppls):
+        want = (predict_lang(d), perplexity(d))
+        assert (lang, repr(ppl)) == (want[0], repr(want[1])), repr(d[:30])
+        assert lang_and_perplexity(d) == (lang, ppl)
+        assert lang == _predict_lang_naive(d), repr(d[:30])
+
+
+def test_digit_fold_is_the_decimal_code_points():
+    """``_batch_tables`` folds ``codepoints_left(r"\\D+")`` into '0': that
+    must be exactly the code points ``\\d`` matches, ``str.isdecimal``."""
+    from pii_detector_spark.functions.langmodels import codepoints_left
+
+    want = [cp for cp in range(0x110000) if chr(cp).isdecimal()]
+    assert codepoints_left(r"\D+").tolist() == want
+
+
+def test_langid_documents_values_match_dict_path(spark):
+    """The declared ``langid_documents`` query at sf0.01, value by value:
+    every ``lang_pred`` equals the per-trigram dict loop's, and every
+    rounded perplexity the sequential dict-get chain's (the two sums
+    differ only in float order, far below the 4th decimal)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from __spark_entry__ import q_langid_documents
+    from tests.test_bpe import SF as SF_SMALL
+
+    sf = os.path.join(os.path.dirname(SF_SMALL), "sf0.01")
+    texts = dict(
+        zip(
+            *pq.read_table(
+                f"{sf}/documents.parquet", columns=["doc_id", "text"]
+            ).to_pydict().values()
+        )
+    )
+    rows = q_langid_documents(spark, sf).collect()
+    assert len(rows) == len(texts) > 0
+    for r in rows:
+        text = texts[r["doc_id"]] or ""
+        assert r["lang_pred"] == _predict_lang_naive(text), r["doc_id"]
+        want = min(_perplexity_naive(text), 1e9)
+        assert abs(r["perplexity"] - want) <= 0.5e-4 + 1e-9 * want, r["doc_id"]
+
+
+def test_batch_scoring_memory_is_bounded_by_the_slice():
+    """200 docs of 100 KB among small ones: the scorers' temporaries are
+    bounded by a slice's code points (about 120 B each at most), not by
+    the batch's 20 MB of text, which one whole-batch pass would turn into
+    hundreds of MB."""
+    import tracemalloc
+
+    from pii_detector_spark.functions.langmodels import (
+        SLICE_CODEPOINTS,
+        lang_and_perplexity_batch,
+    )
+    from pii_detector_spark.operators.fused import _word_char_stats_batch
+
+    big = ("the quick brown fox jumps over the lazy dog " * 2400)[:100_000]
+    texts = []
+    for i in range(200):
+        texts += [f"{i} {big}", "a short one", ""]
+    lang_and_perplexity_batch(texts[:3])  # tables built outside the trace
+    _word_char_stats_batch(texts[:3])
+    tracemalloc.start()
+    try:
+        lang_and_perplexity_batch(texts)
+        _word_char_stats_batch(texts)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 120 * SLICE_CODEPOINTS, peak

@@ -1503,3 +1503,53 @@ def test_job_cli_dsir_ppl_semdedup_expire(
 
     assert S.current_snapshot_id(out) == 1
     assert S.snapshot_log(out)[-1].run_ids == ("dsr1",)
+
+
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_prefilters_under_both_string_literal_modes(spark, escaped):
+    """``apply_prefilters`` is SQL text with the two url regexes in it; it
+    must keep and drop the same rows whether or not
+    ``spark.sql.parser.escapedStringLiterals`` is on (a backslash in a
+    literal reads differently in the two modes)."""
+    import re
+
+    from pii_detector_spark.sources.web_pages import (
+        BLOCKED_EXT_RX,
+        LOG_PATH_RX,
+        WEB_PAGES_SCHEMA,
+        apply_prefilters,
+    )
+
+    urls = [
+        "https://a.test/x.PNG",
+        "https://a.test/x.tar.gz",
+        "https://a.test/xpng",  # no dot: the escaped '.' must stay literal
+        "https://a.test/x.png/page",
+        "https://a.test/it's\\.jpeg",
+        "https://a.test/VPCFlowLogs/1",
+        "https://a.test/cloudtrail",
+        "https://a.test/my-log.html",
+        "https://a.test/ok.html",
+    ]
+    rows = [(u, None, None, "body", None) for u in urls] + [
+        ("https://a.test/none", None, None, None, None),
+        ("https://a.test/big", None, b"x" * 9, None, None),
+        ("https://a.test/small", None, b"x" * 8, None, None),
+    ]
+    df = spark.createDataFrame(rows, WEB_PAGES_SCHEMA)
+    prev = spark.conf.get("spark.sql.parser.escapedStringLiterals")
+    try:
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", escaped)
+        kept = {r["url"] for r in apply_prefilters(df, 8).collect()}
+    finally:
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", prev)
+    want = {
+        u for u in urls
+        if not re.search(BLOCKED_EXT_RX, u) and not re.search(LOG_PATH_RX, u)
+    }
+    assert want == {
+        "https://a.test/xpng",
+        "https://a.test/x.png/page",
+        "https://a.test/ok.html",
+    }
+    assert kept == want | {"https://a.test/small"}

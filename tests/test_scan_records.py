@@ -277,3 +277,34 @@ def test_input_dir_with_space_and_percent(spark, parts, tmp_path_factory):
     res = run_pipeline(spark, str(src), out, run_id="s3")
     assert (res.input_files, res.input_files_skipped) == (0, 2)
     assert res.docs_written == 0
+
+
+def test_covered_files_with_quote_backslash_percent_and_space(
+    spark, parts, tmp_path_factory
+):
+    """The skip filter ships the covered paths as data, not SQL text: file
+    names with a quote, a backslash, a percent sign and spaces are pruned
+    exactly, and the tables equal those of a resume that reads every
+    file."""
+    src = tmp_path_factory.mktemp("cover_quote") / "src"
+    src.mkdir()
+    covered = {"a": "it's a.parquet", "b": "back\\slash 5%.parquet"}
+    for part, name in covered.items():
+        shutil.copy(parts[part], src / name)
+    out = str(tmp_path_factory.mktemp("cover_quote_out"))
+    res = run_pipeline(spark, str(src), out, run_id="q1")
+    assert (res.input_files, res.input_files_skipped) == (2, 0)
+    shutil.copy(parts["c"], src / "new 'c' \\ 1%.parquet")
+
+    ref = str(tmp_path_factory.mktemp("cover_quote_ref") / "out")
+    shutil.copytree(out, ref)
+    tables.drop_scan_records(ref)
+    full = run_pipeline(spark, str(src), ref, run_id="q2")
+    assert (full.input_files, full.input_files_skipped) == (3, 0)
+
+    for name in covered.values():  # a read of a covered file now fails
+        _overwrite_keeping_stamp(src / name)
+    res = run_pipeline(spark, str(src), out, run_id="q2")
+    assert (res.input_files, res.input_files_skipped) == (1, 2)
+    assert res.docs_written == full.docs_written > 0
+    assert _tables(spark, out) == _tables(spark, ref)
