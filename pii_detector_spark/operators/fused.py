@@ -2,11 +2,11 @@
 
 One row loop (``fused_columns``) computes, per document: HTML text
 extraction, quality metrics, language-ID + perplexity, the
-first-failing-rule keep/drop decision, and the gated PII scrub.  A
-pipeline run calls it inside its write task's ``mapInArrow``, which also
-writes the files; ``with_fused_processing`` wraps the same loop in an
-Arrow-batched pandas UDF for plans that want the columns.  Rationale at
-scale:
+first-failing-rule keep/drop decision, and the gated PII scrub.  Both
+plans run it per Arrow batch inside one ``mapInArrow``
+(``plans/pipeline.py``'s ``_page_processor``): a pipeline run's write
+tasks, which also write the files, and ``transform_web_pages``, which
+returns the docs columns.  Rationale at scale:
 
 * one JVM→Python trip per batch for the whole chain (the text column is
   the wide payload; shipping it across Arrow once matters), and in a run
@@ -31,9 +31,6 @@ import hashlib
 import re
 from functools import lru_cache
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -245,9 +242,9 @@ def process_document(url: str, text: str, t: QualityThresholds) -> dict:
     return {k: v[0] for k, v in fused_columns([url], [None], [text], t).items()}
 
 
-# NOTE: the extracted text itself is deliberately NOT in the result struct:
-# a UDF's output struct is Arrow-serialized whole (Catalyst cannot prune
-# struct fields out of a Python runner), and no sink consumes the raw text —
+# NOTE: the extracted text itself is deliberately NOT a result column: a
+# Python pass's output is Arrow-serialized whole (Catalyst cannot prune
+# columns out of a Python runner), and no sink consumes the raw text —
 # content_md5 and scrubbed_text carry everything downstream needs.
 FUSED_RESULT_TYPE = StructType(
     [
@@ -277,9 +274,9 @@ FUSED_RESULT_TYPE = StructType(
 
 def fused_columns(urls, htmls, texts, thresholds: QualityThresholds) -> dict:
     """The row loop of every fused pass: one list per
-    ``FUSED_RESULT_TYPE`` field (columnar assembly; pandas row-dict
-    inference costs ~20% of a batch at this width).  A row's text is its
-    extracted html, or its ``text`` when the html is null.  Language,
+    ``FUSED_RESULT_TYPE`` field, each of which becomes one Arrow array
+    (columnar assembly; row dicts cost more at this width).  A row's text
+    is its extracted html, or its ``text`` when the html is null.  Language,
     perplexity and the word statistics are computed for the whole batch
     first (one numpy pass each, not ~15 small calls per document)."""
     docs = [
@@ -297,39 +294,3 @@ def fused_columns(urls, htmls, texts, thresholds: QualityThresholds) -> dict:
         for n in names:
             cols[n].append(d[n])
     return cols
-
-
-# The ``text`` argument of a fused pass: ``text`` only where ``html`` is
-# null.  The pass reads text ONLY then, so the redundant copy never crosses
-# the Arrow boundary (guide §4.1: control the columns, and the bytes, that
-# cross).  SQL text, so building it is one py4j call.
-TEXT_FALLBACK = "CASE WHEN html IS NULL THEN text END AS text"
-
-
-def make_fused_udf(thresholds: QualityThresholds):
-    """Build the fused UDF.  The thresholds ship in its closure; the regex
-    battery and language models are module-level ``lru_cache`` artifacts
-    that compile lazily once per executor Python worker."""
-
-    def _fused_batch(
-        urls: pd.Series, htmls: pd.Series, texts: pd.Series
-    ) -> pd.DataFrame:
-        return pd.DataFrame(fused_columns(urls, htmls, texts, thresholds))
-
-    return F.pandas_udf(_fused_batch, returnType=FUSED_RESULT_TYPE).asNondeterministic()
-
-
-def with_fused_processing(
-    df: DataFrame, thresholds: QualityThresholds | None = None
-) -> DataFrame:
-    """Attach every pipeline output column in one UDF pass. Expects
-    (url, html, text) columns; html may be null (text fallback)."""
-    udf = make_fused_udf(thresholds or QualityThresholds())
-    # ONE projection: each withColumn would re-run the analyzer over the
-    # whole plan, 20 times per run; and "_d.*" expands the struct's fields
-    # in order on the JVM side, where 20 aliased Columns each cost a py4j
-    # round trip
-    out = df.withColumn("_d", udf(F.col("url"), F.col("html"), F.expr(TEXT_FALLBACK)))
-    fused = [f.name for f in FUSED_RESULT_TYPE.fields]
-    replaced = {"html", "text", "_d", *fused}
-    return out.select(*[c for c in df.columns if c not in replaced], "_d.*")

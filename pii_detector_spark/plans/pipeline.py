@@ -53,19 +53,20 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import _parse_datatype_string
+from pyspark.sql.types import (
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+    _parse_datatype_string,
+)
 
 from pii_detector_spark.config import (
     DEFAULT_CONFIG,
     EngineConfig,
     QualityThresholds,
 )
-from pii_detector_spark.operators.fused import (
-    FUSED_RESULT_TYPE,
-    TEXT_FALLBACK,
-    fused_columns,
-    with_fused_processing,
-)
+from pii_detector_spark.operators.fused import FUSED_RESULT_TYPE, fused_columns
 from pii_detector_spark.operators.scrub import findings_table
 from pii_detector_spark.plans import checkpoint, tables
 from pii_detector_spark.plans.snapshots import (
@@ -123,30 +124,48 @@ def transform_web_pages(
     extract_html: bool = True,
     prefilter: bool = True,
 ) -> DataFrame:
-    """The full logical plan, scan → scrub, as a reusable transformation.
+    """The full logical plan, scan → scrub, as a reusable transformation:
+    the docs table's columns without ``run_id`` (``DOC_COLUMNS`` plus
+    ``findings``).
 
     The whole per-document chain (extract → metrics → langid → decide →
-    gated scrub) runs as ONE fused pandas UDF (``operators/fused.py``): one
-    Arrow round trip and one Python worker per task for the whole chain.
-    ``run_pipeline`` runs the same row loop inside its write tasks instead
-    (``_page_processor``), so its output never re-enters the JVM.
-    The per-stage operators (``operators/langid.py``,
-    ``operators/scrub.py``, ``operators/quality.py``) serve the declared
-    queries in ``__spark_entry__.py``, not this plan.
-    ``extract_html=False`` skips HTML extraction by nulling the html column
-    (the fused UDF falls back to the text column).
+    gated scrub) runs as ONE ``mapInArrow`` over the pages, the same
+    per-batch step ``run_pipeline``'s write tasks run
+    (``_page_processor``): one Arrow round trip and one Python worker per
+    task for the whole chain.  The per-stage operators
+    (``operators/langid.py``, ``operators/scrub.py``,
+    ``operators/quality.py``) serve the declared queries in
+    ``__spark_entry__.py``, not this plan.  ``extract_html=False`` skips
+    HTML extraction (the pass reads the text column).
     """
     if prefilter:
         df = apply_prefilters(df)
-    return with_fused_processing(_gate_html(df, extract_html), config.quality)
+    return _fused_input(df, extract_html).mapInArrow(
+        _docs_batches(_page_processor(config.quality)), _docs_schema()
+    )
 
 
-def _gate_html(df: DataFrame, extract_html: bool) -> DataFrame:
-    """``extract_html=False`` nulls the html column, so a fused pass falls
-    back to the text column."""
+def _fused_input(df: DataFrame, extract_html: bool) -> DataFrame:
+    """A fused pass's input: (url, warc_ts, lang, html, text only where
+    html is null).  The pass reads text ONLY then, so the redundant copy
+    never crosses the Arrow boundary (guide §4.1: control the columns, and
+    the bytes, that cross).  ``extract_html=False`` nulls html, so the
+    pass reads text.  SQL text, so building it is one py4j call."""
     if extract_html:
-        return df
-    return df.withColumn("html", F.expr("CAST(NULL AS BINARY)"))
+        html, text = "html", "CASE WHEN html IS NULL THEN text END AS text"
+    else:
+        html, text = "CAST(NULL AS BINARY) AS html", "text"
+    return df.selectExpr("url", "warc_ts", "lang", html, text)
+
+
+def _docs_schema():
+    """The docs table's columns without ``run_id`` (``DOC_COLUMNS`` plus
+    ``findings``) and their types: what a fused pass returns."""
+    types = {f.name: f.dataType for f in FUSED_RESULT_TYPE.fields}
+    types.update(url=StringType(), warc_ts=TimestampType(), lang=StringType())
+    return StructType(
+        [StructField(c, types[c]) for c in (*DOC_COLUMNS, "findings")]
+    )
 
 
 def docs_table_schema():
@@ -154,24 +173,9 @@ def docs_table_schema():
     findings). Every re-read of the partitioned docs table MUST pass this:
     runs that wrote no rows leave a docs dir with no data files, and
     schema inference then fails with UNABLE_TO_INFER_SCHEMA."""
-    from pyspark.sql.types import (
-        StructField,
-        StructType,
-        StringType,
-        TimestampType,
+    return StructType(
+        [StructField("run_id", StringType()), *_docs_schema().fields]
     )
-
-    fused = {f.name: f.dataType for f in FUSED_RESULT_TYPE.fields}
-    base = {
-        "url": StringType(),
-        "warc_ts": TimestampType(),
-        "lang": StringType(),
-    }
-    fields = [StructField("run_id", StringType())]
-    for c in DOC_COLUMNS:
-        fields.append(StructField(c, fused.get(c) or base[c]))
-    fields.append(StructField("findings", fused["findings"]))
-    return StructType(fields)
 
 
 def read_docs_table(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -305,6 +309,18 @@ def _page_processor(thresholds: QualityThresholds):
     return to_docs
 
 
+def _docs_batches(to_docs):
+    """A ``mapInArrow`` body: each Arrow batch turned into docs
+    (``to_docs``) and cast to the Arrow form of ``_docs_schema``."""
+    schema = to_arrow_schema(_docs_schema())
+
+    def docs_batches(batches):
+        for batch in batches:
+            yield to_docs(batch).cast(schema)
+
+    return docs_batches
+
+
 def _sink_writer(
     spark: SparkSession,
     staging: str,
@@ -313,13 +329,11 @@ def _sink_writer(
     to_docs=_fused_docs,
 ):
     """The ``mapInArrow`` body of a run's write job.  Each task turns its
-    Arrow batches into docs batches (``to_docs``; already-fused docs by
-    default), casts them to the docs table's Arrow schema and streams them
-    into one staged docs, findings and lineage file apiece (a file opens
-    on its first row), counts its metrics on the way, and returns one
-    summary row."""
-    docs_schema = to_arrow_schema(docs_table_schema())
-    docs_schema = docs_schema.remove(docs_schema.get_field_index("run_id"))
+    Arrow batches into docs batches (``_docs_batches`` over ``to_docs``;
+    already-fused docs by default) and streams them into one staged docs,
+    findings and lineage file apiece (a file opens on its first row),
+    counts its metrics on the way, and returns one summary row."""
+    docs_batches = _docs_batches(to_docs)
     summary_schema = to_arrow_schema(_parse_datatype_string(SUMMARY_SCHEMA))
     options = _parquet_options(spark)
 
@@ -347,8 +361,7 @@ def _sink_writer(
             writers[table].write_batch(batch)
 
         try:
-            for batch in batches:
-                docs = to_docs(batch).cast(docs_schema)
+            for docs in docs_batches(batches):
                 findings = findings_table(docs)
                 emit("docs", docs)
                 emit("findings", findings)
@@ -739,8 +752,8 @@ def run_pipeline(
     ``dedup_near=True`` runs the keep-one near-dup pass AFTER the docs sink
     (MinHash-LSH pairs over scrubbed_text → connected components →
     canonical per cluster, ``operators/clusters.py``) over a cheap columnar
-    re-read — the fused UDF never re-runs — and writes two additive tables:
-    ``docs_deduped`` (kept docs only, same schema) and ``neardup``
+    re-read — the fused row loop never re-runs — and writes two additive
+    tables: ``docs_deduped`` (kept docs only, same schema) and ``neardup``
     (url, component, is_canonical). The primary ``docs`` table is left
     complete so downstream consumers choose raw vs deduped.
 
@@ -792,13 +805,12 @@ def run_pipeline(
                 pending, lineage, config.pattern_version
             )
 
-        pending = _gate_html(pending, extract_html)
         # the run's one write job: its tasks run the fused row loop over
         # the pending pages and write the results where they were
         # computed, so the output never re-enters the JVM
         n = _write_run(
             spark,
-            pending.selectExpr("url", "warc_ts", "lang", "html", TEXT_FALLBACK),
+            _fused_input(pending, extract_html),
             _page_processor(config.quality),
             output_dir,
             run_id,

@@ -4,7 +4,8 @@ Reader is plain ``spark.read.parquet`` (the Iceberg catalog swap is a format
 string change; nothing else here assumes parquet). Column pruning matters:
 ``html:binary`` dominates row width, so stages that don't need it must
 select it away *before* wide operators. Text extraction from ``html`` runs
-inside the fused document UDF (``operators/fused.py``).
+inside the fused per-batch step (``operators/fused.py``'s row loop, in
+``plans/pipeline.py``'s ``mapInArrow``).
 
 Pre-filters reproduce the reference's object filters (SURVEY.md §2.2):
 F1 extension blocklist (``app/core/config.py:98-110``), F2 log-path

@@ -87,6 +87,31 @@ def test_lang_pred_and_phi_agree(engine_rows, oracle_rows):
         assert engine_rows[url]["is_phi"] == odoc.is_phi, url
 
 
+def test_entry_matches_oracle(spark):
+    """The driver's smoke query (``__spark_entry__.entry``, sf0.001
+    documents as text-only web pages) agrees with the oracle on every url:
+    keep, drop reason, predicted language, scrubbed text and PHI flag."""
+    from __spark_entry__ import entry
+    from tests.test_bpe import SF
+
+    docs = pq.read_table(
+        f"{SF}/documents.parquet", columns=["doc_id", "text", "source"]
+    ).to_pylist()
+    want = {
+        f"https://{d['source']}.example.com/doc/{d['doc_id']}.html": d["text"]
+        for d in docs
+        if d["text"] is not None
+    }
+    rows = {r["url"]: r for r in entry(spark).collect()}
+    assert set(rows) == set(want)
+    for url, text in want.items():
+        o, e = oracle_decide(url, text), rows[url]
+        got = (e["keep"], e["drop_reason"], e["lang_pred"],
+               e["scrubbed_text"], e["is_phi"])
+        assert got == (o.keep, o.drop_reason, o.lang_pred,
+                       o.scrubbed_text, o.is_phi), url
+
+
 def test_findings_match_oracle(spark, pipeline_out, oracle_rows):
     eng = spark.read.parquet(pipeline_out.findings_path).collect()
     by_url: dict[str, list] = {}

@@ -3,7 +3,7 @@ their docs, findings and lineage files, the driver publishes exactly the
 files the tasks reported, heal removes whatever a killed run staged, the
 files read like Spark-written ones, a run's counts cover its own docs, and
 a run is one Python pass per write task whose tables equal the fused
-DataFrame's."""
+DataFrame's, which ``transform_web_pages`` builds with the same pass."""
 
 from __future__ import annotations
 
@@ -314,10 +314,9 @@ _PYTHON_NODE = re.compile(
 )
 
 
-def test_run_write_job_has_one_python_node(spark, small_src, tmp_path):
-    """The run's write job is one Python pass per task: its physical plan,
-    read from the SQL status store, holds exactly one Python node, the
-    ``MapInArrow`` writer, and no ``ArrowEvalPython``."""
+def _executed_plans(spark, action) -> list[str]:
+    """The physical plans of the SQL executions ``action()`` ran, newest
+    first, read from the SQL status store."""
     store = spark._jsparkSession.sharedState().statusStore()
 
     def executions():  # newest first; the store keeps only the latest ones
@@ -325,19 +324,46 @@ def test_run_write_job_has_one_python_node(spark, small_src, tmp_path):
         return (execs.apply(i) for i in reversed(range(execs.size())))
 
     last = next((e.executionId() for e in executions()), -1)
-    run_pipeline(spark, small_src, str(tmp_path / "out"), run_id="r")
+    action()
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     plans = []
     for e in executions():
         if e.executionId() <= last:
             break
         plans.append(e.physicalPlanDescription())
+    return plans
+
+
+def _python_nodes(plan: str) -> list[str]:
+    """The Python nodes of a plan's operator tree, top down."""
+    tree = plan.split("\n\n")[0].splitlines()
+    return [m.group(1) for ln in tree if (m := _PYTHON_NODE.match(ln))]
+
+
+def test_run_write_job_has_one_python_node(spark, small_src, tmp_path):
+    """The run's write job is one Python pass per task: its physical plan
+    holds exactly one Python node, the ``MapInArrow`` writer, and no
+    ``ArrowEvalPython``."""
+    out = str(tmp_path / "out")
+    plans = _executed_plans(
+        spark, lambda: run_pipeline(spark, small_src, out, run_id="r")
+    )
     (write_job,) = [p for p in plans if "MapInArrow" in p]
-    tree = write_job.split("\n\n")[0].splitlines()
-    nodes = [m.group(1) for ln in tree if (m := _PYTHON_NODE.match(ln))]
-    assert nodes == ["MapInArrow"], write_job
+    assert _python_nodes(write_job) == ["MapInArrow"], write_job
     assert "ArrowEvalPython" not in write_job
 
+
+def test_transform_web_pages_is_the_write_tasks_pass(spark, small_src):
+    """``transform_web_pages`` runs the write tasks' per-batch step: its
+    plan holds exactly one Python node, a ``MapInArrow``, and no
+    ``ArrowEvalPython``, and its columns are the docs table's without
+    ``run_id``, by name, type and order."""
+    df = transform_web_pages(read_web_pages(spark, small_src))
+    want = [(f.name, f.dataType) for f in docs_table_schema().fields[1:]]
+    assert [(f.name, f.dataType) for f in df.schema.fields] == want
+    (plan,) = _executed_plans(spark, df.collect)
+    assert _python_nodes(plan) == ["MapInArrow"], plan
+    assert "ArrowEvalPython" not in plan
 
 
 def test_write_task_releases_each_batch(spark, tmp_path, monkeypatch):

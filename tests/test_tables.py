@@ -144,10 +144,9 @@ def test_killed_marker_write_publishes_no_phantom_run(
 
 def test_only_tables_module_moves_or_deletes_table_files():
     """Structure pin: directory replace, file replace and tree removal go
-    through ``plans/tables.py``; the one other user is the machine-local
-    alpha-table cache in ``operators/fused.py`` (no table involved)."""
+    through ``plans/tables.py`` and nowhere else in the package."""
     pkg = Path(pii_detector_spark.__file__).parent
-    allowed = {"plans/tables.py", "operators/fused.py"}
+    allowed = {"plans/tables.py"}
     banned = re.compile(
         r"\bos\.(rename|replace)\b|\brmtree\b"
         r"|\bfrom os import\b.*\b(rename|replace)\b"
