@@ -898,14 +898,25 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = dedup.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"),
-        shingle_n=3,
-        num_hashes=12,
-        bands=4,
-        jaccard_threshold=0.5,
+    """MinHash-LSH pairs over the whole corpus: the incremental pass's
+    operators with new = all (``operators/delta_dedup.py``)."""
+    from pyspark import StorageLevel
+
+    from pii_detector_spark.operators import delta_dedup
+
+    # the signature relation feeds banding on both sides AND both verify
+    # joins: persist once, or the shingling runs once per reference
+    sig = delta_dedup.minhash_signatures(
+        _t(spark, sf_dir, "documents"), shingle_n=3, num_hashes=12
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    out = delta_dedup.minhash_pairs_delta(
+        sig, sig, num_hashes=12, bands=4, jaccard_threshold=0.5
     )
-    return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    return out.select(
+        F.col("id_a").cast("long").alias("id_a"),
+        F.col("id_b").cast("long").alias("id_b"),
+        F.round("jaccard", 6).alias("jaccard"),
+    )
 
 
 def q_minhash_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -914,7 +925,7 @@ def q_minhash_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     run-2 delta (new signatures band-joined against the FULL signature
     table, new x all — never all x all re-shingling) must equal the full
     one-shot recompute, which is exactly the ``minhash_lsh`` oracle SQL.
-    Pins ``operators/delta_dedup.py`` (pipeline flag ``--dedup-delta``)."""
+    Pins ``operators/delta_dedup.py`` (the job's ``--dedup-near`` pass)."""
     from pii_detector_spark.operators import delta_dedup
 
     docs = _t(spark, sf_dir, "documents")
@@ -923,7 +934,7 @@ def q_minhash_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     # each signature relation feeds banding AND both verify joins — persist
-    # once (the same exchange-reuse trap as minhash_lsh_pairs)
+    # once (the same exchange-reuse trap as q_minhash_lsh)
     sig_old = delta_dedup.minhash_signatures(
         old, shingle_n=3, num_hashes=12
     ).persist(StorageLevel.MEMORY_AND_DISK)

@@ -41,18 +41,15 @@ def main() -> None:
                     help="after the run, MERGE-delete rows for urls no "
                          "longer present at the source (F7 GC)")
     ap.add_argument("--dedup-near", action="store_true",
-                    help="after the run, keep-one near-dup pass over the "
-                         "docs table -> additive neardup + docs_deduped "
-                         "tables")
+                    help="after the run, incremental keep-one near-dup "
+                         "pass over the docs table -> additive neardup + "
+                         "docs_deduped tables; only docs no earlier pass "
+                         "signed are shingled, and its state is kept in "
+                         "signatures, neardup_pairs and paired_sigs")
     ap.add_argument("--dedup-max-iter", type=int, default=50,
                     help="connected-components round budget for dedup "
                          "(needs >= longest near-dup chain + 1; the loop "
                          "raises rather than return split clusters)")
-    ap.add_argument("--dedup-delta", action="store_true",
-                    help="incremental near-dup: shingle/minhash only THIS "
-                         "run's docs and band-join against the persisted "
-                         "signatures table (new x all); same outputs as "
-                         "--dedup-near, ~delta-sized work on reruns")
     ap.add_argument("--decontaminate-against", default=None,
                     help="parquet path of benchmark/eval texts (column "
                          "'text'); writes a 'contamination' table flagging "
@@ -210,7 +207,6 @@ def main() -> None:
         extract_html=not args.no_html,
         gc_deleted=args.gc_deleted,
         dedup_near=args.dedup_near,
-        dedup_delta=args.dedup_delta,
         dedup_max_iter=args.dedup_max_iter,
         heartbeat_interval_s=args.heartbeat,
     )

@@ -2,10 +2,10 @@
 one canonical document per cluster.
 
 The missing last mile after minhash/simhash/ngram/embedding pair emission
-(``operators/dedup.py``, ``operators/similarity.py``): a training-data
-pipeline keeps ONE representative per duplicate cluster, and clusters are
-the transitive closure of the pair graph (A~B, B~C ⇒ {A,B,C} even when
-A≁C directly).
+(``operators/delta_dedup.py``, ``operators/dedup.py``,
+``operators/similarity.py``): a training-data pipeline keeps ONE
+representative per duplicate cluster, and clusters are the transitive
+closure of the pair graph (A~B, B~C ⇒ {A,B,C} even when A≁C directly).
 
 Spark-first shape — large-star/small-star alternation in pure DataFrame
 ops (the public CC-in-MapReduce construction, Kiveris et al.'s
@@ -228,59 +228,3 @@ def canonicalize(
         "is_canonical", F.row_number().over(w) == 1
     )
 
-
-def mark_near_duplicate_docs(
-    docs: DataFrame,
-    url_col: str = "url",
-    text_col: str = "scrubbed_text",
-    prefer_col: str | None = None,
-    shingle_n: int = 5,
-    threshold: float = 0.7,
-    max_iter: int = 20,
-) -> DataFrame:
-    """URL-keyed docs + (component, is_canonical): MinHash-LSH pairs →
-    connected components → canonical per cluster.
-
-    The dedup operators key on LONG ids; urls bridge through a dense
-    surrogate-id mapping (``monotonically_increasing_id``, snapshot via
-    ``localCheckpoint`` because the function is nondeterministic across
-    re-evaluations). The mapping is (url, long) only — never text — and the
-    clusters step itself is id-type-agnostic, so at 10^12 urls this adds
-    one metadata-width shuffle each way, no collision risk (a 64-bit HASH
-    surrogate would collide ~10^4 times at that scale and silently merge
-    unrelated docs).
-    """
-    from pii_detector_spark.operators.dedup import minhash_lsh_pairs
-
-    mapping = (
-        docs.select(F.col(url_col).alias("_url"))
-        .distinct()
-        .withColumn("_nid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
-    )
-    with_ids = docs.join(
-        mapping, docs[url_col] == mapping["_url"], "inner"
-    ).drop("_url")
-    pairs = minhash_lsh_pairs(
-        with_ids.select(F.col("_nid").alias("doc_id"), text_col),
-        id_col="doc_id",
-        text_col=text_col,
-        shingle_n=shingle_n,
-        jaccard_threshold=threshold,
-    )
-    a = mapping.select(
-        F.col("_nid").alias("id_a"), F.col("_url").alias("url_a")
-    )
-    b = mapping.select(
-        F.col("_nid").alias("id_b"), F.col("_url").alias("url_b")
-    )
-    url_pairs = pairs.join(a, "id_a").join(b, "id_b").select("url_a", "url_b")
-    return canonicalize(
-        docs,
-        url_pairs,
-        id_col=url_col,
-        id_a="url_a",
-        id_b="url_b",
-        prefer_col=prefer_col,
-        max_iter=max_iter,
-    )

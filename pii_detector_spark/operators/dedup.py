@@ -8,11 +8,8 @@ Scale notes per operator:
 
 * exact_dedup      — one shuffle on the 32-char digest; partial agg makes
                      the hot side tiny.
-* shingle/minhash  — pure per-row expressions (no shuffle) until the band
-                     join; signatures are k×32 bytes per doc, not the text.
-* LSH band join    — self-join on (band_id, band_key); key cardinality ≈
-                     corpus size × bands, uniform by construction (md5), so
-                     no skew; AQE handles residual imbalance.
+* shingles         — pure per-row expressions (no shuffle); MinHash-LSH
+                     over them lives in ``operators/delta_dedup.py``.
 * ngram-jaccard    — explode + equi-join on shingle hash; the candidate
                      generator is bounded by shared-shingle frequency: a
                      stopword-only shingle would explode the join, so
@@ -87,116 +84,6 @@ def exact_dedup(
             F.count(F.lit(1)).alias("dup_count"),
         )
     )
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 5,
-    num_hashes: int = 12,
-    bands: int = 4,
-    jaccard_threshold: float = 0.5,
-    persist_signatures: bool = True,
-) -> DataFrame:
-    """Near-duplicate pairs via MinHash + banded LSH + exact-Jaccard verify.
-
-    Plan shape: per-row signature expressions → explode to (band_key, id)
-    → self equi-join on band → distinct candidate pairs → verify with true
-    Jaccard over shingle sets. Only candidate pairs ever join the (small)
-    shingle arrays back — at 10^12 docs the band join moves signatures, not
-    documents.
-
-    ``persist_signatures``: the band self-join references the signature
-    relation on both sides, and Catalyst does not reuse the exchange across
-    the differing projections — unpersisted, the whole shingle+minhash
-    computation runs TWICE (measured 2x end-to-end). MEMORY_AND_DISK
-    persist caches it once per job; storage is (num_hashes x 32 B + the
-    shingle set) per doc and spills to disk at corpus scale. Pass False to
-    trade recompute for zero cache footprint; the cached relation is
-    evicted LRU or via ``spark.catalog.clearCache()``.
-    """
-    rows = bands
-    per_band = num_hashes // bands
-    base = (
-        _slim_docs(df, id_col, text_col)
-        .select("doc_id", shingles_col(shingle_n, "_text").alias("shingles"))
-        .filter(F.size("shingles") > 0)
-    )
-    # signatures from the exploded relation: the shingle construction runs
-    # exactly once, and the k min-aggregates are a single whole-stage-codegen
-    # pass with map-side partial aggregation (vs k× interpreted array scans
-    # when expressed as per-row array expressions — CollapseProject inlines
-    # the shingling into every one of them). collect_set carries the shingle
-    # set through the same shuffle for the exact-Jaccard verify step.
-    ex = base.select("doc_id", F.explode("shingles").alias("s"))
-    sig = ex.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"mh_{i}")
-            for i in range(num_hashes)
-        ],
-        F.collect_set("s").alias("shingles"),
-    )
-    if persist_signatures:
-        from pyspark import StorageLevel
-
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(
-                F.concat_ws(
-                    "|", *[F.col(f"mh_{b * per_band + j}") for j in range(per_band)]
-                )
-            ).alias("band_key"),
-        )
-        for b in range(rows)
-    ]
-    # band join on NARROW rows only (doc_id + 2 keys): the shingle sets are
-    # re-attached to the (small) candidate-pair relation afterwards, so the
-    # band self-join never shuffles payload arrays — previously the left
-    # side carried the shingle set through the exchange once per band
-    # (guide §2.3/§8: shuffle keys and metadata, attach payloads once)
-    banded = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("band")
-    ).select("doc_id", "band.band_id", "band.band_key")
-
-    left = banded.alias("a")
-    right = banded.alias("b")
-    cand = (
-        left.join(
-            right,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sh_a = sig.select(
-        F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")
-    )
-    sh = sig.select(
-        F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b")
-    )
-    verified = (
-        cand.join(sh_a, "id_a")
-        .join(sh, "id_b")
-        .withColumn(
-            "intersect_n", F.size(F.array_intersect("sh_a", "sh_b"))
-        )
-        .withColumn(
-            "union_n",
-            F.size("sh_a") + F.size("sh_b") - F.col("intersect_n"),
-        )
-        .withColumn("jaccard", F.col("intersect_n") / F.col("union_n"))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
-    return verified.select("id_a", "id_b", "jaccard")
 
 
 def ngram_jaccard_pairs(

@@ -66,6 +66,7 @@ from pii_detector_spark.config import (
     EngineConfig,
     QualityThresholds,
 )
+from pii_detector_spark.operators.delta_dedup import incremental_near_dedup
 from pii_detector_spark.operators.fused import FUSED_RESULT_TYPE, fused_columns
 from pii_detector_spark.operators.scrub import findings_table
 from pii_detector_spark.plans import checkpoint, tables
@@ -456,223 +457,6 @@ def write_run_outputs(
     )
 
 
-def _sig_ddl(num_hashes: int) -> str:
-    mh = ", ".join(f"mh_{i} STRING" for i in range(num_hashes))
-    return (
-        f"doc_id STRING, {mh}, shingle_hashes ARRAY<BIGINT>, "
-        "content_md5 STRING, run_id STRING"
-    )
-
-
-_PAIRS_DDL = (
-    "id_a STRING, id_b STRING, jaccard DOUBLE, md5_a STRING, md5_b STRING, "
-    "run_id STRING"
-)
-
-
-_PAIRED_DDL = "url STRING, content_md5 STRING"
-
-
-def _read_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
-    if os.path.isdir(path):
-        return spark.read.schema(ddl).parquet(path)
-    return spark.createDataFrame([], ddl)
-
-
-def incremental_near_dedup(
-    spark: SparkSession,
-    output_dir: str,
-    run_id: str,
-    text_col: str = "scrubbed_text",
-    shingle_n: int = 5,
-    threshold: float = 0.7,
-    num_hashes: int = 12,
-    bands: int = 4,
-    max_iter: int = 50,
-) -> None:
-    """Delta-mode keep-one near-dedup: shingle/minhash ONLY the docs with
-    no CONTENT-VALID signature (anti-join against the signature table
-    keyed on (url, content_md5) — this run's docs, pre-flag backlog, and
-    any doc whose content changed since it was signed), band-join them
-    against the stored signatures (new x all, never all x all
-    re-shingling), append the new pairs, and rebuild components/canonical
-    from the accumulated (metadata-sized) pair set. The url-keyed
-    anti-join is the same cost class as the resume anti-join the pipeline
-    already pays.
-
-    Tables under ``output_dir``:
-
-    * ``signatures``   — append-only (doc_id=url, mh_*, shingle_hashes,
-                         content_md5, run_id). Zero-shingle docs (dropped
-                         or too short) get TOMBSTONE rows (empty hash set)
-                         so the unsigned backlog stays O(delta) instead of
-                         re-shingling them every run. Rows whose
-                         content_md5 no longer matches the docs table are
-                         ignored on read (staleness by construction).
-    * ``neardup_pairs`` — append-only (id_a, id_b, jaccard, md5_a, md5_b,
-                         run_id); on read, pairs with a stale endpoint are
-                         filtered out, and re-signed docs contribute fresh
-                         new x all pairs — so the live pair set equals full
-                         recompute exactly.
-    * ``paired_sigs``  — the PAIRING-COVERAGE snapshot: the (url,
-                         content_md5) set that was visible when pairs were
-                         last successfully rebuilt, swap-replaced (crash-
-                         safe) at the END of each run. A valid signature
-                         absent from the snapshot — newly signed, signed
-                         during a crash window, or INVISIBLE at the last
-                         rebuild (url GC'd then resurrected; content
-                         reverted to a previously-signed version) — is
-                         re-paired new x all, so coverage is exact at
-                         per-signature granularity.
-    * ``neardup`` / ``docs_deduped`` — rewritten from the pair set, same
-                         schema/semantics as the full ``dedup_near`` path.
-
-    Crash safety: reruns re-append and every read dedupes on key; the
-    ``paired_sigs`` snapshot commits only after the pairs append and the
-    derived rewrites, so a crash anywhere in between leaves those
-    signatures uncovered and the next run recomputes their pairs
-    (identical rows, deduped on read).
-
-    Parity with ``mark_near_duplicate_docs`` (full recompute) is pinned by
-    the pipeline pytest and the ``minhash_delta`` oracle; the only
-    divergence channel is an xxhash64 shingle collision (~2^-64 per
-    shingle pair).
-
-    Assumes the docs table carries ONE content per url — the resume
-    contract guarantees it within a pattern version; after a pattern bump,
-    GC the historical rows (or use a fresh output dir) before deduping,
-    exactly as with ``dedup_near`` (both modes read the raw docs table, so
-    they stay equal either way).
-
-    Reference analogue: F8 incremental chunk recompute,
-    ``app/services/base_scan_service.py:643-731``.
-    """
-    from pii_detector_spark.operators import delta_dedup
-    from pii_detector_spark.operators.clusters import canonicalize
-
-    docs_path = os.path.join(output_dir, "docs")
-    sig_path = os.path.join(output_dir, "signatures")
-    pairs_path = os.path.join(output_dir, "neardup_pairs")
-    paired_path = os.path.join(output_dir, "paired_sigs")
-    sig_ddl = _sig_ddl(num_hashes)
-    tables.recover(paired_path)
-
-    # explicit schema: a run whose appends were all empty (e.g. every url
-    # prefiltered on a fresh output dir) leaves the partitioned docs table
-    # with no data files to infer from
-    written = read_docs_table(spark, output_dir)
-    # cur feeds ~6 joins across 4 independent actions — persist once so
-    # each action doesn't re-scan the docs table for the metadata columns
-    from pyspark import StorageLevel
-
-    cur = (
-        written.select("url", "content_md5")
-        .dropDuplicates()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cur_keyed = cur.select(F.col("url").alias("doc_id"), "content_md5")
-    try:
-
-        def valid_sigs(df: DataFrame) -> DataFrame:
-            # a signature is live iff the docs table still carries that exact
-            # (url, content) — changed/rescanned docs fall back into the
-            # unsigned backlog and stale rows become invisible
-            return df.join(
-                cur_keyed, ["doc_id", "content_md5"], "left_semi"
-            ).dropDuplicates(["doc_id"])
-
-        signed = valid_sigs(_read_or_empty(spark, sig_path, sig_ddl))
-        new_docs = written.join(
-            signed.select(F.col("doc_id").alias("url")), "url", "left_anti"
-        )
-        sig_real = delta_dedup.minhash_signatures(
-            new_docs,
-            id_col="url",
-            text_col=text_col,
-            shingle_n=shingle_n,
-            num_hashes=num_hashes,
-        ).join(cur_keyed, "doc_id")
-        # tombstones for zero-shingle docs: signed-with-empty-set, never banded
-        tomb = (
-            new_docs.join(
-                sig_real.select(F.col("doc_id").alias("url")), "url", "left_anti"
-            )
-            .select(
-                F.col("url").alias("doc_id"),
-                *[
-                    F.lit(None).cast("string").alias(f"mh_{i}")
-                    for i in range(num_hashes)
-                ],
-                F.array().cast("array<long>").alias("shingle_hashes"),
-                "content_md5",
-            )
-            .dropDuplicates(["doc_id"])
-        )
-        sig_real.unionByName(tomb).withColumn(
-            "run_id", F.lit(run_id)
-        ).write.mode("append").partitionBy("run_id").parquet(sig_path)
-
-        # pairing coverage at per-signature granularity: any valid signature
-        # absent from the last successful run's paired_sigs snapshot needs its
-        # new x all pairs — newly signed, signed during a crash window, or
-        # invisible at the last rebuild (GC'd-then-resurrected url, content
-        # reverted to a previously-signed version)
-        paired = _read_or_empty(spark, paired_path, _PAIRED_DDL).select(
-            F.col("url").alias("doc_id"), "content_md5"
-        )
-        all_sigs = valid_sigs(spark.read.schema(sig_ddl).parquet(sig_path))
-        new_sigs = all_sigs.join(
-            paired, ["doc_id", "content_md5"], "left_anti"
-        )
-        pairs_delta = (
-            delta_dedup.minhash_pairs_delta(
-                all_sigs, new_sigs, num_hashes, bands, threshold
-            )
-            .join(
-                cur.select(F.col("url").alias("id_a"), F.col("content_md5").alias("md5_a")),
-                "id_a",
-            )
-            .join(
-                cur.select(F.col("url").alias("id_b"), F.col("content_md5").alias("md5_b")),
-                "id_b",
-            )
-            .withColumn("run_id", F.lit(run_id))
-        )
-        pairs_delta.write.mode("append").partitionBy("run_id").parquet(pairs_path)
-
-        # live pairs: both endpoints' content must still be current
-        all_pairs = (
-            spark.read.schema(_PAIRS_DDL)
-            .parquet(pairs_path)
-            .join(
-                cur.select(F.col("url").alias("id_a"), F.col("content_md5").alias("md5_a")),
-                ["id_a", "md5_a"],
-                "left_semi",
-            )
-            .join(
-                cur.select(F.col("url").alias("id_b"), F.col("content_md5").alias("md5_b")),
-                ["id_b", "md5_b"],
-                "left_semi",
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        marked = canonicalize(
-            written, all_pairs, id_col="url", id_a="id_a", id_b="id_b",
-            max_iter=max_iter,
-        )
-        tables.publish_near_dedup(output_dir, written, marked)
-        # commit pairing coverage LAST: the snapshot of every (url, content)
-        # visible in this successful rebuild
-        tables.replace_dir(
-            paired_path,
-            all_sigs.select(F.col("doc_id").alias("url"), "content_md5")
-            .write.mode("overwrite")
-            .parquet,
-        )
-    finally:
-        cur.unpersist()
-
-
 @dataclass
 class PipelineResult:
     docs_path: str
@@ -720,7 +504,6 @@ def run_pipeline(
     extract_html: bool = True,
     gc_deleted: bool = False,
     dedup_near: bool = False,
-    dedup_delta: bool = False,
     dedup_max_iter: int = 50,
     heartbeat_interval_s: float | None = None,
 ) -> PipelineResult:
@@ -742,20 +525,17 @@ def run_pipeline(
     url deleted at the source disappears downstream and would be rescanned
     if it ever reappears.
 
-    ``dedup_delta=True`` is the incremental variant: only THIS run's docs
-    are shingled/minhashed; their signatures append to a persisted
-    ``signatures`` table and band-join against it (new x all), so a rerun
-    with 1% new docs does ~1% of the dedup work while the final
-    ``neardup``/``docs_deduped`` tables stay byte-equal to full recompute
-    (see ``incremental_near_dedup``).
-
     ``dedup_near=True`` runs the keep-one near-dup pass AFTER the docs sink
-    (MinHash-LSH pairs over scrubbed_text → connected components →
-    canonical per cluster, ``operators/clusters.py``) over a cheap columnar
-    re-read — the fused row loop never re-runs — and writes two additive
-    tables: ``docs_deduped`` (kept docs only, same schema) and ``neardup``
-    (url, component, is_canonical). The primary ``docs`` table is left
-    complete so downstream consumers choose raw vs deduped.
+    (``operators/delta_dedup.incremental_near_dedup``: MinHash-LSH pairs
+    over scrubbed_text → connected components → min url canonical per
+    cluster) over a cheap columnar re-read — the fused row loop never
+    re-runs. Only docs not signed by an earlier pass are shingled; their
+    signatures band-join the stored ones (new x all), so a rerun with 1%
+    new docs does ~1% of the shingling. It writes ``neardup`` (url,
+    component, is_canonical) and ``docs_deduped`` (canonical docs only,
+    same schema), and keeps its state in ``signatures``,
+    ``neardup_pairs`` and ``paired_sigs``. The primary ``docs`` table is
+    left complete so downstream consumers choose raw vs deduped.
 
     ``heartbeat_interval_s`` adds the K5 instance heartbeat: a driver-side
     thread appends liveness rows to ``<output_dir>/heartbeat`` for the
@@ -835,21 +615,14 @@ def run_pipeline(
             if deleted is not None:
                 checkpoint.gc_deleted_urls(spark, output_dir, deleted)
 
-        if dedup_delta:
+        if dedup_near:
+            # explicit schema: a run whose appends were all empty (e.g.
+            # every url prefiltered on a fresh output dir) leaves the
+            # partitioned docs table with no data files to infer from
             incremental_near_dedup(
-                spark, output_dir, run_id, max_iter=dedup_max_iter
-            )
-        elif dedup_near:
-            from pii_detector_spark.operators.clusters import (
-                mark_near_duplicate_docs,
-            )
-
-            written = read_docs_table(spark, output_dir)
-            marked = mark_near_duplicate_docs(
-                written, url_col="url", text_col="scrubbed_text",
+                read_docs_table(spark, output_dir), output_dir, run_id,
                 max_iter=dedup_max_iter,
             )
-            tables.publish_near_dedup(output_dir, written, marked)
 
         return PipelineResult(
             docs_path=os.path.join(output_dir, "docs"),

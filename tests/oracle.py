@@ -251,3 +251,47 @@ def oracle_decide(
             "perplexity": ppl,
         },
     )
+
+
+def oracle_shingles(text: str | None) -> set[str]:
+    """Distinct word 5-grams of the whitespace-normalized text, each
+    joined by one space (the spec ``dedup.shingles_col`` implements)."""
+    words = [w for w in _WS.split(text or "") if w]
+    return {" ".join(words[i : i + 5]) for i in range(len(words) - 4)}
+
+
+def oracle_near_dedup(
+    texts: dict[str, str | None],
+) -> dict[str, tuple[str, bool]]:
+    """Keep-one near-dup over ``{url: scrubbed_text}``: 5-word shingles,
+    12 MinHash minima ``min(md5(f"{i}:{shingle}"))``, candidates sharing
+    any of 4 bands of 3 minima, verified at raw-shingle Jaccard ≥ 0.7;
+    clusters by union-find, the min url canonical.
+    Returns ``{url: (component, is_canonical)}``, component = min url."""
+    sh = {u: oracle_shingles(t) for u, t in texts.items()}
+    buckets: dict[tuple, list[str]] = {}
+    for u, s in sh.items():
+        if not s:
+            continue
+        mh = [
+            min(hashlib.md5(f"{i}:{x}".encode()).hexdigest() for x in s)
+            for i in range(12)
+        ]
+        for b in range(4):
+            buckets.setdefault((b, *mh[3 * b : 3 * b + 3]), []).append(u)
+
+    parent = {u: u for u in texts}
+
+    def find(u: str) -> str:
+        while parent[u] != u:
+            u = parent[u]
+        return u
+
+    for members in buckets.values():
+        for i, a in enumerate(members):
+            for b in members[i + 1 :]:
+                inter = len(sh[a] & sh[b])
+                if inter / (len(sh[a]) + len(sh[b]) - inter) >= 0.7:
+                    ra, rb = find(a), find(b)
+                    parent[max(ra, rb)] = min(ra, rb)
+    return {u: (find(u), find(u) == u) for u in texts}

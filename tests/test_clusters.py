@@ -110,31 +110,3 @@ def test_no_leaked_loop_persists(spark):
     comp.collect()
     assert jsc.getPersistentRDDs().size() <= before + 1
 
-
-def test_mark_near_duplicate_docs_url_keyed(spark):
-    """Pipeline-level keep-one: MinHash pairs over url-keyed docs via the
-    surrogate-id mapping; canonical = min url, unique docs untouched."""
-    from pii_detector_spark.operators.clusters import mark_near_duplicate_docs
-
-    dup = (
-        "the quick brown fox jumps over the lazy dog and then runs far "
-        "away into the deep dark forest before the sun finally sets"
-    )
-    uniq = (
-        "completely different content about distributed query engines "
-        "processing petabytes of web text with vectorized operators daily"
-    )
-    docs = spark.createDataFrame(
-        [
-            ("https://a.example.com/1", dup),
-            ("https://b.example.com/2", dup),
-            ("https://c.example.com/3", uniq),
-        ],
-        "url string, scrubbed_text string",
-    )
-    kept = sorted(
-        r["url"]
-        for r in mark_near_duplicate_docs(docs).filter("is_canonical").collect()
-    )
-    assert kept == ["https://a.example.com/1", "https://c.example.com/3"]
-

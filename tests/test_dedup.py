@@ -35,11 +35,15 @@ def test_exact_dedup(docs):
 
 
 def test_minhash_lsh_finds_near_dups(docs):
-    from pii_detector_spark.operators.dedup import minhash_lsh_pairs
+    from pii_detector_spark.operators.delta_dedup import (
+        minhash_pairs_delta,
+        minhash_signatures,
+    )
 
+    sig = minhash_signatures(docs, shingle_n=3)
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in minhash_lsh_pairs(docs, shingle_n=3, jaccard_threshold=0.5).collect()
+        for r in minhash_pairs_delta(sig, sig, jaccard_threshold=0.5).collect()
     }
     assert (1, 2) in pairs and pairs[(1, 2)] == 1.0
     assert (1, 3) in pairs and 0.5 <= pairs[(1, 3)] < 1.0

@@ -11,7 +11,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from pii_detector_spark.plans.pipeline import run_pipeline
-from tests.oracle import oracle_decide
+from tests.oracle import oracle_decide, oracle_near_dedup
 
 
 @pytest.fixture(scope="module")
@@ -408,10 +408,11 @@ def test_dedup_near_flag_writes_keep_one_tables(spark, tmp_path_factory):
 
 
 def test_dedup_delta_parity_and_delta_only_work(spark, tmp_path_factory):
-    """Delta mode: run 1 (90% of corpus) + run 2 (10% new urls) must
+    """Near-dup pass: run 1 (80% of corpus) + run 2 (20% new urls) must
     (a) shingle ONLY the delta on run 2 (signature appends == new docs),
-    (b) produce neardup/docs_deduped tables identical to one-shot full
-    recompute (dedup_near=True) over the whole corpus, and
+    (b) produce the neardup/docs_deduped tables of the pure-Python
+    keep-one (``tests/oracle.oracle_near_dedup`` over the oracle's
+    scrubbed texts), as a one-shot run over the whole corpus does, and
     (c) be idempotent under crash-replay of run 2."""
     import os as _os
 
@@ -452,7 +453,20 @@ def test_dedup_delta_parity_and_delta_only_work(spark, tmp_path_factory):
         str(full_dir / "all.parquet"),
     )
 
-    # reference: one-shot full recompute over everything
+    # reference: the pure-Python keep-one over the oracle's scrubbed texts
+    urls = urls1 + urls2
+    ref = oracle_near_dedup(
+        {
+            u: oracle_decide(u, t).scrubbed_text
+            for u, t in zip(urls, texts1 + texts2)
+        }
+    )
+    ref_kept = {u for u, (_, canon) in ref.items() if canon}
+    # a multi-member cluster spans both runs: the run-2 near member joins
+    # cluster A, whose canonical came in run 1
+    assert ref["https://new1.example.com/x"] == (urls1[0], False)
+
+    # one-shot pass over everything
     out_full = str(tmp_path_factory.mktemp("delta_out_full"))
     run_pipeline(
         spark, str(full_dir), out_full, run_id="f1",
@@ -464,11 +478,11 @@ def test_dedup_delta_parity_and_delta_only_work(spark, tmp_path_factory):
     out_delta = str(tmp_path_factory.mktemp("delta_out_inc"))
     run_pipeline(
         spark, str(d), out_delta, run_id="d1",
-        extract_html=False, dedup_delta=True,
+        extract_html=False, dedup_near=True,
     )
     run_pipeline(
         spark, str(full_dir), out_delta, run_id="d2",
-        extract_html=False, dedup_delta=True,
+        extract_html=False, dedup_near=True,
     )
 
     sigs = spark.read.parquet(_os.path.join(out_delta, "signatures"))
@@ -507,34 +521,28 @@ def test_dedup_delta_parity_and_delta_only_work(spark, tmp_path_factory):
         }
         return nd, kept
 
-    nd_full, kept_full = snap(out_full)
-    nd_delta, kept_delta = snap(out_delta)
-    # (b) byte-equal decisions: same components (component = min url in
-    # both paths), same canonical flags, same kept set
-    assert nd_delta == nd_full
-    assert kept_delta == kept_full
-    # sanity: the run-2 near member actually joined cluster A
-    assert nd_delta["https://new1.example.com/x"][0] == nd_delta[urls1[0]][0]
-    assert nd_delta["https://new1.example.com/x"][1] is False
+    # (b) the reference's decisions: same components (min url), same
+    # canonical flags, same kept set — one-shot and over two runs
+    assert snap(out_full) == (ref, ref_kept)
+    assert snap(out_delta) == (ref, ref_kept)
 
     # (c) crash-replay of run 2: everything already SCANNED -> no new
     # signatures, outputs unchanged
     run_pipeline(
         spark, str(full_dir), out_delta, run_id="d2",
-        extract_html=False, dedup_delta=True,
+        extract_html=False, dedup_near=True,
     )
-    nd_replay, kept_replay = snap(out_delta)
-    assert nd_replay == nd_full and kept_replay == kept_full
+    assert snap(out_delta) == (ref, ref_kept)
 
 
 def test_crash_at_every_sink_heals_to_identical_tables(
     spark, tmp_path_factory, monkeypatch
 ):
-    """Kill write_run_outputs at each seam of the write protocol (a
-    failure inside the write job / after the job, before any publish /
-    after the docs, findings and lineage publishes / after the metrics
-    file / at the commit marker): the unmarked run is healed on the next
-    run, and the final four tables are identical to a never-crashed run."""
+    """Kill run_pipeline at each seam of the write protocol (a failure
+    inside the write job / after the job, before any publish / after the
+    docs, findings and lineage publishes / after the metrics file / at the
+    commit marker): the unmarked run is healed on the next run, and the
+    final four tables are identical to a never-crashed run."""
     import os as _os
 
     from pyspark.errors import SparkRuntimeException
@@ -646,7 +654,7 @@ def test_crash_at_every_sink_heals_to_identical_tables(
 
 
 def test_dedup_delta_backfills_presignature_runs(spark, tmp_path_factory):
-    """Enabling --dedup-delta on an output whose earlier runs never
+    """Enabling --dedup-near on an output whose earlier runs never
     shingled: the unsigned backlog is signed on the next delta run, so
     cross-run pairs with pre-flag docs are found."""
     import os as _os
@@ -678,7 +686,7 @@ def test_dedup_delta_backfills_presignature_runs(spark, tmp_path_factory):
 
     # run 2 with the flag: bf1 is new; bf0 is unsigned backlog
     run_pipeline(spark, str(d2), out, run_id="r2", extract_html=False,
-                 dedup_delta=True)
+                 dedup_near=True)
     sigs = spark.read.parquet(_os.path.join(out, "signatures"))
     assert sigs.count() == 2  # backlog + delta, all signed under r2
     nd = {
@@ -738,7 +746,7 @@ def test_dedup_delta_resigns_changed_content(spark, tmp_path_factory):
     )
     out = str(tmp_path_factory.mktemp("cc_out"))
     run_pipeline(spark, str(d1), out, run_id="c1", extract_html=False,
-                 dedup_delta=True)
+                 dedup_near=True)
     nd1 = {
         r["url"]: r for r in
         spark.read.parquet(_os.path.join(out, "neardup")).collect()
@@ -750,7 +758,7 @@ def test_dedup_delta_resigns_changed_content(spark, tmp_path_factory):
     d2 = tmp_path_factory.mktemp("cc2")
     pq_.write_table(_delta_tbl([u_stay], [_DELTA_BASE]), str(d2 / "b.parquet"))
     run_pipeline(spark, str(d2), out, run_id="c2", extract_html=False,
-                 gc_deleted=True, dedup_delta=True)
+                 gc_deleted=True, dedup_near=True)
 
     d3 = tmp_path_factory.mktemp("cc3")
     pq_.write_table(
@@ -758,7 +766,7 @@ def test_dedup_delta_resigns_changed_content(spark, tmp_path_factory):
         str(d3 / "c.parquet"),
     )
     run_pipeline(spark, str(d3), out, run_id="c3", extract_html=False,
-                 dedup_delta=True)
+                 dedup_near=True)
     nd3 = {
         r["url"]: r for r in
         spark.read.parquet(_os.path.join(out, "neardup")).collect()
@@ -807,7 +815,7 @@ def test_dedup_delta_recovers_pairs_after_crash_between_appends(
         mp.setattr(dd, "minhash_pairs_delta", boom)
         with pytest.raises(RuntimeError, match="injected pairs crash"):
             run_pipeline(spark, str(d1), out, run_id="p1",
-                         extract_html=False, dedup_delta=True)
+                         extract_html=False, dedup_near=True)
     # signatures landed; pairs and the pairing-coverage snapshot did not
     assert spark.read.parquet(_os.path.join(out, "signatures")).count() == 3
     assert not _os.path.isdir(_os.path.join(out, "neardup_pairs"))
@@ -816,7 +824,7 @@ def test_dedup_delta_recovers_pairs_after_crash_between_appends(
     # next run (no new docs): the signed-but-unpaired signatures are
     # outside the (absent) snapshot, so their pairs are recomputed
     run_pipeline(spark, str(d1), out, run_id="p2", extract_html=False,
-                 dedup_delta=True)
+                 dedup_near=True)
     paired = spark.read.parquet(_os.path.join(out, "paired_sigs"))
     assert paired.count() == 3  # full coverage after the successful run
     nd = {
@@ -851,13 +859,13 @@ def test_dedup_delta_pairs_resurrected_url_against_absence_era_docs(
     )
     out = str(tmp_path_factory.mktemp("ra_out"))
     run_pipeline(spark, str(d1), out, run_id="r1", extract_html=False,
-                 dedup_delta=True)
+                 dedup_near=True)
 
     # u2 disappears at the source → GC
     d2 = tmp_path_factory.mktemp("ra2")
     pq_.write_table(_delta_tbl([u1], [_DELTA_UNIQ]), str(d2 / "b.parquet"))
     run_pipeline(spark, str(d2), out, run_id="r2", extract_html=False,
-                 gc_deleted=True, dedup_delta=True)
+                 gc_deleted=True, dedup_near=True)
 
     # u3 (near-dup of u2's content) arrives while u2 is absent
     d3 = tmp_path_factory.mktemp("ra3")
@@ -866,7 +874,7 @@ def test_dedup_delta_pairs_resurrected_url_against_absence_era_docs(
         str(d3 / "c.parquet"),
     )
     run_pipeline(spark, str(d3), out, run_id="r3", extract_html=False,
-                 dedup_delta=True)
+                 dedup_near=True)
 
     # u2 resurrects with its ORIGINAL content (same md5 → old signature
     # becomes valid again without re-signing)
@@ -879,7 +887,7 @@ def test_dedup_delta_pairs_resurrected_url_against_absence_era_docs(
         str(d4 / "d.parquet"),
     )
     run_pipeline(spark, str(d4), out, run_id="r4", extract_html=False,
-                 dedup_delta=True)
+                 dedup_near=True)
 
     nd = {
         r["url"]: r for r in
@@ -899,7 +907,7 @@ def test_dedup_delta_pairs_resurrected_url_against_absence_era_docs(
 def test_dedup_delta_on_fully_prefiltered_input(spark, tmp_path_factory):
     """ADVICE r4 (medium): a run whose every url is prefiltered leaves the
     partitioned docs table with run_id dirs but NO data files; the dedup
-    passes must read it with an explicit schema (UNABLE_TO_INFER_SCHEMA
+    pass must read it with an explicit schema (UNABLE_TO_INFER_SCHEMA
     otherwise) and complete as a no-op."""
     import os as _os
 
@@ -916,18 +924,11 @@ def test_dedup_delta_on_fully_prefiltered_input(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("pf_out"))
     res = run_pipeline(
         spark, str(d / "pages.parquet"), out, run_id="pf1",
-        extract_html=False, dedup_delta=True,
+        extract_html=False, dedup_near=True,
     )
     assert res.docs_written == 0
     nd = spark.read.parquet(_os.path.join(out, "neardup"))
     assert nd.count() == 0
-    # dedup_near over the same empty table must also survive
-    out2 = str(tmp_path_factory.mktemp("pf_out2"))
-    run_pipeline(
-        spark, str(d / "pages.parquet"), out2, run_id="pf2",
-        extract_html=False, dedup_near=True,
-    )
-    assert spark.read.parquet(_os.path.join(out2, "neardup")).count() == 0
 
 
 def test_heal_spark_escaped_run_id(spark, tmp_path_factory):
@@ -1146,8 +1147,9 @@ def test_neardup_rewrite_crash_leaves_readable_tables(
 def test_job_cli_decontaminate_and_pack(spark, tmp_path_factory, monkeypatch):
     """The spark-submit entry point end-to-end with the round-5 flags:
     --decontaminate-against writes a 'contamination' table keyed by url;
-    --pack-budget writes a 'shards' table over kept docs. A rerun whose
-    'nb_scores' rewrite fails keeps the previous table readable."""
+    --pack-budget writes a 'shards' table over kept docs; --dedup-near
+    writes the keep-one tables. A rerun whose 'nb_scores' rewrite fails
+    keeps the previous table readable."""
     import os as _os
     import sys
 
@@ -1197,6 +1199,7 @@ def test_job_cli_decontaminate_and_pack(spark, tmp_path_factory, monkeypatch):
         "--pack-materialize",
         "--host-cap", "10", "--host-cap-exact",
         "--nb-labels", str(labels_dir / "l.parquet"),
+        "--dedup-near",
     ])
     # the job builds its own session via getOrCreate -> reuses the test one
     monkeypatch.setattr(
@@ -1212,6 +1215,20 @@ def test_job_cli_decontaminate_and_pack(spark, tmp_path_factory, monkeypatch):
     assert cont[urls[0]][1] is True and cont[urls[0]][0] > 0
     assert cont[urls[2]][1] is True
     assert cont[urls[1]] == (0, False) and cont[urls[3]] == (0, False)
+
+    # --dedup-near: the keep-one tables and the pass's signatures, with
+    # the kept set of the pure-Python reference
+    for t in ("neardup", "docs_deduped", "signatures"):
+        assert _os.path.isdir(_os.path.join(out, t)), t
+    texts = [keep_text, other, keep_text + " tail", other + " x"]
+    ref = oracle_near_dedup(
+        {u: oracle_decide(u, t).scrubbed_text for u, t in zip(urls, texts)}
+    )
+    assert {u for u, (_, canon) in ref.items() if not canon}
+    assert {
+        r["url"] for r in
+        spark.read.parquet(_os.path.join(out, "docs_deduped")).collect()
+    } == {u for u, (_, canon) in ref.items() if canon}
 
     capped = spark.read.parquet(_os.path.join(out, "docs_capped"))
     assert capped.count() == capped.select("url").distinct().count()
