@@ -12,6 +12,12 @@ Python-model operators (langid/perplexity, full regex battery over free
 text) are rows-only here and byte-identical-verified by ``tests/`` against
 the pure-Python oracle instead.
 
+Same-shaped queries share one entry: ``MERGED`` maps each merged entry to
+its ``{tag: member}`` table, and both engines build the entry from it, the
+union of the members' rows under a ``case_tag`` column. A member ``m`` is
+``q_<m>`` here (or a PII scrub over its ``_PII_TEXTS`` text) and the SQL
+named ``m`` in ``oracle_sql()``.
+
 Cross-engine determinism rules used throughout:
 * integers → cast to long/BIGINT on both sides
 * doubles  → computed with identical association order where possible and
@@ -23,6 +29,7 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -131,8 +138,8 @@ def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_order_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5 window shape: per-key running sum (sequential fold — bitwise
-    reproducible cross-engine)."""
+    """A5 window shape: per-customer running order total (sequential fold —
+    bitwise reproducible cross-engine)."""
     o = _t(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
@@ -140,14 +147,14 @@ def q_order_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return o.select(
-        F.col("o_orderkey").cast("long").alias("o_orderkey"),
-        F.col("o_custkey").cast("long").alias("o_custkey"),
-        F.round(F.sum("o_totalprice").over(w), 2).alias("run_total"),
+        F.col("o_orderkey").cast("long").alias("row_key"),
+        F.col("o_custkey").cast("long").cast("string").alias("grp"),
+        F.round(F.sum("o_totalprice").over(w), 2).alias("val"),
     )
 
 
 def q_part_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5 proper: per-group running budget filter (reference's 300 MB
+    """A5 proper: per-brand running budget filter (reference's 300 MB
     per-extension sampling cap, base_scan_service.py:209-231)."""
     p = _t(spark, sf_dir, "part")
     w = (
@@ -159,9 +166,9 @@ def q_part_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.withColumn("run_spend", F.sum("p_retailprice").over(w))
         .filter(F.col("run_spend") <= 50_000.0)
         .select(
-            F.col("p_partkey").cast("long").alias("p_partkey"),
-            "p_brand",
-            F.round("run_spend", 2).alias("run_spend"),
+            F.col("p_partkey").cast("long").alias("row_key"),
+            F.col("p_brand").alias("grp"),
+            F.round("run_spend", 2).alias("val"),
         )
     )
 
@@ -185,11 +192,11 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.groupBy(
             "event_type",
-            F.unix_micros(F.date_trunc("hour", F.col("ts"))).alias("hour_us"),
+            F.unix_micros(F.date_trunc("hour", F.col("ts"))).alias("bucket_us"),
         )
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
+            F.round(F.sum("value"), 4).alias("val"),
         )
     )
 
@@ -197,17 +204,17 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming-shaped windowed rollup (watermark + tumbling window; a
     no-op watermark in batch, the exact plan Structured Streaming runs)."""
-    from pii_detector_spark.streaming.incremental import windowed_event_metrics
+    from pii_detector_spark.operators.events import windowed_event_metrics
 
     e = _t(spark, sf_dir, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     out = windowed_event_metrics(e)
     return out.select(
-        F.unix_micros("window_start").alias("window_start_us"),
         "event_type",
+        F.unix_micros("window_start").alias("bucket_us"),
         F.col("n_events").cast("long").alias("n_events"),
-        F.round("total_value", 4).alias("total_value"),
+        F.round("total_value", 4).alias("val"),
     )
 
 
@@ -251,22 +258,24 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2/F10 deterministic sampling, one tagged entry: the flat
-    hash-threshold sample (1/16 of orders — the engine-portable
-    replacement for the reference's random 20-object sampling,
-    base_scan_service.py:193-231) plus the r5 quality-bucket stratified
-    sample (``operators/sampling.stratified_sample``: per-bucket md5-hex
-    thresholds, zero shuffle, zero Python; val encodes bucket*2+sampled so
-    the oracle checks the exact draw row for row)."""
+def q_hash_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flat hash-threshold sample: 1/16 of orders, the engine-portable
+    replacement for the reference's random 20-object sampling
+    (base_scan_service.py:193-231)."""
     o = _t(spark, sf_dir, "orders")
-    orders = o.filter(
+    return o.filter(
         F.md5(F.col("o_orderkey").cast("string")) < F.lit("1")
     ).select(
         F.col("o_orderkey").cast("long").alias("row_key"),
         F.round("o_totalprice", 2).alias("val"),
     )
 
+
+def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The r5 quality-bucket stratified sample
+    (``operators/sampling.stratified_sample``: per-bucket md5-hex
+    thresholds, zero shuffle, zero Python); val encodes bucket*2+sampled
+    so the oracle checks the exact draw row for row."""
     from pii_detector_spark.operators.sampling import stratified_sample
 
     d = _t(spark, sf_dir, "documents").select(
@@ -287,43 +296,19 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("bucket") == "mid", 1)
         .otherwise(2)
     )
-    strat = s.select(
+    return s.select(
         F.col("doc_id").cast("long").alias("row_key"),
         (bucket_id * 2 + F.col("sampled").cast("int"))
         .cast("double")
         .alias("val"),
     )
-    return _tagged_union({"orders": orders, "stratified": strat})
 
 
-def q_url_prefilters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tagged union of the url-level operators (single `url` column):
-
-    - ``prefilters``: F1/F2 object pre-filters (extension blocklist +
-      log-path exclusion) pushed into the scan as plain predicates;
-    - ``canonical``: url canonicalization (operators/urls.py) over an
-      adversarial branch-constructed corpus — scheme/host case, default
-      ports, ``www.``, duplicate/trailing slashes, tracking params,
-      query sort, fragments, schemeless passthrough — oracle side is
-      CLOSED-FORM expected strings per branch (independent of the regex
-      chain);
-    - ``kept``: canonical-url dedup (keep latest ``warc_ts`` capture per
-      canonical family) returning the surviving original urls;
-    - ``robots``: robots.txt compliance (operators/robots.py) — two
-      planted rule sets (longest-match Allow-under-Disallow + the
-      empty-Disallow idiom) filter a branch-constructed url corpus;
-      urls and verdicts are pure doc_id functions the oracle derives
-      without the parser.
-    """
-    return _tagged_union({
-        "prefilters": _q_url_prefilters_part(spark, sf_dir),
-        "canonical": _q_url_canonical_part(spark, sf_dir),
-        "kept": _q_url_kept_part(spark, sf_dir),
-        "robots": _q_robots_part(spark, sf_dir),
-    })
-
-
-def _q_robots_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_url_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """robots.txt compliance (operators/robots.py): two planted rule sets
+    (longest-match Allow-under-Disallow + the empty-Disallow idiom) filter
+    a branch-constructed url corpus; urls and verdicts are pure doc_id
+    functions the oracle derives without the parser."""
     from pii_detector_spark.operators.robots import (
         filter_disallowed,
         parse_robots,
@@ -361,7 +346,9 @@ def _q_robots_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.filter(F.col("robots_allowed")).select("url")
 
 
-def _q_url_prefilters_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_url_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F1/F2 object pre-filters (extension blocklist + log-path exclusion)
+    pushed into the scan as plain predicates."""
     from pii_detector_spark.sources.web_pages import apply_prefilters
 
     d = _t(spark, sf_dir, "documents")
@@ -384,7 +371,12 @@ def _q_url_prefilters_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     return apply_prefilters(web).select("url")
 
 
-def _q_url_canonical_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """url canonicalization (operators/urls.py) over an adversarial
+    branch-constructed corpus — scheme/host case, default ports, ``www.``,
+    duplicate/trailing slashes, tracking params, query sort, fragments,
+    schemeless passthrough; the oracle side is CLOSED-FORM expected strings
+    per branch (independent of the regex chain)."""
     from pii_detector_spark.operators.urls import canonicalize_url
 
     d = _t(spark, sf_dir, "documents")
@@ -407,7 +399,9 @@ def _q_url_canonical_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(canonicalize_url(raw).alias("url"))
 
 
-def _q_url_kept_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_url_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Canonical-url dedup (keep the latest ``warc_ts`` capture per
+    canonical family), returning the surviving original urls."""
     from pii_detector_spark.operators.urls import keep_latest_per_canonical
 
     d = _t(spark, sf_dir, "documents")
@@ -900,15 +894,16 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH pairs over the whole corpus: the incremental pass's
     operators with new = all (``operators/delta_dedup.py``)."""
-    from pyspark import StorageLevel
-
     from pii_detector_spark.operators import delta_dedup
 
     # the signature relation feeds banding on both sides AND both verify
-    # joins: persist once, or the shingling runs once per reference
+    # joins: checkpoint it, or the shingling runs once per reference. The
+    # lazy local checkpoint is computed by the first action and, unlike
+    # persist(), is not held by the session's cache manager: its blocks go
+    # when the returned plan does.
     sig = delta_dedup.minhash_signatures(
         _t(spark, sf_dir, "documents"), shingle_n=3, num_hashes=12
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
     out = delta_dedup.minhash_pairs_delta(
         sig, sig, num_hashes=12, bands=4, jaccard_threshold=0.5
     )
@@ -931,16 +926,14 @@ def q_minhash_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 20 != 0)
     new = docs.filter(F.col("doc_id") % 20 == 0)
-    from pyspark import StorageLevel
-
-    # each signature relation feeds banding AND both verify joins — persist
-    # once (the same exchange-reuse trap as q_minhash_lsh)
+    # each signature relation feeds banding AND both verify joins —
+    # checkpoint once, lazily (the same trap as q_minhash_lsh)
     sig_old = delta_dedup.minhash_signatures(
         old, shingle_n=3, num_hashes=12
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
     sig_new = delta_dedup.minhash_signatures(
         new, shingle_n=3, num_hashes=12
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
     pairs_run1 = delta_dedup.minhash_pairs_delta(
         sig_old, sig_old, num_hashes=12, bands=4, jaccard_threshold=0.5
     )
@@ -988,27 +981,10 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash64(_t(spark, sf_dir, "documents"))
 
 
-def q_remove_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span-removal dedup family, tagged union (doc_id, text):
-
-    - ``lines``: C4-style boilerplate-line removal over a corpus with
-      planted repeated lines (the two boilerplate lines appear in every
-      doc, df = N, and are removed; the per-doc lines survive in order);
-    - ``windows``: exact substring dedup (operators/substring_dedup,
-      the Lee-et-al duplicated k-token-window cut, k=4) over a planted
-      corpus with a cross-doc shared phrase (canonical = least
-      (doc_id, pos) occurrence keeps it) and, on every third doc, a
-      within-doc repeated 4-token run (first occurrence kept).  The
-      oracle side is an INDEPENDENT full reimplementation of the
-      algorithm in SQL (windows → dup hashes → coverage → rebuild).
-    """
-    return _tagged_union({
-        "lines": _q_boilerplate_lines_part(spark, sf_dir),
-        "windows": _q_substring_dedup_part(spark, sf_dir),
-    })
-
-
-def _q_boilerplate_lines_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C4-style boilerplate-line removal over a corpus with planted
+    repeated lines: the two boilerplate lines appear in every doc, df = N,
+    and are removed; the per-doc lines survive in order."""
     d = _t(spark, sf_dir, "documents").select("doc_id")
     text = F.concat(
         F.lit("accept cookies to continue\ndoc body "),
@@ -1021,7 +997,14 @@ def _q_boilerplate_lines_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
 
 
-def _q_substring_dedup_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact substring dedup (operators/substring_dedup, the Lee-et-al
+    duplicated k-token-window cut, k=4) over a planted corpus with a
+    cross-doc shared phrase (canonical = least (doc_id, pos) occurrence
+    keeps it) and, on every third doc, a within-doc repeated 4-token run
+    (first occurrence kept). The oracle side is an INDEPENDENT full
+    reimplementation of the algorithm in SQL (windows → dup hashes →
+    coverage → rebuild)."""
     from pii_detector_spark.operators.substring_dedup import (
         remove_duplicate_windows,
     )
@@ -1057,30 +1040,22 @@ def q_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # text analysis operators
 
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-counting family, tagged union (doc_id, ws_tokens,
-    bpe_tokens, n_chars):
-
-    - ``stats``: whitespace + BPE-ish-regex counts (operators/textstats);
-    - ``bpe_trained``: REAL BPE training + encoding (operators/bpe) on a
-      planted corpus where EVERY doc carries the same text
-      ("low low lower newest widest"), so word frequencies scale by
-      exactly one factor (the doc count) at any corpus size and the
-      greedy merge order is provably size-invariant:
-      (l,o), (lo,w), (e,s), (es,t). Token count is the constant 18 the
-      oracle states without running the tokenizer. (A doc_id%2 two-class
-      plant would NOT be safe: the classes scale by the even/odd doc
-      counts independently, and an unbalanced shard flips merge 3.)"""
-    stats = textstats.token_counts(
+def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Whitespace + BPE-ish-regex token counts (operators/textstats)."""
+    return textstats.token_counts(
         _t_wide(spark, sf_dir, "documents", "doc_id")
     )
-    return _tagged_union({
-        "stats": stats,
-        "bpe_trained": _q_bpe_planted_part(spark, sf_dir),
-    })
 
 
-def _q_bpe_planted_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_bpe_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL BPE training + encoding (operators/bpe) on a planted corpus
+    where EVERY doc carries the same text ("low low lower newest widest"),
+    so word frequencies scale by exactly one factor (the doc count) at any
+    corpus size and the greedy merge order is provably size-invariant:
+    (l,o), (lo,w), (e,s), (es,t). Token count is the constant 18 the
+    oracle states without running the tokenizer. (A doc_id%2 two-class
+    plant would NOT be safe: the classes scale by the even/odd doc counts
+    independently, and an unbalanced shard flips merge 3.)"""
     from pii_detector_spark.operators.bpe import (
         bpe_token_counts,
         train_bpe,
@@ -1153,18 +1128,9 @@ def q_host_doc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PII detection / masking / scrub (the engine core) — cross-engine checked on
 # constructed inputs whose expected findings are SQL-derivable
 
-def q_pii_scrub_email(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real battery + masking over constructed emails; DuckDB reproduces the
-    reference mask semantics (data_analysis_service.py:115-139) in SQL."""
-    c = _t(spark, sf_dir, "customer")
-    docs = c.select(
-        F.col("c_custkey").cast("string").alias("url"),
-        F.concat(
-            F.lit("please reach user"),
-            F.col("c_custkey").cast("string"),
-            F.lit("@mailhost.example.com for help"),
-        ).alias("text"),
-    )
+def _first_finding(docs: DataFrame) -> DataFrame:
+    """Run the real battery; keep the finding count and the first
+    finding's type, region and mask."""
     out = with_scrub(docs)
     return out.select(
         "url",
@@ -1174,6 +1140,20 @@ def q_pii_scrub_email(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("findings")[0]["pii_region"].alias("pii_region"),
         F.col("findings")[0]["pii_data"].alias("pii_masked"),
     )
+
+
+def q_pii_scrub_email(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real battery + masking over constructed emails; DuckDB reproduces the
+    reference mask semantics (data_analysis_service.py:115-139) in SQL."""
+    c = _t(spark, sf_dir, "customer")
+    return _first_finding(c.select(
+        F.col("c_custkey").cast("string").alias("url"),
+        F.concat(
+            F.lit("please reach user"),
+            F.col("c_custkey").cast("string"),
+            F.lit("@mailhost.example.com for help"),
+        ).alias("text"),
+    ))
 
 
 def q_pii_scrub_ssn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1186,19 +1166,10 @@ def q_pii_scrub_ssn(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(10) + F.col("c_custkey") % 89).cast("int"),
         (F.lit(1000) + F.col("c_custkey") % 9000).cast("int"),
     )
-    docs = c.select(
+    return _first_finding(c.select(
         F.col("c_custkey").cast("string").alias("url"),
         F.concat(F.lit("social security "), ssn, F.lit(" on record")).alias("text"),
-    )
-    out = with_scrub(docs)
-    return out.select(
-        "url",
-        "scrubbed_text",
-        F.size("findings").cast("long").alias("n_findings"),
-        F.col("findings")[0]["pii_type"].alias("pii_type"),
-        F.col("findings")[0]["pii_region"].alias("pii_region"),
-        F.col("findings")[0]["pii_data"].alias("pii_masked"),
-    )
+    ))
 
 
 def _scrub_findings_flat(docs: DataFrame, include_person: bool = False) -> DataFrame:
@@ -1227,91 +1198,62 @@ def _scrub_findings_flat(docs: DataFrame, include_person: bool = False) -> DataF
     )
 
 
-def _custkey_docs(spark: SparkSession, sf_dir: str, text: F.Column) -> DataFrame:
-    c = _t_wide(spark, sf_dir, "customer", "c_custkey")
-    return c.select(
-        F.col("c_custkey").cast("string").alias("url"), text.alias("text")
-    )
-
-
-def q_pii_scrub_credit_card(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _credit_card_text(k: F.Column) -> F.Column:
     """CREDIT_CARD battery + overlap resolution: the 19-char card number
     also contains a 12-digit IN_AADHAR match; the longer card span wins the
     scrub (reference span dedup, hyperscan_service.py:62 generalized)."""
-    k = F.col("c_custkey")
     g = (F.lit(1000) + k % 9000).cast("int")
     card = F.format_string(
         "4%03d-%04d-%04d-%04d", (F.lit(100) + k % 900).cast("int"), g, g, g
     )
-    docs = _custkey_docs(
-        spark, sf_dir, F.concat(F.lit("card "), card, F.lit(" on file"))
-    )
-    return _scrub_findings_flat(docs)
+    return F.concat(F.lit("card "), card, F.lit(" on file"))
 
 
-def q_pii_scrub_iban(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _iban_text(k: F.Column) -> F.Column:
     """IBAN_CODE positive match (Norwegian shape — 'NO' keeps the token out
     of the MEDICAL_LICENSE prefix class)."""
-    k = F.col("c_custkey")
     iban = F.concat(
         F.lit("NO"),
         F.format_string("%02d", (F.lit(10) + k % 90).cast("int")),
         F.format_string("%016d", k.cast("long")),
     )
-    docs = _custkey_docs(
-        spark, sf_dir, F.concat(F.lit("iban "), iban, F.lit(" ok"))
-    )
-    return _scrub_findings_flat(docs)
+    return F.concat(F.lit("iban "), iban, F.lit(" ok"))
 
 
-def q_pii_scrub_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ip_text(k: F.Column) -> F.Column:
     """IP_ADDRESSES (credential-class, no guards — always scanned)."""
-    k = F.col("c_custkey")
     ip = F.format_string(
         "10.%d.%d.%d",
         (k % 200).cast("int"),
         (k % 200).cast("int"),
         (F.lit(1) + k % 200).cast("int"),
     )
-    docs = _custkey_docs(
-        spark, sf_dir, F.concat(F.lit("server at "), ip, F.lit(" responded"))
-    )
-    return _scrub_findings_flat(docs)
+    return F.concat(F.lit("server at "), ip, F.lit(" responded"))
 
 
-def q_pii_scrub_itin(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _itin_text(k: F.Column) -> F.Column:
     """US_ITIN + the co-matching US_SSN on the same span: identical spans,
     category order breaks the tie, so the SSN length-tier mask lands in the
     scrubbed text while both findings are emitted."""
-    k = F.col("c_custkey")
     itin = F.format_string(
         "9%02d-7%d-%04d",
         (k % 100).cast("int"),
         (k % 10).cast("int"),
         (F.lit(1000) + k % 9000).cast("int"),
     )
-    docs = _custkey_docs(
-        spark, sf_dir, F.concat(F.lit("tax id "), itin, F.lit(" on record"))
-    )
-    return _scrub_findings_flat(docs)
+    return F.concat(F.lit("tax id "), itin, F.lit(" on record"))
 
 
-def q_pii_scrub_aws_key(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _aws_key_text(k: F.Column) -> F.Column:
     """AWS_CREDENTIALS (AKIA access-key alternative): credential match spans
     the whole assignment incl. key name (reference regex_patterns.py:55)."""
-    k = F.col("c_custkey")
     key = F.concat(F.lit("AKIA"), F.format_string("%016d", k.cast("long")))
-    docs = _custkey_docs(
-        spark, sf_dir,
-        F.concat(F.lit("note aws_access_key = "), key, F.lit(" now")),
-    )
-    return _scrub_findings_flat(docs)
+    return F.concat(F.lit("note aws_access_key = "), key, F.lit(" now"))
 
 
-def q_pii_scrub_github_token(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _github_token_text(k: F.Column) -> F.Column:
     """GITHUB_CREDENTIALS: 40-char token value; letters every 10th char keep
     the tail out of IN_AADHAR's 12-digit window, so exactly one finding."""
-    k = F.col("c_custkey")
     key = F.format_string(
         "a%09db%09dc%09dd%09d",
         ((k % 8) * 100000000 + k).cast("long"),
@@ -1319,22 +1261,17 @@ def q_pii_scrub_github_token(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((k % 8) * 100000000 + 77).cast("long"),
         ((k % 7) * 100000000 + k).cast("long"),
     )
-    docs = _custkey_docs(
-        spark, sf_dir,
-        F.concat(F.lit("repo setting github_token = "), key, F.lit(" saved")),
-    )
-    return _scrub_findings_flat(docs)
+    return F.concat(F.lit("repo setting github_token = "), key, F.lit(" saved"))
 
 
-def q_pii_scrub_gov_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _gov_ids_text(k: F.Column) -> F.Column:
     """Positive-match coverage for the remaining government-ID categories:
     UK_NHS, IN_PAN, US_PASSPORT (with its SSN/DL/BANK co-matches — the
     reference emits every engine match), US_BANK+DL, CRYPTO, MEDICAL+DL.
     One branch per c_custkey%6; every span/mask is a fixed-width printf so
     the expected findings are constants per branch in DuckDB."""
-    k = F.col("c_custkey")
     i = lambda e: e.cast("int")  # noqa: E731
-    text = (
+    return (
         F.when(
             k % 6 == 0,
             F.format_string(
@@ -1379,16 +1316,14 @@ def q_pii_scrub_gov_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return _scrub_findings_flat(_custkey_docs(spark, sf_dir, text))
 
 
-def q_pii_scrub_credential_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _credential_sets_text(k: F.Column) -> F.Column:
     """Positive-match coverage for the remaining credential sets: TWILIO,
     SENDGRID, AUTH0, STRIPE, SSH_KEYS, OPENAI, AZURE, CELERY, GCP,
     SNOWFLAKE, PRIVATE, INSURANCE — one branch per c_custkey%12. Token
     bodies interleave non-prefix letters with short digit groups so no
     other battery category co-fires (validated against the engine)."""
-    k = F.col("c_custkey")
     i = lambda e: e.cast("int")  # noqa: E731
     h32 = F.format_string(
         "a%07db%07dc%07dd%07d",
@@ -1419,7 +1354,7 @@ def q_pii_scrub_credential_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "%07dn2000002o3000003q4000004v%03d",
         i(F.lit(1000001) + k % 8000000), i((k % 8) * 100 + 66),
     )
-    text = (
+    return (
         F.when(k % 12 == 0, F.concat(F.lit("cfg twilio_auth_token = "), h32, F.lit(" done")))
         .when(k % 12 == 1, F.concat(F.lit("mail send_grid_key = SG."), p22, F.lit("."), p43, F.lit(" set")))
         .when(k % 12 == 2, F.concat(F.lit("login auth0_key = "), uuid, F.lit(" end")))
@@ -1444,7 +1379,6 @@ def q_pii_scrub_credential_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return _scrub_findings_flat(_custkey_docs(spark, sf_dir, text))
 
 
 # gazetteer sample (all in functions/person.py FIRST_NAMES) + surnames
@@ -1452,20 +1386,45 @@ _P_FIRSTS = ("Alice", "Brian", "Carol", "David", "Emma", "Frank", "Grace", "Henr
 _P_LASTS = ("Walker", "Turner", "Brooks", "Morgan", "Hayes", "Carter", "Bennett", "Sloan")
 
 
-def q_pii_scrub_person(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _person_text(k: F.Column) -> F.Column:
     """PERSON NER analogue (P4) + score floor (F13) + the PERSON mask tier:
     reference mitie_service.py:15-34 / data_analysis_service.py:140-147.
     Expected finding is SQL-derivable: fixed prefix, name picked from a
     fixed gazetteer slice by key."""
-    k = F.col("c_custkey")
     idx = (k % 8 + 1).cast("int")
     first = F.element_at(F.array(*[F.lit(n) for n in _P_FIRSTS]), idx)
     last = F.element_at(F.array(*[F.lit(n) for n in _P_LASTS]), idx)
-    docs = _custkey_docs(
-        spark, sf_dir,
-        F.concat(F.lit("meeting with "), first, F.lit(" "), last, F.lit(" soon")),
+    return F.concat(
+        F.lit("meeting with "), first, F.lit(" "), last, F.lit(" soon")
     )
-    return _scrub_findings_flat(docs, include_person=True)
+
+
+# PII scrub query -> its planted text; the battery scans PERSON only for
+# pii_scrub_person
+_PII_TEXTS = {
+    "pii_scrub_credit_card": _credit_card_text,
+    "pii_scrub_iban": _iban_text,
+    "pii_scrub_ip": _ip_text,
+    "pii_scrub_itin": _itin_text,
+    "pii_scrub_aws_key": _aws_key_text,
+    "pii_scrub_github_token": _github_token_text,
+    "pii_scrub_gov_ids": _gov_ids_text,
+    "pii_scrub_credential_sets": _credential_sets_text,
+    "pii_scrub_person": _person_text,
+}
+
+
+def _pii_scrub(name: str, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per finding of the real battery over ``_PII_TEXTS[name]``,
+    one doc per customer."""
+    c = _t_wide(spark, sf_dir, "customer", "c_custkey")
+    docs = c.select(
+        F.col("c_custkey").cast("string").alias("url"),
+        _PII_TEXTS[name](F.col("c_custkey")).alias("text"),
+    )
+    return _scrub_findings_flat(
+        docs, include_person=name == "pii_scrub_person"
+    )
 
 
 def q_scrub_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1503,20 +1462,24 @@ _LANG_PLANTS = (
 )
 
 
-def q_langid_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full rows+schema+hash langid oracle over a planted corpus: sentence
-    (and therefore expected label) is a pure function of doc_id, so DuckDB
-    derives the expected prediction without running the model."""
+def _lang_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, text): plant doc_id % 5 of ``_LANG_PLANTS`` per doc."""
     d = _guard(_t(spark, sf_dir, "documents").select("doc_id"), "doc_id")
     text = F.element_at(
         F.array(*[F.lit(s) for _lang, s in _LANG_PLANTS]),
         (F.col("doc_id") % 5 + 1).cast("int"),
     )
-    planted = d.select("doc_id", text.alias("text"))
-    out = with_langid(planted)
+    return d.select("doc_id", text.alias("text"))
+
+
+def q_langid_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full rows+schema+hash langid oracle over a planted corpus: sentence
+    (and therefore expected label) is a pure function of doc_id, so DuckDB
+    derives the expected prediction without running the model."""
+    out = with_langid(_lang_planted(spark, sf_dir))
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        "lang_pred",
+        F.col("lang_pred").alias("pred"),
     )
 
 
@@ -1528,37 +1491,14 @@ def q_word_ppl_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     derives without the model."""
     from pii_detector_spark.operators.langid import with_word_perplexity
 
-    d = _guard(_t(spark, sf_dir, "documents").select("doc_id"), "doc_id")
-    text = F.element_at(
-        F.array(*[F.lit(s) for _lang, s in _LANG_PLANTS]),
-        (F.col("doc_id") % 5 + 1).cast("int"),
-    )
-    out = with_word_perplexity(d.select("doc_id", text.alias("text")))
+    out = with_word_perplexity(_lang_planted(spark, sf_dir))
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        (F.col("word_ppl") <= 1000.0).alias("is_fluent"),
+        (F.col("word_ppl") <= 1000.0).cast("string").alias("pred"),
     )
 
 
-def q_lang_fluency_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """langid + word-perplexity planted oracles, one tagged entry in a
-    common (doc_id, pred) shape (registry consolidation; both sub-queries
-    keep their full cross-engine checks)."""
-    lang = q_langid_planted(spark, sf_dir).select(
-        "doc_id", F.col("lang_pred").alias("pred")
-    )
-    ppl = q_word_ppl_planted(spark, sf_dir).select(
-        "doc_id", F.col("is_fluent").cast("string").alias("pred")
-    )
-    return _tagged_union({
-        "langid": lang,
-        "word_ppl": ppl,
-        "ccnet_ppl": _q_ccnet_ppl_part(spark, sf_dir),
-        "ccnet_rank": _q_ccnet_rank_part(spark, sf_dir),
-    })
-
-
-def _q_ccnet_ppl_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_ccnet_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet tier assignment (operators/ccnet.assign_buckets) over the
     REAL word-perplexity scorer on the planted corpus: plant ppls are
     en 579.3 / es 1692.2 / de,ru 1786.9 / fr 1821.6, so bounds
@@ -1568,12 +1508,7 @@ def _q_ccnet_ppl_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_detector_spark.operators.ccnet import assign_buckets
     from pii_detector_spark.operators.langid import with_word_perplexity
 
-    d = _guard(_t(spark, sf_dir, "documents").select("doc_id"), "doc_id")
-    text = F.element_at(
-        F.array(*[F.lit(s) for _lang, s in _LANG_PLANTS]),
-        (F.col("doc_id") % 5 + 1).cast("int"),
-    )
-    scored = with_word_perplexity(d.select("doc_id", text.alias("text")))
+    scored = with_word_perplexity(_lang_planted(spark, sf_dir))
     out = assign_buckets(scored, "word_ppl", bounds=[1000.0, 1800.0])
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -1581,7 +1516,7 @@ def _q_ccnet_ppl_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_ccnet_rank_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_ccnet_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact equal-mass tiers (operators/ccnet.rank_buckets) over a
     JVM-computable score (text length), tie-broken by doc_id — DuckDB
     reproduces percent_rank's integer-rank arithmetic bit for bit."""
@@ -1597,7 +1532,7 @@ def _q_ccnet_rank_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_nb_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_nb_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality classifier (the CCNet/GPT-3 fastText-classifier
     analogue): multinomial Naive Bayes trained with one distributed word
     count, scored via a broadcast weight join. Labels are planted as a
@@ -1623,13 +1558,12 @@ def q_nb_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     model = train_nb(marked)
     out = score_nb(marked, model)
-    nb = out.select(
+    return out.select(
         F.col("doc_id").cast("long").alias("doc_id"), "nb_score_fp", "nb_keep"
     )
-    return _tagged_union({"nb": nb, "dsir": _q_dsir_part(spark, sf_dir)})
 
 
-def _q_dsir_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance resampling weights (operators/dsir): target sample
     = docs with doc_id%5==0, raw = the rest, unigram buckets (the bigram
     path is python-oracle-pinned in tests/test_dsir.py). DuckDB retrains
@@ -1667,17 +1601,22 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
-    out = similarity.cosine_topk_bruteforce(
-        e, e.filter(F.col("vec_id") < 8), k=3
-    )
+def _topk_rows(out: DataFrame) -> DataFrame:
+    """The ANN queries' shared output: cosine to 5 dp, rank as long."""
     return out.select(
         "query_id",
         "vec_id",
         F.round("cosine", 5).alias("cosine"),
         F.col("rank").cast("long").alias("rank"),
     )
+
+
+def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = _emb(spark, sf_dir)
+    out = similarity.cosine_topk_bruteforce(
+        e, e.filter(F.col("vec_id") < 8), k=3
+    )
+    return _topk_rows(out)
 
 
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1685,12 +1624,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.lsh_bucket_topk(
         e, e.filter(F.col("vec_id") < 8), dim=64, k=3, n_planes=6, n_tables=8
     )
-    return out.select(
-        "query_id",
-        "vec_id",
-        F.round("cosine", 5).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
+    return _topk_rows(out)
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1703,12 +1637,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, e.filter(F.col("vec_id") < 8), dim=64,
         n_cells=8, n_probe=8, k=3, iters=1,
     )
-    return out.select(
-        "query_id",
-        "vec_id",
-        F.round("cosine", 5).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
+    return _topk_rows(out)
 
 
 def q_ann_ivf_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1741,38 +1670,31 @@ def q_ann_ivf_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.ivf_query(
         assigned, e.filter(F.col("vec_id") < 8), cent2, n_probe=8, k=3
     )
-    return out.select(
-        "query_id",
-        "vec_id",
-        F.round("cosine", 5).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
+    return _topk_rows(out)
 
 
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-dup family, tagged union (id_a, id_b, cosine):
-
-    - ``pairs``: LSH-bucketed cosine near-dup pairs (threshold 0.4);
-    - ``semdedup``: SemDeDup-style semantic dedup verdicts
-      (operators/semdedup) run with n_cells=1 so the id-dominance EXISTS
-      rule is global and the SQL oracle can verify the exact drop set
-      (id_a = vec_id, id_b = cell, cosine = dropped as 0.0/1.0); the
-      multi-cell clustering path is pinned by tests/test_semdedup.py.
-    """
-    pairs = similarity.embedding_neardup_pairs(
+def q_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH-bucketed cosine near-dup pairs (threshold 0.4)."""
+    return similarity.embedding_neardup_pairs(
         _emb(spark, sf_dir), dim=64, threshold=0.4, n_planes=6
     ).select("id_a", "id_b", F.round("cosine", 5).alias("cosine"))
 
+
+def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup-style semantic dedup verdicts (operators/semdedup) run with
+    n_cells=1 so the id-dominance EXISTS rule is global and the SQL oracle
+    can verify the exact drop set (id_a = vec_id, id_b = cell, cosine =
+    dropped as 0.0/1.0); the multi-cell clustering path is pinned by
+    tests/test_semdedup.py."""
     from pii_detector_spark.operators.semdedup import semantic_dedup
 
-    sd = semantic_dedup(
+    return semantic_dedup(
         _emb(spark, sf_dir), dim=64, tau=0.2, n_cells=1, iters=1
     ).select(
         F.col("vec_id").cast("long").alias("id_a"),
         F.col("cell").alias("id_b"),
         F.col("dropped").cast("double").alias("cosine"),
     )
-    return _tagged_union({"pairs": pairs, "semdedup": sd})
 
 
 # ---------------------------------------------------------------------------
@@ -1793,54 +1715,73 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode through the multimodal seam: deterministic PNGs
-    (``sources/png.py`` fixture writer, cycling all five scanline filters)
-    whose pixel values are base + x + y + 40*channel, so width/height/
-    channel-means have closed forms the DuckDB oracle reproduces; every
-    10th payload is junk and degrades to null features per file."""
-    import numpy as np
+# (column, 1-based index into the decoder's features array, type);
+# doubles are rounded to 6 dp
+_IMAGE_SPEC = (
+    ("width", 1, "long"), ("height", 2, "long"), ("channels", 3, "long"),
+    ("mean_c0", 4, "double"), ("mean_c1", 5, "double"),
+    ("mean_c2", 6, "double"),
+)
 
-    from pii_detector_spark.sources.png import build_png
 
-    rows = []
-    for m in range(1, 51):
-        if m % 10 == 0:
-            payload = b"JFIF-ish junk payload with no in-repo codec"
-        else:
-            base = (m * 13) % 160
-            w, h, ch = 4 + m % 5, 3 + m % 4, 1 + m % 3
-            arr = (
-                base
-                + np.arange(w)[None, :, None]
-                + np.arange(h)[:, None, None]
-                + 40 * np.arange(ch)[None, None, :]
-            ).astype(np.uint8)
-            payload = build_png(arr, filter_mode="cycle")
-        rows.append((m, "image", bytearray(payload)))
+def _decoded_features(
+    spark: SparkSession,
+    kind: str,
+    payload: Callable[[int], bytes],
+    junk: bytes,
+    spec: tuple[tuple[str, int, str], ...],
+) -> DataFrame:
+    """REAL decode through the multimodal seam of 50 fixtures, media_id
+    1..50: ``payload(m)`` builds media m, and every 10th is ``junk`` and
+    degrades to null features per file. Projects the features by
+    ``spec``."""
+    rows = [
+        (m, kind, bytearray(junk if m % 10 == 0 else payload(m)))
+        for m in range(1, 51)
+    ]
     d = spark.createDataFrame(
         rows, schema="media_id long, kind string, payload binary"
     )
     out = multimodal.extract_media_features(d, decode_stub=False)
-    f = F.col("features")
-    return out.select(
-        F.col("media_id").cast("long").alias("media_id"),
-        F.element_at(f, 1).cast("long").alias("width"),
-        F.element_at(f, 2).cast("long").alias("height"),
-        F.element_at(f, 3).cast("long").alias("channels"),
-        F.round(F.element_at(f, 4).cast("double"), 6).alias("mean_c0"),
-        F.round(F.element_at(f, 5).cast("double"), 6).alias("mean_c1"),
-        F.round(F.element_at(f, 6).cast("double"), 6).alias("mean_c2"),
+    cols = []
+    for name, i, typ in spec:
+        c = F.element_at(F.col("features"), i).cast(typ)
+        cols.append((F.round(c, 6) if typ == "double" else c).alias(name))
+    return out.select(F.col("media_id").cast("long").alias("media_id"), *cols)
+
+
+def q_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic PNGs (``sources/png.py`` fixture writer, cycling all
+    five scanline filters) whose pixel values are base + x + y +
+    40*channel, so width/height/channel-means have closed forms the DuckDB
+    oracle reproduces."""
+    import numpy as np
+
+    from pii_detector_spark.sources.png import build_png
+
+    def png(m: int) -> bytes:
+        base = (m * 13) % 160
+        w, h, ch = 4 + m % 5, 3 + m % 4, 1 + m % 3
+        arr = (
+            base
+            + np.arange(w)[None, :, None]
+            + np.arange(h)[:, None, None]
+            + 40 * np.arange(ch)[None, None, :]
+        ).astype(np.uint8)
+        return build_png(arr, filter_mode="cycle")
+
+    return _decoded_features(
+        spark, "image", png, b"JFIF-ish junk payload with no in-repo codec",
+        _IMAGE_SPEC,
     )
 
 
 def q_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL GIF decode through the multimodal seam (``sources/gif.py``:
-    LZW, color table, interlace): palette-indexed frames whose index at
-    (x, y) is base + x + y with palette (i, 255-i, 2i), so the per-channel
-    means have closed forms; every 3rd image is interlaced (decode output
-    is identical, exercising the 4-pass row order); every 10th payload is
-    junk and degrades to null features per file."""
+    """GIF decode (``sources/gif.py``: LZW, color table, interlace):
+    palette-indexed frames whose index at (x, y) is base + x + y with
+    palette (i, 255-i, 2i), so the per-channel means have closed forms;
+    every 3rd image is interlaced (decode output is identical, exercising
+    the 4-pass row order)."""
     import numpy as np
 
     from pii_detector_spark.sources.gif import build_gif
@@ -1853,124 +1794,76 @@ def q_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         axis=1,
     )
-    rows = []
-    for m in range(1, 51):
-        if m % 10 == 0:
-            payload = b"RIFX not-actually-media junk payload"
-        else:
-            base = (m * 7) % 100
-            w, h = 4 + m % 5, 3 + m % 4
-            idx = (
-                base + np.arange(w)[None, :] + np.arange(h)[:, None]
-            ).astype(np.uint8)
-            payload = build_gif(idx, palette, interlace=(m % 3 == 0))
-        rows.append((m, "image", bytearray(payload)))
-    d = spark.createDataFrame(
-        rows, schema="media_id long, kind string, payload binary"
-    )
-    out = multimodal.extract_media_features(d, decode_stub=False)
-    f = F.col("features")
-    return out.select(
-        F.col("media_id").cast("long").alias("media_id"),
-        F.element_at(f, 1).cast("long").alias("width"),
-        F.element_at(f, 2).cast("long").alias("height"),
-        F.element_at(f, 3).cast("long").alias("channels"),
-        F.round(F.element_at(f, 4).cast("double"), 6).alias("mean_c0"),
-        F.round(F.element_at(f, 5).cast("double"), 6).alias("mean_c1"),
-        F.round(F.element_at(f, 6).cast("double"), 6).alias("mean_c2"),
+
+    def gif(m: int) -> bytes:
+        base = (m * 7) % 100
+        w, h = 4 + m % 5, 3 + m % 4
+        idx = (
+            base + np.arange(w)[None, :] + np.arange(h)[:, None]
+        ).astype(np.uint8)
+        return build_gif(idx, palette, interlace=(m % 3 == 0))
+
+    return _decoded_features(
+        spark, "image", gif, b"RIFX not-actually-media junk payload",
+        _IMAGE_SPEC,
     )
 
 
 def q_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline-JPEG decode through the seam (``sources/jpeg.py``:
-    Annex-K Huffman, entropy decode, IDCT, YCbCr): UNIFORM images under
-    unit quantization carry only DC coefficients and decode BIT-EXACTLY
-    (per-channel rounding error < 0.5 for integer inputs), so constant
-    gray/color fixtures give closed-form features while the full
-    huffman/IDCT machinery executes; non-multiple-of-8 dims exercise the
-    edge-replication path; every 10th payload is junk → null features."""
+    """Baseline-JPEG decode (``sources/jpeg.py``: Annex-K Huffman, entropy
+    decode, IDCT, YCbCr): UNIFORM images under unit quantization carry
+    only DC coefficients and decode BIT-EXACTLY (per-channel rounding
+    error < 0.5 for integer inputs), so constant gray/color fixtures give
+    closed-form features while the full huffman/IDCT machinery executes;
+    non-multiple-of-8 dims exercise the edge-replication path."""
     import numpy as np
 
     from pii_detector_spark.sources.jpeg import build_jpeg
 
-    rows = []
-    for m in range(1, 51):
-        if m % 10 == 0:
-            payload = b"\x00\x00\x01\xba not-a-jpeg mpeg-ish junk"
+    def jpeg(m: int) -> bytes:
+        w, h = 8 + m % 9, 8 + m % 7
+        if m % 2 == 1:
+            img = np.full((h, w), (m * 11) % 256, np.uint8)
         else:
-            w, h = 8 + m % 9, 8 + m % 7
-            if m % 2 == 1:
-                img = np.full((h, w), (m * 11) % 256, np.uint8)
-            else:
-                img = np.zeros((h, w, 3), np.uint8)
-                img[...] = ((m * 17) % 256, (m * 29) % 256, (m * 43) % 256)
-            payload = build_jpeg(img)
-        rows.append((m, "image", bytearray(payload)))
-    d = spark.createDataFrame(
-        rows, schema="media_id long, kind string, payload binary"
-    )
-    out = multimodal.extract_media_features(d, decode_stub=False)
-    f = F.col("features")
-    return out.select(
-        F.col("media_id").cast("long").alias("media_id"),
-        F.element_at(f, 1).cast("long").alias("width"),
-        F.element_at(f, 2).cast("long").alias("height"),
-        F.element_at(f, 3).cast("long").alias("channels"),
-        F.round(F.element_at(f, 4).cast("double"), 6).alias("mean_c0"),
-        F.round(F.element_at(f, 5).cast("double"), 6).alias("mean_c1"),
-        F.round(F.element_at(f, 6).cast("double"), 6).alias("mean_c2"),
-    )
+            img = np.zeros((h, w, 3), np.uint8)
+            img[...] = ((m * 17) % 256, (m * 29) % 256, (m * 43) % 256)
+        return build_jpeg(img)
 
-
-def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PNG + GIF + JPEG real-decode features, one tagged entry."""
-    return _tagged_union({
-        "png": q_png_features(spark, sf_dir),
-        "gif": q_gif_features(spark, sf_dir),
-        "jpeg": q_jpeg_features(spark, sf_dir),
-    })
+    return _decoded_features(
+        spark, "image", jpeg, b"\x00\x00\x01\xba not-a-jpeg mpeg-ish junk",
+        _IMAGE_SPEC,
+    )
 
 
 def q_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode through the multimodal seam: deterministic 16-bit
-    PCM WAVs (``sources/wav.py``) — channel 0 a DC level, channel 1 (when
-    stereo) a ±amp square wave — so framerate/channels/frames and
-    per-channel mean/RMS have closed forms; every 10th payload is junk and
-    degrades to null features."""
+    """REAL audio decode: deterministic 16-bit PCM WAVs (``sources/wav.py``)
+    — channel 0 a DC level, channel 1 (when stereo) a ±amp square wave — so
+    framerate/channels/frames and per-channel mean/RMS have closed
+    forms."""
     import numpy as np
 
     from pii_detector_spark.sources.wav import build_wav
 
-    rows = []
-    for m in range(1, 51):
-        if m % 10 == 0:
-            payload = b"OggS junk payload with no in-repo codec"
-        else:
-            rate = 8000 + 100 * (m % 5)
-            ch = 1 + m % 2
-            n = 40 + 2 * (m % 10)  # even → square wave mean is exactly 0
-            base = (m * 7) % 1000
-            amp = 100 + m
-            cols = [np.full(n, base, dtype=np.int64)]
-            if ch == 2:
-                sq = np.where(np.arange(n) % 2 == 0, amp, -amp)
-                cols.append(sq)
-            payload = build_wav(np.stack(cols, axis=1), rate=rate)
-        rows.append((m, "audio", bytearray(payload)))
-    d = spark.createDataFrame(
-        rows, schema="media_id long, kind string, payload binary"
-    )
-    out = multimodal.extract_media_features(d, decode_stub=False)
-    f = F.col("features")
-    return out.select(
-        F.col("media_id").cast("long").alias("media_id"),
-        F.element_at(f, 1).cast("long").alias("sample_rate"),
-        F.element_at(f, 2).cast("long").alias("channels"),
-        F.element_at(f, 3).cast("long").alias("n_frames"),
-        F.round(F.element_at(f, 4).cast("double"), 6).alias("mean_c0"),
-        F.round(F.element_at(f, 5).cast("double"), 6).alias("mean_c1"),
-        F.round(F.element_at(f, 8).cast("double"), 6).alias("rms_c0"),
-        F.round(F.element_at(f, 9).cast("double"), 6).alias("rms_c1"),
+    def wav(m: int) -> bytes:
+        rate = 8000 + 100 * (m % 5)
+        ch = 1 + m % 2
+        n = 40 + 2 * (m % 10)  # even → square wave mean is exactly 0
+        base = (m * 7) % 1000
+        amp = 100 + m
+        cols = [np.full(n, base, dtype=np.int64)]
+        if ch == 2:
+            sq = np.where(np.arange(n) % 2 == 0, amp, -amp)
+            cols.append(sq)
+        return build_wav(np.stack(cols, axis=1), rate=rate)
+
+    return _decoded_features(
+        spark, "audio", wav, b"OggS junk payload with no in-repo codec",
+        (
+            ("sample_rate", 1, "long"), ("channels", 2, "long"),
+            ("n_frames", 3, "long"), ("mean_c0", 4, "double"),
+            ("mean_c1", 5, "double"), ("rms_c0", 8, "double"),
+            ("rms_c1", 9, "double"),
+        ),
     )
 
 
@@ -1988,41 +1881,7 @@ def q_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _tagged_union(parts: "dict[str, DataFrame]") -> DataFrame:
-    """Union same-schema sub-queries under a ``case_tag`` column — the
-    registry-consolidation device (r4 task #1): the driver's correctness
-    gate truncates at ~50 entries, so same-shaped queries merge into one
-    row-tagged entry with IDENTICAL coverage (every sub-query still runs
-    and every row still hash-compares; the tag keeps provenance)."""
-    out = None
-    for tag, df in parts.items():
-        t = df.select(F.lit(tag).alias("case_tag"), "*")
-        out = t if out is None else out.unionByName(t)
-    return out
-
-
-def _tagged_union_sql(parts: "dict[str, str]") -> str:
-    return "\nUNION ALL\n".join(
-        f"SELECT '{tag}' AS case_tag, * FROM ({sql.strip()}) u_{tag}"
-        for tag, sql in parts.items()
-    )
-
-
-def q_extract_file_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S12 per-format extraction, all four format families in one entry
-    (urls carry distinct prefixes per family): PDF (stdlib page-tree/
-    FlateDecode), DOCX/XLSX (zipped XML), CSV (sniffed), legacy .doc/.xls
-    (OLE2+BIFF8+Word97)."""
-    return (
-        q_extract_pdf_text(spark, sf_dir)
-        .unionByName(q_extract_office_text(spark, sf_dir))
-        .unionByName(q_extract_csv_text(spark, sf_dir))
-        .unionByName(q_extract_legacy_text(spark, sf_dir))
-        .unionByName(_q_fix_text_part(spark, sf_dir))
-    )
-
-
-def _q_fix_text_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_fix_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mojibake repair + unicode normalization (operators/textfix) over a
     planted damage corpus; the oracle side carries the CLOSED-FORM
     repaired literals per branch."""
@@ -2045,136 +1904,171 @@ def _q_fix_text_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_pii_scrub_contact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EMAIL_ADDRESS + US_SSN masking (same output shape, tagged)."""
-    return _tagged_union({
-        "email": q_pii_scrub_email(spark, sf_dir),
-        "ssn": q_pii_scrub_ssn(spark, sf_dir),
-    })
+# ---------------------------------------------------------------------------
+# the registry
+
+# Merged entry -> {tag: member}. The driver's correctness gate truncates at
+# ~50 entries, so same-shaped queries share one entry with IDENTICAL
+# coverage: every member still runs, every row still hash-compares, and
+# the member's tag in ``case_tag`` keeps provenance.
+MERGED = {
+    # Naive-Bayes quality classifier + DSIR importance weights
+    "nb_quality": {"nb": "nb_scores", "dsir": "dsir"},
+    # A5 window shapes as (row_key, grp, val)
+    "window_running_budget": {
+        "orders": "order_running_total", "parts": "part_budget",
+    },
+    # A4 trend counters + the windowed rollup as
+    # (event_type, bucket_us, n_events, val)
+    "events_rollup": {"hourly": "events_hourly", "windowed": "events_windowed"},
+    # S12 per-format extraction: PDF (stdlib page-tree/FlateDecode),
+    # DOCX/XLSX (zipped XML), CSV (sniffed), legacy .doc/.xls
+    # (OLE2+BIFF8+Word97), and mojibake repair
+    "extract_file_texts": {
+        "pdf": "extract_pdf_text", "office": "extract_office_text",
+        "csv": "extract_csv_text", "legacy": "extract_legacy_text",
+        "fix": "fix_text",
+    },
+    # EMAIL_ADDRESS + US_SSN masking, first finding per doc
+    "pii_scrub_contact": {"email": "pii_scrub_email", "ssn": "pii_scrub_ssn"},
+    # financial/government-ID battery categories, one row per finding
+    "pii_scrub_financial": {
+        "credit_card": "pii_scrub_credit_card", "iban": "pii_scrub_iban",
+        "itin": "pii_scrub_itin", "gov_ids": "pii_scrub_gov_ids",
+    },
+    # credential-class battery categories, one row per finding
+    "pii_scrub_credentials": {
+        "ip": "pii_scrub_ip", "aws_key": "pii_scrub_aws_key",
+        "github_token": "pii_scrub_github_token",
+        "credential_sets": "pii_scrub_credential_sets",
+    },
+    # embedding near-dup pairs + SemDeDup verdicts as (id_a, id_b, cosine)
+    "embedding_neardup": {"pairs": "embedding_pairs", "semdedup": "semdedup"},
+    # PNG + GIF + JPEG real-decode features
+    "image_features": {
+        "png": "png_features", "gif": "gif_features", "jpeg": "jpeg_features",
+    },
+    # token counting as (doc_id, ws_tokens, bpe_tokens, n_chars)
+    "token_counts": {"stats": "token_stats", "bpe_trained": "bpe_planted"},
+    # deterministic sampling as (row_key, val)
+    "hash_sample": {
+        "orders": "hash_sample_orders", "stratified": "stratified_sample",
+    },
+    # the url-level operators, one url column
+    "url_prefilters": {
+        "prefilters": "url_prefilter", "canonical": "url_canonical",
+        "kept": "url_kept", "robots": "url_robots",
+    },
+    # planted language/fluency oracles as (doc_id, pred)
+    "lang_fluency_planted": {
+        "langid": "langid_planted", "word_ppl": "word_ppl_planted",
+        "ccnet_ppl": "ccnet_ppl", "ccnet_rank": "ccnet_rank",
+    },
+    # span-removal dedup as (doc_id, text)
+    "remove_boilerplate_lines": {
+        "lines": "boilerplate_lines", "windows": "substring_dedup",
+    },
+}
+# the one union without a case_tag: its urls already name the format family
+UNTAGGED = "extract_file_texts"
 
 
-def q_pii_scrub_financial(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Financial/government-ID battery categories, one tagged entry:
-    CREDIT_CARD (+IN_AADHAR co-match), IBAN_CODE, US_ITIN (+US_SSN
-    co-span), and the gov-id six-branch sweep (UK_NHS, IN_PAN,
-    US_PASSPORT, US_BANK+DL, CRYPTO, MEDICAL+DL)."""
-    return _tagged_union({
-        "credit_card": q_pii_scrub_credit_card(spark, sf_dir),
-        "iban": q_pii_scrub_iban(spark, sf_dir),
-        "itin": q_pii_scrub_itin(spark, sf_dir),
-        "gov_ids": q_pii_scrub_gov_ids(spark, sf_dir),
-    })
+def _tagged_union(parts: dict[str, DataFrame], tagged: bool = True) -> DataFrame:
+    out = None
+    for tag, df in parts.items():
+        t = df.select(F.lit(tag).alias("case_tag"), "*") if tagged else df
+        out = t if out is None else out.unionByName(t)
+    return out
 
 
-def q_pii_scrub_credentials(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Credential-class battery categories, one tagged entry:
-    IP_ADDRESSES, AWS_CREDENTIALS, GITHUB_CREDENTIALS, and the
-    twelve-branch credential-set sweep (TWILIO…INSURANCE)."""
-    return _tagged_union({
-        "ip": q_pii_scrub_ip(spark, sf_dir),
-        "aws_key": q_pii_scrub_aws_key(spark, sf_dir),
-        "github_token": q_pii_scrub_github_token(spark, sf_dir),
-        "credential_sets": q_pii_scrub_credential_sets(spark, sf_dir),
-    })
-
-
-def q_window_running_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5 window shapes, one tagged entry in a common (key, grp, val)
-    shape: per-customer running order total + per-brand running budget
-    filter (the reference's 300 MB per-extension sampling cap)."""
-    orders = q_order_running_total(spark, sf_dir).select(
-        F.col("o_orderkey").alias("row_key"),
-        F.col("o_custkey").cast("string").alias("grp"),
-        F.col("run_total").alias("val"),
+def _tagged_union_sql(parts: dict[str, str], tagged: bool = True) -> str:
+    head = "SELECT '{}' AS case_tag, *" if tagged else "SELECT *"
+    return "\nUNION ALL\n".join(
+        f"{head.format(tag)} FROM ({sql.strip()}) u_{tag}"
+        for tag, sql in parts.items()
     )
-    parts = q_part_budget(spark, sf_dir).select(
-        F.col("p_partkey").alias("row_key"),
-        F.col("p_brand").alias("grp"),
-        F.col("run_spend").alias("val"),
-    )
-    return _tagged_union({"orders": orders, "parts": parts})
 
 
-def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4 trend counters + streaming-shaped windowed rollup, one tagged
-    entry in a common (event_type, bucket_us, n_events, val) shape."""
-    hourly = q_events_hourly(spark, sf_dir).select(
-        "event_type",
-        F.col("hour_us").alias("bucket_us"),
-        "n_events",
-        F.col("sum_value").alias("val"),
+def _spark_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    """The Spark side of a declared query or MERGED member: the union of
+    its members, the battery over its ``_PII_TEXTS`` text, or ``q_<name>``."""
+    if name in MERGED:
+        return partial(_merged_query, name)
+    if name in _PII_TEXTS:
+        return partial(_pii_scrub, name)
+    return globals()[f"q_{name}"]
+
+
+def _merged_query(name: str, spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _tagged_union(
+        {t: _spark_query(m)(spark, sf_dir) for t, m in MERGED[name].items()},
+        tagged=name != UNTAGGED,
     )
-    windowed = q_events_windowed(spark, sf_dir).select(
-        "event_type",
-        F.col("window_start_us").alias("bucket_us"),
-        "n_events",
-        F.col("total_value").alias("val"),
-    )
-    return _tagged_union({"hourly": hourly, "windowed": windowed})
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ORDERING CONTRACT: the driver's correctness gate runs entries in dict
     # order and truncated at entry ~50 in r3 AND r4. The registry is now
     # CONSOLIDATED under that budget (same-schema queries merged into
-    # tagged-union entries — _tagged_union — with identical coverage), so
-    # every entry gets a driver row each round. Newest queries still run
-    # first (after the warm-up) as insurance against future truncation.
-    return {
-        "pricing_summary": q_pricing_summary,  # warm-up: pays session init
+    # tagged-union entries, built from MERGED), so every entry gets a
+    # driver row each round. Newest queries still run first (after the
+    # warm-up) as insurance against future truncation.
+    names = (
+        "pricing_summary",  # warm-up: pays session init
         # --- newest / least-driver-verified first ---
-        "nb_quality": q_nb_quality,
-        "window_running_budget": q_window_running_budget,
-        "events_rollup": q_events_rollup,
-        "extract_file_texts": q_extract_file_texts,
-        "pii_scrub_contact": q_pii_scrub_contact,
-        "pii_scrub_financial": q_pii_scrub_financial,
-        "pii_scrub_credentials": q_pii_scrub_credentials,
-        "decontaminate": q_decontaminate,
-        "pack_shards": q_pack_shards,
-        "host_cap": q_host_cap,
-        "simhash_pairs": q_simhash_pairs,
-        "dedup_canonical": q_dedup_canonical,
-        "dedup_clusters": q_dedup_clusters,
-        "minhash_delta": q_minhash_delta,
-        "ngram_jaccard": q_ngram_jaccard,
-        "ann_ivf": q_ann_ivf,
-        "ann_ivf_delta": q_ann_ivf_delta,
-        "embedding_neardup": q_embedding_neardup,
-        "media_features": q_media_features,
-        "image_features": q_image_features,
-        "wav_features": q_wav_features,
-        "frame_sampling": q_frame_sampling,
-        "ann_lsh": q_ann_lsh,
-        "ann_bruteforce": q_ann_bruteforce,
+        "nb_quality",
+        "window_running_budget",
+        "events_rollup",
+        "extract_file_texts",
+        "pii_scrub_contact",
+        "pii_scrub_financial",
+        "pii_scrub_credentials",
+        "decontaminate",
+        "pack_shards",
+        "host_cap",
+        "simhash_pairs",
+        "dedup_canonical",
+        "dedup_clusters",
+        "minhash_delta",
+        "ngram_jaccard",
+        "ann_ivf",
+        "ann_ivf_delta",
+        "embedding_neardup",
+        "media_features",
+        "image_features",
+        "wav_features",
+        "frame_sampling",
+        "ann_lsh",
+        "ann_bruteforce",
         # --- cheap established queries ---
-        "token_counts": q_token_counts,
-        "fingerprints": q_fingerprints,
-        "exact_dedup": q_exact_dedup,
-        "hash_sample": q_hash_sample,
-        "url_prefilters": q_url_prefilters,
-        "host_doc_counts": q_host_doc_counts,
-        "quality_metrics": q_quality_metrics,
-        "quality_keep": q_quality_keep,
-        "langid_documents": q_langid_documents,
-        "lang_fluency_planted": q_lang_fluency_planted,
-        "scrub_documents": q_scrub_documents,
-        "explode_archives": q_explode_archives,
-        "filename_classifiers": q_filename_classifiers,
-        "pii_scrub_person": q_pii_scrub_person,
-        "custom_classifier_scrub": q_custom_classifier_scrub,
-        "boilerplate_shingles": q_boilerplate_shingles,
-        "remove_boilerplate_lines": q_remove_boilerplate_lines,
-        "tabular_scan": q_tabular_scan,
-        "customers_without_orders": q_customers_without_orders,
-        "latest_event_per_user": q_latest_event_per_user,
-        "paginate_orders": q_paginate_orders,
-        "snapshot_diff": q_snapshot_diff,
+        "token_counts",
+        "fingerprints",
+        "exact_dedup",
+        "hash_sample",
+        "url_prefilters",
+        "host_doc_counts",
+        "quality_metrics",
+        "quality_keep",
+        "langid_documents",
+        "lang_fluency_planted",
+        "scrub_documents",
+        "explode_archives",
+        "filename_classifiers",
+        "pii_scrub_person",
+        "custom_classifier_scrub",
+        "boilerplate_shingles",
+        "remove_boilerplate_lines",
+        "tabular_scan",
+        "customers_without_orders",
+        "latest_event_per_user",
+        "paginate_orders",
+        "snapshot_diff",
         # --- expensive, longest-green last ---
-        "minhash_lsh": q_minhash_lsh,
-        "simhash": q_simhash,
-        "repetition_metrics": q_repetition_metrics,
-    }
+        "minhash_lsh",
+        "simhash",
+        "repetition_metrics",
+    )
+    return {name: _spark_query(name) for name in names}
 
 
 # ---------------------------------------------------------------------------
@@ -2644,7 +2538,8 @@ FROM d"""
 
 def oracle_sql() -> dict[str, str]:
     bpe = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r]"
-    base = {
+    # every declared query's SQL and every MERGED member's, by name
+    sql = {
         "pricing_summary": """
 SELECT l_returnflag, l_linestatus,
   round(sum(l_quantity), 2) AS sum_qty,
@@ -2663,13 +2558,13 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey
                     AND o.o_totalprice > 300000.0)""",
         "order_running_total": """
-SELECT o_orderkey::BIGINT AS o_orderkey, o_custkey::BIGINT AS o_custkey,
+SELECT o_orderkey::BIGINT AS row_key, o_custkey::BIGINT::VARCHAR AS grp,
   round(sum(o_totalprice) OVER (
     PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS run_total
+    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS val
 FROM orders""",
         "part_budget": """
-SELECT p_partkey::BIGINT AS p_partkey, p_brand, round(run_spend, 2) AS run_spend
+SELECT p_partkey::BIGINT AS row_key, p_brand AS grp, round(run_spend, 2) AS val
 FROM (
   SELECT p_partkey, p_brand,
     sum(p_retailprice) OVER (
@@ -2682,8 +2577,8 @@ SELECT user_id::BIGINT AS user_id, max(epoch_us(ts))::BIGINT AS max_ts_us,
        count(*)::BIGINT AS n_events
 FROM events GROUP BY user_id""",
         "events_hourly": """
-SELECT event_type, epoch_us(date_trunc('hour', ts))::BIGINT AS hour_us,
-       count(*)::BIGINT AS n_events, round(sum(value), 4) AS sum_value
+SELECT event_type, epoch_us(date_trunc('hour', ts))::BIGINT AS bucket_us,
+       count(*)::BIGINT AS n_events, round(sum(value), 4) AS val
 FROM events GROUP BY 1, 2""",
         "paginate_orders": """
 SELECT o_orderkey::BIGINT AS o_orderkey, rn::BIGINT AS rn
@@ -2783,9 +2678,9 @@ SELECT 'https://files.example.com/p' || doc_id::VARCHAR || '.pdf' AS url,
          || (doc_id * 7)::VARCHAR AS text
 FROM d""",
         "events_windowed": """
-SELECT (epoch_us(ts) - epoch_us(ts) % 600000000)::BIGINT AS window_start_us,
-       event_type, count(*)::BIGINT AS n_events,
-       round(sum(value), 4) AS total_value
+SELECT event_type,
+       (epoch_us(ts) - epoch_us(ts) % 600000000)::BIGINT AS bucket_us,
+       count(*)::BIGINT AS n_events, round(sum(value), 4) AS val
 FROM events GROUP BY 1, 2""",
         "snapshot_diff": """
 WITH o AS (SELECT o_orderkey::BIGINT AS pk FROM orders),
@@ -2805,25 +2700,23 @@ SELECT COALESCE(old.pk, new.pk)::BIGINT AS pk,
             WHEN old.h != new.h THEN 'updated'
             ELSE 'unchanged' END AS status
 FROM old FULL OUTER JOIN new ON old.pk = new.pk""",
-        "hash_sample": """
-SELECT 'orders' AS case_tag, o_orderkey::BIGINT AS row_key,
-       round(o_totalprice, 2) AS val
-FROM orders WHERE md5(CAST(o_orderkey AS VARCHAR)) < '1'
-UNION ALL
-SELECT 'stratified', doc_id::BIGINT,
+        "hash_sample_orders": """
+SELECT o_orderkey::BIGINT AS row_key, round(o_totalprice, 2) AS val
+FROM orders WHERE md5(CAST(o_orderkey AS VARCHAR)) < '1'""",
+        "stratified_sample": """
+SELECT doc_id::BIGINT AS row_key,
        (CASE bucket WHEN 'short' THEN 0 WHEN 'mid' THEN 1 ELSE 2 END * 2
         + CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
                     CASE bucket WHEN 'short' THEN 'g'
                                 WHEN 'mid' THEN '40000000'
                                 ELSE '10000000' END
-               THEN 1 ELSE 0 END)::DOUBLE
+               THEN 1 ELSE 0 END)::DOUBLE AS val
 FROM (SELECT doc_id,
              CASE WHEN length(text) < 250 THEN 'short'
                   WHEN length(text) < 400 THEN 'mid'
                   ELSE 'long' END AS bucket
       FROM documents) t""",
-        "url_prefilters": _tagged_union_sql({
-            "prefilters": r"""
+        "url_prefilter": r"""
 WITH u AS (
   SELECT 'https://' || source || '.example.com/d/' || CAST(doc_id AS VARCHAR)
          || CASE WHEN doc_id % 37 = 0 THEN '.png'
@@ -2835,9 +2728,9 @@ WITH u AS (
 SELECT url FROM u
 WHERE NOT regexp_matches(url, '(?i)\.(png|jpe?g|gif|bmp|tiff?|ico|svg|webp|mp3|wav|ogg|flac|mp4|avi|mov|mkv|webm|zip|tar|gz|bz2|rar|7z|exe|dll|so|bin)$')
   AND NOT regexp_matches(url, '(?i)(vpcflowlogs|CloudTrail|-log)')""",
-            # closed-form expected canonical string per construction
-            # branch — independent of the engine's regex chain
-            "canonical": """
+        # closed-form expected canonical string per construction branch —
+        # independent of the engine's regex chain
+        "url_canonical": """
 SELECT CASE doc_id % 8
   WHEN 0 THEN 'https://ex' || doc_id::VARCHAR || '.com/a/b?a=1&b=2'
   WHEN 1 THEN 'http://ex' || doc_id::VARCHAR || '.com/a/b'
@@ -2849,10 +2742,10 @@ SELECT CASE doc_id % 8
   ELSE 'https://ex' || doc_id::VARCHAR || '.com/a/d?A=2&a=1'
 END AS url
 FROM documents""",
-            # latest capture per canonical family: by construction the
-            # family is doc_id % 50 and warc_ts grows with doc_id, so
-            # the survivor of each family is its max doc_id
-            "kept": """
+        # latest capture per canonical family: by construction the family
+        # is doc_id % 50 and warc_ts grows with doc_id, so the survivor of
+        # each family is its max doc_id
+        "url_kept": """
 WITH g AS (
   SELECT doc_id % 50 AS fam, max(doc_id) AS kept_id
   FROM documents GROUP BY 1
@@ -2860,9 +2753,9 @@ WITH g AS (
 SELECT 'https://www.site' || fam::VARCHAR || '.com/p?utm_x='
        || kept_id::VARCHAR AS url
 FROM g""",
-            # robots verdicts are a pure doc_id function (see
-            # _q_robots_part): only doc_id%4==0 is disallowed
-            "robots": """
+        # robots verdicts are a pure doc_id function (see q_url_robots):
+        # only doc_id%4==0 is disallowed
+        "url_robots": """
 SELECT 'https://r' || (doc_id % 2)::VARCHAR || '.example.com/'
        || CASE WHEN doc_id % 4 = 0 THEN 'private/x'
                WHEN doc_id % 4 = 2 THEN 'private/ok/y'
@@ -2870,7 +2763,6 @@ SELECT 'https://r' || (doc_id % 2)::VARCHAR || '.example.com/'
        || '-' || doc_id::VARCHAR AS url
 FROM documents
 WHERE doc_id % 4 <> 0""",
-        }),
         "exact_dedup": """
 SELECT md5(text) AS content_md5, min(doc_id)::BIGINT AS canonical_id,
        count(*)::BIGINT AS dup_count
@@ -2926,16 +2818,15 @@ FROM documents d LEFT JOIN hits USING (doc_id)""",
         "minhash_lsh": _minhash_sql(3, 12, 4, 0.5),
         # delta-mode accumulation must equal full recompute — same oracle
         "minhash_delta": _minhash_sql(3, 12, 4, 0.5),
-        "remove_boilerplate_lines": _tagged_union_sql({
-            "lines": """
+        "boilerplate_lines": """
 SELECT doc_id::BIGINT AS doc_id,
        'doc body ' || doc_id::VARCHAR || chr(10) || 'unique tail '
          || (doc_id * 7)::VARCHAR AS text
 FROM documents""",
-            # independent SQL reimplementation of the duplicated-window
-            # cut (k=4): k-gram md5s -> dup hashes with min-(doc,pos)
-            # canonical -> coverage intervals -> ordered token rebuild
-            "windows": """
+        # independent SQL reimplementation of the duplicated-window cut
+        # (k=4): k-gram md5s -> dup hashes with min-(doc,pos) canonical ->
+        # coverage intervals -> ordered token rebuild
+        "substring_dedup": """
 WITH docs AS (
   SELECT doc_id,
     'u' || doc_id::VARCHAR || 'a u' || doc_id::VARCHAR
@@ -2978,7 +2869,6 @@ rebuilt AS (
 )
 SELECT d.doc_id::BIGINT AS doc_id, coalesce(r.text, '') AS text
 FROM docs d LEFT JOIN rebuilt r ON d.doc_id = r.doc_id""",
-        }),
         "boilerplate_shingles": f"""
 WITH {_shingles_cte(3).lstrip()},
 ex AS (SELECT doc_id, md5(unnest(shingles)) AS shingle_md5 FROM nz)
@@ -2987,21 +2877,19 @@ SELECT shingle_md5, count(*)::BIGINT AS doc_freq,
 FROM ex GROUP BY 1 HAVING count(*) >= 2""",
         "simhash": _simhash_sql(),
         "simhash_pairs": _simhash_pairs_sql(3),
-        "token_counts": _tagged_union_sql({
-            "stats": f"""
+        "token_stats": f"""
 SELECT doc_id::BIGINT AS doc_id,
   len({_WORDS_SQL})::BIGINT AS ws_tokens,
   len(regexp_extract_all(text, '{bpe}'))::BIGINT AS bpe_tokens,
   length(text)::BIGINT AS n_chars
 FROM documents""",
-            # trained-BPE constants derived in q_token_counts' docstring
-            "bpe_trained": """
+        # trained-BPE constants derived in q_bpe_planted's docstring
+        "bpe_planted": """
 SELECT doc_id::BIGINT AS doc_id,
   5::BIGINT AS ws_tokens,
   18::BIGINT AS bpe_tokens,
   27::BIGINT AS n_chars
 FROM documents""",
-        }),
         "fingerprints": """
 SELECT doc_id::BIGINT AS doc_id,
   md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
@@ -3328,9 +3216,8 @@ FROM documents""",
         # exhaustive-probe IVF == exact top-k → brute-force SQL is the oracle
         "ann_ivf": _ann_bruteforce_sql(3, 8),
         "ann_ivf_delta": _ann_bruteforce_sql(3, 8),
-        "embedding_neardup": _tagged_union_sql(
-            {"pairs": _neardup_sql(64, 0.4, 6), "semdedup": _semdedup_sql(0.2)}
-        ),
+        "embedding_pairs": _neardup_sql(64, 0.4, 6),
+        "semdedup": _semdedup_sql(0.2),
         "media_features": """
 SELECT doc_id::BIGINT AS media_id, 'image' AS kind,
        octet_length(encode(text))::BIGINT AS n_bytes,
@@ -3445,7 +3332,7 @@ FROM f""",
         # fixed-point micro-nat weights) and rescores every document; the
         # BIGINT weight sums are exact in any order, so values hash-match
         # the distributed Spark computation bit for bit.
-        "nb_quality": """
+        "nb_scores": """
 WITH base AS (
   SELECT doc_id,
          text || ' ' || CASE WHEN doc_id % 2 = 0
@@ -3498,11 +3385,8 @@ SELECT b.doc_id::BIGINT AS doc_id,
        (COALESCE(s.tok_sum, 0) + c.bias)::BIGINT AS nb_score_fp,
        (COALESCE(s.tok_sum, 0) + c.bias) >= 0 AS nb_keep
 FROM base b LEFT JOIN scored s USING (doc_id), consts c""",
-    }
-    # dsir: full model retrain in SQL (hashed md5-prefix buckets,
-    # micro-nat integer LLR weights — mirrors operators/dsir exactly)
-    base["nb_quality"] = _tagged_union_sql({
-        "nb": base["nb_quality"],
+        # dsir: full model retrain in SQL (hashed md5-prefix buckets,
+        # micro-nat integer LLR weights — mirrors operators/dsir exactly)
         "dsir": """
 WITH g AS (
   SELECT doc_id, substr(md5(tok), 1, 2) AS bucket
@@ -3543,15 +3427,13 @@ SELECT d.doc_id::BIGINT AS doc_id,
        COALESCE(s.s, 0)::BIGINT AS nb_score_fp,
        COALESCE(s.s, 0) >= 0 AS nb_keep
 FROM documents d LEFT JOIN scored s USING (doc_id)""",
-    })
-    # langid_documents: Python model artifacts — rows-only by design;
-    # lang_fluency_planted carries the full cross-engine check instead
-    base["lang_fluency_planted"] = _tagged_union_sql({
-        "langid": """
+        # langid_documents: Python model artifacts — rows-only by design;
+        # lang_fluency_planted carries the full cross-engine check instead
+        "langid_planted": """
 SELECT doc_id::BIGINT AS doc_id,
        list_extract(['de','en','es','fr','ru'], 1 + doc_id % 5) AS pred
 FROM documents""",
-        "word_ppl": """
+        "word_ppl_planted": """
 SELECT doc_id::BIGINT AS doc_id, (doc_id % 5 = 1)::VARCHAR AS pred
 FROM documents""",
         "ccnet_ppl": """
@@ -3570,12 +3452,9 @@ SELECT doc_id::BIGINT AS doc_id,
             WHEN pr <= 2.0/3.0 THEN 'middle'
             ELSE 'tail' END AS pred
 FROM r""",
-    })
-    # registry consolidation (mirrors queries()): merged tagged-union
-    # entries replace their members — identical SQL, identical coverage
-    # closed-form repaired literals per damage branch (operators/textfix):
-    # mojibake rounds, NFC, newline canon, control/zero-width strip
-    base["fix_text"] = """
+        # closed-form repaired literals per damage branch (operators/textfix):
+        # mojibake rounds, NFC, newline canon, control/zero-width strip
+        "fix_text": """
 SELECT 'https://fix.example.com/' || doc_id::VARCHAR AS url,
        CASE doc_id % 6
          WHEN 0 THEN 'café au lait '
@@ -3585,53 +3464,13 @@ SELECT 'https://fix.example.com/' || doc_id::VARCHAR AS url,
          WHEN 4 THEN 'plain '
          ELSE 'x' || chr(8220) || 'y '
        END || doc_id::VARCHAR AS text
-FROM documents"""
-    base["extract_file_texts"] = "\nUNION ALL\n".join(
-        f"SELECT * FROM ({base.pop(n).strip()}) x_{i}"
-        for i, n in enumerate(
-            ("extract_pdf_text", "extract_office_text",
-             "extract_csv_text", "extract_legacy_text", "fix_text")
+FROM documents""",
+    }
+    members = {m for parts in MERGED.values() for m in parts.values()}
+    out = {name: q for name, q in sql.items() if name not in members}
+    for name, parts in MERGED.items():
+        out[name] = _tagged_union_sql(
+            {tag: sql[m] for tag, m in parts.items()},
+            tagged=name != UNTAGGED,
         )
-    )
-    base["image_features"] = _tagged_union_sql({
-        "png": base.pop("png_features"),
-        "gif": base.pop("gif_features"),
-        "jpeg": base.pop("jpeg_features"),
-    })
-    base["pii_scrub_contact"] = _tagged_union_sql({
-        "email": base.pop("pii_scrub_email"),
-        "ssn": base.pop("pii_scrub_ssn"),
-    })
-    base["pii_scrub_financial"] = _tagged_union_sql({
-        "credit_card": base.pop("pii_scrub_credit_card"),
-        "iban": base.pop("pii_scrub_iban"),
-        "itin": base.pop("pii_scrub_itin"),
-        "gov_ids": base.pop("pii_scrub_gov_ids"),
-    })
-    base["pii_scrub_credentials"] = _tagged_union_sql({
-        "ip": base.pop("pii_scrub_ip"),
-        "aws_key": base.pop("pii_scrub_aws_key"),
-        "github_token": base.pop("pii_scrub_github_token"),
-        "credential_sets": base.pop("pii_scrub_credential_sets"),
-    })
-    base["window_running_budget"] = _tagged_union_sql({
-        "orders": (
-            "SELECT o_orderkey AS row_key, o_custkey::VARCHAR AS grp, "
-            f"run_total AS val FROM ({base.pop('order_running_total').strip()}) w1"
-        ),
-        "parts": (
-            "SELECT p_partkey AS row_key, p_brand AS grp, "
-            f"run_spend AS val FROM ({base.pop('part_budget').strip()}) w2"
-        ),
-    })
-    base["events_rollup"] = _tagged_union_sql({
-        "hourly": (
-            "SELECT event_type, hour_us AS bucket_us, n_events, "
-            f"sum_value AS val FROM ({base.pop('events_hourly').strip()}) e1"
-        ),
-        "windowed": (
-            "SELECT event_type, window_start_us AS bucket_us, n_events, "
-            f"total_value AS val FROM ({base.pop('events_windowed').strip()}) e2"
-        ),
-    })
-    return base
+    return out

@@ -282,6 +282,35 @@ def remove_boilerplate_lines(
 SIMHASH_BITS = 120  # two 60-bit words (top 4 bits of each long unused)
 
 
+def _md5_bits(start: int) -> Column:
+    """60 bits of token ``w``'s md5: 15 hex chars from 1-based ``start``."""
+    return F.conv(F.substring(F.md5("w"), start, 15), 16, 10).cast("long")
+
+
+def _simhash_votes(src: str, tag: str) -> list[Column]:
+    """Per-bit vote sums ``v{tag}_{i}`` over the 60 bits of ``src``: +1
+    for each token whose bit is set, -1 otherwise."""
+    return [
+        F.sum(
+            F.when(F.shiftright(F.col(src), i).bitwiseAND(F.lit(1)) == 1, 1)
+            .otherwise(-1)
+        ).alias(f"v{tag}_{i}")
+        for i in range(60)
+    ]
+
+
+def _simhash_pack(tag: str) -> Column:
+    """The sign vector of the ``v{tag}_{i}`` vote sums packed into a long."""
+    packed = None
+    for i in range(60):
+        term = (
+            F.when(F.col(f"v{tag}_{i}") > 0, F.lit(2 ** i).cast("long"))
+            .otherwise(F.lit(0).cast("long"))
+        )
+        packed = term if packed is None else packed + term
+    return packed
+
+
 def simhash128(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -298,42 +327,14 @@ def simhash128(
     tok = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.explode(F.array_distinct(words_col(text_col))).alias("w"),
-    ).select(
-        "doc_id",
-        F.conv(F.substring(F.md5("w"), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h_lo"),
-        F.conv(F.substring(F.md5("w"), 17, 15), 16, 10)
-        .cast("long")
-        .alias("h_hi"),
-    )
-
-    def _votes(src: str, tag: str) -> list:
-        return [
-            F.sum(
-                F.when(
-                    F.shiftright(F.col(src), i).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"v{tag}_{i}")
-            for i in range(60)
-        ]
-
+    ).select("doc_id", _md5_bits(1).alias("h_lo"), _md5_bits(17).alias("h_hi"))
     grouped = tok.groupBy("doc_id").agg(
-        *_votes("h_lo", "l"), *_votes("h_hi", "h")
+        *_simhash_votes("h_lo", "l"), *_simhash_votes("h_hi", "h")
     )
-
-    def _pack(tag: str):
-        packed = None
-        for i in range(60):
-            term = (
-                F.when(F.col(f"v{tag}_{i}") > 0, F.lit(2 ** i).cast("long"))
-                .otherwise(F.lit(0).cast("long"))
-            )
-            packed = term if packed is None else packed + term
-        return packed
-
     sims = grouped.select(
-        "doc_id", _pack("h").alias("sim_hi"), _pack("l").alias("sim_lo")
+        "doc_id",
+        _simhash_pack("h").alias("sim_hi"),
+        _simhash_pack("l").alias("sim_lo"),
     )
     ids = df.select(F.col(id_col).cast("long").alias("doc_id"))
     return ids.join(sims, "doc_id", "left")
@@ -452,26 +453,9 @@ def simhash64(
     tok = _slim_docs(df, id_col, text_col).select(
         "doc_id",
         F.explode(F.array_distinct(words_col("_text"))).alias("w"),
-    ).select(
-        "doc_id",
-        F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long").alias("h"),
-    )
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1)
-            .otherwise(-1)
-        ).alias(f"v_{i}")
-        for i in range(60)
-    ]
-    grouped = tok.groupBy("doc_id").agg(*votes)
-    packed = None
-    for i in range(60):
-        term = (
-            F.when(F.col(f"v_{i}") > 0, F.lit(2 ** i).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-        )
-        packed = term if packed is None else packed + term
-    sims = grouped.select("doc_id", packed.alias("simhash"))
+    ).select("doc_id", _md5_bits(1).alias("h"))
+    grouped = tok.groupBy("doc_id").agg(*_simhash_votes("h", ""))
+    sims = grouped.select("doc_id", _simhash_pack("").alias("simhash"))
     ids = df.select(F.col(id_col).cast("long").alias("doc_id"))
     return ids.join(sims, "doc_id", "left").select(
         "doc_id", F.coalesce("simhash", F.lit(0).cast("long")).alias("simhash")

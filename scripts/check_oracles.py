@@ -1,12 +1,15 @@
 """Local mimic of the driver's correctness gate: run each __spark_entry__
 query on Spark and its oracle on DuckDB at sf0.01; compare row count, column
-names, and order-insensitive values.
+names, and order-insensitive values. Every OK and rows-only line, and the
+``entry()`` smoke, carries a short sha256 of the sorted canonical rows per
+engine, so two checkouts' outputs can be compared line by line.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import sys
 
@@ -30,6 +33,16 @@ def canon(v):
     if isinstance(v, (bytes, bytearray)):
         return v.hex()
     return str(v)
+
+
+def canon_rows(columns, rows) -> list[tuple]:
+    """Rows as sorted tuples of canonical values, columns in name order."""
+    idx = [columns.index(c) for c in sorted(columns)]
+    return sorted(tuple(canon(r[i]) for i in idx) for r in rows)
+
+
+def digest(rows: list[tuple]) -> str:
+    return hashlib.sha256(repr(rows).encode()).hexdigest()[:12]
 
 
 def main() -> int:
@@ -65,9 +78,10 @@ def main() -> int:
             failures.append(name)
             continue
         scols = sorted(sdf.columns)
+        sset = canon_rows(sdf.columns, srows)
         if name not in oracles:
             print(f"  {name:28s} rows-only: {len(srows)} rows "
-                  f"[{_time.monotonic() - t0:.2f}s]")
+                  f"spark={digest(sset)} [{_time.monotonic() - t0:.2f}s]")
             continue
         ddf = con.sql(oracles[name])
         dcols = sorted(ddf.columns)
@@ -80,10 +94,7 @@ def main() -> int:
             print(f"  {name:28s} ROWCOUNT spark={len(srows)} duck={len(drows)}")
             ok = False
         if ok:
-            sidx = [sdf.columns.index(c) for c in scols]
-            didx = [ddf.columns.index(c) for c in dcols]
-            sset = sorted(tuple(canon(r[i]) for i in sidx) for r in srows)
-            dset = sorted(tuple(canon(r[i]) for i in didx) for r in drows)
+            dset = canon_rows(ddf.columns, drows)
             if sset != dset:
                 ndiff = sum(1 for a, b in zip(sset, dset) if a != b)
                 print(f"  {name:28s} VALUE MISMATCH ({ndiff} differing rows)")
@@ -94,6 +105,7 @@ def main() -> int:
                 ok = False
         if ok:
             print(f"  {name:28s} OK ({len(srows)} rows) "
+                  f"spark={digest(sset)} duck={digest(dset)} "
                   f"[{_time.monotonic() - t0:.2f}s]")
         else:
             failures.append(name)
@@ -101,8 +113,9 @@ def main() -> int:
     # entry smoke
     if not only:
         edf = entrymod.entry(spark)
-        n = edf.count()
-        print(f"  {'<entry>':28s} {n} rows, {len(edf.columns)} cols")
+        erows = edf.collect()
+        print(f"  {'<entry>':28s} {len(erows)} rows, {len(edf.columns)} cols "
+              f"spark={digest(canon_rows(edf.columns, erows))}")
 
     print(f"  suite wall time: {_time.monotonic() - t_suite:.1f}s")
     spark.stop()

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 
 def test_windowed_event_metrics_batch_equivalence(spark, sf_dir="/root/testdata/sf0.001"):
-    from pii_detector_spark.streaming.incremental import windowed_event_metrics
+    from pii_detector_spark.operators.events import windowed_event_metrics
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")

@@ -84,7 +84,7 @@ def test_multimodal_real_decode_degrades_unknown_formats(spark):
 
 
 def test_windowed_event_metrics(spark):
-    from pii_detector_spark.streaming.incremental import windowed_event_metrics
+    from pii_detector_spark.operators.events import windowed_event_metrics
 
     events = spark.read.parquet(f"{SF}/events.parquet")
     out = windowed_event_metrics(events)
