@@ -28,21 +28,23 @@ Cross-engine determinism rules used throughout:
 from __future__ import annotations
 
 import hashlib
+import math
 from collections.abc import Callable
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pii_detector_spark.config import QualityThresholds
+from pii_detector_spark.config import (
+    DEFAULT_CONFIG,
+    EngineConfig,
+    QualityThresholds,
+)
+from pii_detector_spark.functions.langmodels import LANGS
 from pii_detector_spark.functions.toxicity import TOXIC_WORDS
 from pii_detector_spark.operators import dedup, multimodal, similarity, textstats
 from pii_detector_spark.operators.langid import with_langid
-from pii_detector_spark.operators.quality import (
-    STOPWORDS,
-    with_keep_decision,
-    with_quality_metrics,
-)
+from pii_detector_spark.operators.quality import STOPWORDS
 from pii_detector_spark.operators.scrub import with_scrub
 from pii_detector_spark.plans.partitioning import salted_host_counts
 from pii_detector_spark.plans.pipeline import DOC_COLUMNS, transform_web_pages
@@ -1082,13 +1084,31 @@ def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.fingerprints(_t(spark, sf_dir, "documents"))
 
 
+def _quality_pass(
+    spark: SparkSession, sf_dir: str, config: EngineConfig = DEFAULT_CONFIG
+) -> DataFrame:
+    """The documents through the pipeline's fused pass
+    (``transform_web_pages`` without extraction or prefilters): each doc is
+    a page whose ``url`` is its ``doc_id`` as a string, cast back after."""
+    d = _t_wide(spark, sf_dir, "documents", "doc_id")
+    pages = d.select(
+        F.col("doc_id").cast("string").alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        "lang",
+        F.lit(None).cast("binary").alias("html"),
+        "text",
+    )
+    out = transform_web_pages(pages, config, extract_html=False, prefilter=False)
+    return out.withColumn("doc_id", F.col("url").cast("long"))
+
+
 def q_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = with_quality_metrics(_t_wide(spark, sf_dir, "documents", "doc_id"))
+    d = _quality_pass(spark, sf_dir)
     return d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
+        "doc_id",
         "n_words",
         "n_lines",
-        F.col("n_chars").cast("long").alias("n_chars"),
+        "n_chars",
         F.round("mean_word_len", 6).alias("mean_word_len"),
         F.round("symbol_ratio", 6).alias("symbol_ratio"),
         F.round("bullet_line_frac", 6).alias("bullet_line_frac"),
@@ -1100,16 +1120,23 @@ def q_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic-rule keep/drop (SQL-expressible subset: language/perplexity
-    rules neutralized via stub columns; the full chain is pytest-verified)."""
-    d = with_quality_metrics(_t_wide(spark, sf_dir, "documents", "doc_id"))
-    d = d.withColumn("lang_pred", F.lit("en")).withColumn(
-        "perplexity", F.lit(0.0)
+# every label the language model can return is allowed and no perplexity
+# is too high, so the two model rules never fire: the SQL-expressible rules
+# decide alone, exactly as in the oracle SQL
+_MODEL_RULES_OFF = EngineConfig(
+    quality=QualityThresholds(
+        allowed_langs=(*LANGS, "unk"), max_perplexity=math.inf
     )
-    d = with_keep_decision(d, QualityThresholds())
+)
+
+
+def q_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Heuristic-rule keep/drop from the pipeline's fused pass, with the
+    language and perplexity rules (model lookups, not SQL-expressible)
+    switched off by ``_MODEL_RULES_OFF``; the full chain is pytest-verified."""
+    d = _quality_pass(spark, sf_dir, _MODEL_RULES_OFF)
     return d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
+        "doc_id",
         "keep",
         F.coalesce("drop_reason", F.lit("none")).alias("drop_reason"),
     )
@@ -1535,10 +1562,11 @@ def q_ccnet_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_nb_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality classifier (the CCNet/GPT-3 fastText-classifier
     analogue): multinomial Naive Bayes trained with one distributed word
-    count, scored via a broadcast weight join. Labels are planted as a
-    pure function of doc_id (even = curated, odd = crawl) with one marker
-    token appended per class, so DuckDB retrains the identical model in
-    SQL: integer micro-nat weights make the distributed sum exact and
+    count, scored by the job's scorer (the weight dict broadcast to one
+    pandas UDF, no join and no shuffle). Labels are planted as a pure
+    function of doc_id (even = curated, odd = crawl) with one marker token
+    appended per class, so DuckDB retrains the identical model in SQL:
+    integer micro-nat weights make the distributed sum exact and
     order-independent, hence hash-identical across engines."""
     from pii_detector_spark.operators.nbquality import score_nb, train_nb
 
@@ -1566,10 +1594,12 @@ def q_nb_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance resampling weights (operators/dsir): target sample
     = docs with doc_id%5==0, raw = the rest, unigram buckets (the bigram
-    path is python-oracle-pinned in tests/test_dsir.py). DuckDB retrains
-    the identical hashed-bucket model — md5-prefix bucketing and integer
-    micro-nat weights make the per-doc sums hash-identical — and the
-    keep flag is the weight's sign (resampling toward the target)."""
+    path is python-oracle-pinned in tests/test_dsir.py), scored by the
+    job's scorer (the weight dict broadcast to one pandas UDF, no join and
+    no shuffle). DuckDB retrains the identical hashed-bucket model —
+    md5-prefix bucketing and integer micro-nat weights make the per-doc
+    sums hash-identical — and the keep flag is the weight's sign
+    (resampling toward the target)."""
     from pii_detector_spark.operators.dsir import dsir_weights, train_dsir
 
     d = _guard(

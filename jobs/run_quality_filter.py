@@ -248,16 +248,16 @@ def main() -> None:
         to_pack = spark.read.parquet(publish("docs_capped", capped))
     if args.nb_labels:
         from pii_detector_spark.operators.nbquality import (
-            score_nb_broadcast,
+            score_nb,
             train_nb,
         )
 
         model = train_nb(spark.read.parquet(args.nb_labels))
-        scored = score_nb_broadcast(kept_text, model, id_col="url")
+        scored = score_nb(kept_text, model, id_col="url")
         publish("nb_scores", scored)
     if args.dsir_target:
         from pii_detector_spark.operators.dsir import (
-            dsir_weights_broadcast,
+            dsir_weights,
             train_dsir,
         )
 
@@ -268,7 +268,7 @@ def main() -> None:
             else kept_text.select("text")
         )
         model = train_dsir(target, raw)
-        weights = dsir_weights_broadcast(kept_text, model, id_col="url")
+        weights = dsir_weights(kept_text, model, id_col="url")
         publish("dsir_weights", weights)
     if args.ppl_buckets:
         from pii_detector_spark.operators.ccnet import (

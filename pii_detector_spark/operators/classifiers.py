@@ -23,18 +23,14 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pii_detector_spark.operators.scrub import (
-    SCRUB_RESULT_TYPE,
     Match,
-    build_findings,
     compiled_secret_exclude,
     detect,
-    is_phi,
-    scrub_text,
+    with_detector_scrub,
 )
 from pii_detector_spark.patterns import ALL_PATTERNS, PatternSpec
 
@@ -100,30 +96,12 @@ def with_custom_scrub(
     patterns compile once per executor (closure capture; lazy init)."""
     state: dict = {}
 
-    def _batch(urls: pd.Series, texts: pd.Series) -> pd.DataFrame:
+    def _detect(text: str) -> list[Match]:
         if "battery" not in state:
             state["battery"] = custom_battery(customs)
-        battery = state["battery"]
-        scrubbed, findings, phi = [], [], []
-        for url, text in zip(urls, texts):
-            t = text or ""
-            matches = detect_with_customs(t, battery)
-            scrubbed.append(scrub_text(t, matches))
-            findings.append(build_findings(url or "", matches))
-            phi.append(is_phi(url or "", t))
-        return pd.DataFrame(
-            {"scrubbed_text": scrubbed, "findings": findings, "is_phi": phi}
-        )
+        return detect_with_customs(text, state["battery"])
 
-    udf = F.pandas_udf(_batch, returnType=SCRUB_RESULT_TYPE).asNondeterministic()
-    res = udf(F.col(url_col), F.col(text_col))
-    return (
-        df.withColumn("_scrub", res)
-        .withColumn("scrubbed_text", F.col("_scrub.scrubbed_text"))
-        .withColumn("findings", F.col("_scrub.findings"))
-        .withColumn("is_phi", F.col("_scrub.is_phi"))
-        .drop("_scrub")
-    )
+    return with_detector_scrub(df, _detect, url_col, text_col)
 
 
 # --- filename include/exclude classifiers (F3) ------------------------------

@@ -38,8 +38,9 @@ def _slim_docs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def words_col(text_col: str = "text") -> Column:
-    """ASCII-whitespace tokenization, empties dropped (same spec as
-    operators/quality.py and the SQL oracles)."""
+    """ASCII-whitespace tokenization, empties dropped (the spec
+    operators/quality.py documents for the fused pass's word metrics, and
+    the SQL oracles')."""
     return F.filter(
         F.split(F.col(text_col), "[ \\t\\n\\r\\f\\u000B]+"),
         lambda w: w != F.lit(""),

@@ -28,12 +28,11 @@ Spark shapes:
   rows; totals are one scalar fetch.  Target and raw inputs are
   *samples* (the paper uses held-out samples for both), never the
   100-TB corpus.
-* **scoring** (``dsir_weights``): explode + **broadcast** join against
-  the B-row weight table + groupBy(doc).sum — fully codegen (the
-  oracle-mirrored path).  ``dsir_weights_broadcast`` is the 100-TB
-  path: the B-entry dict ships once per executor and one Arrow-batched
-  pandas UDF emits the weight with **zero shuffle** and no corpus
-  explode.
+* **scoring** (``dsir_weights``): the B-entry weight dict, collected once
+  at training, ships once per executor and one Arrow-batched pandas UDF
+  emits each document's weight: **zero shuffle**, no join and no corpus
+  explode.  The job's ``--dsir-target`` and the declared ``nb_quality``
+  query both run it, so the DuckDB oracle checks the scorer the job runs.
 * **selection**: compose with the existing samplers — threshold /
   ``ccnet.rank_buckets`` for top-fraction, or ``sampling.sample_flag``
   against a weight-derived rate for the paper's stochastic variant.
@@ -58,9 +57,9 @@ _FP = 1_000_000  # micro-nats per weight unit (same scale as nbquality)
 
 @dataclass(frozen=True)
 class DSIRModel:
-    """Importance-weight artifact: a B-row bucket table + scalars."""
+    """Importance-weight artifact: a B-entry bucket dict + scalars."""
 
-    weights: DataFrame  # (bucket: string, w_fp: bigint)
+    weights: dict[str, int]  # bucket -> w_fp
     default_fp: int  # weight of a bucket unseen in BOTH samples
     n_buckets: int
     n_target_grams: int
@@ -143,16 +142,17 @@ def train_dsir(
     w = F.log((F.col("c_t") + 1).cast("double") / F.lit(float(t_t + B))) - F.log(
         (F.col("c_r") + 1).cast("double") / F.lit(float(t_r + B))
     )
-    # materialize the (≤B-row) weight table and release the cached counts
+    # collect the (≤B-entry) weight dict and release the cached counts
     # — the model artifact must not pin executor storage for the rest of
     # the application (ln still evaluates JVM-side, preserving the
     # oracle's identical-doubles-into-libm contract)
-    weight_rows = counts.select(
-        "bucket", F.round(w * _FP, 0).cast("long").alias("w_fp")
-    ).collect()
+    weights = {
+        r["bucket"]: r["w_fp"]
+        for r in counts.select(
+            "bucket", F.round(w * _FP, 0).cast("long").alias("w_fp")
+        ).collect()
+    }
     counts.unpersist()
-    spark = target.sparkSession
-    weights = spark.createDataFrame(weight_rows, "bucket string, w_fp long")
     default_fp = round(
         _FP * (math.log(1.0 / (t_t + B)) - math.log(1.0 / (t_r + B)))
     )
@@ -165,50 +165,14 @@ def dsir_weights(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """JVM scoring path: explode + broadcast join + integer sum →
-    (id_col, dsir_weight_fp).  Documents with zero grams weigh 0 (the
-    neutral log-ratio), not NULL."""
-    g = _grams(
-        docs.select(id_col, text_col), text_col, model.ngram_max
-    ).select(id_col, _bucket(F.col("gram"), model.b_hex).alias("bucket"))
-    scored = (
-        g.join(F.broadcast(model.weights), "bucket", "left")
-        .groupBy(id_col)
-        .agg(
-            F.sum(
-                F.coalesce(F.col("w_fp"), F.lit(model.default_fp))
-            ).cast("long").alias("dsir_weight_fp")
-        )
-    )
-    return (
-        docs.select(id_col)
-        .join(scored, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("dsir_weight_fp", F.lit(0).cast("long")).alias(
-                "dsir_weight_fp"
-            ),
-        )
-    )
-
-
-def dsir_weights_broadcast(
-    docs: DataFrame,
-    model: DSIRModel,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Zero-shuffle scale path: the B-entry weight dict ships once per
-    executor; one Arrow-batched pandas UDF emits the integer weight.
-    Bit-identical to ``dsir_weights`` (pinned by tests)."""
+    """(id_col, dsir_weight_fp): the B-entry weight dict ships once per
+    executor; one Arrow-batched pandas UDF emits the integer weight, with
+    zero shuffle.  Documents with zero grams weigh 0 (the neutral
+    log-ratio), not NULL."""
     import hashlib
 
-    spark = docs.sparkSession
-    wmap = {
-        r["bucket"]: int(r["w_fp"]) for r in model.weights.collect()
-    }
-    bc = spark.sparkContext.broadcast(
-        (wmap, model.default_fp, model.ngram_max, model.b_hex)
+    bc = docs.sparkSession.sparkContext.broadcast(
+        (model.weights, model.default_fp, model.ngram_max, model.b_hex)
     )
 
     @F.pandas_udf(LongType())

@@ -17,12 +17,13 @@ returns the docs columns.  Rationale at scale:
 * zero per-row Python on the Spark side (north-rule), all artifacts
   (regex battery, language models) compiled once per executor process.
 
-Semantics are identical to the composable operators (``operators/quality``,
-``operators/langid``, ``operators/scrub``) and are pinned three ways: the
-pure-Python oracle in ``tests/oracle.py`` (independent reimplementation),
-the JVM expression implementation (driver-query oracle vs DuckDB), and the
-unit suites. Metric definitions follow quality.py's documented tokenization
-spec (reference behavior citations in scrub.py / patterns.py).
+This is the only implementation of the quality rules.  Its semantics are
+pinned three ways: the pure-Python oracle in ``tests/oracle.py``
+(independent reimplementation), the DuckDB oracle, which checks this pass
+itself through the declared ``quality_metrics`` and ``quality_keep``
+queries (both run ``transform_web_pages``), and the unit suites. Metric
+definitions follow quality.py's documented tokenization spec (reference
+behavior citations in scrub.py / patterns.py).
 """
 
 from __future__ import annotations
@@ -73,8 +74,8 @@ _STOPSET = set(STOPWORDS)
 @lru_cache(maxsize=1)
 def _char_classes():
     """Class of every code point for the vectorized word metrics below:
-    1 whitespace (``_WS``'s six), 2 letter (``str.isalpha``, the exact
-    Java ``\\p{L}`` analogue the JVM metrics use), 0 anything else.  The
+    1 whitespace (``_WS``'s six), 2 letter (``str.isalpha``, the
+    ``\\p{L}`` analogue the oracle SQL uses), 0 anything else.  The
     letters are what ``\\w`` keeps after ``\\d`` and '_' (every letter,
     plus about a thousand numeric signs ``isalpha`` then drops), found by
     one regex pass over all code points."""

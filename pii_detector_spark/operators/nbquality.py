@@ -18,15 +18,13 @@ of the beyond-reference training-data toolkit, built Spark-first:
   partitionings, and row orders — which is what lets the DuckDB oracle
   hash-match the distributed Spark computation (and what makes the
   keep/drop decision reproducible at any cluster size).
-* **scoring** has two equivalent paths, pinned to each other by
-  ``tests/test_nbquality.py``:
-  - ``score_nb`` (JVM path): explode + **broadcast** join against the
-    weight table + ``groupBy(doc).sum`` — fully codegen, used by the
-    registry query so the SQL oracle can mirror it exactly.
-  - ``score_nb_broadcast`` (100-TB path): the weight dict is shipped once
-    per executor via ``SparkContext.broadcast`` and applied in one
-    Arrow-batched pandas UDF — **zero shuffle**, no explode blow-up of the
-    corpus, the shape you want when the corpus side is 10^12 documents.
+* **scoring** (``score_nb``): the weight dict, collected once at training,
+  is shipped once per executor via ``SparkContext.broadcast`` and applied
+  in one Arrow-batched pandas UDF: **zero shuffle**, no join and no
+  explode blow-up of the corpus, the shape you want when the corpus side
+  is 10^12 documents.  The job's ``--nb-labels`` and the declared
+  ``nb_quality`` query both run it, so the DuckDB oracle checks the
+  scorer the job runs.
 
 Smoothing is add-one over the joint vocabulary; the class prior enters as
 a constant bias. Unseen tokens at scoring time get the per-class floor
@@ -35,10 +33,11 @@ weight (``default_fp``).
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -47,9 +46,9 @@ _FP = 1_000_000  # fixed-point scale: micro-nats per weight unit
 
 @dataclass(frozen=True)
 class NBModel:
-    """Trained classifier: a small weight table + three scalars."""
+    """Trained classifier: a small weight dict + three scalars."""
 
-    weights: DataFrame  # (tok: string, w_fp: bigint)
+    weights: dict[str, int]  # tok -> w_fp
     default_fp: int  # weight for tokens unseen in training
     bias_fp: int  # class-prior log-odds
     n_vocab: int
@@ -70,8 +69,9 @@ def train_nb(
     sep: str = " ",
 ) -> NBModel:
     """Train on a labeled sample. One shuffle (token word-count); the
-    totals row and vocabulary size are a single driver-side scalar fetch
-    (model metadata, not data — the labeled set is a curated sample)."""
+    totals row and vocabulary size are a single driver-side scalar fetch,
+    and the weight table one collect (model data bounded by the training
+    vocabulary — the labeled set is a curated sample)."""
     toks = _tokens(
         labeled.select(F.col(label_col).cast("boolean").alias("lab"), text_col),
         text_col,
@@ -107,11 +107,15 @@ def train_nb(
     w = F.log((F.col("c_pos") + 1).cast("double") / F.lit(float(t_pos + v))) - F.log(
         (F.col("c_neg") + 1).cast("double") / F.lit(float(t_neg + v))
     )
-    weights = counts.select(
-        "tok", F.round(w * _FP, 0).cast("long").alias("w_fp")
-    )
-    import math
-
+    # ln still evaluates JVM-side (the oracle's identical-doubles-into-libm
+    # contract); the cached counts are released once the weights are in
+    weights = {
+        r["tok"]: r["w_fp"]
+        for r in counts.select(
+            "tok", F.round(w * _FP, 0).cast("long").alias("w_fp")
+        ).collect()
+    }
+    counts.unpersist()
     default_fp = round(
         _FP * (math.log(1.0 / (t_pos + v)) - math.log(1.0 / (t_neg + v)))
     )
@@ -126,40 +130,13 @@ def score_nb(
     text_col: str = "text",
     sep: str = " ",
 ) -> DataFrame:
-    """JVM scoring path: explode + broadcast-join + sum. The weight table
-    is a trained artifact (bounded by training vocabulary), so the
-    broadcast is always safe; the corpus side shuffles only (id, sum)
-    partials for the final per-doc aggregate."""
-    toks = _tokens(docs.select(id_col, text_col), text_col, sep)
-    joined = toks.join(F.broadcast(model.weights), "tok", "left")
-    per_doc = joined.groupBy(id_col).agg(
-        F.sum(F.coalesce(F.col("w_fp"), F.lit(model.default_fp)))
-        .cast("long")
-        .alias("tok_sum_fp")
+    """(id_col, nb_score_fp, nb_keep): the weights broadcast once per
+    executor, one Arrow-batched pandas UDF, zero shuffle, no token-row
+    blow-up of the corpus. Integer weights sum exactly in any order, so
+    the score is the same under any partitioning."""
+    bc = docs.sparkSession.sparkContext.broadcast(
+        (model.weights, model.default_fp, model.bias_fp)
     )
-    out = docs.select(id_col).join(per_doc, id_col, "left")
-    score = F.coalesce(F.col("tok_sum_fp"), F.lit(0)) + F.lit(model.bias_fp)
-    return out.select(
-        F.col(id_col),
-        score.cast("long").alias("nb_score_fp"),
-        (score >= 0).alias("nb_keep"),
-    )
-
-
-def score_nb_broadcast(
-    docs: DataFrame,
-    model: NBModel,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = " ",
-) -> DataFrame:
-    """100-TB scoring path: weights broadcast once per executor, one
-    Arrow-batched pandas UDF, zero shuffle, no token-row blow-up of the
-    corpus. Bit-identical to ``score_nb`` (integer weights sum exactly in
-    any order) — pinned by tests/test_nbquality.py::test_paths_agree."""
-    spark = docs.sparkSession
-    wmap = {r["tok"]: r["w_fp"] for r in model.weights.collect()}
-    bc = spark.sparkContext.broadcast((wmap, model.default_fp, model.bias_fp))
 
     def _score(texts: pd.Series) -> pd.Series:
         w, dflt, bias = bc.value

@@ -1,10 +1,13 @@
-"""Gopher/C4-style heuristic quality rules — pure Spark built-in expressions.
+"""Gopher/C4-style heuristic quality rules: the tokenization spec and the
+word lists they share.
 
-Every metric here stays JVM-side (whole-stage codegen, no Python), which is
-the scale-critical property: at 100 TB these run at scan speed. Only langid
-and perplexity (model lookups, ``operators/langid.py``) need pandas UDFs.
+The rules themselves run in one place, the fused pass's row loop
+(``operators/fused.py``), which every pipeline run and the declared
+``quality_metrics`` / ``quality_keep`` queries execute.  This module holds
+what that pass shares with the independent test oracle (``tests/oracle.py``)
+and the DuckDB oracle SQL.
 
-Tokenization spec shared with the test oracle (``tests/oracle.py``):
+Tokenization spec:
 * words  = text split on ASCII whitespace ``[ \\t\\n\\r\\f\\x0B]+``, empties
   dropped (Java and Python regex agree on this explicit class; bare ``\\s``
   differs between the two and is avoided).
@@ -18,14 +21,6 @@ document's drop_reason — applied identically by the oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-from pii_detector_spark.config import QualityThresholds
-from pii_detector_spark.functions.toxicity import TOXIC_WORDS
-
-WS_CLASS = "[ \\t\\n\\r\\f\\u000B]+"
-
 # C4-style English stopword probe set (shared with oracle)
 STOPWORDS: tuple[str, ...] = (
     "the", "be", "to", "of", "and", "a", "in", "that", "have", "i", "it", "with",
@@ -33,173 +28,3 @@ STOPWORDS: tuple[str, ...] = (
 
 BULLET_PREFIXES: tuple[str, ...] = ("- ", "* ", "• ")
 ELLIPSIS_SUFFIXES: tuple[str, ...] = ("...", "…")
-
-
-def _count_occurrences(col: Column, token: str) -> Column:
-    """Non-overlapping occurrence count via length difference (matches
-    Python ``str.count``)."""
-    return (
-        (F.length(col) - F.length(F.replace(col, F.lit(token), F.lit(""))))
-        / len(token)
-    ).cast("long")
-
-
-# single non-whitespace char (negation of WS_CLASS)
-_NWS = "[^ \\t\\n\\r\\f\\u000B]"
-
-# non-whitespace AND non-letter: a "word" made only of these is letterless.
-# Used to count letterless words by subtraction (see alpha_word_frac below).
-_NWS_NO_LETTER = "[^ \\t\\n\\r\\f\\u000B\\p{L}]"
-
-# A maximal letterless word: a possessive run of non-letter non-ws chars with
-# whitespace (or string edge) on both sides. Possessive (`++`) + the
-# single-char lookarounds make the scan linear: a failed attempt never
-# backtracks into the run, and every in-run start offset fails the lookbehind
-# in O(1). The naive form `\\S*\\p{L}\\S*` is O(n^2) on a long letterless
-# blob (digit/punctuation dumps are common in web text).
-_LETTERLESS_WORD = f"(?<!{_NWS}){_NWS_NO_LETTER}++(?!{_NWS})"
-
-
-def with_quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the heuristic metric columns.
-
-    Every metric is a flat, whole-stage-codegen JVM expression (regex
-    count / string-length arithmetic) — no higher-order array functions,
-    which are interpreted per element and dominated the stage cost. At
-    100 TB these run at scan speed. Semantics are unchanged and pinned by
-    ``tests/oracle.py`` and the driver's DuckDB oracle:
-
-    * words  = maximal runs of non-whitespace (``[^ \\t\\n\\r\\f\\x0B]+``)
-    * lines  = maximal runs of non-``\\n``
-    """
-    text = F.col(text_col)
-
-    def _count(rx: str) -> Column:
-        return F.size(F.regexp_extract_all(text, F.lit(rx), F.lit(0))).cast("long")
-
-    df = (
-        df.withColumn("n_words", _count(f"{_NWS}+"))
-        .withColumn("n_lines", _count("[^\\n]+"))
-        .withColumn("n_chars", F.length(text).cast("long"))
-    )
-    nw = F.col("n_words")
-    nl = F.col("n_lines")
-
-    # total word chars = total chars minus whitespace chars
-    char_sum = F.length(F.regexp_replace(text, WS_CLASS, ""))
-
-    # non-empty distinct lines: distinct over the raw split minus the empty
-    # string if present (split keeps empties; they are never "lines")
-    raw_lines = F.split(text, "\n")
-    distinct_nonempty = (
-        F.size(F.array_distinct(raw_lines))
-        - F.array_contains(raw_lines, "").cast("int")
-    )
-
-    stop_hits = None
-    for s in STOPWORDS:
-        term = text.rlike(f"(?i)(?:^|{WS_CLASS}){s}(?:{WS_CLASS}|$)").cast("int")
-        stop_hits = term if stop_hits is None else stop_hits + term
-
-    toxic_alt = "|".join(TOXIC_WORDS)
-    has_toxic = text.rlike(f"(?i)(?:^|{WS_CLASS})(?:{toxic_alt})(?:{WS_CLASS}|$)")
-
-    df = (
-        df.withColumn(
-            "mean_word_len",
-            F.when(nw > 0, char_sum / nw).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "symbol_ratio",
-            F.when(
-                nw > 0,
-                (
-                    _count_occurrences(text, "#")
-                    + _count_occurrences(text, "…")
-                    + _count_occurrences(text, "...")
-                )
-                / nw,
-            ).otherwise(F.lit(0.0)),
-        )
-        # (?d) = UNIX_LINES: ^/$ anchor on \n only, matching the
-        # split('\n') semantics of the fused UDF, tests/oracle.py, and the
-        # DuckDB oracle. Without it Java's (?m) also anchors around \r /
-        # \u0085, \u2028 and \u2029, so CRLF web text ('foo...\r\n') would
-        # diverge between the JVM path and the fused pipeline path.
-        .withColumn(
-            "bullet_line_frac",
-            F.when(
-                nl > 0, _count("(?dm)^(?:- |\\* |• )") / nl
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "ellipsis_line_frac",
-            F.when(
-                nl > 0, _count("(?dm)(?:\\.\\.\\.|…)$") / nl
-            ).otherwise(F.lit(0.0)),
-        )
-        # words containing >=1 letter, by subtraction: n_words minus the
-        # count of fully letterless words (linear-time pattern, see
-        # _LETTERLESS_WORD above)
-        .withColumn(
-            "alpha_word_frac",
-            F.when(
-                nw > 0, (nw - _count(_LETTERLESS_WORD)) / nw
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "dup_line_frac",
-            F.when(
-                nl > 0, F.lit(1.0) - distinct_nonempty / nl
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn("stopword_hits", stop_hits.cast("long"))
-        .withColumn("has_toxic_word", has_toxic)
-    )
-    return df
-
-
-def with_keep_decision(
-    df: DataFrame, thresholds: QualityThresholds
-) -> DataFrame:
-    """First-failing-rule drop_reason + keep flag.
-
-    Requires the metric columns plus ``lang_pred`` and ``perplexity``
-    (from ``operators/langid.py``).
-    """
-    t = thresholds
-    nw = F.col("n_words")
-    reason = (
-        F.when(nw == 0, F.lit("empty"))
-        .when(nw < t.min_words, F.lit("too_short"))
-        .when(nw > t.max_words, F.lit("too_long"))
-        .when(
-            (F.col("mean_word_len") < t.min_mean_word_len)
-            | (F.col("mean_word_len") > t.max_mean_word_len),
-            F.lit("word_length"),
-        )
-        .when(F.col("symbol_ratio") > t.max_symbol_ratio, F.lit("symbol_ratio"))
-        .when(
-            F.col("bullet_line_frac") > t.max_bullet_line_frac,
-            F.lit("bullet_lines"),
-        )
-        .when(
-            F.col("ellipsis_line_frac") > t.max_ellipsis_line_frac,
-            F.lit("ellipsis_lines"),
-        )
-        .when(
-            F.col("alpha_word_frac") < t.min_alpha_word_frac, F.lit("low_alpha")
-        )
-        .when(F.col("dup_line_frac") > t.max_dup_line_frac, F.lit("repetition"))
-        .when(
-            ~F.col("lang_pred").isin(*t.allowed_langs), F.lit("language")
-        )
-        .when(
-            F.col("stopword_hits") < t.min_stopword_hits, F.lit("stopwords")
-        )
-        .when(F.col("perplexity") > t.max_perplexity, F.lit("perplexity"))
-        .when(F.col("has_toxic_word"), F.lit("toxicity"))
-    )
-    return df.withColumn("drop_reason", reason).withColumn(
-        "keep", F.col("drop_reason").isNull()
-    )

@@ -1,8 +1,8 @@
 """Gopher repetition rules: top-n-gram and duplicated-n-gram character
 fractions (Rae et al. 2021 §A1.1; PAPERS.md).
 
-Complements ``operators/quality.py`` (which has the line-level
-``dup_line_frac``): Gopher additionally gates on
+Complements the fused pass's quality rules (``operators/fused.py``, which
+computes the line-level ``dup_line_frac``): Gopher additionally gates on
 
 * the fraction of characters inside the MOST COMMON word {2,3,4}-gram, and
 * the fraction of characters inside duplicated (count ≥ 2) word
@@ -179,8 +179,8 @@ def apply_repetition_rules(
     dup_max: dict[int, float] | None = None,
 ) -> DataFrame:
     """First-failing-rule ``rep_drop_reason`` (None = keep) over the
-    ``with_repetition_metrics`` output, smallest n first — mirroring
-    ``quality.with_keep_decision``'s fixed-order contract."""
+    ``with_repetition_metrics`` output, smallest n first — mirroring the
+    fixed rule order of the fused pass's drop_reason."""
     top_max = TOP_NGRAM_MAX_FRAC if top_max is None else top_max
     dup_max = DUP_NGRAM_MAX_FRAC if dup_max is None else dup_max
     reason = None

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from functools import lru_cache
+from functools import lru_cache, partial
 from typing import Iterator
 
 import pandas as pd
@@ -314,14 +314,20 @@ SCRUB_RESULT_TYPE = StructType(
 )
 
 
-def _make_scrub_batch(include_person: bool):
+def with_detector_scrub(
+    df, detector, url_col: str = "url", text_col: str = "text"
+):
+    """Attach scrubbed_text / findings / is_phi columns to a documents df,
+    the matches of each text found by ``detector(text)``, in one
+    Arrow-batched scalar pandas UDF (each Arrow batch is one call)."""
+
     def _scrub_batch(urls: pd.Series, texts: pd.Series) -> pd.DataFrame:
         scrubbed: list[str] = []
         findings: list[list[dict]] = []
         phi: list[bool] = []
         for url, text in zip(urls, texts):
             t = text or ""
-            matches = detect(t, include_person=include_person)
+            matches = detector(t)
             scrubbed.append(scrub_text(t, matches))
             findings.append(build_findings(url or "", matches))
             phi.append(is_phi(url or "", t))
@@ -329,18 +335,17 @@ def _make_scrub_batch(include_person: bool):
             {"scrubbed_text": scrubbed, "findings": findings, "is_phi": phi}
         )
 
-    return _scrub_batch
-
-
-# Arrow-batched scalar pandas UDFs: the battery compiles lazily once per
-# executor (lru_cache in patterns.py); each Arrow batch is one call.
-scrub_udf = F.pandas_udf(
-    _make_scrub_batch(include_person=False), returnType=SCRUB_RESULT_TYPE
-).asNondeterministic()
-
-scrub_person_udf = F.pandas_udf(
-    _make_scrub_batch(include_person=True), returnType=SCRUB_RESULT_TYPE
-).asNondeterministic()
+    udf = F.pandas_udf(
+        _scrub_batch, returnType=SCRUB_RESULT_TYPE
+    ).asNondeterministic()
+    res = udf(F.col(url_col), F.col(text_col))
+    return (
+        df.withColumn("_scrub", res)
+        .withColumn("scrubbed_text", F.col("_scrub.scrubbed_text"))
+        .withColumn("findings", F.col("_scrub.findings"))
+        .withColumn("is_phi", F.col("_scrub.is_phi"))
+        .drop("_scrub")
+    )
 
 
 def with_scrub(
@@ -352,16 +357,10 @@ def with_scrub(
     """Attach scrubbed_text / findings / is_phi columns to a documents df.
 
     ``include_person=True`` adds the NER-analogue PERSON detector (P4/F13)
-    ahead of the battery, as the reference does on first scans."""
-    udf = scrub_person_udf if include_person else scrub_udf
-    res = udf(F.col(url_col), F.col(text_col))
-    return (
-        df.withColumn("_scrub", res)
-        .withColumn("scrubbed_text", F.col("_scrub.scrubbed_text"))
-        .withColumn("findings", F.col("_scrub.findings"))
-        .withColumn("is_phi", F.col("_scrub.is_phi"))
-        .drop("_scrub")
-    )
+    ahead of the battery, as the reference does on first scans.  The
+    battery compiles lazily once per executor (lru_cache in patterns.py)."""
+    detector = partial(detect, include_person=include_person)
+    return with_detector_scrub(df, detector, url_col, text_col)
 
 
 # findings-table column names that differ from the FINDING_TYPE field's

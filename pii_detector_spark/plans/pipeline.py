@@ -134,10 +134,10 @@ def transform_web_pages(
     per-batch step ``run_pipeline``'s write tasks run
     (``_page_processor``): one Arrow round trip and one Python worker per
     task for the whole chain.  The per-stage operators
-    (``operators/langid.py``, ``operators/scrub.py``,
-    ``operators/quality.py``) serve the declared queries in
-    ``__spark_entry__.py``, not this plan.  ``extract_html=False`` skips
-    HTML extraction (the pass reads the text column).
+    (``operators/langid.py``, ``operators/scrub.py``) serve declared
+    queries in ``__spark_entry__.py``, not this plan; the quality queries
+    run this plan.  ``extract_html=False`` skips HTML extraction (the pass
+    reads the text column).
     """
     if prefilter:
         df = apply_prefilters(df)

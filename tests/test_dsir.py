@@ -1,5 +1,6 @@
-"""DSIR importance weights: gram explosion, path parity (join vs
-broadcast-UDF), a python re-derivation oracle, and sign semantics."""
+"""DSIR importance weights: a python re-derivation oracle, partitioning
+invariance, the scorer's plan shape (no join, no shuffle), and sign
+semantics."""
 
 from __future__ import annotations
 
@@ -8,11 +9,7 @@ import math
 
 import pytest
 
-from pii_detector_spark.operators.dsir import (
-    dsir_weights,
-    dsir_weights_broadcast,
-    train_dsir,
-)
+from pii_detector_spark.operators.dsir import dsir_weights, train_dsir
 
 SF = "/root/testdata/sf0.001"
 
@@ -78,29 +75,6 @@ def test_weights_match_python_oracle_with_bigrams(spark):
     assert got[2] == 0  # gramless doc: neutral weight, present in output
 
 
-def test_broadcast_path_bit_identical_on_testdata(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    from pyspark.sql import functions as F
-
-    m = train_dsir(
-        docs.filter(F.col("doc_id") % 5 == 0),
-        docs.filter(F.col("doc_id") % 5 != 0),
-        ngram_max=2,
-    )
-    a = {
-        r["doc_id"]: r["dsir_weight_fp"]
-        for r in dsir_weights(docs, m).collect()
-    }
-    b = {
-        r["doc_id"]: r["dsir_weight_fp"]
-        for r in dsir_weights_broadcast(docs, m).collect()
-    }
-    assert a == b
-    assert len(a) == docs.count()
-
-
 def test_weights_partitioning_invariant(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
         "doc_id", "text"
@@ -125,10 +99,9 @@ def test_empty_sample_raises(spark):
         train_dsir(d, e)
 
 
-def test_join_path_broadcasts_and_udf_path_shuffle_free(spark):
-    """Scale-shape pins: the join scoring path broadcasts the B-row
-    weight table (never shuffles the corpus by bucket), and the
-    broadcast-UDF path has no exchange at all."""
+def test_score_plan_has_no_join_or_shuffle(spark):
+    """Scale-shape pin: the B-entry weight dict ships with the UDF, so the
+    corpus is never joined or shuffled by bucket."""
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
         "doc_id", "text"
     )
@@ -143,11 +116,5 @@ def test_join_path_broadcasts_and_udf_path_shuffle_free(spark):
         dsir_weights(docs, m)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-
-    udf_plan = (
-        dsir_weights_broadcast(docs, m)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in udf_plan.replace("BroadcastExchange", "")
-    assert "ShuffleExchange" not in udf_plan
+    assert "Join" not in plan
+    assert "Exchange" not in plan

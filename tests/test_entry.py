@@ -1,6 +1,7 @@
 """The declared-query registry (``__spark_entry__.queries`` and
 ``oracle_sql``): its names and order, its oracle coverage, the merge table
-both engines build from, and the session state its queries leave."""
+both engines build from, the session state its queries leave, and the
+pipeline pass the quality queries run."""
 
 from __future__ import annotations
 
@@ -60,9 +61,20 @@ def test_merged_entries_build_the_same_tags_on_both_engines(monkeypatch):
         assert sql_tags == (list(parts) if tagged else [])
 
 
-def test_minhash_queries_leave_nothing_in_the_cache_manager(spark):
+def test_minhash_and_nb_queries_leave_nothing_in_the_cache_manager(spark):
     spark.catalog.clearCache()
     queries = entry.queries()
-    for name in ("minhash_lsh", "minhash_delta"):
+    for name in ("minhash_lsh", "minhash_delta", "nb_quality"):
         assert queries[name](spark, "/root/testdata/sf0.001").collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_quality_queries_run_the_fused_pass(spark):
+    """quality_metrics and quality_keep run the pipeline's fused
+    ``mapInArrow`` pass, not a second implementation of the rules."""
+    queries = entry.queries()
+    for name in ("quality_metrics", "quality_keep"):
+        df = queries[name](spark, "/root/testdata/sf0.001")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan, name
+        assert "ArrowEvalPython" not in plan, name

@@ -1276,9 +1276,9 @@ def test_job_cli_decontaminate_and_pack(spark, tmp_path_factory, monkeypatch):
 
     before = nb_rows()
     assert before
-    real_score = nbquality.score_nb_broadcast
+    real_score = nbquality.score_nb
     monkeypatch.setattr(
-        nbquality, "score_nb_broadcast",
+        nbquality, "score_nb",
         lambda *a, **k: real_score(*a, **k).withColumn(
             "boom", F.raise_error(F.lit("nb_scores write failed"))
         ),

@@ -1,22 +1,19 @@
 """Quality-metric regressions: CRLF line semantics and letterless blobs.
 
-The JVM operator path (operators/quality.py), the fused pandas-UDF path
-(operators/fused.py), and the pure-Python oracle (tests/oracle.py) must agree
-on every metric, including texts the sf corpora never contain: CRLF line
-endings, Unicode line separators, and long letterless runs.
+The fused pass (operators/fused.py), the one implementation of the quality
+rules, and the pure-Python oracle (tests/oracle.py) must agree on every
+metric, including texts the sf corpora never contain: CRLF line endings,
+Unicode line separators, and long letterless runs.
 """
 
 from __future__ import annotations
 
+import math
 import time
 
-from pyspark.sql import functions as F
-
 from pii_detector_spark.config import QualityThresholds
-from pii_detector_spark.operators.quality import (
-    with_keep_decision,
-    with_quality_metrics,
-)
+from pii_detector_spark.functions.langmodels import LANGS
+from pii_detector_spark.operators.fused import fused_columns, process_document
 from tests.oracle import oracle_decide
 
 METRIC_COLS = (
@@ -51,35 +48,33 @@ NASTY_TEXTS = (
 )
 
 
-def test_quality_metrics_crlf_parity(spark):
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(NASTY_TEXTS)], "doc_id int, text string"
+def test_quality_metrics_crlf_parity():
+    n = len(NASTY_TEXTS)
+    cols = fused_columns(
+        [f"u{i}" for i in range(n)], [None] * n, list(NASTY_TEXTS),
+        QualityThresholds(),
     )
-    got = {r["doc_id"]: r.asDict() for r in with_quality_metrics(df).collect()}
     for i, text in enumerate(NASTY_TEXTS):
         exp = oracle_decide(f"u{i}", text).metrics
         for c in METRIC_COLS:
-            g, e = got[i][c], exp[c]
+            g, e = cols[c][i], exp[c]
             if isinstance(e, float):
                 assert abs(g - e) < 1e-9, (i, c, g, e, text)
             else:
                 assert g == e, (i, c, g, e, text)
 
 
-def test_keep_decision_crlf_parity(spark):
+def test_keep_decision_crlf_parity():
     """CRLF text must reach the same keep/drop as the oracle's rules."""
-    t = QualityThresholds()
+    # the language and perplexity rules are off: every label allowed, no
+    # perplexity too high
+    t = QualityThresholds(allowed_langs=(*LANGS, "unk"), max_perplexity=math.inf)
     # ellipsis-heavy CRLF doc: under \n-split semantics the '...' lines end
     # with '\r' so they are NOT ellipsis lines; the doc must not be dropped
     # for ellipsis_lines
     text = ("the words be to of and a in that have it with more padding "
             "line one...\r\nline two...\r\nline three...\r\n") * 3
-    df = spark.createDataFrame([(1, text)], "doc_id int, text string")
-    d = with_quality_metrics(df)
-    d = d.withColumn("lang_pred", F.lit("en")).withColumn(
-        "perplexity", F.lit(0.0)
-    )
-    row = with_keep_decision(d, t).collect()[0]
+    row = process_document("u1", text, t)
     exp = oracle_decide("u1", text)
     assert row["drop_reason"] != "ellipsis_lines"
     assert row["ellipsis_line_frac"] == 0.0
@@ -88,15 +83,12 @@ def test_keep_decision_crlf_parity(spark):
     )
 
 
-def test_alpha_word_frac_letterless_blob_linear(spark):
-    """A multi-hundred-KB letterless word must not stall the scan (the naive
-    \\S*\\p{L}\\S* pattern is O(n^2) on it)."""
+def test_alpha_word_frac_letterless_blob_linear():
+    """A multi-hundred-KB letterless word must not stall the pass (a
+    per-word letter search must stay linear in the word's length)."""
     blob = "1234567890;:-+" * 30000  # ~420 KB, no letters
-    df = spark.createDataFrame(
-        [(0, f"word {blob} word")], "doc_id int, text string"
-    )
     t0 = time.time()
-    row = with_quality_metrics(df).select("alpha_word_frac", "n_words").collect()[0]
+    row = process_document("u0", f"word {blob} word", QualityThresholds())
     assert time.time() - t0 < 30.0
     assert row["n_words"] == 3
     assert abs(row["alpha_word_frac"] - 2 / 3) < 1e-9
